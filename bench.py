@@ -8,12 +8,13 @@ The FINAL stdout line is ONE compact (≤1500-char) JSON record:
                  "smoke": {"efficiency_2_to_8": ..., ...}}}
 
 "features_tiles_per_sec" is the BASELINE.json headline metric, measured on
-the full pipeline (decode -> cell encode -> PIP + kNN -> salted tile agg ->
-range-partitioned write). scaling.criterion is the north rule's controlled
+plans.pipeline.run_pipeline with J/A/W checkpoints (decode -> cell encode ->
+PIP + kNN -> salted tile agg -> range-partitioned write, parquet + lineage
+per checkpoint). scaling.criterion is the north rule's controlled
 spark-submit pair (scripts/bench_scaling.sh -> scaling_controlled.json);
-scaling.smoke is the in-session quick block. The line BEFORE the final one
-is the full record ({"record": "full", ...}): pipeline detail, per-try
-scaling distributions, stall re-runs, criterion provenance.
+scaling.smoke is the in-session quick block over the same plan. The line
+BEFORE the final one is the full record ({"record": "full", ...}): pipeline
+detail, per-try scaling distributions, stall re-runs, criterion provenance.
 
 Env knobs:
     SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1
@@ -25,7 +26,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -43,7 +46,8 @@ def _sf_of(path: str) -> float:
 
 
 def _tmpfs_local_dir() -> str | None:
-    """Shuffle/spill directory on tmpfs for every bench leg.
+    """Shuffle/spill directory on tmpfs for every bench leg, and the parent
+    of the pipeline legs' work dirs.
 
     This host's virtio disk throttles buffered writes to ~213 MB/s
     (BENCH.md §5h); the shuffle-bearing salted-agg leg pays that tax and it
@@ -91,18 +95,24 @@ def _force(df) -> int:
     return 0
 
 
-def bench_pipeline(spark, n_docs: int) -> dict:
-    """Headline: the full engine chain; metric = (features + tile rows) / sec."""
+def bench_pipeline(
+    spark, n_docs: int, partitions: int, min_walls: int, max_walls: int
+) -> dict:
+    """Features+tiles/s of ``plans.pipeline.run_pipeline`` — the plan
+    jobs/pipeline.py and perfbench run: decode, cells, PIP and kNN fused
+    into the J checkpoint, then the A and W checkpoints, each with its
+    lineage pass. A persisted ``n_docs`` corpus at ``partitions``
+    partitions is synthesized first so synth cost isn't benched; one
+    untimed run on a tenth of that (at least 2,000 docs, at most all)
+    absorbs JIT/codegen and the Python-worker spin-up. Then up to
+    ``max_walls`` timed walls, each a fresh run_id under a tmpfs work dir
+    that is wiped afterwards: after ``min_walls`` the loop stops as soon as
+    a wall fails to beat the best so far by >10 % (set
+    ``min_walls == max_walls`` for a fixed count). Features and tiles are
+    the W and A lineage row counts."""
     from pyspark.sql import functions as F
 
-    from bufr2geojson_spark.functions.cells import with_cells
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.operators.spatial import assign_region, knn_join
-    from bufr2geojson_spark.operators.tiles import (
-        range_partition_by_cell,
-        tile_aggregate,
-        tile_rollup,
-    )
+    from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
     from bufr2geojson_spark.sources.synth import (
         default_n_stations,
         synth_documents,
@@ -111,126 +121,60 @@ def bench_pipeline(spark, n_docs: int) -> dict:
     )
 
     n_st = default_n_stations(n_docs)
-    # materialize the synthesized corpus first so synth cost isn't benched
-    docs = synth_documents(spark, n_docs, n_stations=n_st, partitions=CPUS * 2)
-    docs.persist()
-    n_in = docs.count()
     stations = synth_stations(spark, n_st)
     polygons = synth_region_polygons(spark)
+    conf = PipelineConfig(checkpoint_stages=("J", "A", "W"))
+    work = tempfile.mkdtemp(prefix="b2g_bench_work_", dir=_tmpfs_local_dir())
 
-    def chain(d):
-        feats = with_cells(decode_documents(d).filter("error is null"))
-        feats = assign_region(feats, polygons)
-        feats = knn_join(feats, stations, k=1, grid_deg=2.0)
-        feats = range_partition_by_cell(feats, CPUS, "cell_s2", "cell_prefix")
-        feats.persist()
-        n_features = feats.count()
-        tiles = tile_rollup(
-            tile_aggregate(feats, salt_buckets=16, hot_threshold=200),
-            14, [10, 6],
-        )
-        n_tiles = tiles.count()
-        _force(feats)  # full range-partitioned write to the noop sink
-        feats.unpersist()
-        return n_features, n_tiles
+    def corpus(n):
+        docs = synth_documents(spark, n, n_stations=n_st, partitions=partitions)
+        docs.persist()
+        docs.count()
+        return docs
 
-    # warm-up at 1/10 corpus: JIT, codegen, python-worker pool spin-up
-    warm = synth_documents(
-        spark, max(2000, n_docs // 10), n_stations=n_st, partitions=CPUS * 2
-    )
-    warm.persist()
-    warm.count()
-    chain(warm)
-    warm.unpersist()
-
-    # run-to-convergence, min 3 / cap 5 walls: this sandbox intermittently
-    # stalls python-UDF stages (measured 52 s vs 104 s for IDENTICAL
-    # code+data in one 20-minute window — BENCH.md §timing-variance), and
-    # fixed best-of-3 can cut off while walls are still descending (the r5
-    # rehearsal recorded [171.8, 53.1, 37.7] — the first wall landed in a
-    # degraded window and three tries never reached steady state). Keep
-    # running while each wall improves on the best so far by >10 %;
-    # steady-state throughput is the metric, and every wall is reported
-    walls = []
-    for i in range(5):
+    def run(docs, run_id):
         t0 = time.monotonic()
-        n_features, n_tiles = chain(docs)
-        walls.append(round(time.monotonic() - t0, 3))
-        if i >= 2 and walls[-1] > 0.9 * min(walls[:-1]):
-            break
+        res = run_pipeline(spark, docs, stations, polygons, work, run_id,
+                           resume=False, conf=conf)
+        wall = time.monotonic() - t0
+        rows = dict(res.lineage.groupBy("stage").agg(
+            F.sum("row_count")).collect())
+        shutil.rmtree(os.path.join(work, run_id))
+        return wall, rows["W"], rows["A"], res.executed
+
+    try:
+        warm = corpus(min(n_docs, max(2000, n_docs // 10)))
+        run(warm, "warm")
+        warm.unpersist()
+
+        docs = corpus(n_docs)
+        # run-to-convergence: a shared host intermittently stalls python-UDF
+        # stages (measured 52 s vs 104 s for IDENTICAL code+data in one
+        # 20-minute window — BENCH.md §timing-variance), and fixed best-of-3
+        # can cut off while walls are still descending (the r5 rehearsal
+        # recorded [171.8, 53.1, 37.7]). Steady-state throughput is the
+        # metric, and every wall is reported
+        walls = []
+        while len(walls) < max_walls:
+            wall, n_features, n_tiles, executed = run(docs, f"w{len(walls)}")
+            walls.append(round(wall, 3))
+            if len(walls) >= min_walls and walls[-1] > 0.9 * min(
+                walls[:-1], default=float("inf")
+            ):
+                break
+        docs.unpersist()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     wall = min(walls)
-    docs.unpersist()
     return {
-        "docs": n_in,
+        "docs": n_docs,
         "features": n_features,
         "tiles": n_tiles,
+        "executed": executed,
         "wall_sec": wall,
         "walls_sec": walls,
         "features_tiles_per_sec": round((n_features + n_tiles) / wall, 1),
     }
-
-
-def bench_scaling_width(spark, n_docs: int, p: int) -> float:
-    """One scaling-leg width: the fused pipeline chain (decode → cells →
-    PIP + kNN → salted agg) at parallelism ``p``. Runs inside its OWN fresh
-    JVM built as a true ``local[p]`` session (see main()): round-2's
-    in-session variant shared one local[32] JVM across widths and the
-    driver-recorded numbers drifted with heap history (efficiency 2→8
-    0.999 r1 → 0.88 r2 on identical work). An untimed warm-up run first
-    absorbs JIT/codegen compile so the timed chain measures the engine —
-    fixed warm-up cost otherwise deflates the wide legs most and corrupts
-    the N→4N ratio. The authoritative spark-submit variant is
-    scripts/bench_scaling.sh; results in BENCH.md."""
-    from bufr2geojson_spark.functions.cells import with_cells
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.operators.spatial import assign_region, knn_join
-    from bufr2geojson_spark.operators.tiles import tile_aggregate
-    from bufr2geojson_spark.sources.synth import (
-        default_n_stations,
-        synth_documents,
-        synth_region_polygons,
-        synth_stations,
-    )
-
-    n_st = default_n_stations(n_docs)
-    stations = synth_stations(spark, n_st)
-    polygons = synth_region_polygons(spark)
-
-    def chain(docs):
-        feats = with_cells(decode_documents(docs).filter("error is null"))
-        feats = assign_region(feats, polygons)
-        feats = knn_join(feats, stations, k=1, grid_deg=2.0)
-        feats.persist()
-        n_features = feats.count()
-        n_tiles = tile_aggregate(
-            feats, salt_buckets=16, hot_threshold=200
-        ).count()
-        feats.unpersist()
-        return n_features, n_tiles
-
-    warm = synth_documents(
-        spark, max(2000, n_docs // 10), n_stations=n_st, partitions=p
-    )
-    warm.persist()
-    warm.count()
-    chain(warm)  # untimed: JIT + codegen + Arrow path warm-up
-    warm.unpersist()
-
-    docs = synth_documents(spark, n_docs, n_stations=n_st, partitions=p)
-    docs.persist()
-    docs.count()
-    # best-of-N (same rationale as bench_pipeline's best-of-3: the
-    # sandbox's host flips between fast/slow modes over minutes and a
-    # stalled width leg corrupts the N→4N ratio the north rule grades;
-    # the interleaved-rounds driver in main() spreads tries across host
-    # windows, so per-leg tries default to 2)
-    walls = []
-    for _ in range(int(os.environ.get("BENCH_SCALING_TRIES", "2"))):
-        t0 = time.monotonic()
-        n_features, n_tiles = chain(docs)
-        walls.append(time.monotonic() - t0)
-    docs.unpersist()
-    return round((n_features + n_tiles) / min(walls), 1)
 
 
 def headline_queries() -> list[str]:
@@ -403,7 +347,9 @@ def leg_main(leg: str) -> None:
             out["stall_retries"] = retried
         print(json.dumps(out))
     elif leg == "pipeline":
-        print(json.dumps({"pipeline": bench_pipeline(spark, n_docs)}))
+        pipe = bench_pipeline(spark, n_docs, partitions=2 * CPUS,
+                              min_walls=3, max_walls=5)
+        print(json.dumps({"pipeline": pipe}))
     elif leg == "scaling_width":
         scaling_docs = int(os.environ.get(
             "BENCH_SCALING_DOCS", str(max(20_000, min(120_000, 2 * n_docs)))
@@ -411,10 +357,13 @@ def leg_main(leg: str) -> None:
             # wide legs in ~5 s, so per-stage fixed costs ate the N->4N
             # ratio (0.78 measured); doubling restores >=0.88 (BENCH.md 5d)
         ))
-        p = int(os.environ["BENCH_WIDTH"])
-        print(json.dumps(
-            {"throughput": bench_scaling_width(spark, scaling_docs, p)}
-        ))
+        # best-of-N walls: the interleaved rounds in main() spread tries
+        # across host windows, so per-leg tries default to 2
+        tries = int(os.environ.get("BENCH_SCALING_TRIES", "2"))
+        pipe = bench_pipeline(spark, scaling_docs,
+                              partitions=int(os.environ["BENCH_WIDTH"]),
+                              min_walls=tries, max_walls=tries)
+        print(json.dumps({"throughput": pipe["features_tiles_per_sec"]}))
     spark.stop()
 
 

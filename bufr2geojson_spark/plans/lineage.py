@@ -6,11 +6,12 @@ range, row counts, checksums) to enable checkpoint-resume mid-job."
 Design: each pipeline stage materializes to parquet; lineage is computed on
 the *materialized* output (a re-read), so partition ids and checksums
 describe exactly the bytes a resumed run will consume. The checksum is an
-order-insensitive 64-bit content fingerprint — SUM of ``xxhash64`` over the
-row struct, all JVM-side (one tiny shuffle of pre-aggregated partials; the
-analogue at 100 TB costs one integer per input partition). BIT_XOR of
-``xxhash64`` over the row struct is the fingerprint — commutative and
-overflow-free under ANSI mode. A stage is
+order-insensitive 64-bit content fingerprint: BIT_XOR of ``xxhash64`` over
+the row struct, all JVM-side (one tiny shuffle of pre-aggregated partials;
+the analogue at 100 TB costs one integer per input partition). XOR is
+commutative and overflow-free under ANSI mode, but it is not multiset-safe:
+a row present an even number of times cancels out, so duplicated row pairs
+are invisible to the checksum (``row_count`` still sees them). A stage is
 "complete" iff its parquet ``_SUCCESS`` marker AND its lineage table exist —
 resume skips complete stages and re-reads their output.
 """

@@ -30,6 +30,9 @@ from bufr2geojson_spark.operators.tiles import (
 )
 from bufr2geojson_spark.plans import lineage as L
 
+#: The stage graph in execution order (see the module docstring).
+STAGES = ("D", "T", "J", "A", "W")
+
 
 @dataclass
 class PipelineConfig:
@@ -44,9 +47,7 @@ class PipelineConfig:
     output_partitions: int = 32
     result_time: str = "2024-12-19 00:00:00"
     guess_wsi: bool = True
-    stages: tuple = ("D", "T", "J", "A", "W")
-    knn_enabled: bool = True
-    pip_enabled: bool = True
+    stages: tuple = STAGES
     # Stages that materialize (parquet + lineage = resume points). Stages NOT
     # listed stay lazy and fuse into the next checkpointed stage — D/T/J are
     # all narrow, so e.g. ("J", "A", "W") runs decode+cells+joins as ONE pass
@@ -54,7 +55,7 @@ class PipelineConfig:
     # per-stage checkpointing is maximum resumability; coarse checkpointing
     # is maximum throughput (at 100 TB each extra checkpoint is a full
     # table write+read). Lineage rows exist for every checkpointed stage.
-    checkpoint_stages: tuple = ("D", "T", "J", "A", "W")
+    checkpoint_stages: tuple = STAGES
 
 
 @dataclass
@@ -145,16 +146,14 @@ def run_pipeline(
 
     # J — PIP + kNN
     if "J" in upto:
-        def _joins():
-            j = features
-            if conf.pip_enabled:
-                j = assign_region(j, polygons)
-            if conf.knn_enabled:
-                j = knn_join(
-                    j, stations, k=conf.knn_k, grid_deg=conf.knn_grid_deg
-                )
-            return j
-        features = do("J", _joins, cell_col="cell_s2")
+        features = do(
+            "J",
+            lambda: knn_join(
+                assign_region(features, polygons),
+                stations, k=conf.knn_k, grid_deg=conf.knn_grid_deg,
+            ),
+            cell_col="cell_s2",
+        )
 
     # When the feature chain up to here is FUSED (not checkpointed) and more
     # than one checkpointed consumer follows (A reads it for tiles, W for

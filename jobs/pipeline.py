@@ -21,8 +21,6 @@ import time
 # lives next to this script's parent dir
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-VALID_STAGES = ("D", "T", "J", "A", "W")
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -44,6 +42,12 @@ def main() -> None:
     if not args.docs and not args.synth:
         raise SystemExit("one of --docs or --synth is required")
 
+    from bufr2geojson_spark.plans.pipeline import (
+        STAGES,
+        PipelineConfig,
+        run_pipeline,
+    )
+
     # validate before paying Spark startup: a silently-ignored typo here
     # would disable all materialization and leave no resume points
     checkpoint_stages = None
@@ -51,11 +55,11 @@ def main() -> None:
         checkpoint_stages = tuple(
             s.strip().upper() for s in args.checkpoints.split(",") if s.strip()
         )
-        unknown = set(checkpoint_stages) - set(VALID_STAGES)
+        unknown = set(checkpoint_stages) - set(STAGES)
         if unknown:
             raise SystemExit(
                 f"--checkpoints: unknown stage(s) {sorted(unknown)}; "
-                f"valid: {','.join(VALID_STAGES)}"
+                f"valid: {','.join(STAGES)}"
             )
 
     from pyspark.sql import SparkSession
@@ -66,7 +70,6 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
     from bufr2geojson_spark.sources.io import read_snapshot
     from bufr2geojson_spark.sources.synth import (
         default_n_stations,

@@ -7,6 +7,7 @@ import datetime
 import json
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
@@ -108,11 +109,14 @@ def test_replays_the_checked_in_artifact():
     cur = json.loads((repo / "scaling_controlled.json").read_text())
     # `git show` has skipped transiently inside full-suite runs (while
     # passing standalone and in every small combination tried) — retry
-    # once, and if it still fails surface the ACTUAL error in the skip
-    # reason so the flake is diagnosable instead of a bare "unavailable"
+    # once after a short pause, and if it still fails surface the ACTUAL
+    # error in the skip reason so the flake is diagnosable instead of a
+    # bare "unavailable"
     last_err = None
     prev_text = None
-    for _ in range(2):
+    for attempt in range(2):
+        if attempt:
+            time.sleep(0.75)
         try:
             prev_text = subprocess.run(
                 ["git", "show", "bd6f71c:scaling_controlled.json"],
