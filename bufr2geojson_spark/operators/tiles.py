@@ -110,21 +110,26 @@ def tile_rollup(
     cell_kind: str = "s2",
 ) -> DataFrame:
     """Multi-resolution rollup (N5): re-aggregate finished tiles up the cell
-    hierarchy. Aggregating tiles (not raw features) makes each coarser level
-    a shuffle over the *tile* cardinality, which shrinks ~4× per level.
-    Output: one row per (level, cell).
+    hierarchy. Output: one row per (level, cell); the ``from_level`` rows are
+    the input tiles themselves.
+
+    One shuffle for every target level: each base tile is exploded to its
+    ancestor at each target level, and a single ``groupBy(level, cell)``
+    (partial aggregation map-side, so it carries at most one row per
+    (level, cell) per input partition) finishes all levels at once. Deriving
+    every level directly from the base is exact for both cell kinds, so
+    chaining level from level (one serial shuffle per level) buys nothing:
 
     ``cell_kind='s2'``: the ancestor is pure JVM bit math (s2_parent_col —
-    no UDF, stays in whole-stage codegen) and ancestry is TRANSITIVE, so
-    each coarser level re-aggregates the previous one (cheapest: the
-    shuffle shrinks ~4× per level). ``cell_kind='hex'``: H3-style ancestry
-    re-encodes the child center at the coarser res and is NOT transitive
-    (aperture-4 hexes don't nest), so chaining 7→5→3 can place mass in
-    different level-3 cells than a direct 7→3 assignment, compounding per
-    level — every hex target level is therefore derived DIRECTLY from the
-    from_level tiles. The residual approximation (a fine hex whose center
-    falls in a different coarse hex than most of its area) is inherent to
-    hex grids and documented, not compounded."""
+    no UDF, stays in whole-stage codegen) and ancestry is transitive, so the
+    parent of a base cell at a level equals the chained parent.
+    ``cell_kind='hex'``: H3-style ancestry re-encodes the child center at
+    the coarser res and is NOT transitive (aperture-4 hexes don't nest), so
+    chaining 7→5→3 would place mass in different level-3 cells than a direct
+    7→3 assignment, compounding per level; the direct derivation avoids
+    that. The residual approximation (a fine hex whose center falls in a
+    different coarse hex than most of its area) is inherent to hex grids
+    and documented, not compounded."""
     if cell_kind == "s2":
         def parent(col, lvl):
             return s2_parent_col(col, lvl)
@@ -135,32 +140,33 @@ def tile_rollup(
             return hex_parent_udf(lvl)(col)
     else:
         raise ValueError("cell_kind must be 's2' or 'hex'")
+    if any(lvl >= from_level for lvl in to_levels):
+        raise ValueError("rollup levels must be coarser than from_level")
     out = tiles.select(
         F.lit(from_level).alias("level"),
         F.col(cell_col).alias("cell"),
         "n_obs", "sum_val", "min_val", "max_val", "avg_val",
     )
-    base = out
-    prev = out
-    for lvl in sorted(to_levels, reverse=True):
-        if lvl >= from_level:
-            raise ValueError("rollup levels must be coarser than from_level")
-        src = prev if cell_kind == "s2" else base
-        nxt = (
-            src.groupBy(parent(F.col("cell"), lvl).alias("cell"))
-            .agg(
-                F.sum("n_obs").alias("n_obs"),
-                F.sum("sum_val").alias("sum_val"),
-                F.min("min_val").alias("min_val"),
-                F.max("max_val").alias("max_val"),
-            )
-            .withColumn("avg_val", F.col("sum_val") / F.col("n_obs"))
-            .select(F.lit(lvl).alias("level"), "cell", "n_obs", "sum_val",
-                    "min_val", "max_val", "avg_val")
+    if not to_levels:
+        return out
+    ancestors = F.explode(F.array(*[
+        F.struct(F.lit(lvl).alias("level"),
+                 parent(F.col(cell_col), lvl).alias("cell"))
+        for lvl in sorted(set(to_levels))
+    ]))
+    rolled = (
+        tiles.select(ancestors.alias("_a"), "n_obs", "sum_val", "min_val",
+                     "max_val")
+        .groupBy(F.col("_a.level").alias("level"), F.col("_a.cell").alias("cell"))
+        .agg(
+            F.sum("n_obs").alias("n_obs"),
+            F.sum("sum_val").alias("sum_val"),
+            F.min("min_val").alias("min_val"),
+            F.max("max_val").alias("max_val"),
         )
-        out = out.unionByName(nxt)
-        prev = nxt
-    return out
+        .withColumn("avg_val", F.col("sum_val") / F.col("n_obs"))
+    )
+    return out.unionByName(rolled)
 
 
 def tile_cardinality(
@@ -569,17 +575,23 @@ def raster_to_vector(raster: DataFrame, tile_level: int, pixel_level: int) -> Da
 
 def range_partition_by_cell(
     df: DataFrame,
-    num_partitions: int,
+    num_partitions: int | None,
     cell_col: str = "cell_s2",
     prefix_col: str = "cell_prefix",
 ) -> DataFrame:
     """north_rule: explicit range partitioning by cell prefix. Keys on
     (prefix, cell) so output files are spatially clustered — Hilbert order
     makes byte-adjacent rows geo-adjacent, which is what lets tile queries
-    prune partitions."""
-    return df.repartitionByRange(
-        num_partitions, F.col(prefix_col), F.col(cell_col)
-    ).sortWithinPartitions(prefix_col, cell_col)
+    prune partitions.
+
+    ``num_partitions=None`` sizes the partitioning from the data: the range
+    exchange starts at ``spark.sql.shuffle.partitions`` and AQE coalesces
+    adjacent ranges, so the ranges stay disjoint and contiguous. An int
+    forces exactly that many partitions."""
+    keys = (F.col(prefix_col), F.col(cell_col))
+    parted = (df.repartitionByRange(*keys) if num_partitions is None
+              else df.repartitionByRange(num_partitions, *keys))
+    return parted.sortWithinPartitions(prefix_col, cell_col)
 
 
 def range_partition_by_zorder(

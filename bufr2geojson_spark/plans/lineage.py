@@ -23,7 +23,15 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bufr2geojson_spark.sources.io import fs_exists
+from bufr2geojson_spark.sources.io import fs_exists, list_subdirs
+
+#: The columns ``lineage_of`` emits, as DDL. Every field is nullable, as in
+#: any parquet re-read.
+LINEAGE_SCHEMA = (
+    "run_id STRING, stage STRING, snapshot_id BIGINT, partition_id INT, "
+    "cell_lo BIGINT, cell_hi BIGINT, row_count BIGINT, checksum STRING, "
+    "wall_ms BIGINT"
+)
 
 
 def lineage_of(
@@ -94,18 +102,15 @@ def write_stage(
     stage: str,
     snapshot_id: int,
     cell_col: str | None = None,
-    partition_by: str | None = None,
 ) -> DataFrame:
     """Materialize a stage + its lineage; returns the re-read output (so the
-    downstream plan cuts here — the checkpoint boundary)."""
+    downstream plan cuts here — the checkpoint boundary). The re-read uses
+    the schema just written instead of inferring it from a file footer."""
     out, lin = stage_paths(work_dir, run_id, stage)
     t0 = time.monotonic()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(out)
+    df.write.mode("overwrite").parquet(out)
     wall_ms = int((time.monotonic() - t0) * 1000)
-    materialized = spark.read.parquet(out)
+    materialized = spark.read.schema(df.schema).parquet(out)
     lineage_of(
         materialized, run_id, stage, snapshot_id, cell_col, wall_ms
     ).write.mode("overwrite").parquet(lin)
@@ -119,4 +124,8 @@ def read_stage(spark: SparkSession, work_dir: str, run_id: str,
 
 
 def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:
-    return spark.read.parquet(f"{work_dir}/{run_id}/_lineage/*")
+    """Every lineage table of ``run_id`` (empty if it has none). The stage
+    directories are listed rather than globbed: Spark probes a single glob
+    path for streaming metadata and logs a FileNotFoundException for it."""
+    stages = list_subdirs(spark, f"{work_dir}/{run_id}/_lineage")
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(*stages)

@@ -6,7 +6,7 @@ Stage graph (each stage materializes with per-partition lineage → resumable):
     T  tile-encode     H3/S2 cell UDFs + cell_prefix (narrow)
     J  spatial joins   broadcast PIP (N3) + kNN ring expansion (N4) (narrow)
     A  tile agg        salted two-phase agg (N5/N7) + multi-level rollup
-    W  final write     repartitionByRange(cell_prefix, cell) (N8)
+    W  final write     repartitionByRange(cell_prefix, cell), AQE-sized (N8)
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) skips every stage whose
@@ -44,7 +44,11 @@ class PipelineConfig:
     salt_buckets: int = 16
     hot_threshold: int | None = 200
     rollup_levels: tuple = (10, 6)
-    output_partitions: int = 32
+    # W's range-partition count. None lets AQE size the range exchange from
+    # the data (it coalesces adjacent ranges, so files stay disjoint); an int
+    # forces that many partitions and files. Kept as a field because the
+    # benchmark's isolated write layer reads it.
+    output_partitions: int | None = None
     result_time: str = "2024-12-19 00:00:00"
     guess_wsi: bool = True
     stages: tuple = STAGES
@@ -199,8 +203,5 @@ def run_pipeline(
     # if W was fused, res.features still points at the cached chain — keep it
     if _cached_features is not None and features is not _cached_features:
         _cached_features.unpersist()
-    try:
-        res.lineage = L.read_lineage(spark, work_dir, run_id)
-    except Exception:
-        res.lineage = None
+    res.lineage = L.read_lineage(spark, work_dir, run_id)
     return res

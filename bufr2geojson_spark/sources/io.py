@@ -30,6 +30,16 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(p)
 
 
+def list_subdirs(spark: SparkSession, path: str) -> list[str]:
+    """The directories directly under ``path``, sorted (none if it is absent)."""
+    fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return []
+    return sorted(
+        st.getPath().toString() for st in fs.listStatus(p) if st.isDirectory()
+    )
+
+
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     fs, p = _hadoop_fs(spark, path)
     if not fs.exists(p):

@@ -1,6 +1,7 @@
 """End-to-end pipeline, lineage, and checkpoint-resume tests (N9/N10,
 FIXTURES.md §7)."""
 
+import os
 import shutil
 import tempfile
 
@@ -122,6 +123,89 @@ def test_resume_skips_completed_stages(spark, dims, workdir):
 
     assert content_hash(res2.features) == content_hash(res_full.features)
     assert content_hash(res2.tiles) == content_hash(res_full.tiles)
+
+
+#: Spark jobs the run in ``default_run`` may launch, counting the W range
+#: write, every checkpoint re-read and the tile rollup. A change that adds
+#: jobs to every pipeline run has to raise it on purpose.
+JOB_BUDGET = 17
+
+
+@pytest.fixture(scope="module")
+def default_run(spark, dims, workdir):
+    """One coarse-checkpoint run with the default W sizing, its jobs tagged
+    with a job group and the frame ``write_stage`` returned for each stage
+    kept. The range exchange starts at 32 shuffle partitions, so a
+    data-sized W shows up as fewer than 32 partitions."""
+    stations, polygons = dims
+    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
+    conf = PipelineConfig(hot_threshold=50, checkpoint_stages=("J", "A", "W"))
+    returned = {}
+    write_stage = L.write_stage
+
+    def recording(df, spark_, work_dir, run_id, stage, *args, **kwargs):
+        returned[stage] = write_stage(df, spark_, work_dir, run_id, stage,
+                                      *args, **kwargs)
+        return returned[stage]
+
+    sc = spark.sparkContext
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    L.write_stage = recording
+    sc.setJobGroup("default_run", "one default-config pipeline run")
+    try:
+        res = run_pipeline(
+            spark, docs, stations, polygons, workdir, "default", snapshot_id=5,
+            resume=False, conf=conf,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        L.write_stage = write_stage
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    return res, sc.statusTracker().getJobIdsForGroup("default_run"), returned
+
+
+def test_job_budget_per_run(default_run):
+    res, job_ids, _ = default_run
+    assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
+    assert 0 < len(job_ids) <= JOB_BUDGET, f"{len(job_ids)} jobs"
+
+
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_w_partitions_sized_from_data(default_run, workdir):
+    res, _, _ = default_run
+    files = len(_parquet_files(f"{workdir}/default/W"))
+    assert 0 < files < 32
+    assert res.lineage.filter("stage = 'W'").count() == files
+
+
+def test_w_explicit_partition_count_kept(workdir):
+    """output_partitions=8 (``_conf``) still forces exactly 8 partitions,
+    one file each; reuses test_full_pipeline's output. (The lineage pass
+    reads them back, and the reader may pack small files together.)"""
+    assert len(_parquet_files(f"{workdir}/full/W")) == 8
+
+
+def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
+    res, _, returned = default_run
+    assert sorted(returned) == ["A", "J", "W"]
+    for stage, frame in returned.items():
+        inferred = spark.read.parquet(f"{workdir}/default/{stage}").schema
+        assert frame.schema == inferred, stage
+    lineage = f"{workdir}/default/_lineage"
+    assert res.lineage.schema == spark.read.parquet(
+        *[f"{lineage}/{s}" for s in ("A", "J", "W")]).schema
+
+
+def test_read_lineage_without_checkpoints_is_empty(spark, default_run,
+                                                   workdir):
+    lin = L.read_lineage(spark, workdir, "never_ran")
+    assert lin.count() == 0
+    assert lin.schema == default_run[0].lineage.schema
 
 
 def test_snapshot_id_tracks_manifest(spark, workdir, dims):

@@ -192,6 +192,60 @@ def test_hex_rollup_levels_derived_direct_not_chained(spark):
     assert chained3 == direct3
 
 
+def _direct_per_level(base, cell_col, levels, parent):
+    """(level, cell) -> stats, each level grouped straight from the base
+    tiles with its own groupBy (the yardstick for the one-shuffle rollup)."""
+    out = {}
+    for lvl in levels:
+        rows = base.groupBy(parent(F.col(cell_col), lvl).alias("cell")).agg(
+            F.sum("n_obs").alias("n_obs"), F.sum("sum_val").alias("sum_val"),
+            F.min("min_val").alias("min_val"), F.max("max_val").alias("max_val"),
+        ).collect()
+        out.update({(lvl, r["cell"]): r for r in rows})
+    return out
+
+
+@pytest.mark.parametrize("kind", ["s2", "hex"])
+def test_rollup_matches_direct_per_level_groupby(spark, kind):
+    """tile_rollup fans every base tile out to all target levels and groups
+    once: its rows must equal a separate groupBy per level, and its plan
+    (over an already-materialized base) must hold exactly one Exchange."""
+    import re
+
+    from bufr2geojson_spark.functions.cells import with_cells
+    from bufr2geojson_spark.operators.decode import decode_documents
+    from bufr2geojson_spark.sources.synth import synth_documents
+
+    if kind == "s2":
+        cell_col, base_level, levels = "cell_s2", 14, [10, 6]
+        parent = C.s2_parent_col
+    else:
+        cell_col, base_level, levels = "cell_h3", 7, [5, 3]
+
+        def parent(col, lvl):
+            return C.hex_parent_udf(lvl)(col)
+
+    docs = synth_documents(spark, 300, partitions=4)
+    feats = with_cells(decode_documents(docs).filter("error is null"),
+                       hex_res_=7)
+    agg = tile_aggregate(feats, cell_col=cell_col)
+    base = spark.createDataFrame(agg.collect(), agg.schema)
+    rolled = tile_rollup(base, base_level, levels, cell_col=cell_col,
+                         cell_kind=kind)
+    # read before execution: the executed plan then prints only once
+    plan = rolled._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    got = {(r["level"], r["cell"]): r for r in rolled.collect()}
+    want = _direct_per_level(base, cell_col, levels, parent)
+    want.update({(base_level, r[cell_col]): r for r in base.collect()})
+    assert got.keys() == want.keys()
+    for key, w in want.items():
+        g = got[key]
+        assert (g["n_obs"], g["min_val"], g["max_val"]) == \
+            (w["n_obs"], w["min_val"], w["max_val"]), key
+        assert g["sum_val"] == pytest.approx(w["sum_val"], rel=1e-9), key
+
+
 def test_zorder_partitioning_clusters_both_dimensions(spark):
     """range_partition_by_zorder must place rows sharing (prefix, bucket)
     in the same partition with sorted z-keys inside."""
