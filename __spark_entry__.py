@@ -548,8 +548,7 @@ def _sql_events_profile():
 def q_geo_tile_outliers(spark, sf_dir):
     """Per-tile z-score outliers over the derived geo points (explicit
     moment arithmetic — sum/sumsq — written identically on both sides so
-    the filter boundary and outputs agree bit-for-bit; the stddev_samp
-    operator form is pytest-verified against numpy)."""
+    the filter boundary and outputs agree bit-for-bit)."""
     from bufr2geojson_spark.operators.textops import round_dp
 
     pts = _geo_points(spark, sf_dir).select(

@@ -198,7 +198,8 @@ def _bucket_array_udf(n_planes: int, n_tables: int, dim: int):
     """pandas UDF: embedding → array of ``n_tables`` LSH bucket ids (one
     per OR-ed table, each over its own ``n_planes`` hyperplanes). All
     tables' sign bits come from one vectorized pass; plane-dot accumulation
-    is left-to-right so signs match ``lsh_bucket`` exactly."""
+    is left-to-right, the order of a sequential SQL dot product, so signs
+    match the contract oracle's per-plane ``CASE WHEN dot > 0`` exactly."""
     P = np.asarray(hyperplanes(n_planes * n_tables, dim), dtype=np.float64)
 
     @pandas_udf("array<long>")
@@ -316,31 +317,6 @@ def random_projection(
     )
 
 
-def _dot_lit(vec: Column, plane: list[float]) -> Column:
-    """vec · literal plane, unrolled with scalar literals (codegen; the
-    constants fold into the generated code — no array literal, no HOF).
-    Left-to-right sum, identical to a sequential SQL oracle."""
-    out = vec[0] * F.lit(plane[0])
-    for i in range(1, len(plane)):
-        out = out + vec[i] * F.lit(plane[i])
-    return out
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id of a vector against the literal hyperplanes."""
-    bits = []
-    for p, plane in enumerate(planes):
-        bits.append(
-            F.when(_dot_lit(vec, plane) > 0,
-                   F.shiftleft(F.lit(1).cast("long"), p))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def lsh_ann_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -355,10 +331,10 @@ def lsh_ann_topk(
         F.col(id_col),
         _as_double(F.col(vec_col), dim).alias("v"),
     ).withColumn(
-        # numpy bucket kernel, sign-identical to the literal-plane
-        # ``lsh_bucket`` expression (same planes, same > 0 test, same bit
-        # order) — the n_planes×dim-term generated method is far past the
-        # JIT's huge-method threshold (see _dot_raw_udf note)
+        # numpy bucket kernel, sign-identical to a literal-plane column
+        # expression (same planes, same > 0 test, same bit order), which
+        # would generate an n_planes×dim-term method far past the JIT's
+        # huge-method threshold (see _dot_raw_udf note)
         "bucket", F.element_at(_bucket_array_udf(n_planes, 1, dim)(F.col("v")), 1)
     ).withColumn("vn", _norm_k(F.col("v"), dim))
     q = base.filter(F.col(id_col).isin(query_ids)).select(

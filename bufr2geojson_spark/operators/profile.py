@@ -1,11 +1,9 @@
-"""Data-quality operators: one-pass table profiling and per-tile outliers.
+"""Data-quality operator: one-pass table profiling.
 
 Profiling answers "is this 100 TB table sane?" without N scans: every
 column's metrics ride ONE aggregation (Catalyst evaluates all aggregate
 expressions in a single pass; map-side partials keep the shuffle at one row
-per partition). Outlier detection joins the per-tile moments back to the
-observations — the same broadcast-or-shuffle decision AQE makes for the
-tile table's actual size.
+per partition).
 """
 
 from __future__ import annotations
@@ -81,44 +79,4 @@ def profile_table(df: DataFrame, approx_rsd: float | None = None) -> DataFrame:
         F.col("n_null").cast("long").alias("n_null"),
         F.col("n_distinct").cast("long").alias("n_distinct"),
         "min_str", "max_str", "mean",
-    )
-
-
-def tile_outliers(
-    features: DataFrame,
-    cell_col: str = "cell_s2",
-    value_col: str = "result_value",
-    z_threshold: float = 3.0,
-    min_obs: int = 5,
-) -> DataFrame:
-    """Per-tile z-score outliers: observations more than ``z_threshold``
-    sample standard deviations from their tile's mean (tiles with fewer
-    than ``min_obs`` observations or zero variance are skipped — a z-score
-    there is noise).
-
-    Two aggregations over the same shuffle key then a join back: the tile
-    moments table is tiny relative to the stream, so AQE broadcasts it; the
-    observation side is scanned once. The z computation is pure codegen.
-    """
-    v = F.col(value_col)
-    stats = (
-        features.groupBy(cell_col)
-        .agg(
-            F.count(v).alias("_n"),
-            F.avg(v).alias("_mu"),
-            F.stddev_samp(v).alias("_sd"),
-        )
-        .filter((F.col("_n") >= min_obs) & (F.col("_sd") > 0))
-    )
-    # no broadcast hint: AQE broadcasts when the moments table is small
-    # and degrades to a shuffle join when a fine cell granularity makes it
-    # large — a forced hint would OOM exactly at the scale this targets
-    joined = features.join(stats, on=cell_col)
-    z = (v - F.col("_mu")) / F.col("_sd")
-    return (
-        joined.withColumn("z", z)
-        .filter(F.abs(F.col("z")) >= z_threshold)
-        .drop("_n")
-        .withColumnRenamed("_mu", "tile_mean")
-        .withColumnRenamed("_sd", "tile_std")
     )

@@ -67,15 +67,6 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per distinct text."""
-    keep = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return docs.join(keep, on=id_col, how="left_semi")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------

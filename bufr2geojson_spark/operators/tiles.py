@@ -14,7 +14,7 @@ cells so the common path pays no extra shuffle width.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.functions.cells import MAX_LEVEL, s2_parent_col
@@ -167,27 +167,6 @@ def tile_rollup(
         .withColumn("avg_val", F.col("sum_val") / F.col("n_obs"))
     )
     return out.unionByName(rolled)
-
-
-def tile_cardinality(
-    features: DataFrame,
-    cell_col: str = "cell_s2",
-    prefix_col: str = "cell_prefix",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Per-prefix distinct-tile estimates: ``approx_count_distinct`` (HLL++)
-    next to the exact count. At 100 TB the estimate is the planning input for
-    choosing rollup levels / partition counts without paying a global
-    distinct shuffle — the sketch merges map-side, so the shuffle carries one
-    HLL register set per partition instead of every distinct cell id."""
-    return (
-        features.groupBy(prefix_col)
-        .agg(
-            F.approx_count_distinct(cell_col, rsd).alias("n_tiles_approx"),
-            F.countDistinct(cell_col).alias("n_tiles_exact"),
-            F.count(F.lit(1)).alias("n_obs"),
-        )
-    )
 
 
 def tile_merge(
@@ -592,29 +571,6 @@ def range_partition_by_cell(
     parted = (df.repartitionByRange(*keys) if num_partitions is None
               else df.repartitionByRange(num_partitions, *keys))
     return parted.sortWithinPartitions(prefix_col, cell_col)
-
-
-def range_partition_by_zorder(
-    df: DataFrame,
-    num_partitions: int,
-    dim_a: str = "cell_prefix",
-    dim_b_expr: Column | None = None,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """Multi-dimensional write clustering (N8 depth): range-partition and
-    sort by a Morton key interleaving two dimensions (default: spatial
-    cell prefix × a caller-supplied second dimension such as an hour
-    bucket). Files become range-prunable on EITHER dimension, where the
-    plain cell-prefix ordering (range_partition_by_cell) only prunes
-    spatially."""
-    from bufr2geojson_spark.functions.cells import zorder_key
-
-    if dim_b_expr is None:
-        dim_b_expr = F.lit(0)
-    keyed = df.withColumn(key_col, zorder_key(F.col(dim_a), dim_b_expr))
-    return keyed.repartitionByRange(
-        num_partitions, F.col(key_col)
-    ).sortWithinPartitions(key_col)
 
 
 # ---------------------------------------------------------------------------

@@ -23,15 +23,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
 from bufr2geojson_spark.sources.io import fs_exists, list_subdirs
-
-#: The columns ``lineage_of`` emits, as DDL. Every field is nullable, as in
-#: any parquet re-read.
-LINEAGE_SCHEMA = (
-    "run_id STRING, stage STRING, snapshot_id BIGINT, partition_id INT, "
-    "cell_lo BIGINT, cell_hi BIGINT, row_count BIGINT, checksum STRING, "
-    "wall_ms BIGINT"
-)
 
 
 def lineage_of(

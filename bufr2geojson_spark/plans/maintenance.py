@@ -7,7 +7,8 @@ documents appended since the previous run into the standing tile table.
 Crash safety is write-ordering, not locks:
 
 1. the committed state is ``manifest.json`` = {files, version} (written
-   atomically via tmp+rename);
+   atomically via tmp+rename; only those two keys are read, so manifests
+   that carry extra keys still load);
 2. a run computes the delta against the COMMITTED manifest and writes the
    merged table to ``tiles/v={version+1}`` BEFORE committing the new
    manifest;
@@ -19,7 +20,8 @@ Crash safety is write-ordering, not locks:
    by directory listing.
 
 Readers use ``standing_tiles`` (the committed version), not the newest
-directory, so a half-finished run is invisible.
+directory, so a half-finished run is invisible. Superseded ``v=``
+directories stay on disk; nothing reads them.
 """
 
 from __future__ import annotations
@@ -47,105 +49,14 @@ def load_state(work: str) -> dict | None:
         return json.load(f)
 
 
-def _commit_state(work: str, files: dict[str, int], version: int,
-                  prev_state: dict | None = None) -> None:
-    """Atomic manifest commit. The manifest carries the full SNAPSHOT LOG
-    (Iceberg-style): one entry per committed version with the source-file
-    state that produced it, enabling time travel (``read_tiles``) and
-    snapshot expiry (``expire_snapshots``). Version directories are
-    immutable once committed — a later run never rewrites an older ``v=``
-    dir — so reading an old snapshot needs no locks."""
+def _commit_state(work: str, files: dict[str, int], version: int) -> None:
+    """Atomic manifest commit of ``{files, version}``: the source-file state
+    folded so far and the standing version it produced."""
     p = _state_path(work)
     tmp = p + ".tmp"
-    if prev_state is None:
-        snapshots = []
-    else:
-        # pre-log manifests (no "snapshots" key) still committed a version:
-        # seed the log with it — the same fallback snapshot_history applies —
-        # so upgrading never orphans an already-committed snapshot directory
-        snapshots = list(prev_state.get(
-            "snapshots",
-            [{"version": prev_state["version"],
-              "n_source_files": len(prev_state["files"])}],
-        ))
-    snapshots.append({"version": version, "n_source_files": len(files)})
     with open(tmp, "w") as f:
-        json.dump({"files": files, "version": version,
-                   "snapshots": snapshots}, f)
+        json.dump({"files": files, "version": version}, f)
     os.replace(tmp, p)  # atomic on POSIX — the commit point
-
-
-def snapshot_history(work: str) -> list[dict]:
-    """Committed snapshot log, oldest first. Manifests written before the
-    log existed report just their current version."""
-    state = load_state(work)
-    if state is None:
-        return []
-    return state.get(
-        "snapshots",
-        [{"version": state["version"], "n_source_files": len(state["files"])}],
-    )
-
-
-def read_tiles(spark: SparkSession, work: str,
-               as_of_version: int | None = None) -> DataFrame | None:
-    """Time-travel read of the standing tile table (Iceberg ``VERSION AS OF``
-    semantics): ``as_of_version=None`` reads the latest committed snapshot;
-    an explicit version reads that snapshot's immutable directory. Raises
-    on a version that was never committed (an uncommitted ``v=`` directory
-    left by a crash is NOT readable — the manifest is the source of truth)
-    or was expired by ``expire_snapshots``."""
-    state = load_state(work)
-    if state is None:
-        return None
-    if as_of_version is None:
-        as_of_version = state["version"]
-    committed = {s["version"] for s in snapshot_history(work)}
-    if as_of_version not in committed:
-        raise ValueError(
-            f"version {as_of_version} is not a committed snapshot of {work} "
-            f"(committed: {sorted(committed)})"
-        )
-    path = f"{work}/tiles/v={as_of_version}"
-    if not os.path.isdir(path):
-        raise ValueError(
-            f"snapshot v={as_of_version} was expired (directory removed); "
-            "committed history retains only unexpired versions"
-        )
-    return spark.read.parquet(path)
-
-
-def expire_snapshots(work: str, keep_last: int = 2) -> list[int]:
-    """Iceberg-style snapshot expiry: delete the version directories of all
-    but the newest ``keep_last`` committed snapshots and drop them from the
-    log. Returns the expired version numbers. The CURRENT version is never
-    expired (keep_last is clamped to ≥1). Expiry commits the pruned log
-    atomically BEFORE deleting directories, so a crash mid-delete leaves
-    only untracked garbage dirs, never a tracked-but-missing snapshot."""
-    import shutil
-
-    state = load_state(work)
-    if state is None:
-        return []
-    keep_last = max(1, int(keep_last))
-    snaps = snapshot_history(work)
-    drop = snaps[:-keep_last] if len(snaps) > keep_last else []
-    if not drop:
-        return []
-    keep = snaps[len(drop):]
-    p = _state_path(work)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"files": state["files"], "version": state["version"],
-                   "snapshots": keep}, f)
-    os.replace(tmp, p)
-    expired = []
-    for s in drop:
-        path = f"{work}/tiles/v={s['version']}"
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        expired.append(s["version"])
-    return expired
 
 
 def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
@@ -176,100 +87,6 @@ def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
         merged, v_new = tile_merge(prev, delta), state["version"] + 1
     merged.write.mode("overwrite").parquet(f"{work}/tiles/v={v_new}")
     n_tiles = spark.read.parquet(f"{work}/tiles/v={v_new}").count()
-    _commit_state(work, new_files, v_new, prev_state=state)
+    _commit_state(work, new_files, v_new)
     return {"no_op": False, "version": v_new, "n_tiles": n_tiles,
             "n_new_files": len(new_files) - (len(prev_files or {}))}
-
-
-def read_changes(spark: SparkSession, work: str,
-                 from_version: int, to_version: int,
-                 cell_col: str = "cell_s2") -> DataFrame:
-    """Iceberg-style INCREMENTAL READ between two committed snapshots: the
-    tile-level changelog that turns snapshot ``from_version`` into
-    ``to_version``. Rows carry ``_change_type`` in ('insert', 'update',
-    'delete'); for updates the NEW aggregate row is emitted (the old one is
-    recoverable by time-traveling ``from_version`` — same contract as
-    Iceberg's changelog scan emitting update_after images).
-
-    Plan shape: one full-outer join on the cell key between two immutable
-    snapshot scans — at 100 TB both sides are range-partitioned by cell
-    prefix on disk (N8), so AQE plans a co-located sort-merge join and the
-    shuffle moves each snapshot once. A standing table of S cells diffs in
-    O(S), independent of how many source documents produced it.
-
-    Downstream consumers (streaming tile caches, the IDW/KDE surface
-    maintainers) can apply the changelog instead of re-reading the full
-    snapshot — the same consume-the-delta contract as
-    ``streaming.ingest.run_tile_maintenance_once``.
-    """
-    import pyspark.sql.functions as F
-
-    if from_version == to_version:
-        old = read_tiles(spark, work, from_version)
-        return old.limit(0).withColumn("_change_type", F.lit(""))
-    old = read_tiles(spark, work, from_version)
-    new = read_tiles(spark, work, to_version)
-    stat_cols = [c for c in new.columns if c != cell_col]
-    o = old.select(
-        F.col(cell_col),
-        F.struct(*[F.col(c) for c in stat_cols]).alias("_old"),
-    )
-    n = new.select(
-        F.col(cell_col),
-        F.struct(*[F.col(c) for c in stat_cols]).alias("_new"),
-    )
-    j = o.join(n, on=cell_col, how="full_outer")
-    change = (
-        F.when(F.col("_old").isNull(), F.lit("insert"))
-        .when(F.col("_new").isNull(), F.lit("delete"))
-        .when(F.col("_old") != F.col("_new"), F.lit("update"))
-    )
-    img = F.when(F.col("_new").isNull(), F.col("_old")).otherwise(F.col("_new"))
-    return (
-        j.withColumn("_change_type", change)
-        .filter(F.col("_change_type").isNotNull())
-        .select(
-            cell_col,
-            *[img.getField(c).alias(c) for c in stat_cols],
-            "_change_type",
-        )
-    )
-
-
-def compact_snapshot(spark: SparkSession, work: str,
-                     target_files: int | None = None,
-                     rows_per_file: int = 1_000_000,
-                     cell_col: str = "cell_s2") -> dict:
-    """Iceberg ``rewrite_data_files`` analogue: rewrite the CURRENT committed
-    snapshot's data into ``target_files`` range-partitioned files (by cell
-    key, so file min/max cell ranges stay disjoint and prefix scans prune)
-    and commit the rewrite as a NEW snapshot version. Contents are
-    row-identical; only the file layout changes.
-
-    Incremental maintenance creates one small delta-sized file set per run
-    — the classic small-files problem at 100 TB (NameNode pressure, seek-
-    bound scans, one task per tiny file). Compaction restores scan-sized
-    files without touching the source manifest: the committed ``files``
-    state is carried over unchanged, so the next ``run_maintenance`` still
-    sees exactly the appends since the last fold, and ``read_changes``
-    across a compaction reports zero changes (tested).
-
-    Crash-safe by the same write-ordering as ``run_maintenance``: data lands
-    in ``v={n+1}`` before the manifest commit; a crash leaves the old
-    manifest pointing at the old layout.
-    """
-    state = load_state(work)
-    if state is None:
-        return {"no_op": True, "version": None}
-    cur = spark.read.parquet(f"{work}/tiles/v={state['version']}")
-    if target_files is None:
-        n_rows = cur.count()
-        target_files = max(1, -(-n_rows // int(rows_per_file)))
-    v_new = state["version"] + 1
-    (cur.repartitionByRange(int(target_files), cell_col)
-        .sortWithinPartitions(cell_col)
-        .write.mode("overwrite").parquet(f"{work}/tiles/v={v_new}"))
-    _commit_state(work, state["files"], v_new, prev_state=state)
-    n_files = len([f for f in os.listdir(f"{work}/tiles/v={v_new}")
-                   if f.endswith(".parquet")])
-    return {"no_op": False, "version": v_new, "n_files": n_files}

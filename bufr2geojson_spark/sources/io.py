@@ -15,7 +15,6 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -114,39 +113,3 @@ def incremental_read(
     if not new_files:
         return None, cur
     return spark.read.parquet(*new_files), cur
-
-
-def compact_table(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_bytes: int = 128 << 20,
-    order_cols: tuple[str, ...] | None = None,
-) -> dict:
-    """Rewrite a table into ~``target_bytes`` files (the lakehouse
-    rewrite-data-files maintenance action): streaming/incremental appends
-    leave many small files, and at 100 TB the scan's task count — and the
-    NameNode/manifest pressure — follows the file count, not the byte
-    count. The output file count comes from the source manifest's total
-    bytes; with ``order_cols`` the rewrite uses ``repartitionByRange`` so
-    compaction also restores clustering (cell prefix / z-order), keeping
-    file-level min-max pruning effective after the append churn.
-
-    Writes to ``dst_path`` (swap-on-success, like every maintenance step
-    here — never in place). Returns a summary dict."""
-    files = list_data_files(spark, src_path)
-    total = sum(length for _, length in files)
-    n_out = max(1, -(-total // target_bytes))
-    df = spark.read.parquet(src_path)
-    if order_cols:
-        df = df.repartitionByRange(n_out, *[F.col(c) for c in order_cols])
-    else:
-        df = df.repartition(n_out)
-    df.write.mode("overwrite").parquet(dst_path)
-    out_files = list_data_files(spark, dst_path)
-    return {
-        "n_files_in": len(files), "n_files_out": len(out_files),
-        "bytes_in": total,
-        "bytes_out": sum(length for _, length in out_files),
-    }
-

@@ -1,26 +1,25 @@
-"""Structured Streaming ingest: micro-batch document decode + windowed tiles.
+"""Structured Streaming ingest: micro-batch document decode + standing tiles.
 
 The reference is purely batch (a generator over one file,
 ``bufr2geojson/__init__.py:1179-1310``); streaming is the engine-side
 extension SURVEY.md §2.3 defers to: new document files land in a directory
 (the stand-in for an Iceberg append snapshot), each micro-batch runs the SAME
-stage functions as the batch pipeline (decode → cell encode), and two sinks
-are offered:
+stage functions as the batch pipeline (decode → cell encode), and three
+``foreachBatch`` + ``Trigger.AvailableNow`` sinks are offered:
 
-* ``run_ingest_once`` — ``foreachBatch`` + ``Trigger.AvailableNow``: drain
-  everything currently in the source, write decoded features parquet
-  partitioned by ``cell_prefix``, then stop. Exactly-once per micro-batch via
-  the checkpoint dir; re-running resumes from the last committed offset (the
-  streaming analogue of the batch pipeline's lineage-resume).
-* ``windowed_tile_counts`` — event-time windowed aggregation with a
-  watermark over ``phenomenon_time``: per (window, cell) observation counts.
-  In ``append`` output mode the watermark drops late data and bounds state
-  to watermark horizon × cell cardinality; ``complete`` mode (the bounded
-  drain used by tests/backfills) re-emits all windows and does not bound
-  state — see ``run_windowed_counts_once``.
+* ``run_ingest_once`` — drain everything currently in the source, write
+  decoded features parquet partitioned by ``cell_prefix``, then stop.
+  Exactly-once per micro-batch via the checkpoint dir; re-running resumes
+  from the last committed offset (the streaming analogue of the batch
+  pipeline's lineage-resume).
+* ``run_tile_maintenance_once`` — fold each micro-batch's tile aggregates
+  into a standing tile table versioned by batch id (``read_standing_tiles``
+  reads the latest version).
+* ``run_dedup_ingest_once`` — ``run_ingest_once`` with retransmitted
+  reports dropped by ``dedup_reports_stream``.
 
 All transformations are the stateless batch stages (mapInPandas / pandas
-UDFs work unchanged on streaming DataFrames); only the windowed aggregation
+UDFs work unchanged on streaming DataFrames); only the watermarked dedup
 is stateful, and that state lives in Spark's HDFS-backed state store.
 """
 
@@ -73,25 +72,6 @@ def event_time(features: DataFrame) -> DataFrame:
     )
 
 
-def windowed_tile_counts(
-    features: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    cell_col: str = "cell_prefix",
-) -> DataFrame:
-    """Per-(event-time window, cell) counts with late-data watermark."""
-    return (
-        event_time(features)
-        .filter(F.col("event_ts").isNotNull())
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window).alias("win"), F.col(cell_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.avg("result_value").alias("avg_val"),
-        )
-    )
-
-
 def run_ingest_once(
     spark: SparkSession,
     input_path: str,
@@ -130,42 +110,6 @@ def run_ingest_once(
     return n_batches["n"]
 
 
-def run_windowed_counts_once(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    query_name: str = "tile_counts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    output_mode: str = "complete",
-) -> DataFrame:
-    """AvailableNow windowed aggregation into an in-memory sink — returns
-    the result table for assertions/serving.
-
-    Output-mode semantics matter here: in the default ``complete`` mode
-    Spark does NOT use the watermark to drop late data or bound state — it
-    re-emits every window each batch, which is the right shape for a
-    *bounded drain* (tests, backfills) where the stream ends. For an
-    unbounded production stream pass ``output_mode='append'``: only
-    watermark-expired windows emit, late data is dropped, and state is
-    bounded by watermark horizon × cell cardinality (but windows still open
-    when an AvailableNow drain ends are withheld)."""
-    stream = read_document_stream(spark, input_path)
-    counts = windowed_tile_counts(
-        decode_stream(stream), window=window, watermark=watermark
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
 def dedup_reports_stream(
     features: DataFrame,
     watermark: str = "2 hours",
@@ -175,8 +119,7 @@ def dedup_reports_stream(
     watermark. Uses ``dropDuplicatesWithinWatermark`` — state holds one
     key per feature seen in the watermark horizon and is dropped once the
     watermark passes it, so state is bounded by (arrival rate × horizon),
-    never the stream's lifetime. The batch analogue is
-    ``textops.exact_dedup``; the key is the decoder's md5 report identity
+    never the stream's lifetime. The key is the decoder's md5 report identity
     (one per subset), so a bulletin retransmitted by an upstream broker
     deduplicates even when its document id differs.
 
@@ -302,281 +245,3 @@ def read_standing_tiles(spark: SparkSession, table_path: str) -> DataFrame:
     if not vs:
         raise FileNotFoundError(f"no tile versions under {table_path}")
     return spark.read.parquet(f"{table_path}/v={vs[-1]}")
-
-
-def _run_surface_maintenance_once(
-    spark: SparkSession,
-    input_path: str,
-    surface_path: str,
-    checkpoint_path: str,
-    densify,
-    merge,
-    point_filter,
-    **decode_kw,
-) -> int:
-    """Shared scaffold for streaming surface maintenance (IDW, KDE, and
-    any future keep_state grid): per micro-batch, decode -> filter ->
-    ``densify`` with mergeable integer state -> fold into the standing
-    surface with ``merge`` -> write ``v={batch_id}``. The versioning /
-    replay-idempotency contract lives HERE once: a replayed batch
-    recomputes from the same predecessor version (the newest ``v`` <
-    batch_id) and overwrites the same version directory, so redelivery
-    cannot double-fold a delta."""
-    stream = read_document_stream(spark, input_path)
-    feats = decode_stream(stream, **decode_kw)
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delta = densify(batch_df.filter(point_filter))
-        prev = [v for v in _tile_versions(surface_path) if v < batch_id]
-        if prev:
-            standing = spark.read.parquet(f"{surface_path}/v={prev[-1]}")
-            merged = merge(standing, delta)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{surface_path}/v={batch_id}")
-        n_batches["n"] += 1
-
-    q = (
-        feats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
-
-
-def run_idw_maintenance_once(
-    spark: SparkSession,
-    input_path: str,
-    surface_path: str,
-    checkpoint_path: str,
-    grid_deg: float = 2.0,
-    radius_km: float = 300.0,
-    **decode_kw,
-) -> int:
-    """Streaming maintenance of the IDW analysis surface — the raster twin
-    of ``run_tile_maintenance_once``: each micro-batch's decoded features
-    are gridded with mergeable integer state (``idw_grid(keep_state=True)``)
-    and folded into the versioned standing surface with ``idw_merge``, so
-    the surface stays current without ever rescanning history. Because the
-    state is integer sums, the maintained surface is BIT-IDENTICAL to a
-    one-shot re-analysis over all documents (pinned by test). Returns
-    batches committed this run."""
-    from bufr2geojson_spark.operators.tiles import idw_grid, idw_merge
-
-    return _run_surface_maintenance_once(
-        spark, input_path, surface_path, checkpoint_path,
-        densify=lambda pts: idw_grid(
-            pts, value_col="result_value", grid_deg=grid_deg,
-            radius_km=radius_km, keep_state=True,
-        ),
-        merge=idw_merge,
-        point_filter=(
-            F.col("lat").isNotNull() & F.col("result_value").isNotNull()
-        ),
-        **decode_kw,
-    )
-
-
-def run_kde_maintenance_once(
-    spark: SparkSession,
-    input_path: str,
-    surface_path: str,
-    checkpoint_path: str,
-    grid_deg: float = 2.0,
-    sigma_km: float = 150.0,
-    **decode_kw,
-) -> int:
-    """Streaming maintenance of the KDE density surface — identical
-    contract to ``run_idw_maintenance_once`` (same shared scaffold):
-    each micro-batch densifies with ``kde_heatmap(keep_state=True)`` and
-    folds with ``kde_merge``; the maintained density map is BIT-IDENTICAL
-    to a one-shot full recompute (pinned by test)."""
-    from bufr2geojson_spark.operators.tiles import kde_heatmap, kde_merge
-
-    return _run_surface_maintenance_once(
-        spark, input_path, surface_path, checkpoint_path,
-        densify=lambda pts: kde_heatmap(
-            pts, grid_deg=grid_deg, sigma_km=sigma_km, keep_state=True,
-        ),
-        merge=kde_merge,
-        point_filter=F.col("lat").isNotNull(),
-        **decode_kw,
-    )
-
-
-def session_windowed_station_activity(
-    features: DataFrame,
-    gap: str = "2 hours",
-    watermark: str = "4 hours",
-) -> DataFrame:
-    """Event-time SESSION windows per station: contiguous observation
-    activity separated by ≥ ``gap`` of silence collapses into one session
-    row (window start/end, observation count, mean value). Unlike fixed
-    tumbling windows, session windows have data-dependent extents — Spark
-    keeps per-(station, open-session) state and merges windows that new
-    events bridge; the watermark closes sessions and bounds state to
-    stations × open sessions inside the horizon.
-
-    This is the streaming twin of the batch ``events.sessionize``; gap
-    semantics are identical INCLUDING the exact-gap boundary — Spark
-    merges session windows that touch, so two events exactly ``gap``
-    apart share a session, matching the batch form's strict
-    ``ts > prev + gap`` test (verified empirically in
-    test_session_window_exact_gap_merges; gap+1µs splits). Use
-    ``output_mode='append'`` in production so only watermark-finalized
-    sessions emit."""
-    return (
-        event_time(features)
-        .withWatermark("event_ts", watermark)
-        .groupBy(
-            F.session_window("event_ts", gap).alias("session"),
-            F.col("wsi"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.round(F.avg("result_value"), 4).alias("avg_value"),
-        )
-        .select(
-            "wsi",
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_obs", "avg_value",
-        )
-    )
-
-
-def run_session_windows_once(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    query_name: str = "station_sessions",
-    gap: str = "2 hours",
-    watermark: str = "4 hours",
-    output_mode: str = "complete",
-) -> DataFrame:
-    """AvailableNow drain of the session-window aggregation into a memory
-    sink (complete mode re-emits all sessions — the bounded-drain shape;
-    see run_windowed_counts_once for the append-mode production notes)."""
-    stream = read_document_stream(spark, input_path)
-    sessions = session_windowed_station_activity(
-        decode_stream(stream), gap=gap, watermark=watermark
-    )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def run_stream_stream_join_once(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    query_name: str = "obs_media_join",
-    join_window: str = "3 days",
-    watermark: str = "7 days",
-) -> DataFrame:
-    """Stream-stream inner join with watermarks: the observation feature
-    stream joined to the (stubbed) media-metadata stream of the SAME
-    document corpus on doc_id, constrained to media rows whose synthetic
-    capture time falls within ``join_window`` of the observation's event
-    time. Both sides carry watermarks, so Spark bounds each side's join
-    state to the watermark horizon and can drop matched/expired rows —
-    without the time bound and watermarks a stream-stream join's state
-    grows forever. AvailableNow drain into a memory sink (bounded-drain
-    test shape; production uses append mode to a real sink)."""
-    from bufr2geojson_spark.operators.media import decode_media, media_table
-
-    docs1 = read_document_stream(spark, input_path)
-    docs2 = read_document_stream(spark, input_path)
-    feats = event_time(decode_stream(docs1)).filter(
-        F.col("event_ts").isNotNull()
-    ).select(
-        "doc_id", F.col("feature_id"), F.col("event_ts"),
-    ).withWatermark("event_ts", watermark)
-    media = decode_media(media_table(docs2)).select(
-        "doc_id", "media_ref",
-        # synthetic deterministic capture time derived from the stub sha:
-        # a real pipeline reads EXIF/container metadata here
-        F.timestamp_seconds(
-            F.lit(1646092800)  # 2022-03-01, the synth corpus's month
-            + F.pmod(F.xxhash64("sha"), F.lit(28 * 86400))
-        ).alias("capture_ts"),
-    ).withWatermark("capture_ts", watermark)
-    joined = feats.join(
-        media,
-        (feats["doc_id"] == media["doc_id"])
-        & (media["capture_ts"] >= feats["event_ts"]
-           - F.expr(f"INTERVAL {join_window}"))
-        & (media["capture_ts"] <= feats["event_ts"]
-           + F.expr(f"INTERVAL {join_window}")),
-        "inner",
-    ).select(feats["doc_id"], "feature_id", "media_ref",
-             "event_ts", "capture_ts")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-TEXT_DOCUMENT_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def read_text_document_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of TEXT documents (the training-corpus table
-    shape, as opposed to the BUFR span documents of
-    ``read_document_stream``)."""
-    return spark.readStream.schema(TEXT_DOCUMENT_SCHEMA).parquet(path)
-
-
-def run_dedup_maintenance_once(
-    spark: SparkSession,
-    input_path: str,
-    index_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    **dedup_kw,
-) -> int:
-    """Streaming incremental near-dup: drain newly-arrived documents
-    (AvailableNow) and flag, per micro-batch, the ones that near-duplicate
-    the static accumulated index — ``dedup_against_index`` lifted into the
-    ingestion stream, the shape a production crawler pipeline runs
-    continuously. Each batch's matches land in ``{out_path}/b=<batch_id>``
-    (overwrite → replay-idempotent, same contract as the tile/IDW/KDE
-    maintenance sinks). The index is read per batch so an external
-    compaction can swap it between batches. Returns batches committed."""
-    from bufr2geojson_spark.operators.textops import dedup_against_index
-
-    stream = read_text_document_stream(spark, input_path)
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        index = spark.read.parquet(index_path)
-        matches = dedup_against_index(batch_df, index, **dedup_kw)
-        matches.write.mode("overwrite").parquet(f"{out_path}/b={batch_id}")
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]

@@ -415,203 +415,3 @@ class TestMaintenancePlan:
         assert rerun["version"] == 1   # overwrote the same version
         after = sorted(map(tuple, standing_tiles(spark, work).collect()))
         assert after == final          # identical, not double-merged
-
-    def test_time_travel_and_expiry(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from bufr2geojson_spark.plans.maintenance import (
-            expire_snapshots, read_tiles, run_maintenance, snapshot_history,
-            standing_tiles)
-        from bufr2geojson_spark.sources.synth import synth_documents
-
-        docs_path = str(tmp_path / "docs")
-        work = str(tmp_path / "work")
-        docs = synth_documents(spark, 60, partitions=3)
-        # three appends -> three committed snapshots v=0,1,2
-        for m in range(3):
-            docs.filter(F.crc32("doc_id") % 3 == m) \
-                .write.mode("append").parquet(docs_path)
-            run_maintenance(spark, docs_path, work)
-        hist = snapshot_history(work)
-        assert [s["version"] for s in hist] == [0, 1, 2]
-        # source-file counts in the log are monotone (append-only source)
-        counts = [s["n_source_files"] for s in hist]
-        assert counts == sorted(counts)
-        # latest read == standing table; old snapshots readable & smaller-or-equal
-        latest = sorted(map(tuple, read_tiles(spark, work).collect()))
-        assert latest == sorted(map(tuple,
-                                    standing_tiles(spark, work).collect()))
-        v0 = read_tiles(spark, work, as_of_version=0)
-        n0 = v0.agg(F.sum("n_obs")).collect()[0][0]
-        n2 = read_tiles(spark, work, as_of_version=2) \
-            .agg(F.sum("n_obs")).collect()[0][0]
-        assert n0 < n2                       # old snapshot = old state
-        # an uncommitted version number is not readable
-        with _pytest.raises(ValueError, match="not a committed snapshot"):
-            read_tiles(spark, work, as_of_version=7)
-        # expiry drops the oldest, keeps current; expired version unreadable
-        assert expire_snapshots(work, keep_last=2) == [0]
-        assert [s["version"] for s in snapshot_history(work)] == [1, 2]
-        with _pytest.raises(ValueError):
-            read_tiles(spark, work, as_of_version=0)
-        # current snapshot always survives even keep_last=0
-        assert expire_snapshots(work, keep_last=0) == [1]
-        assert read_tiles(spark, work).count() > 0
-        # expiry is idempotent
-        assert expire_snapshots(work, keep_last=2) == []
-
-
-class TestCompaction:
-    def test_compacts_preserving_rows(self, spark, tmp_path):
-        from bufr2geojson_spark.sources.io import compact_table
-        from bufr2geojson_spark.sources.synth import synth_documents
-
-        src = str(tmp_path / "src")
-        dst = str(tmp_path / "dst")
-        docs = synth_documents(spark, 60, partitions=24)  # 24 tiny files
-        docs.write.parquet(src)
-        summary = compact_table(spark, src, dst, target_bytes=1 << 30)
-        assert summary["n_files_in"] >= 24
-        assert summary["n_files_out"] == 1
-        a = sorted(r["doc_id"] for r in spark.read.parquet(src).collect())
-        b = sorted(r["doc_id"] for r in spark.read.parquet(dst).collect())
-        assert a == b
-
-    def test_order_cols_restore_clustering(self, spark, tmp_path):
-        from bufr2geojson_spark.sources.io import compact_table
-
-        src = str(tmp_path / "s2")
-        dst = str(tmp_path / "d2")
-        df = spark.range(4000).selectExpr(
-            "id", "CAST(pmod(id * 131, 97) AS INT) AS cell")
-        df.repartition(16).write.parquet(src)
-        compact_table(spark, src, dst, target_bytes=12_000,
-                      order_cols=("cell",))
-        # range-partitioned output: per-file cell ranges must not overlap
-        import pyspark.sql.functions as F
-        out = spark.read.parquet(dst).withColumn(
-            "f", F.input_file_name()
-        ).groupBy("f").agg(F.min("cell").alias("lo"), F.max("cell").alias("hi"))
-        rows = sorted(map(tuple, out.select("lo", "hi").collect()))
-        assert len(rows) > 1
-        for (lo1, hi1), (lo2, hi2) in zip(rows, rows[1:]):
-            assert hi1 <= lo2
-
-
-class TestLegacyManifestUpgrade:
-    def test_pre_log_manifest_keeps_old_version_readable(self, spark, tmp_path):
-        """A manifest committed before the snapshot log existed must seed
-        the log on the next commit — the already-committed version stays
-        readable and expirable, never orphaned."""
-        import json as _json
-
-        from bufr2geojson_spark.plans.maintenance import (
-            load_state, read_tiles, run_maintenance, snapshot_history)
-        from bufr2geojson_spark.sources.synth import synth_documents
-
-        docs_path = str(tmp_path / "docs")
-        work = str(tmp_path / "work")
-        docs = synth_documents(spark, 40, partitions=2)
-        docs.filter(F.crc32("doc_id") % 2 == 0).write.parquet(docs_path)
-        run_maintenance(spark, docs_path, work)
-        # simulate a legacy manifest: strip the snapshot log
-        state = load_state(work)
-        del state["snapshots"]
-        with open(f"{work}/manifest.json", "w") as f:
-            _json.dump(state, f)
-        docs.filter(F.crc32("doc_id") % 2 == 1) \
-            .write.mode("append").parquet(docs_path)
-        run_maintenance(spark, docs_path, work)
-        assert [s["version"] for s in snapshot_history(work)] == [0, 1]
-        assert read_tiles(spark, work, as_of_version=0).count() > 0
-
-
-class TestSnapshotChangesAndCompaction:
-    def _three_snapshots(self, spark, tmp_path):
-        from bufr2geojson_spark.plans.maintenance import run_maintenance
-        from bufr2geojson_spark.sources.synth import synth_documents
-
-        docs_path = str(tmp_path / "docs")
-        work = str(tmp_path / "work")
-        docs = synth_documents(spark, 60, partitions=3)
-        for m in range(2):
-            docs.filter(F.crc32("doc_id") % 2 == m) \
-                .write.mode("append").parquet(docs_path)
-            run_maintenance(spark, docs_path, work)
-        return work
-
-    def test_changelog_applies_to_old_snapshot(self, spark, tmp_path):
-        from bufr2geojson_spark.plans.maintenance import (
-            read_changes, read_tiles)
-
-        work = self._three_snapshots(spark, tmp_path)
-        ch = read_changes(spark, work, 0, 1)
-        types = {r["_change_type"] for r in ch.collect()}
-        assert types <= {"insert", "update", "delete"}
-        assert ch.count() > 0
-        # applying the changelog to v0 reproduces v1 exactly
-        v0 = read_tiles(spark, work, 0)
-        v1 = sorted(map(tuple, read_tiles(spark, work, 1).collect()))
-        changed = {r["cell_s2"] for r in ch.collect()}
-        kept = [tuple(r) for r in v0.collect()
-                if r["cell_s2"] not in changed]
-        applied = sorted(
-            kept
-            + [tuple(r)[:-1] for r in ch.collect()
-               if r["_change_type"] != "delete"]
-        )
-        assert applied == v1
-        # self-diff is empty, same schema
-        assert read_changes(spark, work, 1, 1).count() == 0
-
-    def test_compaction_commits_new_identical_snapshot(self, spark, tmp_path):
-        import os as _os
-
-        from bufr2geojson_spark.plans.maintenance import (
-            compact_snapshot, read_changes, read_tiles, snapshot_history)
-
-        work = self._three_snapshots(spark, tmp_path)
-        before = sorted(map(tuple, read_tiles(spark, work).collect()))
-        n_files_before = len([
-            f for f in _os.listdir(f"{work}/tiles/v=1")
-            if f.endswith(".parquet")])
-        s = compact_snapshot(spark, work, target_files=1)
-        assert s["version"] == 2 and s["n_files"] == 1 <= n_files_before
-        assert [x["version"] for x in snapshot_history(work)] == [0, 1, 2]
-        after = sorted(map(tuple, read_tiles(spark, work).collect()))
-        assert after == before                     # row-identical rewrite
-        # a compaction is invisible to the changelog
-        assert read_changes(spark, work, 1, 2).count() == 0
-
-    def test_maintenance_continues_after_compaction(self, spark, tmp_path):
-        from bufr2geojson_spark.plans.maintenance import (
-            compact_snapshot, run_maintenance, standing_tiles)
-        from bufr2geojson_spark.sources.synth import synth_documents
-
-        docs_path = str(tmp_path / "docs")
-        work = str(tmp_path / "work")
-        docs = synth_documents(spark, 60, partitions=3)
-        docs.filter(F.crc32("doc_id") % 3 == 0).write.parquet(docs_path)
-        run_maintenance(spark, docs_path, work)
-        compact_snapshot(spark, work, target_files=1)
-        # source gains files after the compaction; the next run folds ONLY
-        # the appended delta (manifest files state carried through)
-        docs.filter(F.crc32("doc_id") % 3 != 0) \
-            .write.mode("append").parquet(docs_path)
-        r = run_maintenance(spark, docs_path, work)
-        assert not r["no_op"] and r["version"] == 2
-        total = standing_tiles(spark, work).agg(
-            F.sum("n_obs")).collect()[0][0]
-        from bufr2geojson_spark.functions.cells import with_cells
-        from bufr2geojson_spark.operators.decode import decode_documents
-        from bufr2geojson_spark.operators.tiles import tile_aggregate
-        want = tile_aggregate(
-            with_cells(decode_documents(docs).filter("error is null"))
-        ).agg(F.sum("n_obs")).collect()[0][0]
-        assert total == want
-
-    def test_empty_compaction_is_noop(self, spark, tmp_path):
-        from bufr2geojson_spark.plans.maintenance import compact_snapshot
-
-        assert compact_snapshot(
-            spark, str(tmp_path / "nowork"))["no_op"] is True

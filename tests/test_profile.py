@@ -1,10 +1,9 @@
-"""profile_table + tile_outliers semantics."""
+"""profile_table semantics."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bufr2geojson_spark.operators.profile import profile_table, tile_outliers
+from bufr2geojson_spark.operators.profile import profile_table
 
 
 class TestProfileTable:
@@ -37,30 +36,6 @@ class TestProfileTable:
                for r in profile_table(df, approx_rsd=0.02).collect()}
         assert abs(out["k"]["n_distinct"] - 5000) <= 5000 * 0.06
         assert abs(out["s"]["n_distinct"] - 37) <= 4
-
-
-class TestTileOutliers:
-    def test_matches_numpy(self, spark):
-        rows = []
-        rng = [((i * 37) % 97) / 10.0 for i in range(60)]
-        for i, v in enumerate(rng):
-            rows.append((i, 1, float(v)))
-        rows.append((999, 1, 1000.0))          # a blatant outlier
-        rows.append((1000, 2, 5.0))            # tile with < min_obs: skipped
-        df = spark.createDataFrame(rows, "fid int, cell int, v double")
-        out = tile_outliers(df, cell_col="cell", value_col="v",
-                            z_threshold=3.0, min_obs=5)
-        got = {(r["fid"], r["cell"]) for r in out.collect()}
-        vals = np.array([v for _, c, v in rows if c == 1])
-        mu, sd = vals.mean(), vals.std(ddof=1)
-        want = {(f, c) for f, c, v in rows
-                if c == 1 and abs((v - mu) / sd) >= 3.0}
-        assert got == want and (999, 1) in got
-
-    def test_zero_variance_tile_skipped(self, spark):
-        df = spark.createDataFrame(
-            [(i, 1, 2.0) for i in range(10)], "fid int, cell int, v double")
-        assert tile_outliers(df, cell_col="cell", value_col="v").count() == 0
 
 
 class TestProfileWeirdNames:

@@ -1,5 +1,6 @@
-"""Structured Streaming ingest: micro-batch decode parity with batch, windowed
-tile counts, and exactly-once resume semantics via the checkpoint dir."""
+"""Structured Streaming ingest: micro-batch decode parity with batch, standing
+tile maintenance, report dedup, and exactly-once resume semantics via the
+checkpoint dir."""
 
 import shutil
 import tempfile
@@ -10,10 +11,7 @@ from pyspark.sql import functions as F
 from bufr2geojson_spark.functions.cells import with_cells
 from bufr2geojson_spark.operators.decode import decode_documents
 from bufr2geojson_spark.sources.synth import synth_documents
-from bufr2geojson_spark.streaming.ingest import (
-    run_ingest_once,
-    run_windowed_counts_once,
-)
+from bufr2geojson_spark.streaming.ingest import run_ingest_once
 
 
 @pytest.fixture(scope="module")
@@ -64,32 +62,6 @@ def test_stream_new_file_processed_incrementally(spark, stream_dirs):
         with_cells(decode_documents(extra).filter("error is null")).count()
     )
     assert after - before == expected_extra
-
-
-def test_windowed_tile_counts(spark, stream_dirs):
-    base, _ = stream_dirs
-    table = run_windowed_counts_once(
-        spark, f"{base}/in", f"{base}/ckpt_win", query_name="tc_test"
-    )
-    rows = table.collect()
-    assert rows, "windowed aggregation produced no rows"
-    total = sum(r.n_obs for r in rows)
-    # expected over everything currently in the input dir (earlier tests
-    # append files to it)
-    all_docs = spark.read.parquet(f"{base}/in")
-    batch = decode_documents(all_docs).filter("error is null").filter(
-        F.col("phenomenon_time").isNotNull()
-    )
-    # windowed total == decodable features with parseable event time
-    # (batch re-derivation of the same filter)
-    from bufr2geojson_spark.streaming.ingest import event_time
-
-    expected = (
-        event_time(with_cells(batch))
-        .filter(F.col("event_ts").isNotNull())
-        .count()
-    )
-    assert total == expected
 
 
 def test_event_time_is_session_timezone_independent(spark):
@@ -200,227 +172,3 @@ def test_stream_tile_maintenance_rerun_noop(spark, tmp_path):
     after = sorted(map(tuple,
                        read_standing_tiles(spark, f"{base}/tiles").collect()))
     assert before == after
-
-
-def test_stream_session_windows_match_batch_sessionize(spark, tmp_path):
-    """Streaming session windows must carve the same per-station sessions
-    as the batch gap-sessionizer over the same decoded features."""
-    from bufr2geojson_spark.operators.events import sessionize
-    from bufr2geojson_spark.streaming.ingest import run_session_windows_once
-
-    base = str(tmp_path)
-    docs = synth_documents(spark, 80, partitions=4)
-    docs.write.parquet(f"{base}/in")
-    got = run_session_windows_once(
-        spark, f"{base}/in", f"{base}/ckpt",
-        query_name="sess_test", gap="2 hours")
-    stream_rows = {
-        (r["wsi"], str(r["session_start"]), r["n_obs"])
-        for r in got.collect()
-    }
-    # batch oracle: identical gap semantics over the same features
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.streaming.ingest import event_time
-
-    feats = event_time(decode_documents(docs).filter("error is null")) \
-        .filter(F.col("event_ts").isNotNull())
-    batch = sessionize(feats, gap="2 hours", user_col="wsi",
-                       ts_col="event_ts", value_col="result_value")
-    batch_rows = {
-        (r["wsi"], str(r["session_start"]), r["n_events"])
-        for r in batch.collect()
-    }
-    assert stream_rows == batch_rows and len(stream_rows) > 0
-
-
-def test_session_window_exact_gap_merges(spark):
-    """Boundary semantics pin: Spark merges session windows that TOUCH, so
-    an exact-gap pair shares one session — identical to the batch
-    sessionizer's strict `ts > prev + gap` test — while gap+1µs splits.
-    (The parity test above exercises a real exact-2h pair in the corpus;
-    this makes the boundary behavior explicit.)"""
-    df = spark.createDataFrame(
-        [("a", "2024-01-01 10:00:00"), ("a", "2024-01-01 12:00:00")],
-        "k string, ts string").withColumn("ts", F.col("ts").cast("timestamp"))
-    one = df.groupBy(F.session_window("ts", "2 hours"), "k").count().collect()
-    assert len(one) == 1 and one[0]["count"] == 2
-    df2 = spark.createDataFrame(
-        [("a", "2024-01-01 10:00:00"), ("a", "2024-01-01 12:00:00.000001")],
-        "k string, ts string").withColumn("ts", F.col("ts").cast("timestamp"))
-    two = df2.groupBy(F.session_window("ts", "2 hours"), "k").count().collect()
-    assert len(two) == 2
-
-
-def test_stream_stream_join_matches_batch(spark, tmp_path):
-    """The watermarked stream-stream join must produce exactly the rows the
-    equivalent batch join produces over the same drained input."""
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.operators.media import decode_media, media_table
-    from bufr2geojson_spark.streaming.ingest import (
-        event_time, run_stream_stream_join_once)
-
-    base = str(tmp_path)
-    docs = synth_documents(spark, 60, partitions=3)
-    docs.write.parquet(f"{base}/in")
-    got = run_stream_stream_join_once(
-        spark, f"{base}/in", f"{base}/ckpt", query_name="ssj_test")
-    got_rows = sorted(
-        (r["doc_id"], r["feature_id"], r["media_ref"]) for r in got.collect())
-
-    feats = event_time(decode_documents(docs).filter("error is null")) \
-        .filter(F.col("event_ts").isNotNull()) \
-        .select("doc_id", "feature_id", "event_ts")
-    media = decode_media(media_table(docs)).select(
-        "doc_id", "media_ref",
-        (F.timestamp_seconds(
-            F.lit(1646092800)
-            + F.pmod(F.xxhash64("sha"), F.lit(28 * 86400))))
-        .alias("capture_ts"),
-    )
-    batch = feats.join(
-        media,
-        (feats["doc_id"] == media["doc_id"])
-        & (media["capture_ts"] >= feats["event_ts"] - F.expr("INTERVAL 3 DAYS"))
-        & (media["capture_ts"] <= feats["event_ts"] + F.expr("INTERVAL 3 DAYS")),
-        "inner",
-    ).select(feats["doc_id"], "feature_id", "media_ref")
-    batch_rows = sorted(map(tuple, batch.collect()))
-    assert got_rows == batch_rows and len(got_rows) > 0
-
-
-def test_stream_idw_maintenance_matches_batch(spark, tmp_path):
-    """Two waves folded into the standing IDW surface must be BIT-identical
-    to the one-shot grid over all features (integer state merges exactly)."""
-    from bufr2geojson_spark.operators.tiles import idw_grid
-    from bufr2geojson_spark.streaming.ingest import (
-        read_standing_tiles,
-        run_idw_maintenance_once,
-    )
-
-    base = str(tmp_path)
-    docs = synth_documents(spark, 80, partitions=4)
-    wave1 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 0)
-    wave2 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 1)
-    wave1.write.mode("overwrite").parquet(f"{base}/in")
-    n1 = run_idw_maintenance_once(
-        spark, f"{base}/in", f"{base}/idw", f"{base}/ckpt")
-    assert n1 >= 1
-    wave2.write.mode("append").parquet(f"{base}/in")
-    n2 = run_idw_maintenance_once(
-        spark, f"{base}/in", f"{base}/idw", f"{base}/ckpt")
-    assert n2 >= 1
-
-    standing = {
-        (r.gi, r.gj): (r.n_src, r.idw_value, r.sw_e6, r.swv_e8)
-        for r in read_standing_tiles(spark, f"{base}/idw").collect()
-    }
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    pts = feats.filter(
-        F.col("lat").isNotNull() & F.col("result_value").isNotNull()
-    )
-    want = {
-        (r.gi, r.gj): (r.n_src, r.idw_value, r.sw_e6, r.swv_e8)
-        for r in idw_grid(pts, value_col="result_value",
-                          keep_state=True).collect()
-    }
-    assert standing == want and len(want) > 10
-
-
-def test_stream_kde_maintenance_matches_batch(spark, tmp_path):
-    """Two waves folded into the standing KDE density surface must be
-    BIT-identical to the one-shot heatmap over all features."""
-    from bufr2geojson_spark.operators.tiles import kde_heatmap
-    from bufr2geojson_spark.streaming.ingest import (
-        read_standing_tiles,
-        run_kde_maintenance_once,
-    )
-
-    base = str(tmp_path)
-    docs = synth_documents(spark, 80, partitions=4)
-    wave1 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 0)
-    wave2 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 1)
-    wave1.write.mode("overwrite").parquet(f"{base}/in")
-    assert run_kde_maintenance_once(
-        spark, f"{base}/in", f"{base}/kde", f"{base}/ckpt") >= 1
-    wave2.write.mode("append").parquet(f"{base}/in")
-    assert run_kde_maintenance_once(
-        spark, f"{base}/in", f"{base}/kde", f"{base}/ckpt") >= 1
-
-    standing = {
-        (r.gi, r.gj): (r.n_src, r.density, r.sw_e6)
-        for r in read_standing_tiles(spark, f"{base}/kde").collect()
-    }
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    pts = feats.filter(F.col("lat").isNotNull())
-    want = {
-        (r.gi, r.gj): (r.n_src, r.density, r.sw_e6)
-        for r in kde_heatmap(pts, keep_state=True).collect()
-    }
-    assert standing == want and len(want) > 10
-
-
-def test_stream_dedup_maintenance_matches_batch(spark, tmp_path):
-    """Two waves of new documents streamed through the incremental-dedup
-    sink must flag exactly the matches the one-shot batch
-    dedup_against_index finds over all new docs."""
-    from bufr2geojson_spark.operators.textops import dedup_against_index
-    from bufr2geojson_spark.streaming.ingest import (
-        run_dedup_maintenance_once,
-    )
-
-    base = str(tmp_path)
-    kw = dict(num_hashes=8, bands=4, shingle_k=3, threshold=0.3)
-    index_rows = [
-        (1, "the quick brown fox jumps over the lazy dog again", "en",
-         "idx", 49),
-        (2, "spark structured streaming drains files exactly once", "en",
-         "idx", 52),
-        (3, "completely unrelated indexed text about parquet files", "en",
-         "idx", 53),
-    ]
-    schema = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-    spark.createDataFrame(index_rows, schema).write.parquet(f"{base}/index")
-
-    wave1 = [
-        (100, "the quick brown fox jumps over the lazy dog again", "en",
-         "new", 49),                                     # dup of 1
-        (101, "no overlap with anything in the standing index", "en",
-         "new", 46),
-    ]
-    wave2 = [
-        (102, "spark structured streaming drains files exactly once",
-         "en", "new", 52),                               # dup of 2
-        (103, "fresh novel content arriving in the second wave", "en",
-         "new", 47),
-    ]
-    spark.createDataFrame(wave1, schema).write.mode("overwrite").parquet(
-        f"{base}/in")
-    n1 = run_dedup_maintenance_once(
-        spark, f"{base}/in", f"{base}/index", f"{base}/out",
-        f"{base}/ckpt", **kw)
-    assert n1 == 1
-    spark.createDataFrame(wave2, schema).write.mode("append").parquet(
-        f"{base}/in")
-    n2 = run_dedup_maintenance_once(
-        spark, f"{base}/in", f"{base}/index", f"{base}/out",
-        f"{base}/ckpt", **kw)
-    assert n2 == 1
-
-    got = {
-        (r["doc_id"], r["match_id"])
-        for r in spark.read.parquet(f"{base}/out").collect()
-    }
-    all_new = spark.createDataFrame(wave1 + wave2, schema)
-    index = spark.read.parquet(f"{base}/index")
-    want = {
-        (r["doc_id"], r["match_id"])
-        for r in dedup_against_index(all_new, index, **kw).collect()
-    }
-    assert got == want
-    assert got == {(100, 1), (102, 2)}
-    # nothing new -> no batch fires
-    n3 = run_dedup_maintenance_once(
-        spark, f"{base}/in", f"{base}/index", f"{base}/out",
-        f"{base}/ckpt", **kw)
-    assert n3 == 0

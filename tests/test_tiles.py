@@ -119,23 +119,6 @@ def test_range_partitioning_clusters_cells(spark, feat):
         prev_max = row["max"]
 
 
-def test_tile_cardinality_estimate_close_to_exact(spark):
-    from bufr2geojson_spark.functions.cells import with_cells
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.operators.tiles import tile_cardinality
-    from bufr2geojson_spark.sources.synth import synth_documents
-
-    docs = synth_documents(spark, 400, partitions=4)
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    rows = tile_cardinality(feats).collect()
-    assert rows
-    for r in rows:
-        # HLL++ at rsd=0.02 — allow 5% relative error
-        assert abs(r.n_tiles_approx - r.n_tiles_exact) <= max(
-            2, 0.05 * r.n_tiles_exact
-        )
-
-
 def test_hex_rollup_conserves_counts_and_contains_children(spark):
     from bufr2geojson_spark.functions.cells import hex_parent, with_cells
     from bufr2geojson_spark.operators.decode import decode_documents
@@ -244,39 +227,6 @@ def test_rollup_matches_direct_per_level_groupby(spark, kind):
         assert (g["n_obs"], g["min_val"], g["max_val"]) == \
             (w["n_obs"], w["min_val"], w["max_val"]), key
         assert g["sum_val"] == pytest.approx(w["sum_val"], rel=1e-9), key
-
-
-def test_zorder_partitioning_clusters_both_dimensions(spark):
-    """range_partition_by_zorder must place rows sharing (prefix, bucket)
-    in the same partition with sorted z-keys inside."""
-    from pyspark.sql import functions as F
-    from bufr2geojson_spark.functions.cells import with_cells
-    from bufr2geojson_spark.operators.decode import decode_documents
-    from bufr2geojson_spark.operators.tiles import range_partition_by_zorder
-    from bufr2geojson_spark.sources.synth import synth_documents
-
-    docs = synth_documents(spark, 200, partitions=4)
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    day = F.dayofmonth(F.try_to_timestamp(
-        F.substring("phenomenon_time", 1, 19),
-        F.lit("yyyy-MM-dd'T'HH:mm:ss"))).cast("long")
-    out = range_partition_by_zorder(
-        feats.withColumn("_day", F.coalesce(day, F.lit(0))),
-        8, dim_a="cell_prefix", dim_b_expr=F.col("_day"))
-    rows = out.select(
-        F.spark_partition_id().alias("pid"), "zkey"
-    ).collect()
-    by_pid = {}
-    for r in rows:
-        by_pid.setdefault(r.pid, []).append(r.zkey)
-    # sorted within each partition, and partition ranges non-overlapping
-    bounds = []
-    for pid, ks in by_pid.items():
-        assert ks == sorted(ks)
-        bounds.append((min(ks), max(ks), pid))
-    bounds.sort()
-    for (lo1, hi1, _), (lo2, hi2, _) in zip(bounds, bounds[1:]):
-        assert hi1 <= lo2
 
 
 class TestTilePercentiles:
