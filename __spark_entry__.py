@@ -1782,7 +1782,7 @@ def q_geo_tile_merge(spark, sf_dir):
                           cell_col="tile", value_col="result_value")
     delta = tile_aggregate(pts.filter(F.col("pid") % 2 == 1),
                            cell_col="tile", value_col="result_value")
-    out = tile_merge(hist, delta, cell_col="tile")
+    out = tile_merge(hist, delta)
     return out.select(
         "tile", "n_obs",
         round_dp(F.col("sum_val"), 2).alias("sum_val"),

@@ -169,11 +169,7 @@ def tile_rollup(
     return out.unionByName(rolled)
 
 
-def tile_merge(
-    existing: DataFrame,
-    delta: DataFrame,
-    cell_col: str = "cell_s2",
-) -> DataFrame:
+def tile_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Incrementally fold a delta batch's tile aggregates into a standing
     tile table (the continuous-aggregate / hypertable-rollup maintenance
     step): every stat in the tile schema is decomposable — counts and sums
@@ -181,15 +177,18 @@ def tile_merge(
     (never avg-of-avgs) — so the standing table is updated from the DELTA's
     aggregates alone, without rescanning history.
 
-    Both inputs are ``tile_aggregate`` outputs. One union + one groupBy on
-    the cell; at scale the standing table is stored range-partitioned by
+    Both inputs are ``tile_aggregate`` outputs or both ``tile_rollup``
+    outputs; the merge key is every column that is not a stat (the cell for
+    the first, ``(level, cell)`` for the second). One union + one groupBy on
+    the key; at scale the standing table is stored range-partitioned by
     cell prefix (N8), so the union's shuffle moves mostly the (small) delta.
     ``tile_merge(agg(a), agg(b)) == agg(a ∪ b)`` exactly for n/sum/min/max
     (doubles: up to reassociation of the sum — same caveat as any partial
-    aggregation), which pytest asserts."""
-    cols = [cell_col, "n_obs", "sum_val", "min_val", "max_val"]
-    u = existing.select(*cols).unionByName(delta.select(*cols))
-    merged = u.groupBy(cell_col).agg(
+    aggregation), which pytest asserts for both shapes."""
+    stats = ["n_obs", "sum_val", "min_val", "max_val"]
+    key = [c for c in existing.columns if c not in (*stats, "avg_val")]
+    u = existing.select(*key, *stats).unionByName(delta.select(*key, *stats))
+    merged = u.groupBy(*key).agg(
         F.sum("n_obs").alias("n_obs"),
         F.sum("sum_val").alias("sum_val"),
         F.min("min_val").alias("min_val"),

@@ -1,20 +1,27 @@
-"""Incremental maintenance plan: snapshot-diff consume → decode → tile_merge.
+"""Incremental tile maintenance: fold a delta's stage-A tiles into one
+manifest-committed standing table.
 
-The batch-side counterpart of ``streaming.ingest.run_tile_maintenance_once``
-for the spark-submit path (``jobs/maintain.py``): each run folds ONLY the
-documents appended since the previous run into the standing tile table.
+Both incremental drivers run the batch pipeline's own stages on the delta
+only: ``run_maintenance`` here (``jobs/maintain.py``, a snapshot-diff of the
+document table) and ``streaming.ingest.run_tile_maintenance_once``
+(``jobs/stream.py --mode tiles``, one micro-batch at a time). The delta goes
+through ``delta_features`` (D then T of ``plans/pipeline.py``) and
+``fold_tiles`` (A, then ``tile_merge`` into the committed version), so the
+standing table has ``run_pipeline``'s A schema and content: one row per
+(level, cell) at the base level and every rollup level. J is left out: PIP
+is a left join that keeps the first match and kNN is narrow, so J keeps
+every row, and A reads no J column.
 
 Crash safety is write-ordering, not locks:
 
 1. the committed state is ``manifest.json`` = {files, version} (written
    atomically via tmp+rename; only those two keys are read, so manifests
    that carry extra keys still load);
-2. a run computes the delta against the COMMITTED manifest and writes the
-   merged table to ``tiles/v={version+1}`` BEFORE committing the new
-   manifest;
+2. a fold merges the delta into the COMMITTED version and writes the
+   result to ``tiles/v={version}`` BEFORE committing the new manifest;
 3. a crash between (2) and the manifest commit leaves the old manifest in
    place — the rerun recomputes the SAME delta from the SAME predecessor
-   version and overwrites the SAME ``v={version+1}`` directory, then
+   version and overwrites the SAME ``v={version}`` directory, then
    commits. No replay can double-merge a delta, because the standing
    version a delta merges into is named by the committed manifest, never
    by directory listing.
@@ -31,9 +38,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bufr2geojson_spark.functions.cells import with_cells
-from bufr2geojson_spark.operators.decode import decode_documents
-from bufr2geojson_spark.operators.tiles import tile_aggregate, tile_merge
+from bufr2geojson_spark.operators.tiles import tile_merge
+from bufr2geojson_spark.plans.pipeline import (
+    PipelineConfig,
+    cell_stage,
+    decode_stage,
+    tile_stage,
+)
 from bufr2geojson_spark.sources.io import incremental_read
 
 
@@ -60,33 +71,47 @@ def _commit_state(work: str, files: dict[str, int], version: int) -> None:
 
 
 def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
-    """The COMMITTED standing tile table (None before the first run)."""
+    """The COMMITTED standing tile table (None before the first fold)."""
     state = load_state(work)
     if state is None:
         return None
     return spark.read.parquet(f"{work}/tiles/v={state['version']}")
 
 
+def delta_features(docs: DataFrame) -> DataFrame:
+    """D then T of the batch pipeline on a delta of documents (batch or
+    streaming), quarantine rows dropped."""
+    conf = PipelineConfig()
+    return cell_stage(decode_stage(docs, conf).filter("error is null"), conf)
+
+
+def fold_tiles(
+    spark: SparkSession,
+    work: str,
+    features: DataFrame,
+    version: int,
+    files: dict[str, int],
+) -> None:
+    """A on ``features``, merged into the committed standing table, written
+    as ``tiles/v={version}`` and then committed with ``files``."""
+    prev = standing_tiles(spark, work)
+    delta = tile_stage(features, PipelineConfig())
+    merged = delta if prev is None else tile_merge(prev, delta)
+    merged.write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
+    _commit_state(work, files, version)
+
+
 def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
     """One maintenance run; returns a summary dict (``no_op`` True when the
     source gained no files since the committed manifest)."""
-    os.makedirs(work, exist_ok=True)
     state = load_state(work)
     prev_files = state["files"] if state else None
     delta_docs, new_files = incremental_read(spark, docs_path, prev_files)
     if delta_docs is None:
         return {"no_op": True,
                 "version": state["version"] if state else None}
-    delta = tile_aggregate(
-        with_cells(decode_documents(delta_docs).filter("error is null"))
-    )
-    if state is None:
-        merged, v_new = delta, 0
-    else:
-        prev = spark.read.parquet(f"{work}/tiles/v={state['version']}")
-        merged, v_new = tile_merge(prev, delta), state["version"] + 1
-    merged.write.mode("overwrite").parquet(f"{work}/tiles/v={v_new}")
-    n_tiles = spark.read.parquet(f"{work}/tiles/v={v_new}").count()
-    _commit_state(work, new_files, v_new)
-    return {"no_op": False, "version": v_new, "n_tiles": n_tiles,
+    v_new = state["version"] + 1 if state else 0
+    fold_tiles(spark, work, delta_features(delta_docs), v_new, new_files)
+    return {"no_op": False, "version": v_new,
+            "n_tiles": standing_tiles(spark, work).count(),
             "n_new_files": len(new_files) - (len(prev_files or {}))}

@@ -62,6 +62,39 @@ class PipelineConfig:
     checkpoint_stages: tuple = STAGES
 
 
+def decode_stage(docs: DataFrame, conf: PipelineConfig) -> DataFrame:
+    """D: decoded feature rows plus quarantine rows (``error`` set)."""
+    return decode_documents(
+        docs, guess_wsi=conf.guess_wsi, result_time=conf.result_time
+    )
+
+
+def cell_stage(features: DataFrame, conf: PipelineConfig) -> DataFrame:
+    """T: cell_s2 / cell_h3 / cell_prefix on the good feature rows."""
+    return with_cells(
+        features,
+        s2_level_=conf.s2_level,
+        hex_res_=conf.hex_res,
+        prefix_bits=conf.prefix_bits,
+    )
+
+
+def tile_stage(features: DataFrame, conf: PipelineConfig) -> DataFrame:
+    """A: salted per-cell tiles at ``s2_level`` plus every rollup level, one
+    row per (level, cell). Reads only the T columns, so the incremental
+    drivers (``plans/maintenance.py``) run it on T output directly."""
+    base = tile_aggregate(
+        features,
+        cell_col="cell_s2",
+        value_col="result_value",
+        salt_buckets=conf.salt_buckets,
+        hot_threshold=conf.hot_threshold,
+    )
+    return tile_rollup(
+        base, conf.s2_level, list(conf.rollup_levels), cell_col="cell_s2"
+    )
+
+
 @dataclass
 class PipelineResult:
     features: DataFrame | None = None
@@ -122,11 +155,7 @@ def run_pipeline(
 
     # D — decode + quarantine split
     if "D" in upto:
-        def _decode():
-            return decode_documents(
-                docs, guess_wsi=conf.guess_wsi, result_time=conf.result_time
-            )
-        d_all = do("D", _decode)
+        d_all = do("D", lambda: decode_stage(docs, conf))
         features = d_all.filter("error is null")
         res.quarantine = d_all.filter("error is not null")
     else:
@@ -136,12 +165,7 @@ def run_pipeline(
     if "T" in upto:
         features = do(
             "T",
-            lambda: with_cells(
-                features,
-                s2_level_=conf.s2_level,
-                hex_res_=conf.hex_res,
-                prefix_bits=conf.prefix_bits,
-            ),
+            lambda: cell_stage(features, conf),
             cell_col="cell_s2",
         )
     else:
@@ -174,18 +198,7 @@ def run_pipeline(
 
     # A — salted tile aggregation + rollup
     if "A" in upto:
-        def _tiles():
-            base = tile_aggregate(
-                features,
-                cell_col="cell_s2",
-                value_col="result_value",
-                salt_buckets=conf.salt_buckets,
-                hot_threshold=conf.hot_threshold,
-            )
-            return tile_rollup(
-                base, conf.s2_level, list(conf.rollup_levels), cell_col="cell_s2"
-            )
-        res.tiles = do("A", _tiles, cell_col="cell")
+        res.tiles = do("A", lambda: tile_stage(features, conf), cell_col="cell")
 
     # W — range-partitioned final feature table
     if "W" in upto:

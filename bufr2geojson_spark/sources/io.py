@@ -84,10 +84,10 @@ def incremental_read(
     """Incremental scan: only the rows in data files ADDED since
     ``prev_manifest`` (Iceberg's incremental append scan between two
     snapshots). Returns (delta_df | None, new_manifest); None when nothing
-    new. Feed the delta to ``decode_documents`` → ``tiles.tile_merge`` and
-    a consumer processes each appended batch exactly once without ever
-    rescanning history — the batch-side mirror of the streaming
-    maintenance path.
+    new. ``plans.maintenance.run_maintenance`` feeds the delta to
+    ``delta_features`` → ``fold_tiles`` and so processes each appended batch
+    exactly once without ever rescanning history — the batch-side mirror of
+    the streaming maintenance path.
 
     The contract is APPEND-ONLY: a file that shrank/grew in place or
     disappeared since ``prev_manifest`` raises ``ValueError`` — treating a

@@ -4,17 +4,18 @@ The reference is purely batch (a generator over one file,
 ``bufr2geojson/__init__.py:1179-1310``); streaming is the engine-side
 extension SURVEY.md §2.3 defers to: new document files land in a directory
 (the stand-in for an Iceberg append snapshot), each micro-batch runs the SAME
-stage functions as the batch pipeline (decode → cell encode), and three
-``foreachBatch`` + ``Trigger.AvailableNow`` sinks are offered:
+stage functions as the batch pipeline (``plans.maintenance.delta_features``:
+decode → cell encode), and three ``foreachBatch`` + ``Trigger.AvailableNow``
+sinks are offered:
 
 * ``run_ingest_once`` — drain everything currently in the source, write
   decoded features parquet partitioned by ``cell_prefix``, then stop.
   Exactly-once per micro-batch via the checkpoint dir; re-running resumes
   from the last committed offset (the streaming analogue of the batch
   pipeline's lineage-resume).
-* ``run_tile_maintenance_once`` — fold each micro-batch's tile aggregates
-  into a standing tile table versioned by batch id (``read_standing_tiles``
-  reads the latest version).
+* ``run_tile_maintenance_once`` — fold each micro-batch into the standing
+  tile table with ``plans.maintenance.fold_tiles``, the same fold and
+  manifest commit ``jobs/maintain.py`` uses (``standing_tiles`` reads it).
 * ``run_dedup_ingest_once`` — ``run_ingest_once`` with retransmitted
   reports dropped by ``dedup_reports_stream``.
 
@@ -28,8 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bufr2geojson_spark.functions.cells import with_cells
-from bufr2geojson_spark.operators.decode import decode_documents
+from bufr2geojson_spark.plans.maintenance import (
+    delta_features,
+    fold_tiles,
+    load_state,
+)
 from bufr2geojson_spark.schemas import DOCUMENT_SCHEMA
 
 
@@ -43,12 +47,6 @@ def read_document_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def decode_stream(stream_docs: DataFrame, **decode_kw) -> DataFrame:
-    """Stage D+T on a stream — identical functions as batch (stateless)."""
-    feats = decode_documents(stream_docs, **decode_kw).filter("error is null")
-    return with_cells(feats)
 
 
 def event_time(features: DataFrame) -> DataFrame:
@@ -72,19 +70,36 @@ def event_time(features: DataFrame) -> DataFrame:
     )
 
 
+def _drain(feats: DataFrame, sink, checkpoint_path: str) -> int:
+    """Run ``sink(batch_df, batch_id)`` on every micro-batch of ``feats``
+    available now (``Trigger.AvailableNow``), then stop. Returns batches run
+    (0 on a resume with nothing new)."""
+    n = 0
+
+    def counted(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n
+        sink(batch_df, batch_id)
+        n += 1
+
+    q = (
+        feats.writeStream.foreachBatch(counted)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return n
+
+
 def run_ingest_once(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    **decode_kw,
 ) -> int:
     """Drain the source with AvailableNow; per micro-batch, decode + tile-encode
     and append parquet partitioned by cell_prefix. Returns batches committed
     this run (0 on a resume with nothing new — the exactly-once contract)."""
-    stream = read_document_stream(spark, input_path)
-    feats = decode_stream(stream, **decode_kw)
-    n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent per-batch write: foreachBatch alone is only
@@ -98,16 +113,9 @@ def run_ingest_once(
             .partitionBy("cell_prefix")
             .parquet(f"{output_path}/batch_id={batch_id}")
         )
-        n_batches["n"] += 1
 
-    q = (
-        feats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
+    feats = delta_features(read_document_stream(spark, input_path))
+    return _drain(feats, sink, checkpoint_path)
 
 
 def dedup_reports_stream(
@@ -145,14 +153,9 @@ def run_dedup_ingest_once(
     output_path: str,
     checkpoint_path: str,
     watermark: str = "2 hours",
-    **decode_kw,
 ) -> int:
     """AvailableNow drain: decode + streaming report-dedup + idempotent
     per-batch parquet append (same exactly-once shape as run_ingest_once)."""
-    stream = read_document_stream(spark, input_path)
-    feats = dedup_reports_stream(decode_stream(stream, **decode_kw),
-                                 watermark=watermark)
-    n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # per-batch exact dedup mops up the pass-through sliver (invalid-
@@ -163,85 +166,38 @@ def run_dedup_ingest_once(
             .write.mode("overwrite")
             .parquet(f"{output_path}/batch_id={batch_id}")
         )
-        n_batches["n"] += 1
 
-    q = (
-        feats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    feats = dedup_reports_stream(
+        delta_features(read_document_stream(spark, input_path)),
+        watermark=watermark,
     )
-    q.awaitTermination()
-    return n_batches["n"]
+    return _drain(feats, sink, checkpoint_path)
 
 
 def run_tile_maintenance_once(
     spark: SparkSession,
     input_path: str,
-    table_path: str,
+    work: str,
     checkpoint_path: str,
-    **decode_kw,
 ) -> int:
     """Continuous-aggregate maintenance: drain new documents (AvailableNow),
-    and per micro-batch fold the batch's tile aggregates into the standing
-    tile table with ``tile_merge`` — history is never rescanned.
+    and fold each micro-batch into the standing tile table under ``work``
+    with ``fold_tiles`` as version ``batch_id`` — history is never
+    rescanned. Returns batches run.
 
-    The standing table is versioned by batch id
-    (``{table_path}/v=<batch_id>``): each batch writes
-    ``merge(latest version < batch_id, agg(batch))``, so a replayed batch
-    (foreachBatch is at-least-once between append and offset commit)
-    recomputes from the SAME predecessor and overwrites the SAME version —
-    idempotent, the exactly-once contract of ``run_ingest_once`` extended
-    to cumulative state. Readers take the max version. Returns batches
-    committed this run."""
-    from bufr2geojson_spark.operators.tiles import tile_aggregate, tile_merge
-
-    stream = read_document_stream(spark, input_path)
-    feats = decode_stream(stream, **decode_kw)
-    n_batches = {"n": 0}
+    foreachBatch is at-least-once: a crash between the sink and the offset
+    commit replays the batch. A replay after the manifest commit finds its
+    batch id already committed and is skipped; a replay before it finds the
+    old manifest, so it recomputes from the SAME predecessor and overwrites
+    the SAME version — the exactly-once contract of ``run_ingest_once``
+    extended to cumulative state."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delta = tile_aggregate(batch_df, cell_col="cell_s2",
-                               value_col="result_value")
-        prev = [v for v in _tile_versions(table_path) if v < batch_id]
-        if prev:
-            standing = spark.read.parquet(f"{table_path}/v={prev[-1]}")
-            merged = tile_merge(standing, delta, cell_col="cell_s2")
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{table_path}/v={batch_id}")
-        n_batches["n"] += 1
+        state = load_state(work)
+        if state is None or batch_id > state["version"]:
+            # the stream's source offsets live in the checkpoint, so the
+            # manifest records no files
+            fold_tiles(spark, work, batch_df, batch_id, {})
 
-    q = (
-        feats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
-
-
-def _tile_versions(table_path: str) -> list[int]:
-    """Sorted batch-id versions of a maintained tile table (one listing
-    routine shared by writer and reader so they can never disagree on the
-    version layout)."""
-    import os
-    import re
-
-    if not os.path.isdir(table_path):
-        return []
-    out = []
-    for d in os.listdir(table_path):
-        m = re.fullmatch(r"v=(\d+)", d)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def read_standing_tiles(spark: SparkSession, table_path: str) -> DataFrame:
-    """Latest version of the maintained tile table."""
-    vs = _tile_versions(table_path)
-    if not vs:
-        raise FileNotFoundError(f"no tile versions under {table_path}")
-    return spark.read.parquet(f"{table_path}/v={vs[-1]}")
+    feats = delta_features(read_document_stream(spark, input_path))
+    return _drain(feats, sink, checkpoint_path)

@@ -22,3 +22,21 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def assert_same_tiles():
+    """Check two stage-A tile tables hold the same (level, cell) rows at
+    levels 14/10/6: n_obs, min_val and max_val exact, sum_val to 1e-9
+    relative (its last ulp depends on the combine order)."""
+    def check(got, want):
+        g = {(r["level"], r["cell"]): r for r in got.collect()}
+        w = {(r["level"], r["cell"]): r for r in want.collect()}
+        assert set(g) == set(w)
+        assert {level for level, _ in w} == {14, 10, 6}
+        for k, r in w.items():
+            assert g[k]["n_obs"] == r["n_obs"]
+            assert g[k]["min_val"] == r["min_val"]
+            assert g[k]["max_val"] == r["max_val"]
+            assert g[k]["sum_val"] == pytest.approx(r["sum_val"], rel=1e-9)
+    return check

@@ -22,7 +22,6 @@ _REFERENCE = "test reference: "
 _SEAM = "test-fake seam: tests swap in a stub decoder/fetcher through it"
 _PARITY = ("reference parity no job exposes yet; wiring it into a job "
            "would add a flag")
-_READER = "reads a table that a job writes"
 
 # Names no entry point reaches that stay on purpose, with the reason. A
 # kept name also keeps the package helpers it calls.
@@ -46,10 +45,6 @@ KEPT: dict[str, str] = {
     f"{PKG}.operators.media.set_resize_decoder": _SEAM,
     f"{PKG}.functions.geojson.write_geojson": _PARITY,
     f"{PKG}.functions.wmo_tables.CsvTableProvider": _PARITY,
-    f"{PKG}.plans.maintenance.standing_tiles":
-        _READER + " (jobs/maintain.py)",
-    f"{PKG}.streaming.ingest.read_standing_tiles":
-        _READER + " (jobs/stream.py --mode tiles)",
     f"{PKG}.streaming.ingest.dedup_reports_stream":
         "streaming report dedup the planned streaming-vs-batch dedup "
         "contract query will call",

@@ -117,14 +117,16 @@ def test_stream_dedup_drops_retransmitted_reports(spark, tmp_path):
     shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stream_tile_maintenance_matches_batch(spark, tmp_path):
+def test_stream_tile_maintenance_matches_batch(spark, tmp_path,
+                                              assert_same_tiles):
     """Two waves of documents folded incrementally into the standing tile
-    table must equal the one-shot batch aggregate over everything."""
-    from bufr2geojson_spark.operators.tiles import tile_aggregate
-    from bufr2geojson_spark.streaming.ingest import (
-        read_standing_tiles,
-        run_tile_maintenance_once,
+    table must equal the pipeline's stage A over everything."""
+    from bufr2geojson_spark.plans.maintenance import (
+        delta_features,
+        standing_tiles,
     )
+    from bufr2geojson_spark.plans.pipeline import PipelineConfig, tile_stage
+    from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
 
     base = str(tmp_path)
     docs = synth_documents(spark, 80, partitions=4)
@@ -132,43 +134,81 @@ def test_stream_tile_maintenance_matches_batch(spark, tmp_path):
     wave2 = docs.filter(F.crc32(F.col("doc_id")) % 2 == 1)
     wave1.write.mode("overwrite").parquet(f"{base}/in")
     n1 = run_tile_maintenance_once(
-        spark, f"{base}/in", f"{base}/tiles", f"{base}/ckpt")
+        spark, f"{base}/in", f"{base}/work", f"{base}/ckpt")
     assert n1 >= 1
     wave2.write.mode("append").parquet(f"{base}/in")
     n2 = run_tile_maintenance_once(
-        spark, f"{base}/in", f"{base}/tiles", f"{base}/ckpt")
+        spark, f"{base}/in", f"{base}/work", f"{base}/ckpt")
     assert n2 >= 1
 
-    standing = {r["cell_s2"]: r
-                for r in read_standing_tiles(spark, f"{base}/tiles").collect()}
-    full = tile_aggregate(
-        with_cells(decode_documents(docs).filter("error is null"))
-    )
-    want = {r["cell_s2"]: r for r in full.collect()}
-    assert set(standing) == set(want)
-    for c in want:
-        assert standing[c]["n_obs"] == want[c]["n_obs"]
-        assert abs(standing[c]["sum_val"] - want[c]["sum_val"]) < 1e-6
-        assert standing[c]["min_val"] == want[c]["min_val"]
-        assert standing[c]["max_val"] == want[c]["max_val"]
+    assert_same_tiles(standing_tiles(spark, f"{base}/work"),
+                      tile_stage(delta_features(docs), PipelineConfig()))
 
 
 def test_stream_tile_maintenance_rerun_noop(spark, tmp_path):
-    from bufr2geojson_spark.streaming.ingest import (
-        read_standing_tiles,
-        run_tile_maintenance_once,
-    )
+    from bufr2geojson_spark.plans.maintenance import standing_tiles
+    from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
 
     base = str(tmp_path)
     synth_documents(spark, 40, partitions=2).write.parquet(f"{base}/in")
-    run_tile_maintenance_once(spark, f"{base}/in", f"{base}/tiles",
+    run_tile_maintenance_once(spark, f"{base}/in", f"{base}/work",
                               f"{base}/ckpt")
     before = sorted(map(tuple,
-                        read_standing_tiles(spark, f"{base}/tiles").collect()))
+                        standing_tiles(spark, f"{base}/work").collect()))
     # nothing new -> no batch fires, standing table unchanged
-    n = run_tile_maintenance_once(spark, f"{base}/in", f"{base}/tiles",
+    n = run_tile_maintenance_once(spark, f"{base}/in", f"{base}/work",
                                   f"{base}/ckpt")
     assert n == 0
     after = sorted(map(tuple,
-                       read_standing_tiles(spark, f"{base}/tiles").collect()))
+                       standing_tiles(spark, f"{base}/work").collect()))
     assert before == after
+
+
+def test_stream_tile_replay_does_not_double_merge(spark, tmp_path):
+    """foreachBatch is at-least-once: drop the last offset commit so Spark
+    replays that batch. After the manifest commit the replay is skipped;
+    with the manifest rolled back as well (a crash before the commit) it
+    recomputes the same version from the same predecessor."""
+    import json
+    import os
+
+    from bufr2geojson_spark.plans.maintenance import (
+        load_state,
+        standing_tiles,
+    )
+    from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
+
+    base = str(tmp_path)
+    work, ckpt = f"{base}/work", f"{base}/ckpt"
+    docs = synth_documents(spark, 40, partitions=2)
+    docs.filter(F.crc32(F.col("doc_id")) % 2 == 0).write.parquet(f"{base}/in")
+    run_tile_maintenance_once(spark, f"{base}/in", work, ckpt)
+    state_first = load_state(work)
+    docs.filter(F.crc32(F.col("doc_id")) % 2 == 1) \
+        .write.mode("append").parquet(f"{base}/in")
+    run_tile_maintenance_once(spark, f"{base}/in", work, ckpt)
+    state_final = load_state(work)
+    assert state_final["version"] > state_first["version"]
+    final = sorted(map(tuple, standing_tiles(spark, work).collect()))
+
+    def drop_last_commit():
+        commits = f"{ckpt}/commits"
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        assert last == state_final["version"]
+        for name in (str(last), f".{last}.crc"):
+            if os.path.exists(f"{commits}/{name}"):
+                os.remove(f"{commits}/{name}")
+
+    # crash after the manifest commit: the replayed batch is skipped
+    drop_last_commit()
+    assert run_tile_maintenance_once(spark, f"{base}/in", work, ckpt) == 1
+    assert load_state(work) == state_final
+    assert sorted(map(tuple, standing_tiles(spark, work).collect())) == final
+
+    # crash before the manifest commit: the replay refolds the same delta
+    drop_last_commit()
+    with open(f"{work}/manifest.json", "w") as f:
+        json.dump(state_first, f)
+    assert run_tile_maintenance_once(spark, f"{base}/in", work, ckpt) == 1
+    assert load_state(work) == state_final
+    assert sorted(map(tuple, standing_tiles(spark, work).collect())) == final

@@ -277,32 +277,45 @@ class TestTilePercentiles:
 
 class TestTileMerge:
     def test_merge_equals_full_recompute(self, spark):
+        """Both tile shapes: ``tile_aggregate`` output merges on the cell,
+        ``tile_rollup`` output on (level, cell)."""
         from bufr2geojson_spark.operators.tiles import tile_aggregate, tile_merge
 
-        rows = [(f"f{i}", (i * 7) % 13, float((i * 31) % 97) - 40.0)
-                for i in range(400)]
-        df = spark.createDataFrame(rows, "feature_id string, cell int, v double")
-        a = df.filter("cell < 7")        # standing history
-        b = df.filter("cell >= 7")       # fully new cells
+        # 13 level-14 S2 cells 0.3° apart: distinct at levels 14 and 10,
+        # several sharing a level-6 parent
+        ks = np.arange(13)
+        cells = C.s2_encode(48.0 + 0.3 * ks, 11.0 + 0.2 * ks, 14)
+        rows = [(f"f{i}", (i * 7) % 13, int(cells[(i * 7) % 13]),
+                 float((i * 31) % 97) - 40.0) for i in range(400)]
+        df = spark.createDataFrame(
+            rows, "feature_id string, k int, cell long, v double")
+        a = df.filter("k < 7")           # standing history
+        b = df.filter("k >= 7")          # fully new cells
         c = df.filter("v > 0")           # overlapping-cell delta
         base = df.exceptAll(c)
 
-        for hist, delta in [(a, b), (base, c)]:
-            merged = tile_merge(
-                tile_aggregate(hist, cell_col="cell", value_col="v"),
-                tile_aggregate(delta, cell_col="cell", value_col="v"),
-                cell_col="cell",
-            )
-            full = tile_aggregate(df, cell_col="cell", value_col="v")
-            m = {r["cell"]: r for r in merged.collect()}
-            f = {r["cell"]: r for r in full.collect()}
-            assert set(m) == set(f)
-            for cell in f:
-                assert m[cell]["n_obs"] == f[cell]["n_obs"]
-                assert abs(m[cell]["sum_val"] - f[cell]["sum_val"]) < 1e-9
-                assert m[cell]["min_val"] == f[cell]["min_val"]
-                assert m[cell]["max_val"] == f[cell]["max_val"]
-                assert abs(m[cell]["avg_val"] - f[cell]["avg_val"]) < 1e-9
+        def agg(d):
+            return tile_aggregate(d, cell_col="cell", value_col="v")
+
+        def rollup(d):
+            return tile_rollup(agg(d), 14, [10, 6], cell_col="cell")
+
+        stats = ("n_obs", "sum_val", "min_val", "max_val", "avg_val")
+        for tiles in (agg, rollup):
+            full = tiles(df)
+            key = [col for col in full.columns if col not in stats]
+            f = {tuple(r[k] for k in key): r for r in full.collect()}
+            for hist, delta in [(a, b), (base, c)]:
+                merged = tile_merge(tiles(hist), tiles(delta))
+                m = {tuple(r[k] for k in key): r for r in merged.collect()}
+                assert set(m) == set(f)
+                for cell in f:
+                    assert m[cell]["n_obs"] == f[cell]["n_obs"]
+                    assert abs(m[cell]["sum_val"] - f[cell]["sum_val"]) < 1e-9
+                    assert m[cell]["min_val"] == f[cell]["min_val"]
+                    assert m[cell]["max_val"] == f[cell]["max_val"]
+                    assert abs(m[cell]["avg_val"] - f[cell]["avg_val"]) < 1e-9
+        assert {r["level"] for r in rollup(df).collect()} == {14, 10, 6}
 
     def test_merge_idempotent_on_empty_delta(self, spark):
         from bufr2geojson_spark.operators.tiles import tile_aggregate, tile_merge
@@ -312,7 +325,7 @@ class TestTileMerge:
             "feature_id string, cell int, v double")
         tiles = tile_aggregate(df, cell_col="cell", value_col="v")
         empty = tiles.filter("1 = 0")
-        out = tile_merge(tiles, empty, cell_col="cell").collect()
+        out = tile_merge(tiles, empty).collect()
         assert len(out) == 1 and out[0]["n_obs"] == 2 \
             and out[0]["avg_val"] == 3.0
 
@@ -335,10 +348,8 @@ class TestTileMergeAssociativity:
                  round(r["sum_val"], 6), r["min_val"], r["max_val"])
                 for r in t.collect())
 
-        left = tile_merge(tile_merge(aggs[0], aggs[1], "cell"),
-                          aggs[2], "cell")
-        right = tile_merge(aggs[0], tile_merge(aggs[1], aggs[2], "cell"),
-                           "cell")
+        left = tile_merge(tile_merge(aggs[0], aggs[1]), aggs[2])
+        right = tile_merge(aggs[0], tile_merge(aggs[1], aggs[2]))
         full = tile_aggregate(df, cell_col="cell", value_col="v")
         assert canon(left) == canon(right) == canon(full)
 
