@@ -6,7 +6,7 @@ A from-scratch re-expression of the capabilities of ``wmo-im/bufr2geojson``
   Iceberg-style document scan  →  vectorized decode (mapInPandas fold)
   →  H3/S2-style cell encoding  →  broadcast point-in-polygon join
   →  kNN station matching (cell-ring expansion)  →  salted tile aggregation
-  →  range-partitioned write with per-partition lineage + checkpoint-resume.
+  →  range-partitioned write with per-file lineage + checkpoint-resume.
 
 The reference is a single-process Python generator pipeline over the ecCodes
 C library (``bufr2geojson/__init__.py:1179-1310``); this package keeps its

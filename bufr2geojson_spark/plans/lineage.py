@@ -1,75 +1,75 @@
-"""Per-partition lineage records + checkpointed stage writes (N9/N10).
+"""Checkpointed stage writes and their lineage records (N9/N10).
 
 north_rule: "Every partition emits lineage records (input snapshot id, cell
 range, row counts, checksums) to enable checkpoint-resume mid-job."
 
-Design: each pipeline stage materializes to parquet; lineage is computed on
-the *materialized* output (a re-read), so partition ids and checksums
-describe exactly the bytes a resumed run will consume. The checksum is an
-order-insensitive 64-bit content fingerprint: BIT_XOR of ``xxhash64`` over
-the row struct, all JVM-side (one tiny shuffle of pre-aggregated partials;
-the analogue at 100 TB costs one integer per input partition). XOR is
-commutative and overflow-free under ANSI mode, but it is not multiset-safe:
-a row present an even number of times cancels out, so duplicated row pairs
-are invisible to the checksum (``row_count`` still sees them). A stage is
-"complete" iff its parquet ``_SUCCESS`` marker AND its lineage table exist —
-resume skips complete stages and re-reads their output.
+Design: lineage comes from the checkpoint write itself, so it re-reads
+nothing and adds no Spark job. ``write_stage``
+
+1. deletes the stage's old lineage, so no completion marker outlives a
+   rewrite of its data;
+2. writes the stage parquet with one ``Observation`` attached: the row
+   count and the stage checksum;
+3. reads the parquet footer of each written part file on the driver and
+   writes one lineage row per file (``LINEAGE_SCHEMA``) with pyarrow: the
+   part index, the footer's row count and min/max of the cell column, a
+   64-bit digest of the footer bytes, and the data-write wall;
+4. writes ``_lineage/<stage>/_stage.json`` last, holding the rows, the
+   stage checksum, the snapshot id and the written schema.
+
+The driver-side reads and writes go through pyarrow's filesystems, which
+take local paths and ``hdfs://``, ``s3://`` and ``gs://`` URIs but not a
+Hadoop-only scheme such as ``s3a://``. Listing and footer reads for a
+ten-file stage take under 1 ms this way, and 70-110 ms through the Hadoop
+filesystem over py4j (4-core box).
+
+The stage record is the completion marker: a stage is complete iff its
+parquet ``_SUCCESS`` and its stage record exist. Resume skips a complete
+stage and reads it back with the recorded schema, so no job infers the
+schema from a footer. A stage without a record, including one written
+before records existed, is recomputed.
+
+What each checksum covers. The stage checksum is the exact sum of
+``xxhash64`` over every row as DECIMAL(38,0). A sum does not depend on row
+order or partitioning, and it is multiset-safe: a duplicated or dropped
+row changes it. (The per-partition BIT_XOR it replaces cancelled on a
+duplicated row pair.) The price is that content integrity is one number
+per stage, not one per partition. The per-file footer digest pins that
+file's row count, byte sizes and offsets and the min/max of every column;
+it sees a changed value only where the value moves a size or a bound. Map
+columns are left out of the row hash, because ``xxhash64`` takes no maps.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import re
 import time
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
 from bufr2geojson_spark.sources.io import fs_exists, list_subdirs
 
+#: The stage record, written last; its presence marks the stage complete.
+STAGE_RECORD = "_stage.json"
 
-def lineage_of(
-    df: DataFrame,
-    run_id: str,
-    stage: str,
-    snapshot_id: int,
-    cell_col: str | None = None,
-    wall_ms: int = 0,
-) -> DataFrame:
-    """One lineage row per physical partition of ``df``."""
-    hashable = [
-        f.name for f in df.schema.fields
-        if f.dataType.typeName() not in ("map",)
-    ]
-    cell_lo = (
-        F.min(cell_col).cast("long") if cell_col and cell_col in df.columns
-        else F.lit(None).cast("long")
-    )
-    cell_hi = (
-        F.max(cell_col).cast("long") if cell_col and cell_col in df.columns
-        else F.lit(None).cast("long")
-    )
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.format_string(
-                "%016x", F.bit_xor(F.xxhash64(F.struct(*hashable)))
-            ).alias("checksum"),
-            cell_lo.alias("cell_lo"),
-            cell_hi.alias("cell_hi"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            "partition_id",
-            "cell_lo",
-            "cell_hi",
-            "row_count",
-            "checksum",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-        )
-    )
+_PART_INDEX = re.compile(r"part-(\d+)")
+
+
+def content_checksum(df: DataFrame) -> Column:
+    """The stage checksum: the sum of ``xxhash64`` over the non-map columns
+    of every row of ``df``, exact as DECIMAL(38,0)."""
+    cols = [f.name for f in df.schema.fields if f.dataType.typeName() != "map"]
+    return F.sum(F.xxhash64(F.struct(*cols)).cast("decimal(38,0)"))
 
 
 def stage_paths(work_dir: str, run_id: str, stage: str) -> tuple[str, str]:
@@ -79,12 +79,50 @@ def stage_paths(work_dir: str, run_id: str, stage: str) -> tuple[str, str]:
     )
 
 
+def _arrow_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem holding ``path``, and the path within it."""
+    parsed = urlparse(path)
+    if parsed.scheme in ("", "file"):
+        return pafs.LocalFileSystem(), parsed.path
+    return pafs.FileSystem.from_uri(path)
+
+
+def stage_record(work_dir: str, run_id: str, stage: str) -> dict:
+    """The stage record ``write_stage`` wrote last for ``stage``."""
+    fs, lin = _arrow_fs(stage_paths(work_dir, run_id, stage)[1])
+    with fs.open_input_stream(f"{lin}/{STAGE_RECORD}") as f:
+        return json.loads(f.read())
+
+
 def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
                    stage: str) -> bool:
     out, lin = stage_paths(work_dir, run_id, stage)
     return fs_exists(spark, f"{out}/_SUCCESS") and fs_exists(
-        spark, f"{lin}/_SUCCESS"
+        spark, f"{lin}/{STAGE_RECORD}"
     )
+
+
+def _file_lineage(fs: pafs.FileSystem, path: str,
+                  cell_col: str | None) -> dict:
+    """Row count, cell range and footer digest of one parquet file."""
+    with fs.open_input_file(path) as f:
+        size = f.size()
+        footer_len = int.from_bytes(f.read_at(4, size - 8), "little")
+        footer = f.read_at(footer_len, size - 8 - footer_len)
+        meta = pq.read_metadata(f)
+    cols = [meta.schema.column(i).path for i in range(meta.num_columns)]
+    stats = []
+    if cell_col in cols:
+        i = cols.index(cell_col)
+        stats = [meta.row_group(g).column(i).statistics
+                 for g in range(meta.num_row_groups)]
+        stats = [s for s in stats if s is not None and s.has_min_max]
+    return {
+        "cell_lo": min(s.min for s in stats) if stats else None,
+        "cell_hi": max(s.max for s in stats) if stats else None,
+        "row_count": meta.num_rows,
+        "checksum": hashlib.blake2b(footer, digest_size=8).hexdigest(),
+    }
 
 
 def write_stage(
@@ -96,24 +134,72 @@ def write_stage(
     snapshot_id: int,
     cell_col: str | None = None,
 ) -> DataFrame:
-    """Materialize a stage + its lineage; returns the re-read output (so the
-    downstream plan cuts here — the checkpoint boundary). The re-read uses
-    the schema just written instead of inferring it from a file footer."""
+    """Materialize a stage with its lineage (see the module docstring);
+    returns the written output read back with the written schema, so the
+    downstream plan cuts here — the checkpoint boundary."""
     out, lin = stage_paths(work_dir, run_id, stage)
+    fs, out_path = _arrow_fs(out)
+    lin_path = _arrow_fs(lin)[1]
+    fs.delete_dir_contents(lin_path, missing_dir_ok=True)
+    seen = Observation()
     t0 = time.monotonic()
-    df.write.mode("overwrite").parquet(out)
+    df.observe(
+        seen, F.count(F.lit(1)).alias("rows"),
+        content_checksum(df).alias("checksum"),
+    ).write.mode("overwrite").parquet(out)
     wall_ms = int((time.monotonic() - t0) * 1000)
-    materialized = spark.read.schema(df.schema).parquet(out)
-    lineage_of(
-        materialized, run_id, stage, snapshot_id, cell_col, wall_ms
-    ).write.mode("overwrite").parquet(lin)
-    return materialized
+    observed = seen.get
+
+    files = sorted(
+        (info for info in fs.get_file_info(pafs.FileSelector(out_path))
+         if info.is_file and not info.base_name.startswith(("_", "."))),
+        key=lambda info: info.path,
+    )
+    records = [
+        {
+            "run_id": run_id,
+            "stage": stage,
+            "snapshot_id": snapshot_id,
+            "partition_id": int(_PART_INDEX.match(info.base_name)[1]),
+            **_file_lineage(fs, info.path, cell_col),
+            "wall_ms": wall_ms,
+        }
+        for info in files
+    ]
+    file_rows = sum(r["row_count"] for r in records)
+    if file_rows != observed["rows"]:
+        raise RuntimeError(
+            f"stage {stage}: the written files hold {file_rows} rows, the "
+            f"write saw {observed['rows']}"
+        )
+    fs.create_dir(lin_path)
+    pq.write_table(
+        pa.Table.from_pylist(records, schema=to_arrow_schema(LINEAGE_SCHEMA)),
+        f"{lin_path}/part-00000.parquet", filesystem=fs,
+    )
+    _write_record(fs, lin_path, {
+        "rows": observed["rows"],
+        "checksum": str(observed["checksum"] or 0),
+        "snapshot_id": snapshot_id,
+        "schema": json.loads(df.schema.json()),
+    })
+    return spark.read.schema(df.schema).parquet(out)
+
+
+def _write_record(fs: pafs.FileSystem, lin_path: str, record: dict) -> None:
+    """Write the stage record under a hidden name, then move it into place,
+    so a crash never leaves a torn marker."""
+    tmp = f"{lin_path}/.{STAGE_RECORD}.tmp"
+    with fs.open_output_stream(tmp) as f:
+        f.write(json.dumps(record).encode())
+    fs.move(tmp, f"{lin_path}/{STAGE_RECORD}")
 
 
 def read_stage(spark: SparkSession, work_dir: str, run_id: str,
                stage: str) -> DataFrame:
-    out, _ = stage_paths(work_dir, run_id, stage)
-    return spark.read.parquet(out)
+    """A complete stage's output, read with its recorded schema."""
+    schema = StructType.fromJson(stage_record(work_dir, run_id, stage)["schema"])
+    return spark.read.schema(schema).parquet(stage_paths(work_dir, run_id, stage)[0])
 
 
 def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:

@@ -1,6 +1,6 @@
 """The full spatial-join + tiling pipeline with checkpoint-resume (§3.4).
 
-Stage graph (each stage materializes with per-partition lineage → resumable):
+Stage graph (each stage materializes with per-file lineage → resumable):
 
     D  decode          mapInPandas fold (R5-R24), error quarantine split
     T  tile-encode     H3/S2 cell UDFs + cell_prefix (narrow)
@@ -10,7 +10,8 @@ Stage graph (each stage materializes with per-partition lineage → resumable):
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) skips every stage whose
-output + lineage already exist — the checkpoint-resume contract (N10).
+output and stage record already exist — the checkpoint-resume contract
+(N10); ``plans/lineage.py`` describes the records.
 """
 
 from __future__ import annotations

@@ -173,8 +173,10 @@ REGION_POLYGON_SCHEMA = StructType(
 # Lineage (SURVEY.md §1.3; north_rule: per-partition lineage records)
 # ---------------------------------------------------------------------------
 
-#: The columns ``plans.lineage.lineage_of`` emits; ``read_lineage`` reads
-#: with it. Every field is nullable, as in any parquet re-read.
+#: One row per part file of a checkpointed stage, as
+#: ``plans.lineage.write_stage`` writes it from the parquet footers;
+#: ``read_lineage`` reads with it. Every field is nullable, as in any parquet
+#: re-read.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),

@@ -2,13 +2,16 @@
 
 Turns TWO completed jobs/pipeline.py runs (same input, different
 parallelism) into the per-stage efficiency table BENCH.md §5h previously
-assembled by hand. The lineage rows written by
-``bufr2geojson_spark/plans/lineage.py`` already carry everything needed:
-per-stage ``wall_ms``, per-partition ``row_count`` and an
-order/partitioning-insensitive ``checksum`` (XOR of per-partition
-``bit_xor(xxhash64(row))`` fingerprints), so the report also PROVES the two
-runs did identical work before comparing their speeds — a scaling ratio
-over non-identical outputs is meaningless.
+assembled by hand. The lineage written by
+``bufr2geojson_spark/plans/lineage.py`` already carries everything needed:
+per-stage ``wall_ms``, per-file ``row_count`` and, in each stage record
+(``_lineage/<stage>/_stage.json``), an order/partitioning-insensitive
+stage checksum (the exact sum of ``xxhash64(row)``), so the report also
+PROVES the two runs did identical work before comparing their speeds — a
+scaling ratio over non-identical outputs is meaningless. Lineage written
+before stage records existed (the checked-in ``evidence/`` runs) has none;
+there the XOR of the per-partition ``bit_xor(xxhash64(row))`` checksums is
+compared instead.
 
 Usage (after e.g. scripts/bench_scaling.sh, which runs the pipeline at
 2 and 8 cores into $WORK/n2 and $WORK/n8):
@@ -33,7 +36,8 @@ import os
 
 
 def read_lineage(run_dir: str) -> dict[str, dict]:
-    """stage -> {wall_ms, rows, checksum_xor, partitions} from _lineage/*."""
+    """stage -> {wall_ms, rows, checksum_xor, partitions, stage_checksum}
+    from _lineage/*; ``stage_checksum`` is None without a stage record."""
     import pyarrow.parquet as pq
 
     lineage_root = os.path.join(run_dir, "_lineage")
@@ -54,6 +58,11 @@ def read_lineage(run_dir: str) -> dict[str, dict]:
         xor = 0
         for c in checks:
             xor ^= int(c, 16)
+        record = os.path.join(stage_dir, "_stage.json")
+        stage_checksum = None
+        if os.path.exists(record):
+            with open(record) as f:
+                stage_checksum = json.load(f)["checksum"]
         stages[stage] = {
             # wall_ms is stamped once per stage (constant across that
             # stage's partitions) — max() tolerates a re-written stage
@@ -61,6 +70,7 @@ def read_lineage(run_dir: str) -> dict[str, dict]:
             "rows": sum(rows),
             "checksum_xor": f"{xor:016x}",
             "partitions": len(rows),
+            "stage_checksum": stage_checksum,
         }
     return stages
 
@@ -102,13 +112,18 @@ def main() -> None:
     for stage in common:
         wl, wh = lo[stage]["wall_ms"] / 1000.0, hi[stage]["wall_ms"] / 1000.0
         rows_same = lo[stage]["rows"] == hi[stage]["rows"]
+        # the stage-record checksum when both runs have one (multiset-safe),
+        # else the XOR of the per-partition checksums
+        key = ("checksum_xor" if None in (lo[stage]["stage_checksum"],
+                                          hi[stage]["stage_checksum"])
+               else "stage_checksum")
         # checksum covers the full row struct; stages with raw DOUBLE sums
         # (e.g. tile agg's sum_val) legitimately wobble their last ulp when
         # the partial-agg combine order changes with the partitioning, so
         # rows-equal + checksum-differ is "rows-only", not a failure (the
         # oracle-checked digests use e6 fix-point where exactness is the
         # contract)
-        if rows_same and lo[stage]["checksum_xor"] == hi[stage]["checksum_xor"]:
+        if rows_same and lo[stage][key] == hi[stage][key]:
             same = "exact"
         elif rows_same:
             same = "rows-only"

@@ -5,6 +5,7 @@ import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -126,9 +127,10 @@ def test_resume_skips_completed_stages(spark, dims, workdir):
 
 
 #: Spark jobs the run in ``default_run`` may launch, counting the W range
-#: write, every checkpoint re-read and the tile rollup. A change that adds
-#: jobs to every pipeline run has to raise it on purpose.
-JOB_BUDGET = 17
+#: write and the tile rollup; lineage comes from the checkpoint writes and
+#: adds none. A change that adds jobs to every pipeline run has to raise it
+#: on purpose.
+JOB_BUDGET = 11
 
 
 @pytest.fixture(scope="module")
@@ -185,9 +187,10 @@ def test_w_partitions_sized_from_data(default_run, workdir):
 
 def test_w_explicit_partition_count_kept(workdir):
     """output_partitions=8 (``_conf``) still forces exactly 8 partitions,
-    one file each; reuses test_full_pipeline's output. (The lineage pass
-    reads them back, and the reader may pack small files together.)"""
+    one file each, and one lineage row each; reuses test_full_pipeline's
+    output."""
     assert len(_parquet_files(f"{workdir}/full/W")) == 8
+    assert pq.read_table(f"{workdir}/full/_lineage/W").num_rows == 8
 
 
 def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):

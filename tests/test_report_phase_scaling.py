@@ -1,9 +1,10 @@
 """scripts/report_phase_scaling.py: per-stage efficiency from lineage parquet.
 
-Feeds hand-built lineage tables (the exact schema
-``plans/lineage.py:lineage_of`` writes) through the report and checks the
-efficiency math, the identical-work classification (exact / rows-only /
-NO), and the machine-readable JSON line.
+Feeds hand-built lineage tables (``LINEAGE_SCHEMA``, as
+``plans/lineage.py:write_stage`` writes them, with or without a stage
+record) through the report and checks the efficiency math, the
+identical-work classification (exact / rows-only / NO), and the
+machine-readable JSON line.
 """
 
 import json
@@ -35,6 +36,13 @@ def _write_lineage(run_dir, stage, wall_ms, rows_per_part, checksums):
     pq.write_table(
         tbl, os.path.join(run_dir, "_lineage", stage, "part-0.parquet")
     )
+
+
+def _write_stage_record(run_dir, stage, rows, checksum):
+    with open(os.path.join(run_dir, "_lineage", stage, "_stage.json"),
+              "w") as f:
+        json.dump({"rows": rows, "checksum": checksum, "snapshot_id": 1,
+                   "schema": {"type": "struct", "fields": []}}, f)
 
 
 def _run(lo, hi):
@@ -85,3 +93,30 @@ def test_missing_lineage_dir_fails_cleanly(tmp_path):
     )
     assert out.returncode != 0
     assert "no lineage directory" in out.stderr
+
+
+def test_stage_records_decide_same_work_when_both_runs_have_them(tmp_path):
+    lo, hi = str(tmp_path / "lo"), str(tmp_path / "hi")
+    # J: per-file footer digests differ across widths, stage checksums
+    # agree -> "exact"
+    _write_lineage(lo, "J", 4_000, [60, 40], ["00000000000000ff",
+                                              "0000000000000f0f"])
+    _write_lineage(hi, "J", 1_000, [50, 50], ["0000000000000001",
+                                              "0000000000000002"])
+    _write_stage_record(lo, "J", 100, "-1234567890123456789012")
+    _write_stage_record(hi, "J", 100, "-1234567890123456789012")
+    # W: the per-file XORs agree but the stage checksums do not (a
+    # duplicated row pair cancels in an XOR, not in the sum) -> "rows-only"
+    _write_lineage(lo, "W", 1_000, [5], ["0000000000000001"])
+    _write_lineage(hi, "W", 1_000, [5], ["0000000000000001"])
+    _write_stage_record(lo, "W", 5, "42")
+    _write_stage_record(hi, "W", 5, "43")
+    # A: only one run has a stage record -> the XOR comparison, "exact"
+    _write_lineage(lo, "A", 2_000, [10], ["00000000000000aa"])
+    _write_lineage(hi, "A", 500, [10], ["00000000000000aa"])
+    _write_stage_record(hi, "A", 10, "7")
+
+    _, rec = _run(lo, hi)
+    assert rec["stages"]["J"]["same_work"] == "exact"
+    assert rec["stages"]["W"]["same_work"] == "rows-only"
+    assert rec["stages"]["A"]["same_work"] == "exact"
