@@ -17,11 +17,10 @@ nothing and adds no Spark job. ``write_stage``
 4. writes ``_lineage/<stage>/_stage.json`` last, holding the rows, the
    stage checksum, the snapshot id and the written schema.
 
-The driver-side reads and writes go through pyarrow's filesystems, which
-take local paths and ``hdfs://``, ``s3://`` and ``gs://`` URIs but not a
-Hadoop-only scheme such as ``s3a://``. Listing and footer reads for a
-ten-file stage take under 1 ms this way, and 70-110 ms through the Hadoop
-filesystem over py4j (4-core box).
+Every driver-side read and write, the completion check included, goes
+through one filesystem, ``sources.io.driver_fs``: Hadoop resolves the path
+as Spark does, local files are read and written by pyarrow, and any other
+scheme through the Hadoop filesystem.
 
 The stage record is the completion marker: a stage is complete iff its
 parquet ``_SUCCESS`` and its stage record exist. Resume skips a complete
@@ -46,7 +45,6 @@ import hashlib
 import json
 import re
 import time
-from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -57,7 +55,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
-from bufr2geojson_spark.sources.io import fs_exists, list_subdirs
+from bufr2geojson_spark.sources.io import driver_fs, list_subdirs
 
 #: The stage record, written last; its presence marks the stage complete.
 STAGE_RECORD = "_stage.json"
@@ -72,33 +70,34 @@ def content_checksum(df: DataFrame) -> Column:
     return F.sum(F.xxhash64(F.struct(*cols)).cast("decimal(38,0)"))
 
 
-def stage_paths(work_dir: str, run_id: str, stage: str) -> tuple[str, str]:
-    return (
-        f"{work_dir}/{run_id}/{stage}",
-        f"{work_dir}/{run_id}/_lineage/{stage}",
-    )
+def stage_dir(work_dir: str, run_id: str, stage: str) -> str:
+    """Where Spark writes and reads ``stage``'s output."""
+    return f"{work_dir}/{run_id}/{stage}"
 
 
-def _arrow_fs(path: str) -> tuple[pafs.FileSystem, str]:
-    """The pyarrow filesystem holding ``path``, and the path within it."""
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        return pafs.LocalFileSystem(), parsed.path
-    return pafs.FileSystem.from_uri(path)
+def _stage_fs(spark: SparkSession, work_dir: str, run_id: str,
+              stage: str) -> tuple[pafs.FileSystem, str, str]:
+    """The driver's filesystem for a stage, and its output and lineage
+    paths within it."""
+    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
+    return fs, f"{run}/{stage}", f"{run}/_lineage/{stage}"
 
 
-def stage_record(work_dir: str, run_id: str, stage: str) -> dict:
+def stage_record(spark: SparkSession, work_dir: str, run_id: str,
+                 stage: str) -> dict:
     """The stage record ``write_stage`` wrote last for ``stage``."""
-    fs, lin = _arrow_fs(stage_paths(work_dir, run_id, stage)[1])
+    fs, _, lin = _stage_fs(spark, work_dir, run_id, stage)
     with fs.open_input_stream(f"{lin}/{STAGE_RECORD}") as f:
         return json.loads(f.read())
 
 
 def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
                    stage: str) -> bool:
-    out, lin = stage_paths(work_dir, run_id, stage)
-    return fs_exists(spark, f"{out}/_SUCCESS") and fs_exists(
-        spark, f"{lin}/{STAGE_RECORD}"
+    fs, out, lin = _stage_fs(spark, work_dir, run_id, stage)
+    return all(
+        info.type == pafs.FileType.File
+        for info in fs.get_file_info([f"{out}/_SUCCESS",
+                                      f"{lin}/{STAGE_RECORD}"])
     )
 
 
@@ -137,9 +136,8 @@ def write_stage(
     """Materialize a stage with its lineage (see the module docstring);
     returns the written output read back with the written schema, so the
     downstream plan cuts here — the checkpoint boundary."""
-    out, lin = stage_paths(work_dir, run_id, stage)
-    fs, out_path = _arrow_fs(out)
-    lin_path = _arrow_fs(lin)[1]
+    out = stage_dir(work_dir, run_id, stage)
+    fs, out_path, lin_path = _stage_fs(spark, work_dir, run_id, stage)
     fs.delete_dir_contents(lin_path, missing_dir_ok=True)
     seen = Observation()
     t0 = time.monotonic()
@@ -198,8 +196,9 @@ def _write_record(fs: pafs.FileSystem, lin_path: str, record: dict) -> None:
 def read_stage(spark: SparkSession, work_dir: str, run_id: str,
                stage: str) -> DataFrame:
     """A complete stage's output, read with its recorded schema."""
-    schema = StructType.fromJson(stage_record(work_dir, run_id, stage)["schema"])
-    return spark.read.schema(schema).parquet(stage_paths(work_dir, run_id, stage)[0])
+    record = stage_record(spark, work_dir, run_id, stage)
+    schema = StructType.fromJson(record["schema"])
+    return spark.read.schema(schema).parquet(stage_dir(work_dir, run_id, stage))
 
 
 def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:

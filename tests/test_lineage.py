@@ -3,14 +3,17 @@ footers, and the stage record as the completion marker (N9/N10)."""
 
 import os
 import shutil
+import uuid
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 import pytest
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
+from bufr2geojson_spark.sources.io import driver_fs
 from bufr2geojson_spark.sources.synth import (
     synth_documents,
     synth_region_polygons,
@@ -61,15 +64,15 @@ def test_duplicated_row_pair_changes_stage_checksum(spark, tmp_path):
     pair = df.filter("id = 3")
     L.write_stage(df, spark, str(tmp_path), "r", "X", 1)
     L.write_stage(df.union(pair).union(pair), spark, str(tmp_path), "r", "Y", 1)
-    x = L.stage_record(str(tmp_path), "r", "X")
-    y = L.stage_record(str(tmp_path), "r", "Y")
+    x = L.stage_record(spark, str(tmp_path), "r", "X")
+    y = L.stage_record(spark, str(tmp_path), "r", "Y")
     assert (x["rows"], y["rows"]) == (50, 52)
     assert x["checksum"] != y["checksum"]
 
 
 @pytest.mark.parametrize("stage", ["J", "A", "W"])
 def test_stage_record_matches_what_was_written(spark, work, stage):
-    record = L.stage_record(work, "base", stage)
+    record = L.stage_record(spark, work, "base", stage)
     assert record["snapshot_id"] == 11
     assert record["checksum"] == _recomputed(spark, work, "base", stage)
     lin = L.read_lineage(spark, work, "base").filter(F.col("stage") == stage)
@@ -103,7 +106,7 @@ def test_changed_value_moves_checksum_and_footer_digest(spark, work,
     i = table.schema.get_field_index("result_value")
     changed = values.to_pylist()
     changed[0] = pc.max(values).as_py() + 1.0
-    fs = L._arrow_fs(path)[0]
+    fs = pafs.LocalFileSystem()
     pq.write_table(table, str(tmp_path / "same.parquet"))
     pq.write_table(table.set_column(i, "result_value", [changed]), path)
     # the edit bypasses Hadoop, so drop the local filesystem's .crc sidecar
@@ -115,7 +118,7 @@ def test_changed_value_moves_checksum_and_footer_digest(spark, work,
     assert edited["row_count"] == same["row_count"] == table.num_rows
     assert edited["checksum"] != same["checksum"]
     assert (_recomputed(spark, str(tmp_path), "run", "W")
-            != L.stage_record(str(tmp_path), "run", "W")["checksum"])
+            != L.stage_record(spark, str(tmp_path), "run", "W")["checksum"])
 
 
 def _checkpointed(res):
@@ -144,8 +147,8 @@ def test_crash_before_stage_record_recomputes_that_stage(
     base = L.read_stage(spark, work, "base", "A")
     assert_same_tiles(res.tiles, base)
     for stage in ("J", "W"):
-        assert (L.stage_record(work, "crashed", stage)["checksum"]
-                == L.stage_record(work, "base", stage)["checksum"])
+        assert (L.stage_record(spark, work, "crashed", stage)["checksum"]
+                == L.stage_record(spark, work, "base", stage)["checksum"])
 
 
 def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
@@ -168,5 +171,63 @@ def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
             os.path.join(work, "old", "_lineage", stage, "_SUCCESS"))
         assert (lin.filter(F.col("stage") == stage).count()
                 == len(_files(work, "old", stage)))
-        assert (L.stage_record(work, "old", stage)["rows"]
-                == L.stage_record(work, "base", stage)["rows"])
+        assert (L.stage_record(spark, work, "old", stage)["rows"]
+                == L.stage_record(spark, work, "base", stage)["rows"])
+
+
+@pytest.fixture
+def default_fs_elsewhere(spark, tmp_path):
+    """``fs.defaultFS`` set to a Hadoop view filesystem whose ``/work`` is
+    ``tmp_path``, so a path without a scheme leaves the driver's local disk,
+    as on a cluster whose default filesystem is ``hdfs://``. The authority
+    is fresh each time, because Hadoop caches a filesystem by it."""
+    conf = spark._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    authority = f"lineage{uuid.uuid4().hex[:8]}"
+    link = f"fs.viewfs.mounttable.{authority}.link./work"
+    conf.set(link, tmp_path.as_uri())
+    conf.set("fs.defaultFS", f"viewfs://{authority}/")
+    try:
+        yield authority
+    finally:
+        conf.set("fs.defaultFS", old)
+        conf.unset(link)
+
+
+def test_driver_fs_resolves_paths_as_spark_does(spark, tmp_path):
+    for path in (str(tmp_path), tmp_path.as_uri(), f"file:{tmp_path}"):
+        fs, inner = driver_fs(spark, path)
+        assert (fs.type_name, inner) == ("local", str(tmp_path))
+
+
+def test_driver_fs_follows_the_default_filesystem(spark, tmp_path,
+                                                  default_fs_elsewhere):
+    fs, inner = driver_fs(spark, "/work/run")
+    assert (fs.type_name, inner) == (
+        "py::hadoop", f"viewfs://{default_fs_elsewhere}/work/run")
+    fs, inner = driver_fs(spark, f"file:{tmp_path}")
+    assert (fs.type_name, inner) == ("local", str(tmp_path))
+
+
+def test_lineage_on_the_default_filesystem(spark, tmp_path,
+                                           default_fs_elsewhere):
+    """A work dir without a scheme on a non-local default filesystem: the
+    data, the lineage and the stage record all land where Spark resolves the
+    path, the completion check finds them there, and a rewrite replaces
+    them. Every driver-side call goes through the Hadoop filesystem."""
+    df = spark.range(60).select("id", (F.col("id") % 9).alias("cell"))
+    for n in (60, 30):
+        L.write_stage(df.limit(n).repartition(3), spark, "/work", "r", "X",
+                      5, cell_col="cell")
+        assert L.stage_complete(spark, "/work", "r", "X")
+        record = L.stage_record(spark, "/work", "r", "X")
+        assert (record["rows"], record["snapshot_id"]) == (n, 5)
+        back = L.read_stage(spark, "/work", "r", "X")
+        assert str(back.select(L.content_checksum(back)).first()[0]) == (
+            record["checksum"])
+        lin = L.read_lineage(spark, "/work", "r").collect()
+        assert len(lin) == len(_files(str(tmp_path), "r", "X"))
+        assert sum(r.row_count for r in lin) == n
+        assert all(0 <= r.cell_lo <= r.cell_hi <= 8 for r in lin)
+    assert os.path.isfile(tmp_path / "r" / "_lineage" / "X" / L.STAGE_RECORD)
+    assert not L.stage_complete(spark, "/work", "r", "Y")
