@@ -112,7 +112,7 @@ def bench_pipeline(
     the W and A lineage row counts."""
     from pyspark.sql import functions as F
 
-    from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from bufr2geojson_spark.plans.pipeline import run_pipeline
     from bufr2geojson_spark.sources.synth import (
         default_n_stations,
         synth_documents,
@@ -123,7 +123,6 @@ def bench_pipeline(
     n_st = default_n_stations(n_docs)
     stations = synth_stations(spark, n_st)
     polygons = synth_region_polygons(spark)
-    conf = PipelineConfig(checkpoint_stages=("J", "A", "W"))
     work = tempfile.mkdtemp(prefix="b2g_bench_work_", dir=_tmpfs_local_dir())
 
     def corpus(n):
@@ -135,7 +134,7 @@ def bench_pipeline(
     def run(docs, run_id):
         t0 = time.monotonic()
         res = run_pipeline(spark, docs, stations, polygons, work, run_id,
-                           resume=False, conf=conf)
+                           resume=False)
         wall = time.monotonic() - t0
         rows = dict(res.lineage.groupBy("stage").agg(
             F.sum("row_count")).collect())

@@ -14,13 +14,13 @@ nothing and adds no Spark job. ``write_stage``
    writes one lineage row per file (``LINEAGE_SCHEMA``) with pyarrow: the
    part index, the footer's row count and min/max of the cell column, a
    64-bit digest of the footer bytes, and the data-write wall;
-4. writes ``_lineage/<stage>/_stage.json`` last, holding the rows, the
-   stage checksum, the snapshot id and the written schema.
+4. commits ``_lineage/<stage>/_stage.json`` last (``sources.io.commit_json``)
+   with the rows, the stage checksum, the snapshot id and the written schema.
 
-Every driver-side read and write, the completion check included, goes
-through one filesystem, ``sources.io.driver_fs``: Hadoop resolves the path
-as Spark does, local files are read and written by pyarrow, and any other
-scheme through the Hadoop filesystem.
+Every driver-side listing, read and write, the completion check included,
+goes through one filesystem, ``sources.io.driver_fs``: Hadoop resolves the
+path as Spark does, local files are read and written by pyarrow, and any
+other scheme through the Hadoop filesystem.
 
 The stage record is the completion marker: a stage is complete iff its
 parquet ``_SUCCESS`` and its stage record exist. Resume skips a complete
@@ -55,7 +55,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
-from bufr2geojson_spark.sources.io import driver_fs, list_subdirs
+from bufr2geojson_spark.sources.io import commit_json, driver_fs, read_json
 
 #: The stage record, written last; its presence marks the stage complete.
 STAGE_RECORD = "_stage.json"
@@ -87,8 +87,7 @@ def stage_record(spark: SparkSession, work_dir: str, run_id: str,
                  stage: str) -> dict:
     """The stage record ``write_stage`` wrote last for ``stage``."""
     fs, _, lin = _stage_fs(spark, work_dir, run_id, stage)
-    with fs.open_input_stream(f"{lin}/{STAGE_RECORD}") as f:
-        return json.loads(f.read())
+    return read_json(fs, f"{lin}/{STAGE_RECORD}")
 
 
 def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
@@ -103,12 +102,13 @@ def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
 
 def _file_lineage(fs: pafs.FileSystem, path: str,
                   cell_col: str | None) -> dict:
-    """Row count, cell range and footer digest of one parquet file."""
+    """Row count, cell range and footer digest of one parquet file, from
+    one read of its tail: the footer, its length and the magic."""
     with fs.open_input_file(path) as f:
         size = f.size()
         footer_len = int.from_bytes(f.read_at(4, size - 8), "little")
-        footer = f.read_at(footer_len, size - 8 - footer_len)
-        meta = pq.read_metadata(f)
+        tail = f.read_at(footer_len + 8, size - 8 - footer_len)
+    meta = pq.read_metadata(pa.BufferReader(tail))
     cols = [meta.schema.column(i).path for i in range(meta.num_columns)]
     stats = []
     if cell_col in cols:
@@ -120,7 +120,8 @@ def _file_lineage(fs: pafs.FileSystem, path: str,
         "cell_lo": min(s.min for s in stats) if stats else None,
         "cell_hi": max(s.max for s in stats) if stats else None,
         "row_count": meta.num_rows,
-        "checksum": hashlib.blake2b(footer, digest_size=8).hexdigest(),
+        "checksum": hashlib.blake2b(tail[:footer_len],
+                                    digest_size=8).hexdigest(),
     }
 
 
@@ -175,22 +176,13 @@ def write_stage(
         pa.Table.from_pylist(records, schema=to_arrow_schema(LINEAGE_SCHEMA)),
         f"{lin_path}/part-00000.parquet", filesystem=fs,
     )
-    _write_record(fs, lin_path, {
+    commit_json(fs, f"{lin_path}/{STAGE_RECORD}", {
         "rows": observed["rows"],
         "checksum": str(observed["checksum"] or 0),
         "snapshot_id": snapshot_id,
         "schema": json.loads(df.schema.json()),
     })
     return spark.read.schema(df.schema).parquet(out)
-
-
-def _write_record(fs: pafs.FileSystem, lin_path: str, record: dict) -> None:
-    """Write the stage record under a hidden name, then move it into place,
-    so a crash never leaves a torn marker."""
-    tmp = f"{lin_path}/.{STAGE_RECORD}.tmp"
-    with fs.open_output_stream(tmp) as f:
-        f.write(json.dumps(record).encode())
-    fs.move(tmp, f"{lin_path}/{STAGE_RECORD}")
 
 
 def read_stage(spark: SparkSession, work_dir: str, run_id: str,
@@ -205,5 +197,11 @@ def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:
     """Every lineage table of ``run_id`` (empty if it has none). The stage
     directories are listed rather than globbed: Spark probes a single glob
     path for streaming metadata and logs a FileNotFoundException for it."""
-    stages = list_subdirs(spark, f"{work_dir}/{run_id}/_lineage")
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(*stages)
+    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
+    stages = sorted(
+        info.base_name for info in fs.get_file_info(
+            pafs.FileSelector(f"{run}/_lineage", allow_not_found=True))
+        if info.type == pafs.FileType.Directory
+    )
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        *(f"{work_dir}/{run_id}/_lineage/{s}" for s in stages))

@@ -14,9 +14,10 @@ every row, and A reads no J column.
 
 Crash safety is write-ordering, not locks:
 
-1. the committed state is ``manifest.json`` = {files, version} (written
-   atomically via tmp+rename; only those two keys are read, so manifests
-   that carry extra keys still load);
+1. the committed state is ``manifest.json`` = {files, version}, beside
+   the tiles on any scheme (it goes through ``sources.io.driver_fs``) and
+   committed by ``commit_json``'s replacing move, HDFS included (only those
+   two keys are read, so manifests that carry extra keys still load);
 2. a fold merges the delta into the COMMITTED version and writes the
    result to ``tiles/v={version}`` BEFORE committing the new manifest;
 3. a crash between (2) and the manifest commit leaves the old manifest in
@@ -33,9 +34,6 @@ directories stay on disk; nothing reads them.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from bufr2geojson_spark.operators.tiles import tile_merge
@@ -45,34 +43,22 @@ from bufr2geojson_spark.plans.pipeline import (
     decode_stage,
     tile_stage,
 )
-from bufr2geojson_spark.sources.io import incremental_read
+from bufr2geojson_spark.sources.io import (
+    commit_json,
+    driver_fs,
+    incremental_read,
+    read_json,
+)
 
 
-def _state_path(work: str) -> str:
-    return os.path.join(work, "manifest.json")
-
-
-def load_state(work: str) -> dict | None:
-    p = _state_path(work)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _commit_state(work: str, files: dict[str, int], version: int) -> None:
-    """Atomic manifest commit of ``{files, version}``: the source-file state
-    folded so far and the standing version it produced."""
-    p = _state_path(work)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"files": files, "version": version}, f)
-    os.replace(tmp, p)  # atomic on POSIX — the commit point
+def load_state(spark: SparkSession, work: str) -> dict | None:
+    """The committed manifest (None before the first fold)."""
+    return read_json(*driver_fs(spark, f"{work}/manifest.json"))
 
 
 def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
     """The COMMITTED standing tile table (None before the first fold)."""
-    state = load_state(work)
+    state = load_state(spark, work)
     if state is None:
         return None
     return spark.read.parquet(f"{work}/tiles/v={state['version']}")
@@ -93,18 +79,20 @@ def fold_tiles(
     files: dict[str, int],
 ) -> None:
     """A on ``features``, merged into the committed standing table, written
-    as ``tiles/v={version}`` and then committed with ``files``."""
+    as ``tiles/v={version}`` and then committed with ``files``, the source
+    files folded so far."""
     prev = standing_tiles(spark, work)
     delta = tile_stage(features, PipelineConfig())
     merged = delta if prev is None else tile_merge(prev, delta)
     merged.write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
-    _commit_state(work, files, version)
+    commit_json(*driver_fs(spark, f"{work}/manifest.json"),
+                {"files": files, "version": version})
 
 
 def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
     """One maintenance run; returns a summary dict (``no_op`` True when the
     source gained no files since the committed manifest)."""
-    state = load_state(work)
+    state = load_state(spark, work)
     prev_files = state["files"] if state else None
     delta_docs, new_files = incremental_read(spark, docs_path, prev_files)
     if delta_docs is None:

@@ -10,8 +10,9 @@ Stage graph (each stage materializes with per-file lineage → resumable):
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) skips every stage whose
-output and stage record already exist — the checkpoint-resume contract
-(N10); ``plans/lineage.py`` describes the records.
+output and stage record exist, until it recomputes one: every later stage
+is then stale — the checkpoint-resume contract (N10); ``plans/lineage.py``
+describes the records.
 """
 
 from __future__ import annotations
@@ -55,12 +56,12 @@ class PipelineConfig:
     stages: tuple = STAGES
     # Stages that materialize (parquet + lineage = resume points). Stages NOT
     # listed stay lazy and fuse into the next checkpointed stage — D/T/J are
-    # all narrow, so e.g. ("J", "A", "W") runs decode+cells+joins as ONE pass
-    # over the data with a single feature-table write instead of three. Full
-    # per-stage checkpointing is maximum resumability; coarse checkpointing
-    # is maximum throughput (at 100 TB each extra checkpoint is a full
-    # table write+read). Lineage rows exist for every checkpointed stage.
-    checkpoint_stages: tuple = STAGES
+    # all narrow, so the default runs decode+cells+joins as ONE pass over
+    # the data with a single feature-table write instead of three (at
+    # 100 TB each extra checkpoint is a full table write+read); STAGES
+    # checkpoints every stage, for maximum resumability. Lineage rows exist
+    # for every checkpointed stage.
+    checkpoint_stages: tuple = ("J", "A", "W")
 
 
 def decode_stage(docs: DataFrame, conf: PipelineConfig) -> DataFrame:
@@ -141,7 +142,9 @@ def run_pipeline(
             res.executed.append(f"{stage}~fused")
             materialized = False
             return compute()
-        if resume and L.stage_complete(spark, work_dir, run_id, stage):
+        # once a checkpointed stage is recomputed, every later one is stale
+        if (resume and not set(conf.checkpoint_stages) & set(res.executed)
+                and L.stage_complete(spark, work_dir, run_id, stage)):
             res.skipped.append(stage)
             materialized = True  # parquet read-back needs no fused-chain cache
             return L.read_stage(spark, work_dir, run_id, stage)

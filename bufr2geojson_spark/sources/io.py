@@ -9,26 +9,21 @@ drops in by replacing these two functions; everything downstream only sees
 (df, snapshot_id). Lineage rows record the snapshot id per stage
 (BASELINE.json north_star: "input snapshot id").
 
-``driver_fs`` is the one place the driver decides which filesystem holds a
-path it reads or writes itself (the lineage records); every other call
-here asks Hadoop directly.
+Every file the driver lists, reads or writes itself goes through
+``driver_fs``, the one place that decides which filesystem serves a path.
+``commit_json`` moves a hidden file over the old one with a move that
+replaces it on every scheme, so a crash leaves the old or the new document.
 """
 
 from __future__ import annotations
 
 import hashlib
 import io
+import json
 
 import pyarrow as pa
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), p
 
 
 def driver_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
@@ -42,21 +37,44 @@ def driver_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
     about 50 ms over py4j (4-core box). Any other scheme is served by the
     Hadoop filesystem over py4j, so the driver reaches every scheme Spark
     writes to."""
-    fs, p = _hadoop_fs(spark, path)
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    p = hadoop.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     uri = fs.makeQualified(p).toUri()
     if uri.getScheme() == "file":
         return pafs.LocalFileSystem(), uri.getPath()
-    return pafs.PyFileSystem(_HadoopFiles(spark, fs)), uri.toString()
+    return (pafs.PyFileSystem(_HadoopFiles(spark, hadoop, fs)),
+            uri.toString())
+
+
+def read_json(fs: pafs.FileSystem, path: str) -> dict | None:
+    """The JSON document at ``path`` (None if there is none)."""
+    if fs.get_file_info(path).type == pafs.FileType.NotFound:
+        return None
+    with fs.open_input_stream(path) as f:
+        return json.loads(f.read())
+
+
+def commit_json(fs: pafs.FileSystem, path: str, doc: dict) -> None:
+    """Write ``doc`` under a hidden name beside ``path``, then move it over
+    ``path``: the move is the commit point (see the module docstring)."""
+    parent, _, name = path.rpartition("/")
+    tmp = f"{parent}/.{name}.tmp"
+    with fs.open_output_stream(tmp) as f:
+        f.write(json.dumps(doc).encode())
+    fs.move(tmp, path)
 
 
 class _HadoopFiles(pafs.FileSystemHandler):
     """pyarrow's filesystem interface over a Hadoop ``FileSystem``: the
-    calls driver-side lineage IO makes (the rest raise)."""
+    calls driver-side IO makes (the rest raise). ``hadoop`` is the JVM
+    package of Hadoop's filesystem classes, as ``driver_fs`` resolved it."""
 
-    def __init__(self, spark: SparkSession, fs):
+    def __init__(self, spark: SparkSession, hadoop, fs):
         # resolving a JVM class over py4j costs more than a call on it
-        self._path = spark._jvm.org.apache.hadoop.fs.Path
-        self._fs = fs
+        self._gateway, self._hadoop, self._fs = (
+            spark.sparkContext._gateway, hadoop, fs)
+        self._path = hadoop.Path
 
     @staticmethod
     def _info(st) -> pafs.FileInfo:
@@ -84,13 +102,17 @@ class _HadoopFiles(pafs.FileSystemHandler):
 
     def get_file_info_selector(self, selector):
         p = self._path(selector.base_dir)
-        if selector.recursive:
-            raise NotImplementedError("recursive listing")
         if not self._fs.exists(p):
             if selector.allow_not_found:
                 return []
             raise FileNotFoundError(selector.base_dir)
-        return [self._info(st) for st in self._fs.listStatus(p)]
+        out = []
+        for st in self._fs.listStatus(p):
+            out.append(self._info(st))
+            if selector.recursive and out[-1].type == pafs.FileType.Directory:
+                out += self.get_file_info_selector(
+                    pafs.FileSelector(out[-1].path, recursive=True))
+        return out
 
     def create_dir(self, path, recursive):
         self._fs.mkdirs(self._path(path))
@@ -114,8 +136,15 @@ class _HadoopFiles(pafs.FileSystemHandler):
         raise NotImplementedError("delete_file")
 
     def move(self, src, dest):
-        if not self._fs.rename(self._path(src), self._path(dest)):
-            raise OSError(f"cannot move {src} to {dest}")
+        # pyarrow's move replaces an existing file; FileSystem.rename
+        # returns false onto one on HDFS, FileContext.rename with OVERWRITE
+        # replaces it
+        rename = getattr(self._hadoop, "Options$Rename")
+        overwrite = self._gateway.new_array(rename, 1)
+        overwrite[0] = rename.OVERWRITE
+        self._hadoop.FileContext.getFileContext(
+            self._fs.getUri(), self._fs.getConf()
+        ).rename(self._path(src), self._path(dest), overwrite)
 
     def copy_file(self, src, dest):
         raise NotImplementedError("copy_file")
@@ -198,29 +227,20 @@ class _HadoopOutput(io.RawIOBase):
         super().close()
 
 
-def list_subdirs(spark: SparkSession, path: str) -> list[str]:
-    """The directories directly under ``path``, sorted (none if it is absent)."""
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return sorted(
-        st.getPath().toString() for st in fs.listStatus(p) if st.isDirectory()
-    )
-
-
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        out.append((st.getPath().toString(), int(st.getLen())))
-    return sorted(out)
+    """(URI, length) of every data file under ``path``, sorted: every file
+    at any depth whose name does not start with ``_`` or ``.``. The URIs
+    are Hadoop's qualified form (``file:/abs/part-…``), which the snapshot
+    ids and the maintenance manifests hold."""
+    fs, root = driver_fs(spark, path)
+    info = fs.get_file_info(root)
+    infos = (fs.get_file_info(pafs.FileSelector(root, recursive=True))
+             if info.type == pafs.FileType.Directory else [info])
+    scheme = "file:" if fs.type_name == "local" else ""
+    return sorted(
+        (scheme + f.path, f.size) for f in infos
+        if f.is_file and not f.base_name.startswith(("_", "."))
+    )
 
 
 def snapshot_id_for(spark: SparkSession, path: str) -> int:
@@ -237,14 +257,6 @@ def read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     return spark.read.parquet(path), snap
 
 
-def table_manifest(spark: SparkSession, path: str) -> dict[str, int]:
-    """The table's current file manifest (file → length) — the state a
-    consumer persists to resume incrementally (the parquet stand-in for an
-    Iceberg snapshot's manifest list; a real catalog replaces this with the
-    snapshot id alone)."""
-    return dict(list_data_files(spark, path))
-
-
 def incremental_read(
     spark: SparkSession,
     path: str,
@@ -253,7 +265,9 @@ def incremental_read(
     """Incremental scan: only the rows in data files ADDED since
     ``prev_manifest`` (Iceberg's incremental append scan between two
     snapshots). Returns (delta_df | None, new_manifest); None when nothing
-    new. ``plans.maintenance.run_maintenance`` feeds the delta to
+    new. A manifest maps each data file to its length: the state a consumer
+    persists to resume (a real catalog keeps the snapshot id alone).
+    ``plans.maintenance.run_maintenance`` feeds the delta to
     ``delta_features`` → ``fold_tiles`` and so processes each appended batch
     exactly once without ever rescanning history — the batch-side mirror of
     the streaming maintenance path.
@@ -264,21 +278,17 @@ def incremental_read(
     rows (data corruption), and silently skipping a delete would hide a
     compaction. After a compaction/rewrite, reset the consumer with a full
     re-read (``prev_manifest=None``)."""
-    cur = table_manifest(spark, path)
-    if prev_manifest is None:
-        new_files = sorted(cur)
-    else:
-        changed = sorted(
-            f for f, ln in prev_manifest.items() if cur.get(f, ln) != ln
+    cur = dict(list_data_files(spark, path))
+    prev = prev_manifest or {}
+    changed = sorted(f for f, ln in prev.items() if cur.get(f, ln) != ln)
+    removed = sorted(f for f in prev if f not in cur)
+    if changed or removed:
+        raise ValueError(
+            "append-only contract violated (files changed: "
+            f"{changed[:3]}, removed: {removed[:3]}); re-baseline with "
+            "prev_manifest=None after a compaction/rewrite"
         )
-        removed = sorted(f for f in prev_manifest if f not in cur)
-        if changed or removed:
-            raise ValueError(
-                "append-only contract violated (files changed: "
-                f"{changed[:3]}, removed: {removed[:3]}); re-baseline with "
-                "prev_manifest=None after a compaction/rewrite"
-            )
-        new_files = sorted(f for f in cur if f not in prev_manifest)
+    new_files = sorted(f for f in cur if f not in prev)
     if not new_files:
         return None, cur
     return spark.read.parquet(*new_files), cur

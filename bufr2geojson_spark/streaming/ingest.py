@@ -9,7 +9,7 @@ decode → cell encode), and three ``foreachBatch`` + ``Trigger.AvailableNow``
 sinks are offered:
 
 * ``run_ingest_once`` — drain everything currently in the source, write
-  decoded features parquet partitioned by ``cell_prefix``, then stop.
+  decoded features parquet in W's layout (one cell range per file), then stop.
   Exactly-once per micro-batch via the checkpoint dir; re-running resumes
   from the last committed offset (the streaming analogue of the batch
   pipeline's lineage-resume).
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bufr2geojson_spark.operators.tiles import range_partition_by_cell
 from bufr2geojson_spark.plans.maintenance import (
     delta_features,
     fold_tiles,
@@ -98,8 +99,9 @@ def run_ingest_once(
     checkpoint_path: str,
 ) -> int:
     """Drain the source with AvailableNow; per micro-batch, decode + tile-encode
-    and append parquet partitioned by cell_prefix. Returns batches committed
-    this run (0 on a resume with nothing new — the exactly-once contract)."""
+    and write parquet range-partitioned by cell like W. Returns batches
+    committed this run (0 on a resume with nothing new — the exactly-once
+    contract)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent per-batch write: foreachBatch alone is only
@@ -108,11 +110,9 @@ def run_ingest_once(
         # directory makes the replay rewrite the same files instead of
         # duplicating rows — that, plus the checkpointed offsets, is the
         # exactly-once contract
-        (
-            batch_df.write.mode("overwrite")
-            .partitionBy("cell_prefix")
-            .parquet(f"{output_path}/batch_id={batch_id}")
-        )
+        range_partition_by_cell(
+            batch_df, None, "cell_s2", "cell_prefix"
+        ).write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
 
     feats = delta_features(read_document_stream(spark, input_path))
     return _drain(feats, sink, checkpoint_path)
@@ -193,7 +193,7 @@ def run_tile_maintenance_once(
     extended to cumulative state."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        state = load_state(work)
+        state = load_state(spark, work)
         if state is None or batch_id > state["version"]:
             # the stream's source offsets live in the checkpoint, so the
             # manifest records no files

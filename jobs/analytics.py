@@ -94,9 +94,8 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=2)
     args = ap.parse_args()
 
-    # validate before paying Spark startup (same contract as --checkpoints
-    # in jobs/pipeline.py): a flag combination that can only fail rounds
-    # deep into the loop must fail here instead
+    # validate before paying Spark startup: a flag combination that can
+    # only fail rounds deep into the loop must fail here instead
     if args.reliable_checkpoint and not args.checkpoint_dir:
         raise SystemExit(
             "--reliable-checkpoint requires --checkpoint-dir "

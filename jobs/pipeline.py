@@ -5,8 +5,11 @@ Usage:
         --docs /path/to/documents_parquet   (or --synth N) \
         --work /path/to/workdir --run-id run1 [--resume]
 
-Builds the engine zip with:  (cd /root/repo && zip -r bufr2geojson_spark.zip
-bufr2geojson_spark)
+Build the engine zip from the repository root with:
+zip -r bufr2geojson_spark.zip bufr2geojson_spark
+
+Checkpoints J, A and W (``PipelineConfig``'s default): decode, cells, PIP
+and kNN run as one pass into J.
 """
 
 from __future__ import annotations
@@ -33,34 +36,10 @@ def main() -> None:
     ap.add_argument("--run-id", default="run1")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--checkpoints", default=None,
-                    help="comma list of stages to materialize (default: all;"
-                         " e.g. 'J,A,W' fuses decode+cells+joins into one"
-                         " pass for throughput)")
     args = ap.parse_args()
 
     if not args.docs and not args.synth:
         raise SystemExit("one of --docs or --synth is required")
-
-    from bufr2geojson_spark.plans.pipeline import (
-        STAGES,
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    # validate before paying Spark startup: a silently-ignored typo here
-    # would disable all materialization and leave no resume points
-    checkpoint_stages = None
-    if args.checkpoints:
-        checkpoint_stages = tuple(
-            s.strip().upper() for s in args.checkpoints.split(",") if s.strip()
-        )
-        unknown = set(checkpoint_stages) - set(STAGES)
-        if unknown:
-            raise SystemExit(
-                f"--checkpoints: unknown stage(s) {sorted(unknown)}; "
-                f"valid: {','.join(STAGES)}"
-            )
 
     from pyspark.sql import SparkSession
 
@@ -70,6 +49,7 @@ def main() -> None:
         .getOrCreate()
     )
 
+    from bufr2geojson_spark.plans.pipeline import run_pipeline
     from bufr2geojson_spark.sources.io import read_snapshot
     from bufr2geojson_spark.sources.synth import (
         default_n_stations,
@@ -88,14 +68,10 @@ def main() -> None:
     stations = synth_stations(spark, n_st)
     polygons = synth_region_polygons(spark)
 
-    conf = PipelineConfig()
-    if checkpoint_stages:
-        conf.checkpoint_stages = checkpoint_stages
-
     t0 = time.monotonic()
     res = run_pipeline(
         spark, docs, stations, polygons, args.work, args.run_id,
-        snapshot_id=snapshot_id, resume=args.resume, conf=conf,
+        snapshot_id=snapshot_id, resume=args.resume,
     )
     n_features = res.features.count() if res.features is not None else 0
     n_tiles = res.tiles.count() if res.tiles is not None else 0

@@ -6,12 +6,12 @@ Usage:
         --checkpoint /path/to/ckpt [--mode ingest|tiles]
 
 --mode ingest (default): AvailableNow drain — decode + cell-encode every
-new document file, append features parquet partitioned by cell_prefix
-under --output, exactly-once via the checkpoint dir (re-running with
-nothing new is a no-op). --mode tiles: --output is a work dir holding
-manifest.json and tiles/v=<batch>; each micro-batch's stage-A tiles are
-folded into the committed version (streaming continuous aggregate; see
-plans/maintenance.py). Prints one JSON summary line.
+new document file, append features parquet range-partitioned by cell (the
+batch pipeline's W layout) under --output, exactly-once via the checkpoint
+dir (re-running with nothing new is a no-op). --mode tiles: --output is a
+work dir holding manifest.json and tiles/v=<batch>; each micro-batch's
+stage-A tiles are folded into the committed version (streaming continuous
+aggregate; see plans/maintenance.py). Prints one JSON summary line.
 """
 
 from __future__ import annotations

@@ -10,12 +10,11 @@
 # controlled measurement to its per-round scaling block. Run on an
 # otherwise-idle box — concurrent load invalidates the comparison.
 #
-# Usage: scripts/bench_scaling.sh [n_docs] [checkpoints]
+# Usage: scripts/bench_scaling.sh [n_docs]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 N_DOCS="${1:-240000}"
-CKPT="${2:-J,A,W}"
 WORK="${SCALE_WORK:-/dev/shm/b2g_scale}"
 OUT="${SCALE_OUT:-scaling_controlled.json}"
 
@@ -35,7 +34,7 @@ for C in ${SCALE_CORES:-2 8 32}; do
     --conf spark.local.dir="$WORK/spark-local-$C" \
     --py-files bufr2geojson_spark.zip jobs/pipeline.py \
     --synth "$N_DOCS" --work "$WORK/n$C" --run-id "scale$C" \
-    --partitions $((C * 4)) --checkpoints "$CKPT" 2>/dev/null | tail -1)
+    --partitions $((C * 4)) 2>/dev/null | tail -1)
   echo "$LINE"
   LINES="$LINES$C $LINE"$'\n'
 done

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -40,3 +41,22 @@ def assert_same_tiles():
             assert g[k]["max_val"] == r["max_val"]
             assert g[k]["sum_val"] == pytest.approx(r["sum_val"], rel=1e-9)
     return check
+
+
+@pytest.fixture
+def default_fs_elsewhere(spark, tmp_path):
+    """``fs.defaultFS`` set to a Hadoop view filesystem whose ``/work`` is
+    ``tmp_path``, so a path without a scheme leaves the driver's local disk,
+    as on a cluster whose default filesystem is ``hdfs://``. The authority
+    is fresh each time, because Hadoop caches a filesystem by it."""
+    conf = spark._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    authority = f"work{uuid.uuid4().hex[:8]}"
+    link = f"fs.viewfs.mounttable.{authority}.link./work"
+    conf.set(link, tmp_path.as_uri())
+    conf.set("fs.defaultFS", f"viewfs://{authority}/")
+    try:
+        yield authority
+    finally:
+        conf.set("fs.defaultFS", old)
+        conf.unset(link)

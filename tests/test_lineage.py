@@ -3,7 +3,6 @@ footers, and the stage record as the completion marker (N9/N10)."""
 
 import os
 import shutil
-import uuid
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -127,14 +126,14 @@ def _checkpointed(res):
 
 def test_crash_before_stage_record_recomputes_that_stage(
         spark, inputs, work, monkeypatch, assert_same_tiles):
-    write_record = L._write_record
+    commit_json = L.commit_json
 
-    def crash_on_a(fs, lin_path, record):
-        if lin_path.endswith("/A"):
+    def crash_on_a(fs, path, record):
+        if path.endswith(f"/A/{L.STAGE_RECORD}"):
             raise RuntimeError("killed after A's data write")
-        write_record(fs, lin_path, record)
+        commit_json(fs, path, record)
 
-    monkeypatch.setattr(L, "_write_record", crash_on_a)
+    monkeypatch.setattr(L, "commit_json", crash_on_a)
     with pytest.raises(RuntimeError, match="killed"):
         _run(spark, inputs, work, "crashed")
     monkeypatch.undo()
@@ -149,6 +148,30 @@ def test_crash_before_stage_record_recomputes_that_stage(
     for stage in ("J", "W"):
         assert (L.stage_record(spark, work, "crashed", stage)["checksum"]
                 == L.stage_record(spark, work, "base", stage)["checksum"])
+
+
+def test_recomputed_stage_invalidates_downstream_checkpoints(
+        spark, inputs, work, assert_same_tiles):
+    """J's stage record lost and the documents changed: the resumed run
+    recomputes J, and A and W with it, because their complete outputs were
+    computed from the old J; all three match a fresh run."""
+    shutil.copytree(os.path.join(work, "base"), os.path.join(work, "stale"))
+    os.remove(os.path.join(work, "stale", "_lineage", "J", L.STAGE_RECORD))
+    docs, stations, polygons = inputs
+    changed = (docs.filter(F.crc32("doc_id") % 3 != 0), stations, polygons)
+    res = _run(spark, changed, work, "stale", resume=True)
+    assert res.skipped == []
+    assert _checkpointed(res) == ["J", "A", "W"]
+    fresh = _run(spark, changed, work, "fresh")
+    assert_same_tiles(res.tiles, fresh.tiles)
+    for stage in ("J", "A", "W"):
+        stale = L.stage_record(spark, work, "stale", stage)
+        want = L.stage_record(spark, work, "fresh", stage)
+        assert stale["rows"] == want["rows"]
+        if stage != "A":  # A's sum_val depends on the combine order
+            assert stale["checksum"] == want["checksum"]
+            assert stale["rows"] < L.stage_record(spark, work, "base",
+                                                  stage)["rows"]
 
 
 def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
@@ -173,25 +196,6 @@ def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
                 == len(_files(work, "old", stage)))
         assert (L.stage_record(spark, work, "old", stage)["rows"]
                 == L.stage_record(spark, work, "base", stage)["rows"])
-
-
-@pytest.fixture
-def default_fs_elsewhere(spark, tmp_path):
-    """``fs.defaultFS`` set to a Hadoop view filesystem whose ``/work`` is
-    ``tmp_path``, so a path without a scheme leaves the driver's local disk,
-    as on a cluster whose default filesystem is ``hdfs://``. The authority
-    is fresh each time, because Hadoop caches a filesystem by it."""
-    conf = spark._jsc.hadoopConfiguration()
-    old = conf.get("fs.defaultFS")
-    authority = f"lineage{uuid.uuid4().hex[:8]}"
-    link = f"fs.viewfs.mounttable.{authority}.link./work"
-    conf.set(link, tmp_path.as_uri())
-    conf.set("fs.defaultFS", f"viewfs://{authority}/")
-    try:
-        yield authority
-    finally:
-        conf.set("fs.defaultFS", old)
-        conf.unset(link)
 
 
 def test_driver_fs_resolves_paths_as_spark_does(spark, tmp_path):

@@ -9,7 +9,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
+from bufr2geojson_spark.plans.pipeline import (
+    STAGES,
+    PipelineConfig,
+    run_pipeline,
+)
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.sources.io import read_snapshot, snapshot_id_for
 from bufr2geojson_spark.sources.synth import (
@@ -35,8 +39,9 @@ def workdir():
 
 
 def _conf():
+    """Every stage checkpointed, so D and T are resume points too."""
     return PipelineConfig(hot_threshold=50, output_partitions=8,
-                          rollup_levels=(10, 6))
+                          rollup_levels=(10, 6), checkpoint_stages=STAGES)
 
 
 def test_full_pipeline(spark, dims, workdir):
@@ -404,7 +409,7 @@ class TestMaintenancePlan:
         docs = synth_documents(spark, 40, partitions=2)
         docs.filter(F.crc32("doc_id") % 2 == 0).write.parquet(docs_path)
         run_maintenance(spark, docs_path, work)
-        state_v0 = load_state(work)
+        state_v0 = load_state(spark, work)
         docs.filter(F.crc32("doc_id") % 2 == 1) \
             .write.mode("append").parquet(docs_path)
         run_maintenance(spark, docs_path, work)

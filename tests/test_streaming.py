@@ -2,9 +2,12 @@
 tile maintenance, report dedup, and exactly-once resume semantics via the
 checkpoint dir."""
 
+import os
 import shutil
 import tempfile
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,6 +38,28 @@ def test_stream_ingest_matches_batch(spark, stream_dirs):
     # identical rows (streaming reuses the exact batch stages)
     key = ["feature_id", "cell_s2", "cell_prefix", "result_value"]
     assert got.select(*key).subtract(batch.select(*key)).count() == 0
+
+
+def test_stream_ingest_writes_the_w_layout(spark, stream_dirs):
+    """Each micro-batch is written like the pipeline's W: range partitioned
+    on the cell, no ``cell_prefix=`` directories, and the files of a batch
+    hold disjoint cell ranges."""
+    base, _ = stream_dirs
+    batches = [d for d in os.listdir(f"{base}/out")
+               if d.startswith("batch_id=")]
+    assert batches
+    for batch in batches:
+        d = f"{base}/out/{batch}"
+        assert not [e for e in os.listdir(d) if e.startswith("cell_prefix=")]
+        ranges = sorted(
+            (pc.min(col).as_py(), pc.max(col).as_py())
+            for col in (pq.read_table(os.path.join(d, f),
+                                      columns=["cell_s2"]).column("cell_s2")
+                        for f in os.listdir(d) if f.endswith(".parquet"))
+        )
+        assert ranges
+        for (lo, hi), (next_lo, _) in zip(ranges, ranges[1:]):
+            assert lo <= hi < next_lo
 
 
 def test_stream_resume_is_exactly_once(spark, stream_dirs):
@@ -170,7 +195,6 @@ def test_stream_tile_replay_does_not_double_merge(spark, tmp_path):
     with the manifest rolled back as well (a crash before the commit) it
     recomputes the same version from the same predecessor."""
     import json
-    import os
 
     from bufr2geojson_spark.plans.maintenance import (
         load_state,
@@ -183,11 +207,11 @@ def test_stream_tile_replay_does_not_double_merge(spark, tmp_path):
     docs = synth_documents(spark, 40, partitions=2)
     docs.filter(F.crc32(F.col("doc_id")) % 2 == 0).write.parquet(f"{base}/in")
     run_tile_maintenance_once(spark, f"{base}/in", work, ckpt)
-    state_first = load_state(work)
+    state_first = load_state(spark, work)
     docs.filter(F.crc32(F.col("doc_id")) % 2 == 1) \
         .write.mode("append").parquet(f"{base}/in")
     run_tile_maintenance_once(spark, f"{base}/in", work, ckpt)
-    state_final = load_state(work)
+    state_final = load_state(spark, work)
     assert state_final["version"] > state_first["version"]
     final = sorted(map(tuple, standing_tiles(spark, work).collect()))
 
@@ -202,7 +226,7 @@ def test_stream_tile_replay_does_not_double_merge(spark, tmp_path):
     # crash after the manifest commit: the replayed batch is skipped
     drop_last_commit()
     assert run_tile_maintenance_once(spark, f"{base}/in", work, ckpt) == 1
-    assert load_state(work) == state_final
+    assert load_state(spark, work) == state_final
     assert sorted(map(tuple, standing_tiles(spark, work).collect())) == final
 
     # crash before the manifest commit: the replay refolds the same delta
@@ -210,5 +234,5 @@ def test_stream_tile_replay_does_not_double_merge(spark, tmp_path):
     with open(f"{work}/manifest.json", "w") as f:
         json.dump(state_first, f)
     assert run_tile_maintenance_once(spark, f"{base}/in", work, ckpt) == 1
-    assert load_state(work) == state_final
+    assert load_state(spark, work) == state_final
     assert sorted(map(tuple, standing_tiles(spark, work).collect())) == final
