@@ -428,7 +428,7 @@ def main() -> None:
     # pair at production-regime corpus size (960k docs — the regime where
     # fixed per-stage costs amortize, BENCH.md §5g/§5i), measured on an
     # idle box, fresh JVM + tmpfs work dirs per leg, identical work proven
-    # by lineage checksums (evidence/ + scripts/report_phase_scaling.py).
+    # by stage checksums (scripts/report_phase_scaling.py; evidence/README.md).
     # scripts/bench_scaling.sh writes the latest pair to
     # scaling_controlled.json. NO hardcoded fallback (round-4 advice): when
     # the artifact is missing the record says so instead of carrying stale

@@ -4,18 +4,20 @@ north_rule: "Every partition emits lineage records (input snapshot id, cell
 range, row counts, checksums) to enable checkpoint-resume mid-job."
 
 Design: lineage comes from the checkpoint write itself, so it re-reads
-nothing and adds no Spark job. ``write_stage``
+nothing and adds no Spark job, and each stage has one lineage artifact, its
+stage record. ``write_stage``
 
 1. deletes the stage's old lineage, so no completion marker outlives a
    rewrite of its data;
 2. writes the stage parquet with one ``Observation`` attached: the row
    count and the stage checksum;
-3. reads the parquet footer of each written part file on the driver and
-   writes one lineage row per file (``LINEAGE_SCHEMA``) with pyarrow: the
-   part index, the footer's row count and min/max of the cell column, a
-   64-bit digest of the footer bytes, and the data-write wall;
+3. reads the parquet footer of each written part file on the driver: the
+   part index, the footer's row count and min/max of the cell column, and a
+   64-bit digest of the footer bytes;
 4. commits ``_lineage/<stage>/_stage.json`` last (``sources.io.commit_json``)
-   with the rows, the stage checksum, the snapshot id and the written schema.
+   with the rows, the stage checksum, the snapshot id, the written schema,
+   the data-write wall, the per-file rows of step 3 and the inputs the
+   stage was computed from.
 
 Every driver-side listing, read and write, the completion check included,
 goes through one filesystem, ``sources.io.driver_fs``: Hadoop resolves the
@@ -23,10 +25,11 @@ path as Spark does, local files are read and written by pyarrow, and any
 other scheme through the Hadoop filesystem.
 
 The stage record is the completion marker: a stage is complete iff its
-parquet ``_SUCCESS`` and its stage record exist. Resume skips a complete
-stage and reads it back with the recorded schema, so no job infers the
-schema from a footer. A stage without a record, including one written
-before records existed, is recomputed.
+parquet ``_SUCCESS`` and its stage record exist. Resume reuses a complete
+stage whose recorded inputs equal the run's, or are None, and reads it
+back with the recorded schema, so no job infers the schema from a footer.
+A stage without a record, with other inputs, or with a record from before
+records held inputs, is recomputed.
 
 What each checksum covers. The stage checksum is the exact sum of
 ``xxhash64`` over every row as DECIMAL(38,0). A sum does not depend on row
@@ -51,7 +54,6 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
@@ -75,29 +77,16 @@ def stage_dir(work_dir: str, run_id: str, stage: str) -> str:
     return f"{work_dir}/{run_id}/{stage}"
 
 
-def _stage_fs(spark: SparkSession, work_dir: str, run_id: str,
-              stage: str) -> tuple[pafs.FileSystem, str, str]:
-    """The driver's filesystem for a stage, and its output and lineage
-    paths within it."""
-    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
-    return fs, f"{run}/{stage}", f"{run}/_lineage/{stage}"
-
-
 def stage_record(spark: SparkSession, work_dir: str, run_id: str,
-                 stage: str) -> dict:
-    """The stage record ``write_stage`` wrote last for ``stage``."""
-    fs, _, lin = _stage_fs(spark, work_dir, run_id, stage)
-    return read_json(fs, f"{lin}/{STAGE_RECORD}")
-
-
-def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
-                   stage: str) -> bool:
-    fs, out, lin = _stage_fs(spark, work_dir, run_id, stage)
-    return all(
-        info.type == pafs.FileType.File
-        for info in fs.get_file_info([f"{out}/_SUCCESS",
-                                      f"{lin}/{STAGE_RECORD}"])
-    )
+                 stage: str) -> dict | None:
+    """The stage record ``write_stage`` committed last for ``stage``, if the
+    stage is complete; None otherwise."""
+    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
+    success, record = fs.get_file_info([
+        f"{run}/{stage}/_SUCCESS", f"{run}/_lineage/{stage}/{STAGE_RECORD}"])
+    if not success.is_file or not record.is_file:
+        return None
+    return read_json(fs, record.path)
 
 
 def _file_lineage(fs: pafs.FileSystem, path: str,
@@ -133,12 +122,15 @@ def write_stage(
     stage: str,
     snapshot_id: int,
     cell_col: str | None = None,
+    inputs: dict | None = None,
 ) -> DataFrame:
     """Materialize a stage with its lineage (see the module docstring);
     returns the written output read back with the written schema, so the
-    downstream plan cuts here — the checkpoint boundary."""
+    downstream plan cuts here — the checkpoint boundary. ``inputs`` is
+    stored in the record for resume to compare (``plans.pipeline``)."""
     out = stage_dir(work_dir, run_id, stage)
-    fs, out_path, lin_path = _stage_fs(spark, work_dir, run_id, stage)
+    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
+    out_path, lin_path = f"{run}/{stage}", f"{run}/_lineage/{stage}"
     fs.delete_dir_contents(lin_path, missing_dir_ok=True)
     seen = Observation()
     t0 = time.monotonic()
@@ -149,38 +141,29 @@ def write_stage(
     wall_ms = int((time.monotonic() - t0) * 1000)
     observed = seen.get
 
-    files = sorted(
-        (info for info in fs.get_file_info(pafs.FileSelector(out_path))
-         if info.is_file and not info.base_name.startswith(("_", "."))),
-        key=lambda info: info.path,
-    )
-    records = [
-        {
-            "run_id": run_id,
-            "stage": stage,
-            "snapshot_id": snapshot_id,
-            "partition_id": int(_PART_INDEX.match(info.base_name)[1]),
-            **_file_lineage(fs, info.path, cell_col),
-            "wall_ms": wall_ms,
-        }
-        for info in files
+    files = [
+        {"partition_id": int(_PART_INDEX.match(info.base_name)[1]),
+         **_file_lineage(fs, info.path, cell_col)}
+        for info in sorted(
+            fs.get_file_info(pafs.FileSelector(out_path)),
+            key=lambda info: info.path)
+        if info.is_file and not info.base_name.startswith(("_", "."))
     ]
-    file_rows = sum(r["row_count"] for r in records)
+    file_rows = sum(f["row_count"] for f in files)
     if file_rows != observed["rows"]:
         raise RuntimeError(
             f"stage {stage}: the written files hold {file_rows} rows, the "
             f"write saw {observed['rows']}"
         )
     fs.create_dir(lin_path)
-    pq.write_table(
-        pa.Table.from_pylist(records, schema=to_arrow_schema(LINEAGE_SCHEMA)),
-        f"{lin_path}/part-00000.parquet", filesystem=fs,
-    )
     commit_json(fs, f"{lin_path}/{STAGE_RECORD}", {
         "rows": observed["rows"],
         "checksum": str(observed["checksum"] or 0),
         "snapshot_id": snapshot_id,
         "schema": json.loads(df.schema.json()),
+        "wall_ms": wall_ms,
+        "files": files,
+        "inputs": inputs,
     })
     return spark.read.schema(df.schema).parquet(out)
 
@@ -194,14 +177,19 @@ def read_stage(spark: SparkSession, work_dir: str, run_id: str,
 
 
 def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:
-    """Every lineage table of ``run_id`` (empty if it has none). The stage
-    directories are listed rather than globbed: Spark probes a single glob
-    path for streaming metadata and logs a FileNotFoundException for it."""
+    """One ``LINEAGE_SCHEMA`` row per written file of every complete stage
+    of ``run_id``, built from the stage records (empty if it has none)."""
     fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
     stages = sorted(
         info.base_name for info in fs.get_file_info(
             pafs.FileSelector(f"{run}/_lineage", allow_not_found=True))
         if info.type == pafs.FileType.Directory
     )
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(
-        *(f"{work_dir}/{run_id}/_lineage/{s}" for s in stages))
+    rows = []
+    for stage in stages:
+        record = stage_record(spark, work_dir, run_id, stage) or {}
+        for f in record.get("files", []):
+            rows.append((run_id, stage, record["snapshot_id"],
+                         f["partition_id"], f["cell_lo"], f["cell_hi"],
+                         f["row_count"], f["checksum"], record["wall_ms"]))
+    return spark.createDataFrame(rows, LINEAGE_SCHEMA)

@@ -9,16 +9,20 @@ Stage graph (each stage materializes with per-file lineage → resumable):
     W  final write     repartitionByRange(cell_prefix, cell), AQE-sized (N8)
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
-north rule. A resumed run (same work_dir + run_id) skips every stage whose
-output and stage record exist, until it recomputes one: every later stage
-is then stale — the checkpoint-resume contract (N10); ``plans/lineage.py``
-describes the records.
+north rule. A resumed run (same work_dir + run_id) reuses every complete
+stage whose record holds the inputs this run would compute it from: the
+snapshot id, the config and the checksum of the checkpoint it reads (or
+holds no inputs, because it was written outside ``run_pipeline``). Any
+other stage is recomputed, and a recomputed stage that changed its checksum
+makes every stage reading it recompute too — the checkpoint-resume
+contract (N10); ``plans/lineage.py`` describes the records.
 """
 
 from __future__ import annotations
 
+import json
 import warnings
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -134,25 +138,38 @@ def run_pipeline(
         )
 
     materialized = True  # current `features` is backed by parquet/cache
+    # a checkpoint's inputs: the snapshot, every config field but the stage
+    # choices, and the checksum of the checkpoint `features` was read from
+    fields = {k: v for k, v in asdict(conf).items()
+              if k not in ("stages", "checkpoint_stages")}
+    upstream = None
 
     def do(stage: str, compute, **wkw) -> DataFrame:
-        nonlocal materialized
+        nonlocal materialized, upstream
         if stage not in conf.checkpoint_stages:
             # lazy stage: fuses into the next checkpointed stage's pass
             res.executed.append(f"{stage}~fused")
             materialized = False
             return compute()
-        # once a checkpointed stage is recomputed, every later one is stale
-        if (resume and not set(conf.checkpoint_stages) & set(res.executed)
-                and L.stage_complete(spark, work_dir, run_id, stage)):
+        inputs = json.loads(json.dumps({
+            "snapshot_id": snapshot_id, "conf": fields, "upstream": upstream}))
+        record = (L.stage_record(spark, work_dir, run_id, stage)
+                  if resume else None)
+        # reused on equal inputs, or on none (a stage built by write_stage
+        # alone, as the benchmark's warm-up J is); a record without the
+        # field predates inputs and is recomputed
+        recorded = record.get("inputs", False) if record else False
+        if recorded is None or recorded == inputs:
             res.skipped.append(stage)
-            materialized = True  # parquet read-back needs no fused-chain cache
-            return L.read_stage(spark, work_dir, run_id, stage)
-        out = L.write_stage(
-            compute(), spark, work_dir, run_id, stage, snapshot_id, **wkw
-        )
-        res.executed.append(stage)
-        materialized = True
+            out = L.read_stage(spark, work_dir, run_id, stage)
+        else:
+            out = L.write_stage(compute(), spark, work_dir, run_id, stage,
+                                snapshot_id, inputs=inputs, **wkw)
+            record = L.stage_record(spark, work_dir, run_id, stage)
+            res.executed.append(stage)
+        materialized = True  # parquet read-back needs no fused-chain cache
+        if stage != "A":  # A's tiles are no later stage's input
+            upstream = record["checksum"]
         return out
 
     upto = conf.stages

@@ -231,9 +231,11 @@ def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(URI, length) of every data file under ``path``, sorted: every file
     at any depth whose name does not start with ``_`` or ``.``. The URIs
     are Hadoop's qualified form (``file:/abs/part-…``), which the snapshot
-    ids and the maintenance manifests hold."""
+    ids and the maintenance manifests hold. A missing ``path`` raises."""
     fs, root = driver_fs(spark, path)
     info = fs.get_file_info(root)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(path)
     infos = (fs.get_file_info(pafs.FileSelector(root, recursive=True))
              if info.type == pafs.FileType.Directory else [info])
     scheme = "file:" if fs.type_name == "local" else ""

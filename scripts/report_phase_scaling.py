@@ -1,17 +1,14 @@
-"""Per-stage scaling-efficiency report from pipeline lineage records.
+"""Per-stage scaling-efficiency report from pipeline stage records.
 
 Turns TWO completed jobs/pipeline.py runs (same input, different
 parallelism) into the per-stage efficiency table BENCH.md §5h previously
-assembled by hand. The lineage written by
-``bufr2geojson_spark/plans/lineage.py`` already carries everything needed:
-per-stage ``wall_ms``, per-file ``row_count`` and, in each stage record
-(``_lineage/<stage>/_stage.json``), an order/partitioning-insensitive
-stage checksum (the exact sum of ``xxhash64(row)``), so the report also
-PROVES the two runs did identical work before comparing their speeds — a
-scaling ratio over non-identical outputs is meaningless. Lineage written
-before stage records existed (the checked-in ``evidence/`` runs) has none;
-there the XOR of the per-partition ``bit_xor(xxhash64(row))`` checksums is
-compared instead.
+assembled by hand. The stage record ``bufr2geojson_spark/plans/lineage.py``
+commits for each checkpoint (``_lineage/<stage>/_stage.json``) already
+carries everything needed: the stage's data-write ``wall_ms``, its rows
+and an order/partitioning-insensitive stage checksum (the exact sum of
+``xxhash64(row)``), so the report also PROVES the two runs did identical
+work before comparing their speeds — a scaling ratio over non-identical
+outputs is meaningless.
 
 Usage (after e.g. scripts/bench_scaling.sh, which runs the pipeline at
 2 and 8 cores into $WORK/n2 and $WORK/n8):
@@ -20,8 +17,8 @@ Usage (after e.g. scripts/bench_scaling.sh, which runs the pipeline at
         --lo /dev/shm/b2g_scale/n2/scale2 --lo-cores 2 \
         --hi /dev/shm/b2g_scale/n8/scale8 --hi-cores 8
 
-Reads the parquet lineage tables with pyarrow directly (no Spark session —
-the report must be runnable while the box is otherwise busy benching).
+Reads the JSON records directly (no Spark session — the report must be
+runnable while the box is otherwise busy benching).
 
 Output: a markdown table (stage | rows | lo wall | hi wall | speedup |
 efficiency | work-identical) plus one machine-readable JSON line.
@@ -36,10 +33,8 @@ import os
 
 
 def read_lineage(run_dir: str) -> dict[str, dict]:
-    """stage -> {wall_ms, rows, checksum_xor, partitions, stage_checksum}
-    from _lineage/*; ``stage_checksum`` is None without a stage record."""
-    import pyarrow.parquet as pq
-
+    """stage -> its stage record, for every
+    ``_lineage/<stage>/_stage.json`` of ``run_dir``."""
     lineage_root = os.path.join(run_dir, "_lineage")
     if not os.path.isdir(lineage_root):
         raise SystemExit(
@@ -47,31 +42,10 @@ def read_lineage(run_dir: str) -> dict[str, dict]:
             "completed jobs/pipeline.py run dir (work/run_id)?"
         )
     stages: dict[str, dict] = {}
-    for stage_dir in sorted(glob.glob(os.path.join(lineage_root, "*"))):
-        stage = os.path.basename(stage_dir)
-        if not os.path.isdir(stage_dir):
-            continue
-        tbl = pq.read_table(stage_dir)
-        rows = tbl.column("row_count").to_pylist()
-        walls = tbl.column("wall_ms").to_pylist()
-        checks = tbl.column("checksum").to_pylist()
-        xor = 0
-        for c in checks:
-            xor ^= int(c, 16)
-        record = os.path.join(stage_dir, "_stage.json")
-        stage_checksum = None
-        if os.path.exists(record):
-            with open(record) as f:
-                stage_checksum = json.load(f)["checksum"]
-        stages[stage] = {
-            # wall_ms is stamped once per stage (constant across that
-            # stage's partitions) — max() tolerates a re-written stage
-            "wall_ms": max(walls) if walls else 0,
-            "rows": sum(rows),
-            "checksum_xor": f"{xor:016x}",
-            "partitions": len(rows),
-            "stage_checksum": stage_checksum,
-        }
+    for path in sorted(glob.glob(os.path.join(lineage_root, "*",
+                                              "_stage.json"))):
+        with open(path) as f:
+            stages[os.path.basename(os.path.dirname(path))] = json.load(f)
     return stages
 
 
@@ -112,18 +86,13 @@ def main() -> None:
     for stage in common:
         wl, wh = lo[stage]["wall_ms"] / 1000.0, hi[stage]["wall_ms"] / 1000.0
         rows_same = lo[stage]["rows"] == hi[stage]["rows"]
-        # the stage-record checksum when both runs have one (multiset-safe),
-        # else the XOR of the per-partition checksums
-        key = ("checksum_xor" if None in (lo[stage]["stage_checksum"],
-                                          hi[stage]["stage_checksum"])
-               else "stage_checksum")
         # checksum covers the full row struct; stages with raw DOUBLE sums
         # (e.g. tile agg's sum_val) legitimately wobble their last ulp when
         # the partial-agg combine order changes with the partitioning, so
         # rows-equal + checksum-differ is "rows-only", not a failure (the
         # oracle-checked digests use e6 fix-point where exactness is the
         # contract)
-        if rows_same and lo[stage][key] == hi[stage][key]:
+        if rows_same and lo[stage]["checksum"] == hi[stage]["checksum"]:
             same = "exact"
         elif rows_same:
             same = "rows-only"

@@ -59,20 +59,22 @@ def test_listing_equals_hadoops(spark, base, tmp_path):
     """A partitioned table (nested directories, ``_SUCCESS`` and ``.crc``
     files to skip) listed through ``driver_fs`` gives Hadoop's URIs and
     lengths byte for byte, so committed snapshot ids and manifests stay
-    valid."""
+    valid; a path that does not exist raises."""
     docs = synth_documents(spark, 30, partitions=3)
     docs.withColumn("k", F.crc32("doc_id") % 2).write.partitionBy("k") \
         .parquet(f"{base}/docs")
     one = next(f for f in os.listdir(tmp_path / "docs" / "k=0")
                if f.endswith(".parquet"))
-    paths = [f"{base}/docs", f"{base}/docs/k=0/{one}", f"{base}/absent"]
+    paths = [f"{base}/docs", f"{base}/docs/k=0/{one}"]
     if base.startswith("file:"):
         paths.append(str(tmp_path / "docs"))
     for path in paths:
-        want = _hadoop_listing(spark, path) if "absent" not in path else []
+        want = _hadoop_listing(spark, path)
         assert list_data_files(spark, path) == want
         assert snapshot_id_for(spark, path) == _snapshot_id(want)
     assert len(list_data_files(spark, f"{base}/docs")) > 2
+    with pytest.raises(FileNotFoundError):  # a misspelled input fails
+        list_data_files(spark, f"{base}/absent")
 
 
 def _manifest(tmp_path):

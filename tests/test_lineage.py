@@ -1,8 +1,11 @@
 """Write-side lineage: the stage checksum, per-file records from the parquet
-footers, and the stage record as the completion marker (N9/N10)."""
+footers, and the stage record as the completion marker and the inputs
+resume compares (N9/N10)."""
 
+import json
 import os
 import shutil
+from dataclasses import replace
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -72,7 +75,11 @@ def test_duplicated_row_pair_changes_stage_checksum(spark, tmp_path):
 @pytest.mark.parametrize("stage", ["J", "A", "W"])
 def test_stage_record_matches_what_was_written(spark, work, stage):
     record = L.stage_record(spark, work, "base", stage)
-    assert record["snapshot_id"] == 11
+    assert record["snapshot_id"] == record["inputs"]["snapshot_id"] == 11
+    # A and W read J's checkpoint; J read the documents
+    assert record["inputs"]["upstream"] == (
+        None if stage == "J"
+        else L.stage_record(spark, work, "base", "J")["checksum"])
     assert record["checksum"] == _recomputed(spark, work, "base", stage)
     lin = L.read_lineage(spark, work, "base").filter(F.col("stage") == stage)
     rows = lin.collect()
@@ -137,8 +144,8 @@ def test_crash_before_stage_record_recomputes_that_stage(
     with pytest.raises(RuntimeError, match="killed"):
         _run(spark, inputs, work, "crashed")
     monkeypatch.undo()
-    assert L.stage_complete(spark, work, "crashed", "J")
-    assert not L.stage_complete(spark, work, "crashed", "A")
+    assert L.stage_record(spark, work, "crashed", "J") is not None
+    assert L.stage_record(spark, work, "crashed", "A") is None
 
     res = _run(spark, inputs, work, "crashed", resume=True)
     assert res.skipped == ["J"]
@@ -174,28 +181,89 @@ def test_recomputed_stage_invalidates_downstream_checkpoints(
                                                   stage)["rows"]
 
 
-def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
-    """A run directory in the format before stage records (parquet lineage
-    and ``_SUCCESS``, no ``_stage.json``) is recomputed, and its stale
-    lineage rows are replaced, not added to."""
-    shutil.copytree(os.path.join(work, "base"), os.path.join(work, "old"))
+def _old_format(spark, work, run_id, record_keys):
+    """``base`` copied to ``run_id`` in an older run-directory format: a
+    parquet lineage table beside a stage record that holds only
+    ``record_keys`` (none: no record, and a ``_SUCCESS`` instead)."""
+    shutil.copytree(os.path.join(work, "base"), os.path.join(work, run_id))
     for stage in ("J", "A", "W"):
-        lin = os.path.join(work, "old", "_lineage", stage)
+        lin = os.path.join(work, run_id, "_lineage", stage)
+        pq.write_table(L.read_lineage(spark, work, "base")
+                       .filter(F.col("stage") == stage).toArrow(),
+                       os.path.join(lin, "part-00000.parquet"))
+        with open(os.path.join(lin, L.STAGE_RECORD)) as f:
+            record = json.load(f)
         os.remove(os.path.join(lin, L.STAGE_RECORD))
-        open(os.path.join(lin, "_SUCCESS"), "w").close()
-        assert not L.stage_complete(spark, work, "old", stage)
+        if not record_keys:
+            open(os.path.join(lin, "_SUCCESS"), "w").close()
+            continue
+        with open(os.path.join(lin, L.STAGE_RECORD), "w") as f:
+            json.dump({k: record[k] for k in record_keys}, f)
 
-    res = _run(spark, inputs, work, "old", resume=True)
+
+def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
+    """A run directory in a format before this one is recomputed: without
+    stage records (parquet lineage and ``_SUCCESS``), or with records that
+    hold no per-file rows and no inputs beside a parquet lineage table. Its
+    stale lineage is replaced by the stage record alone."""
+    _old_format(spark, work, "old", ())
+    _old_format(spark, work, "keyless",
+                ("rows", "checksum", "snapshot_id", "schema"))
+    for run_id in ("old", "keyless"):
+        res = _run(spark, inputs, work, run_id, resume=True)
+        assert res.skipped == []
+        assert _checkpointed(res) == ["J", "A", "W"]
+        lin = L.read_lineage(spark, work, run_id)
+        for stage in ("J", "A", "W"):
+            assert os.listdir(os.path.join(work, run_id, "_lineage",
+                                           stage)) == [L.STAGE_RECORD]
+            assert (lin.filter(F.col("stage") == stage).count()
+                    == len(_files(work, run_id, stage)))
+            assert (L.stage_record(spark, work, run_id, stage)["rows"]
+                    == L.stage_record(spark, work, "base", stage)["rows"])
+
+
+def test_stage_written_without_inputs_is_reused(spark, inputs, work):
+    """A J written by ``write_stage`` alone, with no inputs to compare (as
+    the benchmark builds its warm-up J), is resumed from as it is."""
+    j = L.read_stage(spark, work, "base", "J")
+    L.write_stage(j, spark, work, "bare", "J", 0, cell_col="cell_s2")
+    assert L.stage_record(spark, work, "bare", "J")["inputs"] is None
+    res = _run(spark, inputs, work, "bare", resume=True)
+    assert res.skipped == ["J"]
+    assert _checkpointed(res) == ["A", "W"]
+
+
+@pytest.mark.parametrize("first, second", [
+    ((300, CONF), (150, CONF)),
+    ((150, CONF), (150, replace(CONF, hot_threshold=5))),
+], ids=["snapshot", "hot_threshold"])
+def test_resume_recomputes_stages_built_from_other_inputs(
+        spark, inputs, tmp_path, first, second, assert_same_tiles):
+    """Complete checkpoints built from another snapshot (jobs/pipeline.py
+    ``--synth 300``, then ``--synth 150 --resume`` on the same run id) or
+    another config are recomputed, and the run matches a fresh one."""
+    _, stations, polygons = inputs
+
+    def run(n_docs, conf, run_id, resume):
+        docs = synth_documents(spark, n_docs, n_stations=N_ST, partitions=4)
+        return run_pipeline(spark, docs, stations, polygons, str(tmp_path),
+                            run_id, snapshot_id=n_docs, resume=resume,
+                            conf=conf)
+
+    run(*first, "r1", resume=False)
+    res = run(*second, "r1", resume=True)
     assert res.skipped == []
     assert _checkpointed(res) == ["J", "A", "W"]
-    lin = L.read_lineage(spark, work, "old")
+    fresh = run(*second, "fresh", resume=False)
+    assert_same_tiles(res.tiles, fresh.tiles)
     for stage in ("J", "A", "W"):
-        assert not os.path.exists(
-            os.path.join(work, "old", "_lineage", stage, "_SUCCESS"))
-        assert (lin.filter(F.col("stage") == stage).count()
-                == len(_files(work, "old", stage)))
-        assert (L.stage_record(spark, work, "old", stage)["rows"]
-                == L.stage_record(spark, work, "base", stage)["rows"])
+        got = L.stage_record(spark, str(tmp_path), "r1", stage)
+        want = L.stage_record(spark, str(tmp_path), "fresh", stage)
+        assert got["inputs"] == want["inputs"]
+        assert got["rows"] == want["rows"]
+        if stage != "A":  # A's sum_val depends on the combine order
+            assert got["checksum"] == want["checksum"]
 
 
 def test_driver_fs_resolves_paths_as_spark_does(spark, tmp_path):
@@ -223,7 +291,6 @@ def test_lineage_on_the_default_filesystem(spark, tmp_path,
     for n in (60, 30):
         L.write_stage(df.limit(n).repartition(3), spark, "/work", "r", "X",
                       5, cell_col="cell")
-        assert L.stage_complete(spark, "/work", "r", "X")
         record = L.stage_record(spark, "/work", "r", "X")
         assert (record["rows"], record["snapshot_id"]) == (n, 5)
         back = L.read_stage(spark, "/work", "r", "X")
@@ -234,4 +301,4 @@ def test_lineage_on_the_default_filesystem(spark, tmp_path,
         assert sum(r.row_count for r in lin) == n
         assert all(0 <= r.cell_lo <= r.cell_hi <= 8 for r in lin)
     assert os.path.isfile(tmp_path / "r" / "_lineage" / "X" / L.STAGE_RECORD)
-    assert not L.stage_complete(spark, "/work", "r", "Y")
+    assert L.stage_record(spark, "/work", "r", "Y") is None

@@ -5,7 +5,6 @@ import os
 import shutil
 import tempfile
 
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +14,7 @@ from bufr2geojson_spark.plans.pipeline import (
     run_pipeline,
 )
 from bufr2geojson_spark.plans import lineage as L
+from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
 from bufr2geojson_spark.sources.io import read_snapshot, snapshot_id_for
 from bufr2geojson_spark.sources.synth import (
     synth_documents,
@@ -190,12 +190,13 @@ def test_w_partitions_sized_from_data(default_run, workdir):
     assert res.lineage.filter("stage = 'W'").count() == files
 
 
-def test_w_explicit_partition_count_kept(workdir):
+def test_w_explicit_partition_count_kept(spark, workdir):
     """output_partitions=8 (``_conf``) still forces exactly 8 partitions,
     one file each, and one lineage row each; reuses test_full_pipeline's
     output."""
     assert len(_parquet_files(f"{workdir}/full/W")) == 8
-    assert pq.read_table(f"{workdir}/full/_lineage/W").num_rows == 8
+    lin = L.read_lineage(spark, workdir, "full")
+    assert lin.filter("stage = 'W'").count() == 8
 
 
 def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
@@ -204,9 +205,10 @@ def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
     for stage, frame in returned.items():
         inferred = spark.read.parquet(f"{workdir}/default/{stage}").schema
         assert frame.schema == inferred, stage
-    lineage = f"{workdir}/default/_lineage"
-    assert res.lineage.schema == spark.read.parquet(
-        *[f"{lineage}/{s}" for s in ("A", "J", "W")]).schema
+    assert res.lineage.schema == LINEAGE_SCHEMA
+    for stage in returned:  # the stage record is the only lineage artifact
+        assert os.listdir(f"{workdir}/default/_lineage/{stage}") == [
+            L.STAGE_RECORD]
 
 
 def test_read_lineage_without_checkpoints_is_empty(spark, default_run,

@@ -1,10 +1,9 @@
-"""scripts/report_phase_scaling.py: per-stage efficiency from lineage parquet.
+"""scripts/report_phase_scaling.py: per-stage efficiency from stage records.
 
-Feeds hand-built lineage tables (``LINEAGE_SCHEMA``, as
-``plans/lineage.py:write_stage`` writes them, with or without a stage
-record) through the report and checks the efficiency math, the
-identical-work classification (exact / rows-only / NO), and the
-machine-readable JSON line.
+Feeds hand-built stage records (``_lineage/<stage>/_stage.json``, as
+``plans/lineage.py:write_stage`` commits them) through the report and
+checks the efficiency math, the identical-work classification (exact /
+rows-only / NO), and the machine-readable JSON line.
 """
 
 import json
@@ -12,37 +11,20 @@ import os
 import subprocess
 import sys
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPT = os.path.join(REPO, "scripts", "report_phase_scaling.py")
 
 
-def _write_lineage(run_dir, stage, wall_ms, rows_per_part, checksums):
-    os.makedirs(os.path.join(run_dir, "_lineage", stage), exist_ok=True)
-    n = len(rows_per_part)
-    tbl = pa.table({
-        "run_id": ["r"] * n,
-        "stage": [stage] * n,
-        "snapshot_id": [1] * n,
-        "partition_id": list(range(n)),
-        "cell_lo": [0] * n,
-        "cell_hi": [9] * n,
-        "row_count": rows_per_part,
-        "checksum": checksums,
-        "wall_ms": [wall_ms] * n,
-    })
-    pq.write_table(
-        tbl, os.path.join(run_dir, "_lineage", stage, "part-0.parquet")
-    )
-
-
-def _write_stage_record(run_dir, stage, rows, checksum):
-    with open(os.path.join(run_dir, "_lineage", stage, "_stage.json"),
-              "w") as f:
-        json.dump({"rows": rows, "checksum": checksum, "snapshot_id": 1,
-                   "schema": {"type": "struct", "fields": []}}, f)
+def _write_record(run_dir, stage, wall_ms, rows_per_file, checksum):
+    lin = os.path.join(run_dir, "_lineage", stage)
+    os.makedirs(lin)
+    files = [{"partition_id": i, "cell_lo": 0, "cell_hi": 9, "row_count": n,
+              "checksum": f"{i:016x}"} for i, n in enumerate(rows_per_file)]
+    with open(os.path.join(lin, "_stage.json"), "w") as f:
+        json.dump({"rows": sum(rows_per_file), "checksum": checksum,
+                   "snapshot_id": 1, "schema": {"type": "struct",
+                                                "fields": []},
+                   "wall_ms": wall_ms, "files": files, "inputs": None}, f)
 
 
 def _run(lo, hi):
@@ -56,21 +38,17 @@ def _run(lo, hi):
 
 def test_efficiency_and_work_classification(tmp_path):
     lo, hi = str(tmp_path / "lo"), str(tmp_path / "hi")
-    # J: identical rows + identical checksum XOR across DIFFERENT
-    # partitionings (2 parts vs 4) -> "exact"; 4x wall ratio = eff 1.0
-    _write_lineage(lo, "J", 40_000, [60, 40], ["00000000000000ff",
-                                               "0000000000000f0f"])
-    _write_lineage(hi, "J", 10_000, [30, 30, 20, 20],
-                   ["000000000000000f", "00000000000000f0",
-                    "0000000000000f00", "000000000000000f"])
-    # xor(lo) = ff ^ f0f = f0f ^ ff = 0xff0; xor(hi) = f ^ f0 ^ f00 ^ f
-    # = 0xff0  -> equal
+    # J: identical rows and stage checksum across DIFFERENT partitionings
+    # (2 files vs 4) -> "exact"; 4x wall ratio = eff 1.0
+    _write_record(lo, "J", 40_000, [60, 40], "-1234567890123456789012")
+    _write_record(hi, "J", 10_000, [30, 30, 20, 20],
+                  "-1234567890123456789012")
     # A: same rows, different checksum -> "rows-only"; 2x speedup = eff 0.5
-    _write_lineage(lo, "A", 8_000, [10], ["00000000000000aa"])
-    _write_lineage(hi, "A", 4_000, [10], ["00000000000000ab"])
+    _write_record(lo, "A", 8_000, [10], "42")
+    _write_record(hi, "A", 4_000, [10], "43")
     # W: different row counts -> "NO"
-    _write_lineage(lo, "W", 1_000, [5], ["0000000000000001"])
-    _write_lineage(hi, "W", 1_000, [6], ["0000000000000001"])
+    _write_record(lo, "W", 1_000, [5], "7")
+    _write_record(hi, "W", 1_000, [6], "7")
 
     text, rec = _run(lo, hi)
     assert rec["stages"]["J"]["efficiency"] == 1.0
@@ -85,7 +63,7 @@ def test_efficiency_and_work_classification(tmp_path):
 
 def test_missing_lineage_dir_fails_cleanly(tmp_path):
     lo = str(tmp_path / "lo")
-    _write_lineage(lo, "J", 1000, [1], ["0000000000000001"])
+    _write_record(lo, "J", 1000, [1], "1")
     out = subprocess.run(
         [sys.executable, SCRIPT, "--lo", lo, "--lo-cores", "2",
          "--hi", str(tmp_path / "nope"), "--hi-cores", "8"],
@@ -93,30 +71,3 @@ def test_missing_lineage_dir_fails_cleanly(tmp_path):
     )
     assert out.returncode != 0
     assert "no lineage directory" in out.stderr
-
-
-def test_stage_records_decide_same_work_when_both_runs_have_them(tmp_path):
-    lo, hi = str(tmp_path / "lo"), str(tmp_path / "hi")
-    # J: per-file footer digests differ across widths, stage checksums
-    # agree -> "exact"
-    _write_lineage(lo, "J", 4_000, [60, 40], ["00000000000000ff",
-                                              "0000000000000f0f"])
-    _write_lineage(hi, "J", 1_000, [50, 50], ["0000000000000001",
-                                              "0000000000000002"])
-    _write_stage_record(lo, "J", 100, "-1234567890123456789012")
-    _write_stage_record(hi, "J", 100, "-1234567890123456789012")
-    # W: the per-file XORs agree but the stage checksums do not (a
-    # duplicated row pair cancels in an XOR, not in the sum) -> "rows-only"
-    _write_lineage(lo, "W", 1_000, [5], ["0000000000000001"])
-    _write_lineage(hi, "W", 1_000, [5], ["0000000000000001"])
-    _write_stage_record(lo, "W", 5, "42")
-    _write_stage_record(hi, "W", 5, "43")
-    # A: only one run has a stage record -> the XOR comparison, "exact"
-    _write_lineage(lo, "A", 2_000, [10], ["00000000000000aa"])
-    _write_lineage(hi, "A", 500, [10], ["00000000000000aa"])
-    _write_stage_record(hi, "A", 10, "7")
-
-    _, rec = _run(lo, hi)
-    assert rec["stages"]["J"]["same_work"] == "exact"
-    assert rec["stages"]["W"]["same_work"] == "rows-only"
-    assert rec["stages"]["A"]["same_work"] == "exact"
