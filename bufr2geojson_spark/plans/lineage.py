@@ -123,11 +123,12 @@ def write_stage(
     snapshot_id: int,
     cell_col: str | None = None,
     inputs: dict | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, dict]:
     """Materialize a stage with its lineage (see the module docstring);
     returns the written output read back with the written schema, so the
-    downstream plan cuts here — the checkpoint boundary. ``inputs`` is
-    stored in the record for resume to compare (``plans.pipeline``)."""
+    downstream plan cuts here — the checkpoint boundary — and the stage
+    record it committed. ``inputs`` is stored in the record for resume to
+    compare (``plans.pipeline``)."""
     out = stage_dir(work_dir, run_id, stage)
     fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
     out_path, lin_path = f"{run}/{stage}", f"{run}/_lineage/{stage}"
@@ -155,8 +156,7 @@ def write_stage(
             f"stage {stage}: the written files hold {file_rows} rows, the "
             f"write saw {observed['rows']}"
         )
-    fs.create_dir(lin_path)
-    commit_json(fs, f"{lin_path}/{STAGE_RECORD}", {
+    record = {
         "rows": observed["rows"],
         "checksum": str(observed["checksum"] or 0),
         "snapshot_id": snapshot_id,
@@ -164,8 +164,10 @@ def write_stage(
         "wall_ms": wall_ms,
         "files": files,
         "inputs": inputs,
-    })
-    return spark.read.schema(df.schema).parquet(out)
+    }
+    fs.create_dir(lin_path)
+    commit_json(fs, f"{lin_path}/{STAGE_RECORD}", record)
+    return spark.read.schema(df.schema).parquet(out), record
 
 
 def read_stage(spark: SparkSession, work_dir: str, run_id: str,

@@ -9,13 +9,14 @@ Stage graph (each stage materializes with per-file lineage → resumable):
     W  final write     repartitionByRange(cell_prefix, cell), AQE-sized (N8)
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
-north rule. A resumed run (same work_dir + run_id) reuses every complete
-stage whose record holds the inputs this run would compute it from: the
-snapshot id, the config and the checksum of the checkpoint it reads (or
-holds no inputs, because it was written outside ``run_pipeline``). Any
-other stage is recomputed, and a recomputed stage that changed its checksum
-makes every stage reading it recompute too — the checkpoint-resume
-contract (N10); ``plans/lineage.py`` describes the records.
+north rule. A resumed run (same work_dir + run_id) reuses a complete stage
+whose record holds this run's inputs — the documents' snapshot id, the
+config and the checksum of the checkpoint it reads — or none (written
+outside ``run_pipeline``); it recomputes any other stage, and so every
+stage reading a recomputed checkpoint with a new checksum: the
+checkpoint-resume contract (N10, records in ``plans/lineage.py``). The
+``stations`` and ``polygons`` tables are not inputs: a resume after either
+changed reuses J, A and W.
 """
 
 from __future__ import annotations
@@ -138,8 +139,9 @@ def run_pipeline(
         )
 
     materialized = True  # current `features` is backed by parquet/cache
-    # a checkpoint's inputs: the snapshot, every config field but the stage
-    # choices, and the checksum of the checkpoint `features` was read from
+    # a checkpoint's inputs: the documents' snapshot, every config field but
+    # the stage choices, and the checksum of the checkpoint `features` was
+    # read from
     fields = {k: v for k, v in asdict(conf).items()
               if k not in ("stages", "checkpoint_stages")}
     upstream = None
@@ -163,9 +165,9 @@ def run_pipeline(
             res.skipped.append(stage)
             out = L.read_stage(spark, work_dir, run_id, stage)
         else:
-            out = L.write_stage(compute(), spark, work_dir, run_id, stage,
-                                snapshot_id, inputs=inputs, **wkw)
-            record = L.stage_record(spark, work_dir, run_id, stage)
+            out, record = L.write_stage(compute(), spark, work_dir, run_id,
+                                        stage, snapshot_id, inputs=inputs,
+                                        **wkw)
             res.executed.append(stage)
         materialized = True  # parquet read-back needs no fused-chain cache
         if stage != "A":  # A's tiles are no later stage's input

@@ -34,7 +34,7 @@ import os
 
 def read_lineage(run_dir: str) -> dict[str, dict]:
     """stage -> its stage record, for every
-    ``_lineage/<stage>/_stage.json`` of ``run_dir``."""
+    ``_lineage/<stage>/_stage.json`` of ``run_dir`` that holds a wall."""
     lineage_root = os.path.join(run_dir, "_lineage")
     if not os.path.isdir(lineage_root):
         raise SystemExit(
@@ -45,7 +45,9 @@ def read_lineage(run_dir: str) -> dict[str, dict]:
     for path in sorted(glob.glob(os.path.join(lineage_root, "*",
                                               "_stage.json"))):
         with open(path) as f:
-            stages[os.path.basename(os.path.dirname(path))] = json.load(f)
+            record = json.load(f)
+        if "wall_ms" in record:  # older records hold no data-write wall
+            stages[os.path.basename(os.path.dirname(path))] = record
     return stages
 
 

@@ -151,9 +151,9 @@ def default_run(spark, dims, workdir):
     write_stage = L.write_stage
 
     def recording(df, spark_, work_dir, run_id, stage, *args, **kwargs):
-        returned[stage] = write_stage(df, spark_, work_dir, run_id, stage,
-                                      *args, **kwargs)
-        return returned[stage]
+        out = write_stage(df, spark_, work_dir, run_id, stage, *args, **kwargs)
+        returned[stage] = out[0]
+        return out
 
     sc = spark.sparkContext
     before = spark.conf.get("spark.sql.shuffle.partitions")

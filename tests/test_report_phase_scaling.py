@@ -62,12 +62,20 @@ def test_efficiency_and_work_classification(tmp_path):
 
 
 def test_missing_lineage_dir_fails_cleanly(tmp_path):
-    lo = str(tmp_path / "lo")
+    """A run dir without lineage, or only with records from before records
+    carried ``wall_ms``, ends with a message, not a traceback."""
+    lo, old = str(tmp_path / "lo"), str(tmp_path / "old")
     _write_record(lo, "J", 1000, [1], "1")
-    out = subprocess.run(
-        [sys.executable, SCRIPT, "--lo", lo, "--lo-cores", "2",
-         "--hi", str(tmp_path / "nope"), "--hi-cores", "8"],
-        capture_output=True, text=True,
-    )
-    assert out.returncode != 0
-    assert "no lineage directory" in out.stderr
+    os.makedirs(os.path.join(old, "_lineage", "J"))
+    with open(os.path.join(old, "_lineage", "J", "_stage.json"), "w") as f:
+        json.dump({"rows": 1, "checksum": "1", "snapshot_id": 1}, f)
+    for hi, message in ((str(tmp_path / "nope"), "no lineage directory"),
+                        (old, "share no lineage stages")):
+        out = subprocess.run(
+            [sys.executable, SCRIPT, "--lo", lo, "--lo-cores", "2",
+             "--hi", hi, "--hi-cores", "8"],
+            capture_output=True, text=True,
+        )
+        assert out.returncode != 0
+        assert message in out.stderr
+        assert "Traceback" not in out.stderr
