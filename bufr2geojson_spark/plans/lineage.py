@@ -13,33 +13,38 @@ stage record. ``write_stage``
    count and the stage checksum;
 3. reads the parquet footer of each written part file on the driver: the
    part index, the footer's row count and min/max of the cell column, and a
-   64-bit digest of the footer bytes;
-4. commits ``_lineage/<stage>/_stage.json`` last (``sources.io.commit_json``)
+   64-bit digest of the footer's canonical form;
+4. commits ``_lineage/<stage>/_stage.json`` last
+   (``sources.io.DriverFS.commit_json``)
    with the rows, the stage checksum, the snapshot id, the written schema,
    the data-write wall, the per-file rows of step 3 and the inputs the
    stage was computed from.
 
 Every driver-side listing, read and write, the completion check included,
-goes through one filesystem, ``sources.io.driver_fs``: Hadoop resolves the
-path as Spark does, local files are read and written by pyarrow, and any
-other scheme through the Hadoop filesystem.
+goes through ``sources.io.driver_fs``: the Hadoop filesystem Spark resolves
+the path on, for every scheme.
 
 The stage record is the completion marker: a stage is complete iff its
 parquet ``_SUCCESS`` and its stage record exist. Resume reuses a complete
 stage whose recorded inputs equal the run's, or are None, and reads it
 back with the recorded schema, so no job infers the schema from a footer.
 A stage without a record, with other inputs, or with a record from before
-records held inputs, is recomputed.
+records held inputs, is recomputed. A run's per-file lineage table
+(``lineage_table``) is built from the records that run wrote or reused.
 
 What each checksum covers. The stage checksum is the exact sum of
 ``xxhash64`` over every row as DECIMAL(38,0). A sum does not depend on row
 order or partitioning, and it is multiset-safe: a duplicated or dropped
 row changes it. (The per-partition BIT_XOR it replaces cancelled on a
 duplicated row pair.) The price is that content integrity is one number
-per stage, not one per partition. The per-file footer digest pins that
-file's row count, byte sizes and offsets and the min/max of every column;
-it sees a changed value only where the value moves a size or a bound. Map
-columns are left out of the row hash, because ``xxhash64`` takes no maps.
+per stage, not one per partition. The per-file footer digest hashes the
+footer's metadata as pyarrow decodes it (``FileMetaData.to_dict``), with
+each column chunk's ``encodings`` sorted, because parquet-mr writes that
+list in an order that varies from JVM to JVM. It pins the file's row count,
+byte sizes and offsets, compression and the min/max of every column, and so
+is equal across runs on the same data; it sees a changed value only where
+the value moves a size or a bound. Map columns are left out of the row
+hash, because ``xxhash64`` takes no maps.
 """
 
 from __future__ import annotations
@@ -51,13 +56,12 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
-from bufr2geojson_spark.sources.io import commit_json, driver_fs, read_json
+from bufr2geojson_spark.sources.io import DriverFS, driver_fs
 
 #: The stage record, written last; its presence marks the stage complete.
 STAGE_RECORD = "_stage.json"
@@ -81,23 +85,21 @@ def stage_record(spark: SparkSession, work_dir: str, run_id: str,
                  stage: str) -> dict | None:
     """The stage record ``write_stage`` committed last for ``stage``, if the
     stage is complete; None otherwise."""
-    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
-    success, record = fs.get_file_info([
-        f"{run}/{stage}/_SUCCESS", f"{run}/_lineage/{stage}/{STAGE_RECORD}"])
-    if not success.is_file or not record.is_file:
+    run = f"{work_dir}/{run_id}"
+    fs = driver_fs(spark, run)
+    if not fs.is_file(f"{run}/{stage}/_SUCCESS"):
         return None
-    return read_json(fs, record.path)
+    return fs.read_json(f"{run}/_lineage/{stage}/{STAGE_RECORD}")
 
 
-def _file_lineage(fs: pafs.FileSystem, path: str,
+def _file_lineage(fs: DriverFS, path: str, size: int,
                   cell_col: str | None) -> dict:
-    """Row count, cell range and footer digest of one parquet file, from
-    one read of its tail: the footer, its length and the magic."""
-    with fs.open_input_file(path) as f:
-        size = f.size()
-        footer_len = int.from_bytes(f.read_at(4, size - 8), "little")
-        tail = f.read_at(footer_len + 8, size - 8 - footer_len)
-    meta = pq.read_metadata(pa.BufferReader(tail))
+    """Row count, cell range and footer digest of one parquet file of
+    ``size`` bytes, from two reads of its tail: the footer length, then the
+    footer with its length and the magic."""
+    footer_len = int.from_bytes(fs.read(path, size - 8, 4), "little")
+    meta = pq.read_metadata(pa.BufferReader(
+        fs.read(path, size - 8 - footer_len, footer_len + 8)))
     cols = [meta.schema.column(i).path for i in range(meta.num_columns)]
     stats = []
     if cell_col in cols:
@@ -105,12 +107,17 @@ def _file_lineage(fs: pafs.FileSystem, path: str,
         stats = [meta.row_group(g).column(i).statistics
                  for g in range(meta.num_row_groups)]
         stats = [s for s in stats if s is not None and s.has_min_max]
+    canonical = meta.to_dict()
+    for group in canonical["row_groups"]:
+        for chunk in group["columns"]:
+            chunk["encodings"] = sorted(chunk["encodings"])
     return {
         "cell_lo": min(s.min for s in stats) if stats else None,
         "cell_hi": max(s.max for s in stats) if stats else None,
         "row_count": meta.num_rows,
-        "checksum": hashlib.blake2b(tail[:footer_len],
-                                    digest_size=8).hexdigest(),
+        "checksum": hashlib.blake2b(
+            json.dumps(canonical, sort_keys=True, default=str).encode(),
+            digest_size=8).hexdigest(),
     }
 
 
@@ -130,9 +137,9 @@ def write_stage(
     record it committed. ``inputs`` is stored in the record for resume to
     compare (``plans.pipeline``)."""
     out = stage_dir(work_dir, run_id, stage)
-    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
-    out_path, lin_path = f"{run}/{stage}", f"{run}/_lineage/{stage}"
-    fs.delete_dir_contents(lin_path, missing_dir_ok=True)
+    lin = f"{work_dir}/{run_id}/_lineage/{stage}"
+    fs = driver_fs(spark, out)
+    fs.delete(lin)
     seen = Observation()
     t0 = time.monotonic()
     df.observe(
@@ -143,12 +150,9 @@ def write_stage(
     observed = seen.get
 
     files = [
-        {"partition_id": int(_PART_INDEX.match(info.base_name)[1]),
-         **_file_lineage(fs, info.path, cell_col)}
-        for info in sorted(
-            fs.get_file_info(pafs.FileSelector(out_path)),
-            key=lambda info: info.path)
-        if info.is_file and not info.base_name.startswith(("_", "."))
+        {"partition_id": int(_PART_INDEX.match(uri.rpartition("/")[2])[1]),
+         **_file_lineage(fs, uri, size, cell_col)}
+        for uri, size in fs.data_files(out)
     ]
     file_rows = sum(f["row_count"] for f in files)
     if file_rows != observed["rows"]:
@@ -165,33 +169,25 @@ def write_stage(
         "files": files,
         "inputs": inputs,
     }
-    fs.create_dir(lin_path)
-    commit_json(fs, f"{lin_path}/{STAGE_RECORD}", record)
+    fs.commit_json(f"{lin}/{STAGE_RECORD}", record)
     return spark.read.schema(df.schema).parquet(out), record
 
 
-def read_stage(spark: SparkSession, work_dir: str, run_id: str,
-               stage: str) -> DataFrame:
-    """A complete stage's output, read with its recorded schema."""
-    record = stage_record(spark, work_dir, run_id, stage)
+def read_stage(spark: SparkSession, work_dir: str, run_id: str, stage: str,
+               record: dict) -> DataFrame:
+    """A complete stage's output, read with the schema in ``record``, its
+    stage record."""
     schema = StructType.fromJson(record["schema"])
     return spark.read.schema(schema).parquet(stage_dir(work_dir, run_id, stage))
 
 
-def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:
-    """One ``LINEAGE_SCHEMA`` row per written file of every complete stage
-    of ``run_id``, built from the stage records (empty if it has none)."""
-    fs, run = driver_fs(spark, f"{work_dir}/{run_id}")
-    stages = sorted(
-        info.base_name for info in fs.get_file_info(
-            pafs.FileSelector(f"{run}/_lineage", allow_not_found=True))
-        if info.type == pafs.FileType.Directory
-    )
-    rows = []
-    for stage in stages:
-        record = stage_record(spark, work_dir, run_id, stage) or {}
-        for f in record.get("files", []):
-            rows.append((run_id, stage, record["snapshot_id"],
-                         f["partition_id"], f["cell_lo"], f["cell_hi"],
-                         f["row_count"], f["checksum"], record["wall_ms"]))
-    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+def lineage_table(spark: SparkSession, run_id: str,
+                  records: dict[str, dict]) -> DataFrame:
+    """One ``LINEAGE_SCHEMA`` row per written file of each stage in
+    ``records`` (stage → its stage record)."""
+    return spark.createDataFrame(
+        [(run_id, stage, record["snapshot_id"], f["partition_id"],
+          f["cell_lo"], f["cell_hi"], f["row_count"], f["checksum"],
+          record["wall_ms"])
+         for stage, record in records.items() for f in record["files"]],
+        LINEAGE_SCHEMA)

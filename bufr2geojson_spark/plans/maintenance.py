@@ -16,8 +16,9 @@ Crash safety is write-ordering, not locks:
 
 1. the committed state is ``manifest.json`` = {files, version}, beside
    the tiles on any scheme (it goes through ``sources.io.driver_fs``) and
-   committed by ``commit_json``'s replacing move, HDFS included (only those
-   two keys are read, so manifests that carry extra keys still load);
+   committed by ``DriverFS.commit_json``'s replacing move, HDFS included
+   (only those two keys are read, so manifests that carry extra keys still
+   load);
 2. a fold merges the delta into the COMMITTED version and writes the
    result to ``tiles/v={version}`` BEFORE committing the new manifest;
 3. a crash between (2) and the manifest commit leaves the old manifest in
@@ -43,17 +44,12 @@ from bufr2geojson_spark.plans.pipeline import (
     decode_stage,
     tile_stage,
 )
-from bufr2geojson_spark.sources.io import (
-    commit_json,
-    driver_fs,
-    incremental_read,
-    read_json,
-)
+from bufr2geojson_spark.sources.io import driver_fs, incremental_read
 
 
 def load_state(spark: SparkSession, work: str) -> dict | None:
     """The committed manifest (None before the first fold)."""
-    return read_json(*driver_fs(spark, f"{work}/manifest.json"))
+    return driver_fs(spark, work).read_json(f"{work}/manifest.json")
 
 
 def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
@@ -85,8 +81,8 @@ def fold_tiles(
     delta = tile_stage(features, PipelineConfig())
     merged = delta if prev is None else tile_merge(prev, delta)
     merged.write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
-    commit_json(*driver_fs(spark, f"{work}/manifest.json"),
-                {"files": files, "version": version})
+    driver_fs(spark, work).commit_json(f"{work}/manifest.json",
+                                       {"files": files, "version": version})
 
 
 def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:

@@ -145,6 +145,7 @@ def run_pipeline(
     fields = {k: v for k, v in asdict(conf).items()
               if k not in ("stages", "checkpoint_stages")}
     upstream = None
+    records = {}  # stage -> the record this run wrote or reused
 
     def do(stage: str, compute, **wkw) -> DataFrame:
         nonlocal materialized, upstream
@@ -163,13 +164,14 @@ def run_pipeline(
         recorded = record.get("inputs", False) if record else False
         if recorded is None or recorded == inputs:
             res.skipped.append(stage)
-            out = L.read_stage(spark, work_dir, run_id, stage)
+            out = L.read_stage(spark, work_dir, run_id, stage, record)
         else:
             out, record = L.write_stage(compute(), spark, work_dir, run_id,
                                         stage, snapshot_id, inputs=inputs,
                                         **wkw)
             res.executed.append(stage)
         materialized = True  # parquet read-back needs no fused-chain cache
+        records[stage] = record
         if stage != "A":  # A's tiles are no later stage's input
             upstream = record["checksum"]
         return out
@@ -239,5 +241,5 @@ def run_pipeline(
     # if W was fused, res.features still points at the cached chain — keep it
     if _cached_features is not None and features is not _cached_features:
         _cached_features.unpersist()
-    res.lineage = L.read_lineage(spark, work_dir, run_id)
+    res.lineage = L.lineage_table(spark, run_id, records)
     return res

@@ -173,10 +173,11 @@ REGION_POLYGON_SCHEMA = StructType(
 # Lineage (SURVEY.md §1.3; north_rule: per-partition lineage records)
 # ---------------------------------------------------------------------------
 
-#: One row per part file of a checkpointed stage: ``plans.lineage.read_lineage``
-#: builds it from the ``files`` list of each stage record, which
-#: ``write_stage`` takes from the parquet footers, with the record's
-#: snapshot id and data-write ``wall_ms`` on every row.
+#: One row per part file of a checkpointed stage:
+#: ``plans.lineage.lineage_table`` builds it from the ``files`` list of each
+#: stage record of a run, which ``write_stage`` takes from the parquet
+#: footers, with the record's snapshot id and data-write ``wall_ms`` on
+#: every row.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),

@@ -10,239 +10,133 @@ drops in by replacing these two functions; everything downstream only sees
 (BASELINE.json north_star: "input snapshot id").
 
 Every file the driver lists, reads or writes itself goes through
-``driver_fs``, the one place that decides which filesystem serves a path.
-``commit_json`` moves a hidden file over the old one with a move that
-replaces it on every scheme, so a crash leaves the old or the new document.
+``driver_fs``: the Hadoop filesystem Spark resolves the path on, called
+over py4j, for every scheme (a local disk, ``hdfs://``, ``s3a://``,
+``viewfs://``). ``DriverFS.commit_json`` moves a hidden file over the old
+one with a move that replaces it on every scheme, so a crash leaves the old
+or the new document.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
 import json
 
-import pyarrow as pa
-from pyarrow import fs as pafs
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame, SparkSession
 
+#: Bytes per py4j reply of ``DriverFS.read``: py4j's JVM side writes a reply
+#: over 8,192 characters (6,141 bytes in base64) in two writes, and the
+#: second waits about 40 ms for the first's delayed TCP acknowledgement.
+_READ_CHUNK = 4096
 
-def driver_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
-    """The filesystem Spark reads and writes ``path`` on, as a pyarrow
-    filesystem for driver-side IO, and ``path`` within it.
 
-    Hadoop qualifies ``path`` first, against ``fs.defaultFS`` as Spark does,
-    so a path without a scheme names the same file for the driver as for
-    Spark. A local result is served by pyarrow directly: the listing and
-    footer reads of a ten-file stage take under 1 ms that way, against
-    about 50 ms over py4j (4-core box). Any other scheme is served by the
-    Hadoop filesystem over py4j, so the driver reaches every scheme Spark
-    writes to."""
+def driver_fs(spark: SparkSession, path: str) -> DriverFS:
+    """The Hadoop filesystem Spark reads and writes ``path`` on, with the
+    calls the driver makes on it.
+
+    Hadoop resolves ``path`` as Spark does, against ``fs.defaultFS``, so a
+    path without a scheme names the same file for the driver as for Spark.
+    A checksum filesystem (``file:``) is unwrapped to the raw one under it:
+    the driver writes no ``.crc`` sidecars, and reads a file as it is on
+    disk, so a file edited in place still reads."""
     hadoop = spark._jvm.org.apache.hadoop.fs
-    p = hadoop.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    uri = fs.makeQualified(p).toUri()
-    if uri.getScheme() == "file":
-        return pafs.LocalFileSystem(), uri.getPath()
-    return (pafs.PyFileSystem(_HadoopFiles(spark, hadoop, fs)),
-            uri.toString())
+    fs = hadoop.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    gateway = spark.sparkContext._gateway
+    if is_instance_of(gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        fs = fs.getRawFileSystem()
+    return DriverFS(gateway, hadoop, fs)
 
 
-def read_json(fs: pafs.FileSystem, path: str) -> dict | None:
-    """The JSON document at ``path`` (None if there is none)."""
-    if fs.get_file_info(path).type == pafs.FileType.NotFound:
-        return None
-    with fs.open_input_stream(path) as f:
-        return json.loads(f.read())
+class DriverFS:
+    """The driver's calls on one Hadoop ``FileSystem``. ``hadoop`` is the
+    JVM package of Hadoop's filesystem classes, as ``driver_fs`` resolved
+    it. Paths are anything Spark accepts for a file on that filesystem."""
 
-
-def commit_json(fs: pafs.FileSystem, path: str, doc: dict) -> None:
-    """Write ``doc`` under a hidden name beside ``path``, then move it over
-    ``path``: the move is the commit point (see the module docstring)."""
-    parent, _, name = path.rpartition("/")
-    tmp = f"{parent}/.{name}.tmp"
-    with fs.open_output_stream(tmp) as f:
-        f.write(json.dumps(doc).encode())
-    fs.move(tmp, path)
-
-
-class _HadoopFiles(pafs.FileSystemHandler):
-    """pyarrow's filesystem interface over a Hadoop ``FileSystem``: the
-    calls driver-side IO makes (the rest raise). ``hadoop`` is the JVM
-    package of Hadoop's filesystem classes, as ``driver_fs`` resolved it."""
-
-    def __init__(self, spark: SparkSession, hadoop, fs):
+    def __init__(self, gateway, hadoop, fs):
         # resolving a JVM class over py4j costs more than a call on it
-        self._gateway, self._hadoop, self._fs = (
-            spark.sparkContext._gateway, hadoop, fs)
+        self._gateway, self._hadoop, self._fs = gateway, hadoop, fs
         self._path = hadoop.Path
 
-    @staticmethod
-    def _info(st) -> pafs.FileInfo:
-        if st.isDirectory():
-            return pafs.FileInfo(st.getPath().toString(), pafs.FileType.Directory)
-        return pafs.FileInfo(st.getPath().toString(), pafs.FileType.File,
-                             size=st.getLen())
-
-    def get_type_name(self):
-        return "hadoop"
-
-    def equals(self, other):
-        return isinstance(other, _HadoopFiles) and self._fs.equals(other._fs)
-
-    def normalize_path(self, path):
-        return path
-
-    def get_file_info(self, paths):
-        return [
-            self._info(self._fs.getFileStatus(self._path(path)))
-            if self._fs.exists(self._path(path))
-            else pafs.FileInfo(path, pafs.FileType.NotFound)
-            for path in paths
-        ]
-
-    def get_file_info_selector(self, selector):
-        p = self._path(selector.base_dir)
-        if not self._fs.exists(p):
-            if selector.allow_not_found:
-                return []
-            raise FileNotFoundError(selector.base_dir)
-        out = []
-        for st in self._fs.listStatus(p):
-            out.append(self._info(st))
-            if selector.recursive and out[-1].type == pafs.FileType.Directory:
-                out += self.get_file_info_selector(
-                    pafs.FileSelector(out[-1].path, recursive=True))
-        return out
-
-    def create_dir(self, path, recursive):
-        self._fs.mkdirs(self._path(path))
-
-    def delete_dir(self, path):
-        raise NotImplementedError("delete_dir")
-
-    def delete_dir_contents(self, path, missing_dir_ok=False):
+    def data_files(self, path: str,
+                   recursive: bool = False) -> list[tuple[str, int]]:
+        """(URI, length) of every file under ``path`` (``path`` itself if it
+        is a file) whose name does not start with ``_`` or ``.``, sorted.
+        The URIs are Hadoop's qualified form (``file:/abs/part-…``). A
+        missing ``path`` raises ``FileNotFoundError``."""
         p = self._path(path)
         if not self._fs.exists(p):
-            if missing_dir_ok:
-                return
             raise FileNotFoundError(path)
-        for st in self._fs.listStatus(p):
-            self._fs.delete(st.getPath(), True)
+        # listStatus, not listFiles: a located status loads each file's
+        # owner and permissions, a shell process per file on a local disk
+        out, dirs = [], [p]
+        while dirs:
+            for st in self._fs.listStatus(dirs.pop()):
+                if st.isDirectory():
+                    if recursive:
+                        dirs.append(st.getPath())
+                    continue
+                uri = st.getPath().toString()
+                if not uri.rpartition("/")[2].startswith(("_", ".")):
+                    out.append((uri, st.getLen()))
+        return sorted(out)
 
-    def delete_root_dir_contents(self):
-        raise NotImplementedError("delete_root_dir_contents")
+    def is_file(self, path: str) -> bool:
+        return self._fs.isFile(self._path(path))
 
-    def delete_file(self, path):
-        raise NotImplementedError("delete_file")
+    def read(self, path: str, offset: int = 0,
+             length: int | None = None) -> bytes:
+        """``length`` bytes of ``path`` from ``offset`` (to the end if
+        None), in replies of ``_READ_CHUNK`` bytes."""
+        p = self._path(path)
+        if length is None:
+            length = self._fs.getFileStatus(p).getLen() - offset
+        stream = self._fs.open(p)
+        try:
+            stream.seek(offset)
+            return b"".join(stream.readNBytes(min(_READ_CHUNK, length - done))
+                            for done in range(0, length, _READ_CHUNK))
+        finally:
+            stream.close()
 
-    def move(self, src, dest):
-        # pyarrow's move replaces an existing file; FileSystem.rename
-        # returns false onto one on HDFS, FileContext.rename with OVERWRITE
-        # replaces it
+    def read_json(self, path: str) -> dict | None:
+        """The JSON document at ``path`` (None if there is none)."""
+        if not self._fs.exists(self._path(path)):
+            return None
+        return json.loads(self.read(path))
+
+    def commit_json(self, path: str, doc: dict) -> None:
+        """Write ``doc`` under a hidden name beside ``path`` (creating its
+        directory), then move it over ``path``: the move is the commit point.
+        A plain rename replaces the old file atomically on a local disk;
+        where it declines (HDFS, S3A), ``FileContext``'s ``OVERWRITE`` rename
+        replaces it, atomically on HDFS. On a local disk that one deletes
+        the old file first, so it comes second."""
+        parent, _, name = path.rpartition("/")
+        tmp, dst = self._path(f"{parent}/.{name}.tmp"), self._path(path)
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(json.dumps(doc).encode())
+        finally:
+            out.close()
+        if self._fs.rename(tmp, dst):
+            return
         rename = getattr(self._hadoop, "Options$Rename")
         overwrite = self._gateway.new_array(rename, 1)
         overwrite[0] = rename.OVERWRITE
         self._hadoop.FileContext.getFileContext(
-            self._fs.getUri(), self._fs.getConf()
-        ).rename(self._path(src), self._path(dest), overwrite)
+            self._fs.getUri(), self._fs.getConf()).rename(tmp, dst, overwrite)
 
-    def copy_file(self, src, dest):
-        raise NotImplementedError("copy_file")
-
-    def open_input_stream(self, path):
-        return self.open_input_file(path)
-
-    def open_input_file(self, path):
-        p = self._path(path)
-        return pa.PythonFile(
-            _HadoopInput(self._fs.open(p), self._fs.getFileStatus(p).getLen()),
-            mode="r",
-        )
-
-    def open_output_stream(self, path, metadata):
-        return pa.PythonFile(
-            _HadoopOutput(self._fs.create(self._path(path), True)), mode="w"
-        )
-
-    def open_append_stream(self, path, metadata):
-        raise NotImplementedError("open_append_stream")
-
-
-class _HadoopInput(io.RawIOBase):
-    """A seekable Python file over a Hadoop ``FSDataInputStream``."""
-
-    def __init__(self, stream, size: int):
-        self._stream, self._size, self._pos = stream, size, 0
-
-    def readable(self):
-        return True
-
-    def seekable(self):
-        return True
-
-    def seek(self, pos, whence=io.SEEK_SET):
-        self._pos = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos,
-                     io.SEEK_END: self._size}[whence] + pos
-        return self._pos
-
-    def tell(self):
-        return self._pos
-
-    def read(self, n=-1):
-        n = self._size - self._pos if n < 0 else min(n, self._size - self._pos)
-        if n <= 0:
-            return b""
-        self._stream.seek(self._pos)
-        data = bytes(self._stream.readNBytes(n))
-        self._pos += len(data)
-        return data
-
-    def close(self):
-        if not self.closed:
-            self._stream.close()
-        super().close()
-
-
-class _HadoopOutput(io.RawIOBase):
-    """A Python file writing a Hadoop ``FSDataOutputStream``."""
-
-    def __init__(self, stream):
-        self._stream, self._pos = stream, 0
-
-    def writable(self):
-        return True
-
-    def tell(self):
-        return self._pos
-
-    def write(self, data):
-        data = bytes(data)
-        self._stream.write(data)
-        self._pos += len(data)
-        return len(data)
-
-    def close(self):
-        if not self.closed:
-            self._stream.close()
-        super().close()
+    def delete(self, path: str) -> None:
+        """Delete ``path`` and everything under it, if it exists."""
+        self._fs.delete(self._path(path), True)
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(URI, length) of every data file under ``path``, sorted: every file
-    at any depth whose name does not start with ``_`` or ``.``. The URIs
-    are Hadoop's qualified form (``file:/abs/part-…``), which the snapshot
+    """(URI, length) of every data file under ``path`` at any depth, sorted
+    (``DriverFS.data_files``). The URIs are the qualified form the snapshot
     ids and the maintenance manifests hold. A missing ``path`` raises."""
-    fs, root = driver_fs(spark, path)
-    info = fs.get_file_info(root)
-    if info.type == pafs.FileType.NotFound:
-        raise FileNotFoundError(path)
-    infos = (fs.get_file_info(pafs.FileSelector(root, recursive=True))
-             if info.type == pafs.FileType.Directory else [info])
-    scheme = "file:" if fs.type_name == "local" else ""
-    return sorted(
-        (scheme + f.path, f.size) for f in infos
-        if f.is_file and not f.base_name.startswith(("_", "."))
-    )
+    return driver_fs(spark, path).data_files(path, recursive=True)
 
 
 def snapshot_id_for(spark: SparkSession, path: str) -> int:

@@ -28,7 +28,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# PYTHONPATH carries the package to the Python workers of a plain launch
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 OPS = ("dedup-cc", "dbscan", "pagerank", "kcore")
 

@@ -16,7 +16,11 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# PYTHONPATH carries the package to the Python workers of a plain launch
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 
 def main() -> None:

@@ -20,9 +20,11 @@ import os
 import sys
 import time
 
-# running without --py-files (plain `python jobs/pipeline.py`): the package
-# lives next to this script's parent dir
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# PYTHONPATH carries the package to the Python workers of a plain launch
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 
 def main() -> None:

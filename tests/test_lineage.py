@@ -9,13 +9,12 @@ from dataclasses import replace
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyarrow import fs as pafs
 import pytest
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
-from bufr2geojson_spark.sources.io import driver_fs
+from bufr2geojson_spark.sources.io import DriverFS, driver_fs
 from bufr2geojson_spark.sources.synth import (
     synth_documents,
     synth_region_polygons,
@@ -41,15 +40,24 @@ def _run(spark, inputs, work, run_id, resume=False):
 
 
 @pytest.fixture(scope="module")
-def work(spark, inputs, tmp_path_factory):
-    """One uninterrupted J/A/W run, ``base``."""
+def base(spark, inputs, tmp_path_factory):
+    """One uninterrupted J/A/W run, ``base``: its work dir and result."""
     work = str(tmp_path_factory.mktemp("lineage"))
-    _run(spark, inputs, work, "base")
-    return work
+    return work, _run(spark, inputs, work, "base")
+
+
+@pytest.fixture(scope="module")
+def work(base):
+    return base[0]
+
+
+def _read(spark, work, run_id, stage):
+    return L.read_stage(spark, work, run_id, stage,
+                        L.stage_record(spark, work, run_id, stage))
 
 
 def _recomputed(spark, work, run_id, stage):
-    df = L.read_stage(spark, work, run_id, stage)
+    df = _read(spark, work, run_id, stage)
     return str(df.select(L.content_checksum(df)).first()[0])
 
 
@@ -73,7 +81,8 @@ def test_duplicated_row_pair_changes_stage_checksum(spark, tmp_path):
 
 
 @pytest.mark.parametrize("stage", ["J", "A", "W"])
-def test_stage_record_matches_what_was_written(spark, work, stage):
+def test_stage_record_matches_what_was_written(spark, base, stage):
+    work, res = base
     record = L.stage_record(spark, work, "base", stage)
     assert record["snapshot_id"] == record["inputs"]["snapshot_id"] == 11
     # A and W read J's checkpoint; J read the documents
@@ -81,19 +90,18 @@ def test_stage_record_matches_what_was_written(spark, work, stage):
         None if stage == "J"
         else L.stage_record(spark, work, "base", "J")["checksum"])
     assert record["checksum"] == _recomputed(spark, work, "base", stage)
-    lin = L.read_lineage(spark, work, "base").filter(F.col("stage") == stage)
-    rows = lin.collect()
+    rows = res.lineage.filter(F.col("stage") == stage).collect()
     assert sum(r.row_count for r in rows) == record["rows"]
-    assert record["rows"] == L.read_stage(spark, work, "base", stage).count()
+    assert record["rows"] == _read(spark, work, "base", stage).count()
     assert len(rows) == len(_files(work, "base", stage))
     assert all(len(r.checksum) == 16 for r in rows)
     int(record["checksum"])  # an exact integer, not a rounded float
 
 
-def test_w_file_ranges_are_disjoint(spark, work):
+def test_w_file_ranges_are_disjoint(base):
     rows = sorted(
         (r.cell_lo, r.cell_hi) for r in
-        L.read_lineage(spark, work, "base").filter("stage = 'W'").collect()
+        base[1].lineage.filter("stage = 'W'").collect()
     )
     assert len(rows) == 4
     for (lo, hi), (next_lo, _) in zip(rows, rows[1:]):
@@ -112,15 +120,16 @@ def test_changed_value_moves_checksum_and_footer_digest(spark, work,
     i = table.schema.get_field_index("result_value")
     changed = values.to_pylist()
     changed[0] = pc.max(values).as_py() + 1.0
-    fs = pafs.LocalFileSystem()
-    pq.write_table(table, str(tmp_path / "same.parquet"))
+    same_path = str(tmp_path / "same.parquet")
+    pq.write_table(table, same_path)
     pq.write_table(table.set_column(i, "result_value", [changed]), path)
-    # the edit bypasses Hadoop, so drop the local filesystem's .crc sidecar
+    # the edit bypasses Hadoop, so drop the .crc sidecar Spark's read checks
     os.remove(os.path.join(os.path.dirname(path),
                            f".{os.path.basename(path)}.crc"))
 
-    same = L._file_lineage(fs, str(tmp_path / "same.parquet"), "cell_s2")
-    edited = L._file_lineage(fs, path, "cell_s2")
+    fs = driver_fs(spark, path)
+    same, edited = (L._file_lineage(fs, p, os.path.getsize(p), "cell_s2")
+                    for p in (same_path, path))
     assert edited["row_count"] == same["row_count"] == table.num_rows
     assert edited["checksum"] != same["checksum"]
     assert (_recomputed(spark, str(tmp_path), "run", "W")
@@ -133,14 +142,14 @@ def _checkpointed(res):
 
 def test_crash_before_stage_record_recomputes_that_stage(
         spark, inputs, work, monkeypatch, assert_same_tiles):
-    commit_json = L.commit_json
+    commit_json = DriverFS.commit_json
 
     def crash_on_a(fs, path, record):
         if path.endswith(f"/A/{L.STAGE_RECORD}"):
             raise RuntimeError("killed after A's data write")
         commit_json(fs, path, record)
 
-    monkeypatch.setattr(L, "commit_json", crash_on_a)
+    monkeypatch.setattr(DriverFS, "commit_json", crash_on_a)
     with pytest.raises(RuntimeError, match="killed"):
         _run(spark, inputs, work, "crashed")
     monkeypatch.undo()
@@ -150,8 +159,7 @@ def test_crash_before_stage_record_recomputes_that_stage(
     res = _run(spark, inputs, work, "crashed", resume=True)
     assert res.skipped == ["J"]
     assert _checkpointed(res) == ["A", "W"]
-    base = L.read_stage(spark, work, "base", "A")
-    assert_same_tiles(res.tiles, base)
+    assert_same_tiles(res.tiles, _read(spark, work, "base", "A"))
     for stage in ("J", "W"):
         assert (L.stage_record(spark, work, "crashed", stage)["checksum"]
                 == L.stage_record(spark, work, "base", stage)["checksum"])
@@ -181,15 +189,15 @@ def test_recomputed_stage_invalidates_downstream_checkpoints(
                                                   stage)["rows"]
 
 
-def _old_format(spark, work, run_id, record_keys):
+def _old_format(base, run_id, record_keys):
     """``base`` copied to ``run_id`` in an older run-directory format: a
     parquet lineage table beside a stage record that holds only
     ``record_keys`` (none: no record, and a ``_SUCCESS`` instead)."""
+    work, res = base
     shutil.copytree(os.path.join(work, "base"), os.path.join(work, run_id))
     for stage in ("J", "A", "W"):
         lin = os.path.join(work, run_id, "_lineage", stage)
-        pq.write_table(L.read_lineage(spark, work, "base")
-                       .filter(F.col("stage") == stage).toArrow(),
+        pq.write_table(res.lineage.filter(F.col("stage") == stage).toArrow(),
                        os.path.join(lin, "part-00000.parquet"))
         with open(os.path.join(lin, L.STAGE_RECORD)) as f:
             record = json.load(f)
@@ -201,19 +209,19 @@ def _old_format(spark, work, run_id, record_keys):
             json.dump({k: record[k] for k in record_keys}, f)
 
 
-def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
+def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, base):
     """A run directory in a format before this one is recomputed: without
     stage records (parquet lineage and ``_SUCCESS``), or with records that
     hold no per-file rows and no inputs beside a parquet lineage table. Its
     stale lineage is replaced by the stage record alone."""
-    _old_format(spark, work, "old", ())
-    _old_format(spark, work, "keyless",
-                ("rows", "checksum", "snapshot_id", "schema"))
+    work = base[0]
+    _old_format(base, "old", ())
+    _old_format(base, "keyless", ("rows", "checksum", "snapshot_id", "schema"))
     for run_id in ("old", "keyless"):
         res = _run(spark, inputs, work, run_id, resume=True)
         assert res.skipped == []
         assert _checkpointed(res) == ["J", "A", "W"]
-        lin = L.read_lineage(spark, work, run_id)
+        lin = res.lineage
         for stage in ("J", "A", "W"):
             assert os.listdir(os.path.join(work, run_id, "_lineage",
                                            stage)) == [L.STAGE_RECORD]
@@ -226,7 +234,7 @@ def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, work):
 def test_stage_written_without_inputs_is_reused(spark, inputs, work):
     """A J written by ``write_stage`` alone, with no inputs to compare (as
     the benchmark builds its warm-up J), is resumed from as it is."""
-    j = L.read_stage(spark, work, "base", "J")
+    j = _read(spark, work, "base", "J")
     L.write_stage(j, spark, work, "bare", "J", 0, cell_col="cell_s2")
     assert L.stage_record(spark, work, "bare", "J")["inputs"] is None
     res = _run(spark, inputs, work, "bare", resume=True)
@@ -266,19 +274,27 @@ def test_resume_recomputes_stages_built_from_other_inputs(
             assert got["checksum"] == want["checksum"]
 
 
+def _listing(spark, path, name="x.json"):
+    """What ``driver_fs`` lists at ``path`` after committing ``name``."""
+    fs = driver_fs(spark, path)
+    fs.commit_json(f"{path}/{name}", {})
+    return fs.data_files(path)
+
+
 def test_driver_fs_resolves_paths_as_spark_does(spark, tmp_path):
+    """A plain path, ``file:`` and ``file://`` name the same qualified
+    ``file:/`` URI, and a commit leaves no ``.crc`` sidecar beside it."""
     for path in (str(tmp_path), tmp_path.as_uri(), f"file:{tmp_path}"):
-        fs, inner = driver_fs(spark, path)
-        assert (fs.type_name, inner) == ("local", str(tmp_path))
+        assert _listing(spark, path) == [(f"file:{tmp_path}/x.json", 2)]
+    assert os.listdir(tmp_path) == ["x.json"]
 
 
 def test_driver_fs_follows_the_default_filesystem(spark, tmp_path,
                                                   default_fs_elsewhere):
-    fs, inner = driver_fs(spark, "/work/run")
-    assert (fs.type_name, inner) == (
-        "py::hadoop", f"viewfs://{default_fs_elsewhere}/work/run")
-    fs, inner = driver_fs(spark, f"file:{tmp_path}")
-    assert (fs.type_name, inner) == ("local", str(tmp_path))
+    assert _listing(spark, "/work/run") == [
+        (f"viewfs://{default_fs_elsewhere}/work/run/x.json", 2)]
+    assert _listing(spark, f"file:{tmp_path}", "y.json") == [
+        (f"file:{tmp_path}/y.json", 2)]
 
 
 def test_lineage_on_the_default_filesystem(spark, tmp_path,
@@ -289,14 +305,15 @@ def test_lineage_on_the_default_filesystem(spark, tmp_path,
     them. Every driver-side call goes through the Hadoop filesystem."""
     df = spark.range(60).select("id", (F.col("id") % 9).alias("cell"))
     for n in (60, 30):
-        L.write_stage(df.limit(n).repartition(3), spark, "/work", "r", "X",
-                      5, cell_col="cell")
+        _, written = L.write_stage(df.limit(n).repartition(3), spark, "/work",
+                                   "r", "X", 5, cell_col="cell")
         record = L.stage_record(spark, "/work", "r", "X")
+        assert record == written
         assert (record["rows"], record["snapshot_id"]) == (n, 5)
-        back = L.read_stage(spark, "/work", "r", "X")
+        back = L.read_stage(spark, "/work", "r", "X", record)
         assert str(back.select(L.content_checksum(back)).first()[0]) == (
             record["checksum"])
-        lin = L.read_lineage(spark, "/work", "r").collect()
+        lin = L.lineage_table(spark, "r", {"X": record}).collect()
         assert len(lin) == len(_files(str(tmp_path), "r", "X"))
         assert sum(r.row_count for r in lin) == n
         assert all(0 <= r.cell_lo <= r.cell_hi <= 8 for r in lin)

@@ -4,9 +4,10 @@ Pure AST, no Spark, in the style of ``test_no_dead_code.py``. ``plans/`` and
 ``streaming/`` make no local-file calls (``open`` or anything in ``os``,
 ``shutil`` or ``pathlib``): such a call reads the driver's local disk even
 when Spark resolves the same path on ``hdfs://``, a ``file:`` URI or another
-scheme. And no code outside ``driver_fs`` names the JVM package
+scheme. No code outside ``driver_fs`` names the JVM package
 ``org.apache.hadoop.fs``, so which filesystem serves a path is decided in
-that one function.
+that one function. And no package module imports ``pyarrow.fs``, so a second
+filesystem, one that serves some schemes itself, cannot come back.
 """
 from __future__ import annotations
 
@@ -58,6 +59,18 @@ def hadoop_fs_users(module: str, tree: ast.Module) -> set[str]:
     return users
 
 
+def pyarrow_fs_imports(tree: ast.Module) -> list[str]:
+    """The imports in ``tree`` that reach ``pyarrow.fs``."""
+    return [
+        name for node in ast.walk(tree)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for a in node.names
+        for name in [f"{node.module}.{a.name}"
+                     if isinstance(node, ast.ImportFrom) else a.name]
+        if name.startswith("pyarrow.fs")
+    ]
+
+
 def _sources() -> dict[str, ast.Module]:
     files = (_py_files(PKG) + _py_files("jobs") + _py_files("scripts")
              + _py_files("perfbench") + _py_files("bench.py")
@@ -73,6 +86,13 @@ def test_driver_io_packages_make_no_local_file_calls():
     assert not found, (
         "driver-side file IO must go through sources.io.driver_fs: "
         f"{found}")
+
+
+def test_no_package_module_imports_pyarrow_fs():
+    found = {_module_name(p): pyarrow_fs_imports(_parse(p))
+             for p in _py_files(PKG)}
+    found = {module: names for module, names in found.items() if names}
+    assert not found, f"driver-side file IO is driver_fs alone: {found}"
 
 
 def test_only_driver_fs_names_the_hadoop_filesystem():
@@ -92,6 +112,12 @@ def test_the_guards_see_what_they_forbid():
         "    return spark._jvm.org.apache.hadoop.fs.Path(p)\n"
         "def g(jvm):\n"
         "    return getattr(jvm, 'org.apache.hadoop.fs.FileContext')\n"
+        "import pyarrow.fs\n"
+        "from pyarrow import fs as pafs\n"
+        "from pyarrow.fs import LocalFileSystem\n"
+        "from pyarrow import parquet\n"
     )
     assert local_file_calls(tree) == ["open", "os.path.exists"]
     assert hadoop_fs_users("m", tree) == {"m.f", "m.g"}
+    assert pyarrow_fs_imports(tree) == [
+        "pyarrow.fs", "pyarrow.fs", "pyarrow.fs.LocalFileSystem"]

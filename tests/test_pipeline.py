@@ -44,13 +44,19 @@ def _conf():
                           rollup_levels=(10, 6), checkpoint_stages=STAGES)
 
 
-def test_full_pipeline(spark, dims, workdir):
+@pytest.fixture(scope="module")
+def full_run(spark, dims, workdir):
+    """Every stage checkpointed, run ``full``; later tests resume it."""
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
-    res = run_pipeline(
+    return run_pipeline(
         spark, docs, stations, polygons, workdir, "full", snapshot_id=123,
         resume=False, conf=_conf(),
     )
+
+
+def test_full_pipeline(full_run):
+    res = full_run
     assert res.executed == ["D", "T", "J", "A", "W"]
     nf = res.features.count()
     assert nf > N_DOCS
@@ -65,9 +71,8 @@ def test_full_pipeline(spark, dims, workdir):
     assert res.quarantine.count() == 0
 
 
-def test_lineage_records(spark, dims, workdir):
-    lin = L.read_lineage(spark, workdir, "full")
-    rows = lin.collect()
+def test_lineage_records(full_run):
+    rows = full_run.lineage.collect()
     stages = {r.stage for r in rows}
     assert stages == {"D", "T", "J", "A", "W"}
     for r in rows:
@@ -77,7 +82,7 @@ def test_lineage_records(spark, dims, workdir):
         assert len(r.checksum) == 16
     # lineage row counts sum to stage row counts
     d_total = sum(r.row_count for r in rows if r.stage == "W")
-    assert d_total == L.read_stage(spark, workdir, "full", "W").count()
+    assert d_total == full_run.features.count()
     # W stage carries cell ranges
     w = [r for r in rows if r.stage == "W"]
     assert all(r.cell_lo is not None and r.cell_hi <= 2**60 for r in w)
@@ -97,8 +102,7 @@ def test_resume_skips_completed_stages(spark, dims, workdir):
     assert res1.executed == ["D", "T"]
     t_lineage = {
         (r.partition_id, r.checksum)
-        for r in L.read_lineage(spark, workdir, "resume1")
-        .filter("stage = 'T'").collect()
+        for r in res1.lineage.filter("stage = 'T'").collect()
     }
 
     # 2) resume the full run: D and T must be skipped, not recomputed
@@ -110,8 +114,7 @@ def test_resume_skips_completed_stages(spark, dims, workdir):
     assert res2.executed == ["J", "A", "W"]
     t_lineage_after = {
         (r.partition_id, r.checksum)
-        for r in L.read_lineage(spark, workdir, "resume1")
-        .filter("stage = 'T'").collect()
+        for r in res2.lineage.filter("stage = 'T'").collect()
     }
     assert t_lineage_after == t_lineage  # byte-identical checkpoint
 
@@ -190,13 +193,11 @@ def test_w_partitions_sized_from_data(default_run, workdir):
     assert res.lineage.filter("stage = 'W'").count() == files
 
 
-def test_w_explicit_partition_count_kept(spark, workdir):
+def test_w_explicit_partition_count_kept(full_run, workdir):
     """output_partitions=8 (``_conf``) still forces exactly 8 partitions,
-    one file each, and one lineage row each; reuses test_full_pipeline's
-    output."""
+    one file each, and one lineage row each."""
     assert len(_parquet_files(f"{workdir}/full/W")) == 8
-    lin = L.read_lineage(spark, workdir, "full")
-    assert lin.filter("stage = 'W'").count() == 8
+    assert full_run.lineage.filter("stage = 'W'").count() == 8
 
 
 def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
@@ -211,11 +212,31 @@ def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
             L.STAGE_RECORD]
 
 
-def test_read_lineage_without_checkpoints_is_empty(spark, default_run,
-                                                   workdir):
-    lin = L.read_lineage(spark, workdir, "never_ran")
-    assert lin.count() == 0
-    assert lin.schema == default_run[0].lineage.schema
+def test_lineage_without_checkpoints_is_empty(spark, dims, workdir):
+    res = run_pipeline(spark, synth_documents(spark, 20), *dims, workdir,
+                       "never_ran", conf=PipelineConfig(
+                           stages=("D", "T"), checkpoint_stages=()))
+    assert res.lineage.count() == 0
+    assert res.lineage.schema == LINEAGE_SCHEMA
+
+
+def test_lineage_is_this_runs_own(spark, dims, workdir):
+    """A default run resumed on a run id first used with every stage
+    checkpointed reports the lineage of its own checkpoints, J, A and W,
+    not the D and T records the first run left behind."""
+    stations, polygons = dims
+    docs = synth_documents(spark, 300, n_stations=N_ST, partitions=4)
+    for conf in (_conf(), PipelineConfig(hot_threshold=50,
+                                         output_partitions=8)):
+        res = run_pipeline(
+            spark, docs, stations, polygons, workdir, "reused_id",
+            snapshot_id=300, resume=True, conf=conf,
+        )
+    assert os.path.isdir(f"{workdir}/reused_id/_lineage/D")
+    # J is recomputed (it read T's checkpoint before) to the same checksum
+    assert res.skipped == ["A", "W"]
+    stages = {r.stage for r in res.lineage.select("stage").distinct().collect()}
+    assert stages == {"J", "A", "W"}
 
 
 def test_snapshot_id_tracks_manifest(spark, workdir, dims):
