@@ -15,6 +15,12 @@ matching via cell-ring expansion". Architecture:
   formulation that round-tripped whole rows got SLOWER from 8 to 32 threads
   (memory-bandwidth saturation); the two-float-columns-in, one-struct-out
   shape restores near-linear scaling;
+* ``assign_region`` (one most-specific region per feature) returns one
+  scalar region id, or null, per row — no explode — so Spark evaluates it
+  in the same Arrow node as the cell-encode and kNN UDFs around it: one
+  Python worker per task for all three, ``lat``/``lon`` crossing once.
+  ``pip_join`` (every containing region) returns the match list and
+  explodes it;
 * per Arrow batch everything is vectorized numpy: bbox interval prefilter
   (a flat "R-tree-lite": sorted bbox arrays checked in one vector op — the
   polygon count is small enough that a deeper tree buys nothing), then an
@@ -97,12 +103,12 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, rx: np.ndarray,
 
 
 def _pip_matches(lat: np.ndarray, lon: np.ndarray, polys: list[dict],
-                 first_only: bool) -> tuple[np.ndarray, list, list]:
-    """Returns (point_idx, region_id, region_name) match arrays."""
+                 first_only: bool) -> tuple[np.ndarray, list]:
+    """Returns (point_idx, region_id) match arrays; ``first_only`` keeps
+    each point's first match in ``polys`` order."""
     n = len(lat)
     idx_out: list[np.ndarray] = []
     rid_out: list[str] = []
-    rname_out: list[str] = []
     taken = np.zeros(n, dtype=bool) if first_only else None
     for p in polys:
         plon = lon
@@ -125,27 +131,30 @@ def _pip_matches(lat: np.ndarray, lon: np.ndarray, polys: list[dict],
             taken[hit] = True
         idx_out.append(hit)
         rid_out.extend([p["region_id"]] * hit.size)
-        rname_out.extend([p["region_name"]] * hit.size)
     if idx_out:
-        return np.concatenate(idx_out), rid_out, rname_out
-    return np.array([], dtype=np.int64), [], []
+        return np.concatenate(idx_out), rid_out
+    return np.array([], dtype=np.int64), []
 
 
-def region_match_udf(polys: list[dict], first_only: bool):
-    """Scalar pandas UDF: (lat, lon) -> array of matching region_ids
+def _valid_points(lat: pd.Series, lon: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """(lat, lon) as float arrays, a NaN coordinate moved far outside every
+    polygon so it matches none."""
+    la = lat.to_numpy(dtype=np.float64)
+    lo = lon.to_numpy(dtype=np.float64)
+    valid = ~(np.isnan(la) | np.isnan(lo))
+    return np.where(valid, la, 1000.0), np.where(valid, lo, 1000.0)
+
+
+def region_match_udf(polys: list[dict]):
+    """Scalar pandas UDF: (lat, lon) -> array of every matching region_id
     (polygon-precedence order). Only two float columns enter Python; the
     match list leaves — the wide feature row stays JVM-side."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(ArrayType(StringType()))
     def _match(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(dtype=np.float64)
-        lo = lon.to_numpy(dtype=np.float64)
-        n = len(la)
-        valid = ~(np.isnan(la) | np.isnan(lo))
-        la_v = np.where(valid, la, 1000.0)  # sentinel far outside
-        lo_v = np.where(valid, lo, 1000.0)
-        idx, rid, _ = _pip_matches(la_v, lo_v, polys, first_only)
+        n = len(lat)
+        idx, rid = _pip_matches(*_valid_points(lat, lon), polys, False)
         out: list[list[str]] = [[] for _ in range(n)]
         for i, r in zip(idx, rid):
             out[i].append(r)
@@ -154,56 +163,88 @@ def region_match_udf(polys: list[dict], first_only: bool):
     return _match
 
 
+def region_first_udf(polys: list[dict]):
+    """Scalar pandas UDF: (lat, lon) -> the first (smallest-bbox) matching
+    region_id, or null. One string per row, so no explode follows it."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(StringType())
+    def _region(lat: pd.Series, lon: pd.Series) -> pd.Series:
+        idx, rid = _pip_matches(*_valid_points(lat, lon), polys, True)
+        out = np.full(len(lat), None, dtype=object)
+        out[idx] = rid
+        return pd.Series(out)
+
+    return _region
+
+
+def _region_name_map(polys: list[dict]):
+    """Literal region_id -> region_name map (the dim is already collected
+    for the UDF closure) — zero exchanges, vs. a broadcast join whose build
+    side would still shuffle for the dedup. Names are deduped first: a
+    multipolygon region legitimately has one row per ring, and duplicate
+    keys would make create_map throw under the default
+    spark.sql.mapKeyDedupPolicy=EXCEPTION."""
+    names: dict[str, str] = {}
+    for p in polys:
+        names.setdefault(p["region_id"], p["region_name"])
+    return F.create_map(
+        *[lit for rid, rname in names.items()
+          for lit in (F.lit(rid), F.lit(rname))]
+    )
+
+
 def pip_join(
     features: DataFrame,
     polygons: DataFrame,
     lat_col: str = "lat",
     lon_col: str = "lon",
     how: str = "inner",
-    first_only: bool = False,
 ) -> DataFrame:
     """Broadcast PIP join: one output row per (feature, containing polygon).
 
-    ``how='left'`` keeps non-matching features with null region columns;
-    ``first_only=True`` assigns each feature at most one region (the
-    smallest-bbox match — deterministic specific-region precedence).
+    ``how='left'`` keeps non-matching features with null region columns.
 
     Plan shape: narrow scalar UDF (lat, lon → region_id array) → explode →
-    broadcast join on the tiny region dim for names. No shuffle on the
-    feature side; heavy columns never cross the Python boundary.
+    region_name from a literal map. No shuffle on the feature side; heavy
+    columns never cross the Python boundary.
     """
     polys = _collect_polygons(polygons)
-    match = region_match_udf(polys, first_only)
     matched = features.withColumn(
-        "_rids", match(F.col(lat_col), F.col(lon_col))
+        "_rids", region_match_udf(polys)(F.col(lat_col), F.col(lon_col))
     )
     explode = F.explode_outer if how == "left" else F.explode
     exploded = matched.withColumn("region_id", explode(F.col("_rids"))).drop(
         "_rids"
     )
-    # region_name via a literal map (the dim is already collected for the
-    # UDF closure) — zero exchanges, vs. a broadcast join whose build side
-    # would still shuffle for the dedup. Names are deduped first: a
-    # multipolygon region legitimately has one row per ring, and duplicate
-    # keys would make create_map throw under the default
-    # spark.sql.mapKeyDedupPolicy=EXCEPTION
-    names: dict[str, str] = {}
-    for p in polys:
-        names.setdefault(p["region_id"], p["region_name"])
-    name_map = F.create_map(
-        *[lit for rid, rname in names.items()
-          for lit in (F.lit(rid), F.lit(rname))]
-    )
     return exploded.select(
         *features.columns,
         "region_id",
-        F.element_at(name_map, F.col("region_id")).alias("region_name"),
+        F.element_at(_region_name_map(polys), F.col("region_id")).alias("region_name"),
     )
 
 
-def assign_region(features: DataFrame, polygons: DataFrame, **kw) -> DataFrame:
-    """Single most-specific region per feature (left semantics)."""
-    return pip_join(features, polygons, how="left", first_only=True, **kw)
+def assign_region(
+    features: DataFrame,
+    polygons: DataFrame,
+    lat_col: str = "lat",
+    lon_col: str = "lon",
+) -> DataFrame:
+    """Single most-specific (smallest-bbox) region per feature, left
+    semantics: every feature is kept, with null region columns when no
+    polygon contains it.
+
+    Plan shape: narrow scalar UDF (lat, lon → one region_id string or null)
+    and region_name from a literal map — no explode, so the UDF joins any
+    neighbouring Arrow UDFs (cells, kNN) in one Python evaluation.
+    """
+    polys = _collect_polygons(polygons)
+    rid = region_first_udf(polys)(F.col(lat_col), F.col(lon_col))
+    return features.withColumn("region_id", rid).select(
+        *features.columns,
+        "region_id",
+        F.element_at(_region_name_map(polys), F.col("region_id")).alias("region_name"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -61,17 +61,28 @@ def test_partial_aggregation_before_shuffle(spark):
 def test_decode_cells_joins_chain_is_narrow(spark):
     """The fused D→T→J chain must contain NO shuffle exchange — decode,
     cell encode, PIP, and kNN are all narrow (the premise of
-    checkpoint_stages=('J','A','W') running as one pass)."""
-    docs = synth_documents(spark, 50, partitions=2)
+    checkpoint_stages=('J','A','W') running as one pass) — and must run
+    two Python nodes, so each task holds two Python workers: the decode
+    fold, then one Arrow evaluation of the cell, PIP and kNN UDFs. An
+    explode between them (one PIP row per match) would split the Arrow
+    evaluation in two."""
+    import re
+
+    synth = synth_documents(spark, 50, partitions=2)
+    # a local table, so the only MapInPandas left is the decode fold
+    docs = spark.createDataFrame(synth.collect(), synth.schema)
     feats = with_cells(decode_documents(docs).filter("error is null"))
     feats = assign_region(feats, synth_region_polygons(spark))
     feats = knn_join(feats, synth_stations(spark, 20), k=1, grid_deg=5.0)
     p = physical_plan(feats)
     # broadcast exchange (region-name dim) is fine; shuffle exchange is not
-    import re
-
     shuffles = re.findall(r"Exchange (?!SinglePartition)\S*hashpartitioning|Exchange rangepartitioning", p)
     assert not shuffles, f"unexpected shuffle in narrow chain: {shuffles}"
+    assert re.findall(r"MapInPandas (\w+)\(", p) == ["fold"], p
+    arrow = [line for line in p.splitlines() if "ArrowEvalPython" in line]
+    assert len(arrow) == 1, p
+    assert set(re.findall(r"(\w+)\(lat#", arrow[0])) == {"_enc", "_region", "_knn"}, p
+    assert "Generate" not in p, p
 
 
 def test_arrow_udfs_in_chain_not_batch_eval_python(spark):

@@ -32,13 +32,25 @@ def polys(spark):
     return synth_region_polygons(spark)
 
 
-def test_pip_matches_bruteforce(spark, polys):
+def _random_points(spark):
+    """400 random points and the polygon rings the brute-force PIP checks
+    test them against."""
     rng = np.random.RandomState(5)
     lat = rng.uniform(-75, 85, 400)
     lon = rng.uniform(-180, 180, 400)
     pts = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(400), "lat": lat, "lon": lon})
     )
+    return pts, lat, lon
+
+
+def _contains(ring, anti, lat, lon):
+    px = lon + 360 if (anti and lon < 0) else lon
+    return _scalar_pip(px, lat, ring)
+
+
+def test_pip_matches_bruteforce(spark, polys):
+    pts, lat, lon = _random_points(spark)
     got = {
         (r.pid, r.region_id)
         for r in pip_join(pts, polys, how="inner").collect()
@@ -50,8 +62,7 @@ def test_pip_matches_bruteforce(spark, polys):
     expected = set()
     for i in range(400):
         for rid, (ring, anti) in rings.items():
-            px = lon[i] + 360 if (anti and lon[i] < 0) else lon[i]
-            if _scalar_pip(px, lat[i], ring):
+            if _contains(ring, anti, lat[i], lon[i]):
                 expected.add((int(i), rid))
     assert got == expected
 
@@ -81,14 +92,34 @@ def test_pip_concave(spark, polys):
 
 def test_assign_region_most_specific(spark, polys):
     pts = spark.createDataFrame(
-        pd.DataFrame({"pid": [0, 1], "lat": [51.47, -50.0], "lon": [-9.42, -20.0]})
+        pd.DataFrame({"pid": [0, 1, 2], "lat": [51.47, -50.0, np.nan],
+                      "lon": [-9.42, -20.0, -9.42]})
     )
     rows = {r.pid: r for r in assign_region(pts, polys).collect()}
     # golden point is in both R6 (europe) and tiny T1; T1 (smaller) wins
     assert rows[0].region_id == "T1"
     # open-ocean point matches nothing; left semantics keep it with nulls
-    assert rows[1].region_id is None
-    assert len(rows) == 2
+    assert rows[1].region_id is None and rows[1].region_name is None
+    # a NaN coordinate is kept too, with null region columns
+    assert rows[2].region_id is None and rows[2].region_name is None
+    assert len(rows) == 3
+
+    # brute force: every random point kept exactly once, its region the
+    # first containing ring in (bbox area, region_id) order
+    pts, lat, lon = _random_points(spark)
+    out = assign_region(pts, polys).collect()
+    assert sorted(r.pid for r in out) == list(range(400))
+    ordered = sorted(
+        polys.collect(),
+        key=lambda r: ((r.bbox.maxx - r.bbox.minx) * (r.bbox.maxy - r.bbox.miny),
+                       r.region_id),
+    )
+    for r in out:
+        hits = [p for p in ordered
+                if _contains([(v.lon, v.lat) for v in p.ring], p.bbox.maxx > 180,
+                             lat[r.pid], lon[r.pid])]
+        assert r.region_id == (hits[0].region_id if hits else None), r.pid
+        assert r.region_name == (hits[0].region_name if hits else None), r.pid
 
 
 def test_knn_matches_bruteforce(spark):
