@@ -3830,14 +3830,6 @@ def q_engine_decode(spark, sf_dir):
     )
 
 
-def q_engine_cells(spark, sf_dir):
-    docs, _, _ = _synth_engine_inputs(spark)
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    return feats.select(
-        "feature_id", "cell_s2", "cell_h3", "cell_prefix"
-    ).orderBy("feature_id")
-
-
 def q_engine_cells_digest(spark, sf_dir):
     """Cell-encode digest (N1/N2/N8): feature count, distinct cell counts at
     both indexes, and exact bit_xor checksums of the cell ids (commutative,
@@ -3949,28 +3941,6 @@ _SQL_ENGINE_RASTER_DIGEST = """
 """
 
 
-def q_engine_knn(spark, sf_dir):
-    docs, stations, _ = _synth_engine_inputs(spark)
-    feats = decode_documents(docs).filter("error is null")
-    return (
-        knn_join(feats, stations, k=1, grid_deg=5.0)
-        .select("feature_id", "nearest_station_id",
-                F.round("nearest_station_km", 3).alias("nearest_station_km"),
-                "knn_ring")
-        .orderBy("feature_id")
-    )
-
-
-def q_engine_pip(spark, sf_dir):
-    docs, _, polygons = _synth_engine_inputs(spark)
-    feats = decode_documents(docs).filter("error is null")
-    return (
-        assign_region(feats, polygons)
-        .select("feature_id", "region_id", "region_name")
-        .orderBy("feature_id")
-    )
-
-
 def q_engine_tiles(spark, sf_dir):
     docs, _, _ = _synth_engine_inputs(spark)
     # persist the decoded+tiled features: hot-cell detection, the salted agg,
@@ -4042,13 +4012,6 @@ _SQL_ENGINE_MEDIA_DIGEST = """
            CAST(992 AS BIGINT) AS h_sum, CAST(82 AS BIGINT) AS c_sum,
            CAST(82 AS BIGINT) AS d_sha
 """
-
-
-def q_engine_raster(spark, sf_dir):
-    docs, _, _ = _synth_engine_inputs(spark)
-    feats = with_cells(decode_documents(docs).filter("error is null"))
-    ras = rasterize(feats, tile_level=6, pixel_level=8)
-    return ras.select("tile", "npix", "nnz").orderBy("tile")
 
 
 def q_engine_media(spark, sf_dir):

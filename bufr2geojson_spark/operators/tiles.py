@@ -39,12 +39,29 @@ def hot_cells(
     )
 
 
-_AGGS = [
-    ("n_obs", lambda c: F.count(c)),
-    ("sum_val", lambda c: F.sum(c)),
-    ("min_val", lambda c: F.min(c)),
-    ("max_val", lambda c: F.max(c)),
-]
+#: The tile statistics, in output order; ``avg_val`` follows them.
+_TILE_STATS = ("n_obs", "sum_val", "min_val", "max_val")
+
+
+def _stats_of(v) -> list:
+    """The tile statistics of the raw values ``v``, in output order."""
+    return [F.count(v).alias("n_obs"), F.sum(v).alias("sum_val"),
+            F.min(v).alias("min_val"), F.max(v).alias("max_val")]
+
+
+def _combined_stats() -> list:
+    """The tile statistics of a group of tile-stat rows over disjoint
+    values: counts and sums add, min and max combine."""
+    return [F.sum("n_obs").alias("n_obs"), F.sum("sum_val").alias("sum_val"),
+            F.min("min_val").alias("min_val"), F.max("max_val").alias("max_val")]
+
+
+def _with_avg(stats: DataFrame) -> DataFrame:
+    """Append ``avg_val``: total sum over total count (never an average of
+    averages), null for a tile without values."""
+    return stats.withColumn(
+        "avg_val", F.when(F.col("n_obs") > 0, F.col("sum_val") / F.col("n_obs"))
+    )
 
 
 def tile_aggregate(
@@ -53,7 +70,6 @@ def tile_aggregate(
     value_col: str = "result_value",
     salt_buckets: int = 16,
     hot_threshold: int | None = None,
-    hot: DataFrame | None = None,
 ) -> DataFrame:
     """Per-cell tile stats with explicit two-phase salting for hot cells.
 
@@ -63,45 +79,27 @@ def tile_aggregate(
     phase 2: groupBy(cell) combines the partials (sums/min/max compose;
              avg = total sum / total count, never avg-of-avgs).
 
-    With neither ``hot_threshold`` nor ``hot`` given, salting is skipped
-    entirely (plain partial+final agg — the Catalyst default path).
+    Without ``hot_threshold``, salting is skipped entirely (plain
+    partial+final agg — the Catalyst default path).
     """
-    if hot is None and hot_threshold is not None:
-        hot = hot_cells(features, cell_col, hot_threshold)
-
     v = F.col(value_col)
-    if hot is None:
-        out = features.groupBy(cell_col).agg(
-            *[fn(v).alias(name) for name, fn in _AGGS]
-        )
-    else:
-        flagged = features.join(
-            F.broadcast(hot.select(cell_col).withColumn("_is_hot", F.lit(True))),
-            on=cell_col,
-            how="left",
-        )
-        salted = flagged.withColumn(
-            "_salt",
-            F.when(
-                F.col("_is_hot").isNotNull(),
-                F.pmod(F.xxhash64(F.col("feature_id")), F.lit(salt_buckets)),
-            ).otherwise(F.lit(0)),
-        )
-        partial = salted.groupBy(cell_col, "_salt").agg(
-            F.count(v).alias("_n"),
-            F.sum(v).alias("_s"),
-            F.min(v).alias("_mn"),
-            F.max(v).alias("_mx"),
-        )
-        out = partial.groupBy(cell_col).agg(
-            F.sum("_n").alias("n_obs"),
-            F.sum("_s").alias("sum_val"),
-            F.min("_mn").alias("min_val"),
-            F.max("_mx").alias("max_val"),
-        )
-    return out.withColumn(
-        "avg_val", F.when(F.col("n_obs") > 0, F.col("sum_val") / F.col("n_obs"))
+    if hot_threshold is None:
+        return _with_avg(features.groupBy(cell_col).agg(*_stats_of(v)))
+    hot = hot_cells(features, cell_col, hot_threshold)
+    flagged = features.join(
+        F.broadcast(hot.select(cell_col).withColumn("_is_hot", F.lit(True))),
+        on=cell_col,
+        how="left",
     )
+    salted = flagged.withColumn(
+        "_salt",
+        F.when(
+            F.col("_is_hot").isNotNull(),
+            F.pmod(F.xxhash64(F.col("feature_id")), F.lit(salt_buckets)),
+        ).otherwise(F.lit(0)),
+    )
+    partial = salted.groupBy(cell_col, "_salt").agg(*_stats_of(v))
+    return _with_avg(partial.groupBy(cell_col).agg(*_combined_stats()))
 
 
 def tile_rollup(
@@ -145,7 +143,7 @@ def tile_rollup(
     out = tiles.select(
         F.lit(from_level).alias("level"),
         F.col(cell_col).alias("cell"),
-        "n_obs", "sum_val", "min_val", "max_val", "avg_val",
+        *_TILE_STATS, "avg_val",
     )
     if not to_levels:
         return out
@@ -155,18 +153,11 @@ def tile_rollup(
         for lvl in sorted(set(to_levels))
     ]))
     rolled = (
-        tiles.select(ancestors.alias("_a"), "n_obs", "sum_val", "min_val",
-                     "max_val")
+        tiles.select(ancestors.alias("_a"), *_TILE_STATS)
         .groupBy(F.col("_a.level").alias("level"), F.col("_a.cell").alias("cell"))
-        .agg(
-            F.sum("n_obs").alias("n_obs"),
-            F.sum("sum_val").alias("sum_val"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        )
-        .withColumn("avg_val", F.col("sum_val") / F.col("n_obs"))
+        .agg(*_combined_stats())
     )
-    return out.unionByName(rolled)
+    return out.unionByName(_with_avg(rolled))
 
 
 def tile_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
@@ -185,18 +176,10 @@ def tile_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
     ``tile_merge(agg(a), agg(b)) == agg(a ∪ b)`` exactly for n/sum/min/max
     (doubles: up to reassociation of the sum — same caveat as any partial
     aggregation), which pytest asserts for both shapes."""
-    stats = ["n_obs", "sum_val", "min_val", "max_val"]
-    key = [c for c in existing.columns if c not in (*stats, "avg_val")]
-    u = existing.select(*key, *stats).unionByName(delta.select(*key, *stats))
-    merged = u.groupBy(*key).agg(
-        F.sum("n_obs").alias("n_obs"),
-        F.sum("sum_val").alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-    )
-    return merged.withColumn(
-        "avg_val", F.when(F.col("n_obs") > 0, F.col("sum_val") / F.col("n_obs"))
-    )
+    key = [c for c in existing.columns if c not in (*_TILE_STATS, "avg_val")]
+    u = existing.select(*key, *_TILE_STATS).unionByName(
+        delta.select(*key, *_TILE_STATS))
+    return _with_avg(u.groupBy(*key).agg(*_combined_stats()))
 
 
 def _pct_label(p: float) -> str:

@@ -1,12 +1,17 @@
 """The full spatial-join + tiling pipeline with checkpoint-resume (§3.4).
 
-Stage graph (each stage materializes with per-file lineage → resumable):
+Stage graph, in execution order:
 
     D  decode          mapInPandas fold (R5-R24), error quarantine split
     T  tile-encode     H3/S2 cell UDFs + cell_prefix (narrow)
     J  spatial joins   broadcast PIP (N3) + kNN ring expansion (N4) (narrow)
     A  tile agg        salted two-phase agg (N5/N7) + multi-level rollup
     W  final write     repartitionByRange(cell_prefix, cell), AQE-sized (N8)
+
+A run executes a prefix of the graph. J, A and W are always checkpoints
+(parquet + stage record); D and T are checkpoints only when asked, and
+otherwise fuse into J's single pass. So A and W both read J's parquet, and
+any other choice of stages is rejected before a Spark job starts.
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) reuses a complete stage
@@ -22,7 +27,6 @@ changed reuses J, A and W.
 from __future__ import annotations
 
 import json
-import warnings
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +43,8 @@ from bufr2geojson_spark.plans import lineage as L
 
 #: The stage graph in execution order (see the module docstring).
 STAGES = ("D", "T", "J", "A", "W")
+#: The stages that are always checkpoints when they run.
+_ALWAYS_CHECKPOINTED = ("J", "A", "W")
 
 
 @dataclass
@@ -58,15 +64,15 @@ class PipelineConfig:
     output_partitions: int | None = None
     result_time: str = "2024-12-19 00:00:00"
     guess_wsi: bool = True
+    # The stages to run: a prefix of STAGES.
     stages: tuple = STAGES
-    # Stages that materialize (parquet + lineage = resume points). Stages NOT
-    # listed stay lazy and fuse into the next checkpointed stage — D/T/J are
-    # all narrow, so the default runs decode+cells+joins as ONE pass over
-    # the data with a single feature-table write instead of three (at
-    # 100 TB each extra checkpoint is a full table write+read); STAGES
-    # checkpoints every stage, for maximum resumability. Lineage rows exist
-    # for every checkpointed stage.
-    checkpoint_stages: tuple = ("J", "A", "W")
+    # Stages that materialize (parquet + stage record = resume points). It
+    # must hold every stage from J on that runs; D and T are the choice.
+    # Left out, they fuse into J's pass — D/T/J are all narrow, so decode,
+    # cells and joins run as ONE pass with a single feature-table write
+    # instead of three (at 100 TB each extra checkpoint is a full table
+    # write+read); STAGES makes D and T resume points too.
+    checkpoint_stages: tuple = _ALWAYS_CHECKPOINTED
 
 
 def decode_stage(docs: DataFrame, conf: PipelineConfig) -> DataFrame:
@@ -113,6 +119,23 @@ class PipelineResult:
     snapshot_id: int = 0
 
 
+def _check_stages(conf: PipelineConfig) -> None:
+    """Raise ``ValueError`` unless ``conf.stages`` is a prefix of
+    ``STAGES`` and ``conf.checkpoint_stages`` names only stages, among them
+    every stage from J on that runs."""
+    stages, ckpt = tuple(conf.stages), tuple(conf.checkpoint_stages)
+    if stages != STAGES[:len(stages)]:
+        raise ValueError(f"stages must be a prefix of {STAGES}, got {stages}")
+    unknown = [s for s in ckpt if s not in STAGES]
+    if unknown:
+        raise ValueError(f"checkpoint_stages names no stage: {unknown}")
+    fused = [s for s in stages if s in _ALWAYS_CHECKPOINTED and s not in ckpt]
+    if fused:
+        raise ValueError(
+            f"stages {fused} run but are not in checkpoint_stages {ckpt}: "
+            f"{_ALWAYS_CHECKPOINTED} are always checkpoints")
+
+
 def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -125,20 +148,8 @@ def run_pipeline(
     conf: PipelineConfig | None = None,
 ) -> PipelineResult:
     conf = conf or PipelineConfig()
+    _check_stages(conf)
     res = PipelineResult(snapshot_id=snapshot_id)
-
-    if "W" in conf.stages and "W" not in conf.checkpoint_stages:
-        # W *is* the final write: excluding it from checkpoint_stages would
-        # silently produce no output table — a config typo, not a fusion
-        # choice (there is no downstream stage for W to fuse into)
-        warnings.warn(
-            "'W' is in stages but not in checkpoint_stages: the final "
-            "feature table will NOT be written. Add 'W' to "
-            "checkpoint_stages (or drop it from stages to be explicit).",
-            stacklevel=2,
-        )
-
-    materialized = True  # current `features` is backed by parquet/cache
     # a checkpoint's inputs: the documents' snapshot, every config field but
     # the stage choices, and the checksum of the checkpoint `features` was
     # read from
@@ -148,11 +159,10 @@ def run_pipeline(
     records = {}  # stage -> the record this run wrote or reused
 
     def do(stage: str, compute, **wkw) -> DataFrame:
-        nonlocal materialized, upstream
+        nonlocal upstream
         if stage not in conf.checkpoint_stages:
-            # lazy stage: fuses into the next checkpointed stage's pass
+            # lazy D or T: fuses into J's pass (or is returned lazy)
             res.executed.append(f"{stage}~fused")
-            materialized = False
             return compute()
         inputs = json.loads(json.dumps({
             "snapshot_id": snapshot_id, "conf": fields, "upstream": upstream}))
@@ -170,35 +180,20 @@ def run_pipeline(
                                         stage, snapshot_id, inputs=inputs,
                                         **wkw)
             res.executed.append(stage)
-        materialized = True  # parquet read-back needs no fused-chain cache
         records[stage] = record
         if stage != "A":  # A's tiles are no later stage's input
             upstream = record["checksum"]
         return out
 
-    upto = conf.stages
-
-    # D — decode + quarantine split
-    if "D" in upto:
+    features = None
+    if "D" in conf.stages:  # decode + quarantine split
         d_all = do("D", lambda: decode_stage(docs, conf))
         features = d_all.filter("error is null")
         res.quarantine = d_all.filter("error is not null")
-    else:
-        return res
-
-    # T — cell encoding
-    if "T" in upto:
-        features = do(
-            "T",
-            lambda: cell_stage(features, conf),
-            cell_col="cell_s2",
-        )
-    else:
-        res.features = features
-        return res
-
-    # J — PIP + kNN
-    if "J" in upto:
+    if "T" in conf.stages:  # cell encoding
+        features = do("T", lambda: cell_stage(features, conf),
+                      cell_col="cell_s2")
+    if "J" in conf.stages:  # PIP + kNN, the first checkpoint A and W read
         features = do(
             "J",
             lambda: knn_join(
@@ -207,26 +202,9 @@ def run_pipeline(
             ),
             cell_col="cell_s2",
         )
-
-    # When the feature chain up to here is FUSED (not checkpointed) and more
-    # than one checkpointed consumer follows (A reads it for tiles, W for
-    # the final write), cache it — otherwise the whole decode+join chain
-    # re-executes once per consumer (e.g. checkpoint_stages=('A','W') ran
-    # the full pass twice in round 1)
-    _cached_features = None
-    n_consumers = ("A" in upto and "A" in conf.checkpoint_stages) + (
-        "W" in upto and "W" in conf.checkpoint_stages
-    )
-    if not materialized and n_consumers > 1:
-        features = features.persist()
-        _cached_features = features
-
-    # A — salted tile aggregation + rollup
-    if "A" in upto:
+    if "A" in conf.stages:  # salted tile aggregation + rollup
         res.tiles = do("A", lambda: tile_stage(features, conf), cell_col="cell")
-
-    # W — range-partitioned final feature table
-    if "W" in upto:
+    if "W" in conf.stages:  # range-partitioned final feature table
         features = do(
             "W",
             lambda: range_partition_by_cell(
@@ -234,12 +212,6 @@ def run_pipeline(
             ),
             cell_col="cell_s2",
         )
-
     res.features = features
-    # release the fused-chain cache once the final features are parquet-
-    # backed (W checkpointed replaced `features` with the read-back table);
-    # if W was fused, res.features still points at the cached chain — keep it
-    if _cached_features is not None and features is not _cached_features:
-        _cached_features.unpersist()
     res.lineage = L.lineage_table(spark, run_id, records)
     return res

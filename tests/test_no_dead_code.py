@@ -9,6 +9,9 @@ definitions: a reached function, class or assignment reaches every package
 name its body refers to, and importing a module runs (so reaches) its
 top-level statements that are not definitions. Tests are not entry
 points: a name only a test calls is dead code with a test.
+
+The contract's own ``q_*`` functions are checked the same way: each is
+reached from inside ``__spark_entry__.py`` or benched by name.
 """
 from __future__ import annotations
 
@@ -224,3 +227,24 @@ def test_every_package_name_is_reached_or_kept():
     stale = sorted(n for n in KEPT
                    if n not in _names(pkg.defs) or n in _names(from_entries))
     assert not stale, f"stale KEPT entries: {stale}"
+
+
+def test_every_contract_query_is_reached():
+    """Every ``q_*`` function in ``__spark_entry__.py`` is referred to
+    there beyond its own ``def`` (``queries()``, or another query), or is
+    one of ``bench.headline_queries()``, which ``bench.py`` looks up as
+    ``q_<name>``."""
+    entry = _parse(os.path.join(ROOT, "__spark_entry__.py"))
+    defined = [s.name for s in entry.body
+               if isinstance(s, ast.FunctionDef) and s.name.startswith("q_")]
+    referred = {n.id for n in ast.walk(entry) if isinstance(n, ast.Name)}
+    headline = next(s for s in _parse(os.path.join(ROOT, "bench.py")).body
+                    if isinstance(s, ast.FunctionDef)
+                    and s.name == "headline_queries")
+    benched = {n.value for n in ast.walk(headline)
+               if isinstance(n, ast.Constant) and isinstance(n.value, str)}
+    dead = sorted(q for q in defined
+                  if q not in referred and q[2:] not in benched)
+    assert not dead, (
+        f"{len(dead)} contract queries nothing reaches; delete them or "
+        "list them in queries():\n  " + "\n  ".join(dead))

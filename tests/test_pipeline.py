@@ -280,45 +280,39 @@ def test_coarse_checkpoints_equivalent(spark, dims, workdir):
     assert stages == {"J", "A", "W"}
 
 
-def test_fused_chain_cached_for_multiple_consumers(spark, dims, workdir):
-    """checkpoint_stages=('A','W'): the fused decode+join chain feeds BOTH
-    the tile agg and the final write — it must be persisted so the pass
-    doesn't re-execute once per consumer, and the outputs must match full
-    checkpointing."""
-    stations, polygons = dims
-    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
-    conf = _conf()
-    conf.checkpoint_stages = ("A", "W")
+@pytest.mark.parametrize("stages, checkpoints", [
+    (STAGES, ("A", "W")),             # J would fuse into A and W
+    (STAGES, ("D", "T", "J", "A")),   # W would write nothing
+    (("D", "T", "A", "W"), ("J", "A", "W")),  # A on T output, J skipped
+], ids=["J-fused", "W-fused", "J-skipped"])
+def test_stages_outside_the_graph_raise(spark, dims, workdir, stages,
+                                        checkpoints):
+    """Stages run as a prefix of STAGES, and J, A and W are checkpoints
+    whenever they run; anything else fails before a Spark job starts."""
+    sc = spark.sparkContext
+    group = f"illegal_{len(stages)}_{''.join(checkpoints)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError):
+            run_pipeline(
+                spark, synth_documents(spark, 20, n_stations=N_ST), *dims,
+                workdir, "illegal", resume=False, conf=PipelineConfig(
+                    stages=stages, checkpoint_stages=checkpoints))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not os.path.exists(f"{workdir}/illegal")
+
+
+def test_j_prefix_checkpoints_only_j(spark, dims, workdir):
+    """The graph's shortest checkpointed prefix: D and T fuse into J."""
     res = run_pipeline(
-        spark, docs, stations, polygons, workdir, "aw_only", snapshot_id=9,
-        resume=False, conf=conf,
-    )
-    assert res.executed == ["D~fused", "T~fused", "J~fused", "A", "W"]
-    full = run_pipeline(
-        spark, docs, stations, polygons, workdir, "full", snapshot_id=123,
-        resume=True, conf=_conf(),  # reuses test_full_pipeline output
-    )
-    assert res.features.count() == full.features.count()
-    t = ["level", "cell", "n_obs"]
-    assert res.tiles.select(*t).subtract(full.tiles.select(*t)).count() == 0
-
-
-def test_missing_final_write_warns(spark, dims, workdir):
-    """'W' in stages but not in checkpoint_stages would silently skip the
-    final feature-table write — must warn."""
-    import warnings as _w
-
-    stations, polygons = dims
-    docs = synth_documents(spark, 20, n_stations=N_ST, partitions=2)
-    conf = _conf()
-    conf.checkpoint_stages = ("D", "T", "J", "A")
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        run_pipeline(
-            spark, docs, stations, polygons, workdir, "no_w", snapshot_id=1,
-            resume=False, conf=conf,
-        )
-    assert any("final" in str(c.message).lower() for c in caught)
+        spark, synth_documents(spark, 20, n_stations=N_ST), *dims, workdir,
+        "j_only", resume=False, conf=PipelineConfig(
+            stages=("D", "T", "J"), checkpoint_stages=("J",)))
+    assert res.executed == ["D~fused", "T~fused", "J"]
+    assert res.tiles is None
+    assert sorted(os.listdir(f"{workdir}/j_only/_lineage")) == ["J"]
 
 
 class TestIncrementalRead:
@@ -415,7 +409,7 @@ class TestMaintenancePlan:
         want = run_pipeline(
             spark, docs, stations, polygons, str(tmp_path / "pipe"), "all",
             resume=False, conf=PipelineConfig(stages=("D", "T", "J", "A"),
-                                              checkpoint_stages=("A",)),
+                                              checkpoint_stages=("J", "A")),
         ).tiles
         assert r2["n_tiles"] == want.count()
         assert_same_tiles(standing_tiles(spark, work), want)
