@@ -1677,17 +1677,17 @@ def q_geo_tile_median(spark, sf_dir):
     histogram, never the observations). Oracle: DuckDB's built-in median()
     — a sort-based, entirely different algorithm over the raw values."""
     from bufr2geojson_spark.operators.textops import round_dp
-    from bufr2geojson_spark.operators.tiles import tile_exact_median
+    from bufr2geojson_spark.operators.tiles import tile_exact_quantile
 
     pts = _geo_points(spark, sf_dir).select(
         (F.floor((F.col("lat") + 90.0) / 20.0) * 100
          + F.floor((F.col("lon") + 180.0) / 20.0)).alias("tile"),
         F.col("val"),
     )
-    out = tile_exact_median(pts, cell_col="tile", value_col="val")
+    out = tile_exact_quantile(pts, 0.5, cell_col="tile", value_col="val")
     return out.select(
         "tile", "n_obs",
-        round_dp(F.col("median"), 4).alias("median"),
+        round_dp(F.col("q50"), 4).alias("median"),
     ).orderBy("tile")
 
 

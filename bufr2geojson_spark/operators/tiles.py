@@ -282,60 +282,6 @@ def tile_percentiles_salted(
     return out.select(cell_col, "n_obs", *cols)
 
 
-def tile_exact_median(
-    features: DataFrame,
-    cell_col: str = "cell_s2",
-    value_col: str = "result_value",
-) -> DataFrame:
-    """EXACT per-cell median with NO per-group sort shuffle — the counting
-    formulation that makes exact medians feasible at 100 TB.
-
-    ``tile_percentiles(exact=True)`` (``F.percentile``) materializes every
-    group's values on one reducer; at a billion rows per hot cell that
-    reducer dies. This operator instead observes that a median only needs
-    per-VALUE counts: groupBy (cell, value) is algebraic (map-side combine
-    collapses a hot cell to one row per distinct value per input partition
-    before the shuffle, and the compound key spreads the hot cell across
-    reducers — exactly the ``tile_percentiles_salted`` sketch shape but
-    lossless), and a window over the per-cell VALUE HISTOGRAM — already
-    reduced to occupied values, never observations — finds the value(s)
-    covering rank positions ⌈n/2⌉ and ⌊n/2⌋+1. Median = their mean (equal
-    for odd n, the standard interpolation for even n).
-
-    Returns (cell, n_obs, median). The DuckDB oracle is the built-in
-    ``median()`` — a sort-based, entirely different algorithm."""
-    g = (
-        features.filter(F.col(value_col).isNotNull())
-        .groupBy(cell_col, F.col(value_col).alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    wcum = (
-        Window.partitionBy(cell_col)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy(cell_col)
-    t = (
-        g.withColumn("_cum", F.sum("_cnt").over(wcum))
-        .withColumn("_n", F.sum("_cnt").over(wall))
-    )
-    prev = F.col("_cum") - F.col("_cnt")
-    k1 = F.shiftright(F.col("_n") + 1, 1)   # ceil(n/2)
-    k2 = F.shiftright(F.col("_n"), 1) + 1   # floor(n/2) + 1
-    covers = lambda k: (prev < k) & (F.col("_cum") >= k)  # noqa: E731
-    contrib = (
-        F.when(covers(k1), F.col("_v")).otherwise(F.lit(0.0))
-        + F.when(covers(k2), F.col("_v")).otherwise(F.lit(0.0))
-    )
-    return (
-        t.groupBy(cell_col)
-        .agg(
-            F.max("_n").alias("n_obs"),
-            (F.sum(contrib) / F.lit(2.0)).alias("median"),
-        )
-    )
-
-
 def tile_exact_quantile(
     features: DataFrame,
     q: float,
@@ -344,17 +290,25 @@ def tile_exact_quantile(
 ) -> DataFrame:
     """EXACT per-cell continuous quantile (``quantile_cont`` / type-7
     ``h = (n-1)·q`` interpolation — the semantics of numpy's default,
-    DuckDB's ``quantile_cont`` and Spark's ``F.percentile``) via the same
-    counting formulation as ``tile_exact_median``: a (cell, value)
-    histogram groupBy (map-side combined, compound key spreads hot cells)
-    plus one window over occupied VALUES — observations are never
-    materialized per group, which is what makes exactness affordable at a
-    billion rows per hot cell.
+    DuckDB's ``quantile_cont``/``median`` and Spark's ``F.percentile``)
+    with NO per-group sort shuffle — the counting formulation that makes
+    exact quantiles feasible at 100 TB.
+
+    ``tile_percentiles(exact=True)`` (``F.percentile``) materializes every
+    group's values on one reducer; at a billion rows per hot cell that
+    reducer dies. A quantile only needs per-VALUE counts: groupBy (cell,
+    value) is algebraic (map-side combine collapses a hot cell to one row
+    per distinct value per input partition before the shuffle, and the
+    compound key spreads the hot cell across reducers — the
+    ``tile_percentiles_salted`` sketch shape, but lossless), and one window
+    over the per-cell VALUE HISTOGRAM — occupied values, never
+    observations — finds the value(s) covering the two bracketing ranks.
 
     The interpolated quantile is ``v[k1]·(1−frac) + v[k2]·frac`` with
     ``k1 = ⌊h⌋+1``, ``k2 = k1+1`` (1-based ranks), ``frac = h−⌊h⌋``; the
     histogram row covering each rank contributes its value with the
-    matching weight (one row can cover both ranks). Returns
+    matching weight (one row can cover both ranks). ``q=0.5`` is the
+    median: ranks ⌈n/2⌉ and ⌊n/2⌋+1, their mean for even n. Returns
     (cell, n_obs, q{q}).
     """
     if not 0.0 <= q <= 1.0:

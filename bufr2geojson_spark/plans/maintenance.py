@@ -6,8 +6,9 @@ only: ``run_maintenance`` here (``jobs/maintain.py``, a snapshot-diff of the
 document table) and ``streaming.ingest.run_tile_maintenance_once``
 (``jobs/stream.py --mode tiles``, one micro-batch at a time). The delta goes
 through ``delta_features`` (D then T of ``plans/pipeline.py``) and
-``fold_tiles`` (A, then ``tile_merge`` into the committed version), so the
-standing table has ``run_pipeline``'s A schema and content: one row per
+``fold_tiles`` (A, then ``tile_merge`` into the committed version), with
+the pipeline's fixed parameters (``PipelineConfig``'s class constants), so
+the standing table has ``run_pipeline``'s A schema and content: one row per
 (level, cell) at the base level and every rollup level. J is left out: PIP
 is a left join that keeps the first match and kNN is narrow, so J keeps
 every row, and A reads no J column.
@@ -39,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bufr2geojson_spark.operators.tiles import tile_merge
 from bufr2geojson_spark.plans.pipeline import (
-    PipelineConfig,
     cell_stage,
     decode_stage,
     tile_stage,
@@ -63,8 +63,7 @@ def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
 def delta_features(docs: DataFrame) -> DataFrame:
     """D then T of the batch pipeline on a delta of documents (batch or
     streaming), quarantine rows dropped."""
-    conf = PipelineConfig()
-    return cell_stage(decode_stage(docs, conf).filter("error is null"), conf)
+    return cell_stage(decode_stage(docs).filter("error is null"))
 
 
 def fold_tiles(
@@ -78,7 +77,7 @@ def fold_tiles(
     as ``tiles/v={version}`` and then committed with ``files``, the source
     files folded so far."""
     prev = standing_tiles(spark, work)
-    delta = tile_stage(features, PipelineConfig())
+    delta = tile_stage(features)
     merged = delta if prev is None else tile_merge(prev, delta)
     merged.write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
     driver_fs(spark, work).commit_json(f"{work}/manifest.json",

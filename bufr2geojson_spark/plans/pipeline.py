@@ -2,7 +2,7 @@
 
 Stage graph, in execution order:
 
-    D  decode          mapInPandas fold (R5-R24), error quarantine split
+    D  decode          mapInPandas fold (R5-R24); error rows dropped after it
     T  tile-encode     H3/S2 cell UDFs + cell_prefix (narrow)
     J  spatial joins   broadcast PIP (N3) + kNN ring expansion (N4) (narrow)
     A  tile agg        salted two-phase agg (N5/N7) + multi-level rollup
@@ -11,13 +11,16 @@ Stage graph, in execution order:
 A run executes a prefix of the graph. J, A and W are always checkpoints
 (parquet + stage record); D and T are checkpoints only when asked, and
 otherwise fuse into J's single pass. So A and W both read J's parquet, and
-any other choice of stages is rejected before a Spark job starts.
+any other choice of stages is rejected before a Spark job starts. The
+engine's parameters (cell levels, kNN grid, salting, rollup levels) are
+``PipelineConfig`` class constants, not settings: batch, incremental and
+streaming tiles all run with the same ones.
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) reuses a complete stage
-whose record holds this run's inputs — the documents' snapshot id, the
-config and the checksum of the checkpoint it reads — or none (written
-outside ``run_pipeline``); it recomputes any other stage, and so every
+whose record holds this run's inputs — the documents' snapshot id and the
+checksum of the checkpoint it reads — or none (written outside
+``run_pipeline``); it recomputes any other stage, and so every
 stage reading a recomputed checkpoint with a new checksum: the
 checkpoint-resume contract (N10, records in ``plans/lineage.py``). The
 ``stations`` and ``polygons`` tables are not inputs: a resume after either
@@ -26,8 +29,8 @@ changed reuses J, A and W.
 
 from __future__ import annotations
 
-import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,21 +52,25 @@ _ALWAYS_CHECKPOINTED = ("J", "A", "W")
 
 @dataclass
 class PipelineConfig:
-    s2_level: int = 14
-    hex_res: int = 7
-    prefix_bits: int = 12
-    knn_k: int = 1
-    knn_grid_deg: float = 2.0
-    salt_buckets: int = 16
-    hot_threshold: int | None = 200
-    rollup_levels: tuple = (10, 6)
-    # W's range-partition count. None lets AQE size the range exchange from
-    # the data (it coalesces adjacent ranges, so files stay disjoint); an int
-    # forces that many partitions and files. Kept as a field because the
-    # benchmark's isolated write layer reads it.
-    output_partitions: int | None = None
-    result_time: str = "2024-12-19 00:00:00"
-    guess_wsi: bool = True
+    """Which stages run and which of them are checkpoints. The engine's
+    parameters are fixed class constants, so every chain (batch,
+    incremental, streaming) runs with the same ones; they stay on the
+    class because the benchmark reads them from its config."""
+
+    s2_level: ClassVar[int] = 14
+    hex_res: ClassVar[int] = 7
+    prefix_bits: ClassVar[int] = 12
+    knn_k: ClassVar[int] = 1
+    knn_grid_deg: ClassVar[float] = 2.0
+    salt_buckets: ClassVar[int] = 16
+    hot_threshold: ClassVar[int] = 200
+    rollup_levels: ClassVar[tuple] = (10, 6)
+    # W's range-partition count: None lets AQE size the range exchange from
+    # the data (it coalesces adjacent ranges, so files stay disjoint)
+    output_partitions: ClassVar[int | None] = None
+    result_time: ClassVar[str] = "2024-12-19 00:00:00"
+    guess_wsi: ClassVar[bool] = True
+
     # The stages to run: a prefix of STAGES.
     stages: tuple = STAGES
     # Stages that materialize (parquet + stage record = resume points). It
@@ -75,24 +82,25 @@ class PipelineConfig:
     checkpoint_stages: tuple = _ALWAYS_CHECKPOINTED
 
 
-def decode_stage(docs: DataFrame, conf: PipelineConfig) -> DataFrame:
+def decode_stage(docs: DataFrame) -> DataFrame:
     """D: decoded feature rows plus quarantine rows (``error`` set)."""
     return decode_documents(
-        docs, guess_wsi=conf.guess_wsi, result_time=conf.result_time
+        docs, guess_wsi=PipelineConfig.guess_wsi,
+        result_time=PipelineConfig.result_time,
     )
 
 
-def cell_stage(features: DataFrame, conf: PipelineConfig) -> DataFrame:
+def cell_stage(features: DataFrame) -> DataFrame:
     """T: cell_s2 / cell_h3 / cell_prefix on the good feature rows."""
     return with_cells(
         features,
-        s2_level_=conf.s2_level,
-        hex_res_=conf.hex_res,
-        prefix_bits=conf.prefix_bits,
+        s2_level_=PipelineConfig.s2_level,
+        hex_res_=PipelineConfig.hex_res,
+        prefix_bits=PipelineConfig.prefix_bits,
     )
 
 
-def tile_stage(features: DataFrame, conf: PipelineConfig) -> DataFrame:
+def tile_stage(features: DataFrame) -> DataFrame:
     """A: salted per-cell tiles at ``s2_level`` plus every rollup level, one
     row per (level, cell). Reads only the T columns, so the incremental
     drivers (``plans/maintenance.py``) run it on T output directly."""
@@ -100,19 +108,17 @@ def tile_stage(features: DataFrame, conf: PipelineConfig) -> DataFrame:
         features,
         cell_col="cell_s2",
         value_col="result_value",
-        salt_buckets=conf.salt_buckets,
-        hot_threshold=conf.hot_threshold,
+        salt_buckets=PipelineConfig.salt_buckets,
+        hot_threshold=PipelineConfig.hot_threshold,
     )
-    return tile_rollup(
-        base, conf.s2_level, list(conf.rollup_levels), cell_col="cell_s2"
-    )
+    return tile_rollup(base, PipelineConfig.s2_level,
+                       list(PipelineConfig.rollup_levels), cell_col="cell_s2")
 
 
 @dataclass
 class PipelineResult:
     features: DataFrame | None = None
     tiles: DataFrame | None = None
-    quarantine: DataFrame | None = None
     lineage: DataFrame | None = None
     skipped: list = field(default_factory=list)
     executed: list = field(default_factory=list)
@@ -150,11 +156,8 @@ def run_pipeline(
     conf = conf or PipelineConfig()
     _check_stages(conf)
     res = PipelineResult(snapshot_id=snapshot_id)
-    # a checkpoint's inputs: the documents' snapshot, every config field but
-    # the stage choices, and the checksum of the checkpoint `features` was
-    # read from
-    fields = {k: v for k, v in asdict(conf).items()
-              if k not in ("stages", "checkpoint_stages")}
+    # a checkpoint's inputs: the documents' snapshot and the checksum of the
+    # checkpoint `features` was read from
     upstream = None
     records = {}  # stage -> the record this run wrote or reused
 
@@ -164,8 +167,7 @@ def run_pipeline(
             # lazy D or T: fuses into J's pass (or is returned lazy)
             res.executed.append(f"{stage}~fused")
             return compute()
-        inputs = json.loads(json.dumps({
-            "snapshot_id": snapshot_id, "conf": fields, "upstream": upstream}))
+        inputs = {"snapshot_id": snapshot_id, "upstream": upstream}
         record = (L.stage_record(spark, work_dir, run_id, stage)
                   if resume else None)
         # reused on equal inputs, or on none (a stage built by write_stage
@@ -186,29 +188,29 @@ def run_pipeline(
         return out
 
     features = None
-    if "D" in conf.stages:  # decode + quarantine split
-        d_all = do("D", lambda: decode_stage(docs, conf))
-        features = d_all.filter("error is null")
-        res.quarantine = d_all.filter("error is not null")
+    if "D" in conf.stages:  # decode; quarantine rows (error set) drop here
+        features = do("D", lambda: decode_stage(docs)).filter("error is null")
     if "T" in conf.stages:  # cell encoding
-        features = do("T", lambda: cell_stage(features, conf),
+        features = do("T", lambda: cell_stage(features),
                       cell_col="cell_s2")
     if "J" in conf.stages:  # PIP + kNN, the first checkpoint A and W read
         features = do(
             "J",
             lambda: knn_join(
                 assign_region(features, polygons),
-                stations, k=conf.knn_k, grid_deg=conf.knn_grid_deg,
+                stations, k=PipelineConfig.knn_k,
+                grid_deg=PipelineConfig.knn_grid_deg,
             ),
             cell_col="cell_s2",
         )
     if "A" in conf.stages:  # salted tile aggregation + rollup
-        res.tiles = do("A", lambda: tile_stage(features, conf), cell_col="cell")
+        res.tiles = do("A", lambda: tile_stage(features), cell_col="cell")
     if "W" in conf.stages:  # range-partitioned final feature table
         features = do(
             "W",
             lambda: range_partition_by_cell(
-                features, conf.output_partitions, "cell_s2", "cell_prefix"
+                features, PipelineConfig.output_partitions, "cell_s2",
+                "cell_prefix",
             ),
             cell_col="cell_s2",
         )

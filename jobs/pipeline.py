@@ -14,17 +14,11 @@ and kNN run as one pass into J.
 
 from __future__ import annotations
 
+import _launch  # noqa: F401  first: puts the package on the path
+
 import argparse
 import json
-import os
-import sys
 import time
-
-# PYTHONPATH carries the package to the Python workers of a plain launch
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 
 def main() -> None:

@@ -16,11 +16,12 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the job imports its launch bootstrap from its own directory, which a
+# script launch puts first on sys.path
+sys.path[:0] = [REPO, os.path.join(REPO, "jobs")]
 
 from jobs.analytics import build_result  # noqa: E402
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _args(**kw):

@@ -4,10 +4,16 @@ FIXTURES.md §7)."""
 import os
 import shutil
 import tempfile
+from dataclasses import fields, replace
 
 import pytest
 from pyspark.sql import functions as F
 
+from bufr2geojson_spark.operators.tiles import (
+    hot_cells,
+    tile_aggregate,
+    tile_rollup,
+)
 from bufr2geojson_spark.plans.pipeline import (
     STAGES,
     PipelineConfig,
@@ -40,8 +46,20 @@ def workdir():
 
 def _conf():
     """Every stage checkpointed, so D and T are resume points too."""
-    return PipelineConfig(hot_threshold=50, output_partitions=8,
-                          rollup_levels=(10, 6), checkpoint_stages=STAGES)
+    return PipelineConfig(checkpoint_stages=STAGES)
+
+
+def test_config_holds_only_the_stage_choice():
+    """The engine's parameters are class constants: the stage choice is
+    all a caller sets, and ``replace`` keeps the constants readable."""
+    assert [f.name for f in fields(PipelineConfig)] == [
+        "stages", "checkpoint_stages"]
+    with pytest.raises(TypeError):
+        PipelineConfig(hot_threshold=50)
+    j_only = replace(PipelineConfig(checkpoint_stages=("J",)),
+                     stages=("D", "T", "J"))
+    assert j_only.stages == ("D", "T", "J")
+    assert j_only.s2_level == 14
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +73,7 @@ def full_run(spark, dims, workdir):
     )
 
 
-def test_full_pipeline(full_run):
+def test_full_pipeline(spark, full_run, workdir):
     res = full_run
     assert res.executed == ["D", "T", "J", "A", "W"]
     nf = res.features.count()
@@ -67,8 +85,10 @@ def test_full_pipeline(full_run):
     assert res.tiles.count() > 0
     assert {r.level for r in res.tiles.select("level").distinct().collect()} \
         == {14, 10, 6}
-    # quarantine empty for clean synth
-    assert res.quarantine.count() == 0
+    # no quarantine rows (error set) in the D checkpoint for clean synth
+    d = L.read_stage(spark, workdir, "full", "D",
+                     L.stage_record(spark, workdir, "full", "D"))
+    assert d.filter("error is not null").count() == 0
 
 
 def test_lineage_records(full_run):
@@ -88,13 +108,25 @@ def test_lineage_records(full_run):
     assert all(r.cell_lo is not None and r.cell_hi <= 2**60 for r in w)
 
 
+def test_stage_inputs_are_snapshot_and_upstream(spark, full_run, workdir):
+    """Resume compares the snapshot id and the checksum of the checkpoint
+    a stage read (none for D); the engine's parameters are not settings."""
+    upstream = {"D": None, "T": "D", "J": "T", "A": "J", "W": "J"}
+    for stage, source in upstream.items():
+        inputs = L.stage_record(spark, workdir, "full", stage)["inputs"]
+        assert set(inputs) == {"snapshot_id", "upstream"}
+        assert inputs["snapshot_id"] == 123
+        assert inputs["upstream"] == (source and L.stage_record(
+            spark, workdir, "full", source)["checksum"])
+
+
 def test_resume_skips_completed_stages(spark, dims, workdir):
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
     conf = _conf()
 
     # 1) run only D and T, then "die" (kill after tiling stage)
-    partial_conf = PipelineConfig(**{**conf.__dict__, "stages": ("D", "T")})
+    partial_conf = replace(conf, stages=("D", "T"))
     res1 = run_pipeline(
         spark, docs, stations, polygons, workdir, "resume1",
         snapshot_id=7, resume=True, conf=partial_conf,
@@ -149,7 +181,7 @@ def default_run(spark, dims, workdir):
     data-sized W shows up as fewer than 32 partitions."""
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
-    conf = PipelineConfig(hot_threshold=50, checkpoint_stages=("J", "A", "W"))
+    conf = PipelineConfig()
     returned = {}
     write_stage = L.write_stage
 
@@ -193,13 +225,6 @@ def test_w_partitions_sized_from_data(default_run, workdir):
     assert res.lineage.filter("stage = 'W'").count() == files
 
 
-def test_w_explicit_partition_count_kept(full_run, workdir):
-    """output_partitions=8 (``_conf``) still forces exactly 8 partitions,
-    one file each, and one lineage row each."""
-    assert len(_parquet_files(f"{workdir}/full/W")) == 8
-    assert full_run.lineage.filter("stage = 'W'").count() == 8
-
-
 def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
     res, _, returned = default_run
     assert sorted(returned) == ["A", "J", "W"]
@@ -226,8 +251,7 @@ def test_lineage_is_this_runs_own(spark, dims, workdir):
     not the D and T records the first run left behind."""
     stations, polygons = dims
     docs = synth_documents(spark, 300, n_stations=N_ST, partitions=4)
-    for conf in (_conf(), PipelineConfig(hot_threshold=50,
-                                         output_partitions=8)):
+    for conf in (_conf(), PipelineConfig()):
         res = run_pipeline(
             spark, docs, stations, polygons, workdir, "reused_id",
             snapshot_id=300, resume=True, conf=conf,
@@ -278,6 +302,38 @@ def test_coarse_checkpoints_equivalent(spark, dims, workdir):
     # lineage only for checkpointed stages
     stages = {r.stage for r in res.lineage.select("stage").distinct().collect()}
     assert stages == {"J", "A", "W"}
+
+
+def _snapped(docs, lat, lon, every=4):
+    """``docs`` with the latitude/longitude spans of one document in
+    ``every`` rewritten onto one point, so their features share a level-14
+    cell (the synth corpus alone has none above ``hot_threshold``)."""
+    def onto(text, code, value):
+        return F.regexp_replace(text, rf"^({code}\|[^|]*\|)[^|]*", f"$1{value}")
+
+    snap = F.crc32("doc_id") % every == 0
+    return docs.withColumn("spans", F.when(snap, F.transform(
+        "spans", lambda s: s.withField("text", onto(
+            onto(s["text"], "005001", lat), "006001", lon)),
+    )).otherwise(F.col("spans")))
+
+
+def test_hot_cells_are_salted_to_the_plain_tiles(spark, dims, workdir,
+                                                 assert_same_tiles):
+    """With a quarter of the documents on one point, J holds a cell above
+    ``hot_threshold``, so A takes the salted branch; its tiles equal a
+    plain (unsalted) aggregation of J, rolled up the same way."""
+    stations, polygons = dims
+    docs = _snapped(synth_documents(spark, N_DOCS, n_stations=N_ST,
+                                    partitions=4), 41.25, -8.75)
+    res = run_pipeline(spark, docs, stations, polygons, workdir, "hot",
+                       resume=False)
+    j = L.read_stage(spark, workdir, "hot", "J",
+                     L.stage_record(spark, workdir, "hot", "J"))
+    assert hot_cells(j, "cell_s2", PipelineConfig.hot_threshold).count() > 0
+    plain = tile_rollup(tile_aggregate(j), PipelineConfig.s2_level,
+                        list(PipelineConfig.rollup_levels))
+    assert_same_tiles(res.tiles, plain)
 
 
 @pytest.mark.parametrize("stages, checkpoints", [

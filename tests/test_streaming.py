@@ -150,7 +150,7 @@ def test_stream_tile_maintenance_matches_batch(spark, tmp_path,
         delta_features,
         standing_tiles,
     )
-    from bufr2geojson_spark.plans.pipeline import PipelineConfig, tile_stage
+    from bufr2geojson_spark.plans.pipeline import tile_stage
     from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
 
     base = str(tmp_path)
@@ -167,7 +167,7 @@ def test_stream_tile_maintenance_matches_batch(spark, tmp_path,
     assert n2 >= 1
 
     assert_same_tiles(standing_tiles(spark, f"{base}/work"),
-                      tile_stage(delta_features(docs), PipelineConfig()))
+                      tile_stage(delta_features(docs)))
 
 
 def test_stream_tile_maintenance_rerun_noop(spark, tmp_path):

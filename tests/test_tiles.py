@@ -898,14 +898,15 @@ class TestTilePercentilesSalted:
 
 
 class TestTileExactMedian:
-    """Counting-formulation exact median vs a brute-force numpy sort."""
+    """The median is the counting quantile at q=0.5 (ranks ⌈n/2⌉ and
+    ⌊n/2⌋+1), checked against a brute-force numpy sort."""
 
     def test_matches_numpy_median(self, spark, feat):
-        from bufr2geojson_spark.operators.tiles import tile_exact_median
+        from bufr2geojson_spark.operators.tiles import tile_exact_quantile
 
         df, pdf = feat
-        got = {r["cell_s2"]: (r["n_obs"], r["median"]) for r in
-               tile_exact_median(df).collect()}
+        got = {r["cell_s2"]: (r["n_obs"], r["q50"]) for r in
+               tile_exact_quantile(df, 0.5).collect()}
         exp = pdf.groupby("cell_s2")["result_value"].agg(["count", "median"])
         assert set(got) == set(exp.index)
         for cell, (n, med) in got.items():
@@ -913,7 +914,7 @@ class TestTileExactMedian:
             assert med == pytest.approx(exp.loc[cell, "median"], abs=1e-9)
 
     def test_odd_even_ties_and_nulls(self, spark):
-        from bufr2geojson_spark.operators.tiles import tile_exact_median
+        from bufr2geojson_spark.operators.tiles import tile_exact_quantile
 
         rows = [
             # odd n -> exact middle value
@@ -927,19 +928,19 @@ class TestTileExactMedian:
             ("d", -7.5),
         ]
         df = spark.createDataFrame(rows, "cell_s2 string, result_value double")
-        got = {r["cell_s2"]: (r["n_obs"], r["median"]) for r in
-               tile_exact_median(df).collect()}
+        got = {r["cell_s2"]: (r["n_obs"], r["q50"]) for r in
+               tile_exact_quantile(df, 0.5).collect()}
         assert got == {"a": (3, 5.0), "b": (4, 6.0),
                        "c": (4, 3.0), "d": (1, -7.5)}
 
     def test_partitioning_invariant(self, spark, feat):
-        from bufr2geojson_spark.operators.tiles import tile_exact_median
+        from bufr2geojson_spark.operators.tiles import tile_exact_quantile
 
         df, _ = feat
-        a = {r["cell_s2"]: r["median"] for r in
-             tile_exact_median(df.repartition(2)).collect()}
-        b = {r["cell_s2"]: r["median"] for r in
-             tile_exact_median(df.repartition(16)).collect()}
+        a = {r["cell_s2"]: r["q50"] for r in
+             tile_exact_quantile(df.repartition(2), 0.5).collect()}
+        b = {r["cell_s2"]: r["q50"] for r in
+             tile_exact_quantile(df.repartition(16), 0.5).collect()}
         assert a == b
 
 
