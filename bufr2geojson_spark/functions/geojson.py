@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from bufr2geojson_spark.operators.decode import (
+    feature_metadata,
+    feature_provenance,
+)
+
 CONFORMS_TO = ["https://wis.wmo.int/spec/wccdm-obs/1/conf/observation"]
 
 _NEEDED = [
@@ -29,7 +34,7 @@ _NEEDED = [
     "observation_type", "observed_property", "observing_procedure",
     "phenomenon_time", "result_time", "result_value", "result_code",
     "result_flags", "result_units", "quality_flag", "report_type",
-    "metadata_json", "prov_json",
+    "headers_json", "metadata_frag", "source_identifier", "message_number",
 ]
 
 
@@ -59,6 +64,10 @@ def _feature_dict(r: dict) -> dict:
                      "description": list(flags["description"])
                      if flags["description"] is not None else None}
     qf = r.get("quality_flag") or {}
+    # quarantine rows carry neither block
+    metadata = (json.loads(feature_metadata(r["metadata_frag"],
+                                            r["headers_json"]))
+                if r.get("metadata_frag") else None)
     return {
         "id": r["feature_id"],
         "conformsTo": list(CONFORMS_TO),
@@ -86,16 +95,15 @@ def _feature_dict(r: dict) -> dict:
                 }
             ],
             "parameter": {
-                "hasProvenance": json.loads(r["prov_json"])
-                if r.get("prov_json") else None,
+                "hasProvenance": feature_provenance(
+                    r, metadata["BUFRheaders"]) if metadata else None,
                 "status": None,
                 "version": 0,
                 "comment": None,
                 "reportType": r["report_type"],
                 "reportIdentifier": r["report_id"],
                 "isMemberOf": None,
-                "additionalProperties": json.loads(r["metadata_json"])
-                if r.get("metadata_json") else None,
+                "additionalProperties": metadata,
             },
             "featureOfInterest": [
                 {"id": None, "label": None, "relation": None}

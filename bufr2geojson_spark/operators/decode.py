@@ -39,8 +39,11 @@ Reference behaviors reproduced exactly (file:line cites into
 * WSI/TSI precedence chain with guessed issuers 20000/20002/20004
   (:651-780); statistic-qualified property rename (:1117-1121);
 * id prefixing ``{report_md5}-{index}`` (:1234-1239, :1261) and the W3C PROV
-  block with injectable wall-clock fields (:1262-1294; the reference test
-  itself normalizes them, tests/test_bufr2geojson.py:261-262);
+  block with an injectable wall-clock field (:1262-1294; the reference test
+  itself normalizes it, tests/test_bufr2geojson.py:261-262). The row keeps
+  the PROV template's fields, not the block: ``feature_provenance`` renders
+  it at the sink, as ``feature_metadata`` closes the row's metadata
+  fragment with the report's headers;
 * per-document error containment → quarantine ``error`` column instead of
   executor-killing exceptions (R27; reference logs & yields {} at
   :1213-1218, :1299-1300). NOTE the span-text contract: element fields are
@@ -646,45 +649,32 @@ def _prov_block(source_identifier, feature_id, inner_id, subset_idx, msg_idx,
     }
 
 
-# printable ASCII with no '"' or '\' — strings json.dumps quotes verbatim
-# (ensure_ascii leaves this range untouched), so '"'+s+'"' is byte-identical
-_JSON_VERBATIM = re.compile(r'[ !#-\[\]-~]*\Z')
+def _subset_idx(headers: dict) -> int:
+    return int(headers.get("subsetNumber", 1)) - 1
 
 
-def _quote_json(s: str) -> str:
-    """Byte-identical fast path for ``json.dumps(str)``: plain-ASCII ids
-    (md5-hex feature ids, filenames) skip the C encoder; anything needing
-    escaping falls back to it. Profiling: the two per-feature dumps calls
-    in _prov_json were ~2/3 of remaining json CPU in the fold."""
-    if _JSON_VERBATIM.match(s):
-        return '"' + s + '"'
-    return json.dumps(s)
+# The row stores neither rendered document: the sink (functions/geojson.py)
+# rebuilds both from the row with the two renderers below, which fix their
+# format in one place.
 
 
-def _prov_json(source_identifier, feature_id, inner_id, subset_idx, msg_idx,
-               pet_json: str) -> str:
-    """Byte-identical fast path for ``json.dumps(_prov_block(...))`` —
-    string-template assembly with per-scalar escaping (profiling: the full
-    nested-dict dumps per feature was ~10% of decode CPU). Equality with
-    the dict form is pinned by a regression test."""
-    s = _quote_json(f"{source_identifier}")
-    f = _quote_json(f"{feature_id}")
-    return (
-        '{"prefix": {"prov": "http://www.w3.org/ns/prov#", '
-        '"schema": "https://schema.org/"}, "entity": {'
-        + s + ': {"prov:type": "schema:DigitalDocument", '
-        '"prov:label": "Input data file", '
-        '"schema:encodingFormat": "application/bufr"}, '
-        + f + ': {"prov:type": "observation", '
-        f'"prov:label": "Observation {inner_id} from subset '
-        f'{subset_idx} of message {msg_idx}"}}}}, '
-        '"wasDerivedFrom": {"_:wdf": {"prov:generatedEntity": '
-        + f + ', "prov:usedEntity": ' + s
-        + ', "prov:activity": "_:bufr2geojson"}}, '
-        '"activity": {"_:bufr2geojson": {"prov:type": "prov:Activity", '
-        '"prov:label": "Data transformation using version '
-        f'{ENGINE_VERSION_LABEL} of bufr2geojson", '
-        '"prov:endTime": ' + pet_json + "}}}"
+def feature_metadata(metadata_frag: str, headers_json: str) -> str:
+    """A feature's ``additionalProperties`` document: its per-feature
+    fragment closed by the report's ``BUFRheaders`` block (reference key
+    order, headers last)."""
+    return metadata_frag + ',"BUFRheaders":' + headers_json + "}"
+
+
+def feature_provenance(row, headers: dict) -> dict:
+    """A feature's W3C PROV block from its decoded row (a mapping with the
+    ``feature_schema`` fields) and its decoded ``BUFRheaders``. The source
+    is the row's ``source_identifier`` or, when none was set, its host;
+    ``prov:endTime`` is its ``result_time``."""
+    source = row["source_identifier"]
+    return _prov_block(
+        row["host"] if source is None else source, row["feature_id"],
+        int(row["index"]), _subset_idx(headers), int(row["message_number"]),
+        f"{row['result_time']}",
     )
 
 
@@ -738,8 +728,8 @@ def _parse_value(tok: str):
 # ---------------------------------------------------------------------------
 
 
-def _decode_doc(doc_id, spans, *, guess_wsi, result_time, prov_end_time,
-                source_identifier, include_spans, table_provider=None):
+def _decode_doc(doc_id, spans, *, guess_wsi, result_time, source_identifier,
+                include_spans, table_provider=None):
     """Decode one document, exploding multi-subset documents (R3).
 
     The reference clones the message and extracts subset i as an independent
@@ -760,7 +750,6 @@ def _decode_doc(doc_id, spans, *, guess_wsi, result_time, prov_end_time,
         feats, err = _decode_subset(
             doc_id, spans, spans,
             guess_wsi=guess_wsi, result_time=result_time,
-            prov_end_time=prov_end_time,
             source_identifier=source_identifier,
             include_spans=include_spans,
             table_provider=table_provider,
@@ -775,7 +764,6 @@ def _decode_doc(doc_id, spans, *, guess_wsi, result_time, prov_end_time,
             feats, err = _decode_subset(
                 doc_id, seg, spans,
                 guess_wsi=guess_wsi, result_time=result_time,
-                prov_end_time=prov_end_time,
                 source_identifier=source_identifier,
                 include_spans=include_spans,
                 table_provider=table_provider,
@@ -792,8 +780,7 @@ def _decode_doc(doc_id, spans, *, guess_wsi, result_time, prov_end_time,
 
 
 def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
-                   prov_end_time, source_identifier, include_spans,
-                   table_provider=None):
+                   source_identifier, include_spans, table_provider=None):
     features = []
     # media count and the span-sequence invariant are DOCUMENT-level
     # properties: count/preserve the full document's spans, not the segment
@@ -813,14 +800,20 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
     headers["sequence"] = sequence
     report_id = raw_headers.get("reportIdentifier") or _report_id(spans)
     src_id = raw_headers.get("sourceIdentifier") or source_identifier
-    subset_idx = int(headers.get("subsetNumber", 1)) - 1
+    # the provenance template fields the row lacks; the sink falls back to
+    # the feature's host when no source is set
+    src_id = f"{src_id}" if src_id not in ("", None) else None
+    # the sink renders both numbers: a value it could not render
+    # quarantines the subset here instead
+    _subset_idx(headers)
     msg_idx = int(raw_headers.get("messageNumber", 1))
+    if not -2**31 <= msg_idx < 2**31:
+        return [], f"messageNumber {msg_idx} out of range"
     report_type = (f"{headers['dataCategory']:03}"
                    f"{headers['internationalDataSubCategory']:03}")
-    # serialized once per document; per-feature metadata_json splices this
-    # fragment instead of re-serializing the 23 header keys per feature
+    # serialized once per subset and shared by its features; the sink
+    # closes each feature's metadata fragment with it
     headers_json = json.dumps(headers)
-    pet_json = json.dumps(f"{prov_end_time}")
 
     state = _DocState()
     last_key = None
@@ -941,9 +934,12 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
         if value is None:
             continue
 
-        # metadata_json assembled from memoized pre-serialized fragments
-        # (byte-identical to dumps of the mutated get_qualifiers() dict —
-        # pinned by the golden metadata test and the geojson-length oracle)
+        # the metadata document without its BUFRheaders tail, assembled
+        # from memoized pre-serialized fragments (byte-identical to dumps of
+        # the mutated get_qualifiers() dict once feature_metadata closes it
+        # — pinned by the golden metadata test and the geojson-length
+        # oracle). Cut before the tail, it repeats across features and
+        # reports, so parquet dictionary-encodes it.
         z = state.get_zcoordinate(xx)
         zcoord = z.get("z") if z else None
         metadata_frag = (state.qualifiers_json_open()
@@ -972,10 +968,6 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
 
         geometry, geo_lon, geo_lat, geo_z = state.location_out(xx)
         feature_id = f"{report_id}-{index}"
-
-        this_src = src_id if src_id not in ("", None) else host_id
-        prov_json = _prov_json(this_src, feature_id, index, subset_idx,
-                               msg_idx, pet_json)
 
         is_num = isinstance(value, (int, float))
         row = {
@@ -1006,11 +998,9 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
             "bufr_element": fxxyyy,
             "zcoord": zcoord,
             "headers_json": headers_json,
-            # metadata keeps reference key order (BUFRheaders last) but the
-            # header fragment is spliced in pre-serialized
-            "metadata_json": metadata_frag
-            + ',"BUFRheaders":' + headers_json + "}",
-            "prov_json": prov_json,
+            "metadata_frag": metadata_frag,
+            "source_identifier": src_id,
+            "message_number": msg_idx,
             "error": None,
             "n_media_spans": n_media,
         }
@@ -1037,7 +1027,6 @@ def decode_documents(
     *,
     guess_wsi: bool = True,
     result_time: str = "2024-12-19 00:00:00",
-    prov_end_time: str | None = None,
     source_identifier: str = "",
     include_spans: bool = False,
     table_provider=None,
@@ -1047,13 +1036,12 @@ def decode_documents(
     One fused ``mapInPandas`` stage (SURVEY.md §3.1): Arrow-batched, no
     shuffle, no driver collection; scales linearly with input partitions.
 
-    ``result_time`` / ``prov_end_time`` are the two wall-clock fields of the
-    reference (:1114, :1290) made injectable for determinism — the reference
-    test suite itself overwrites them before comparing
-    (tests/test_bufr2geojson.py:261-262).
+    ``result_time`` is the reference's wall-clock result time (:1114) made
+    injectable for determinism; the sink renders it as the provenance
+    ``prov:endTime`` (:1290) too — the reference test suite itself
+    overwrites both before comparing (tests/test_bufr2geojson.py:261-262).
     """
     schema = feature_schema(include_spans)
-    pet = prov_end_time if prov_end_time is not None else result_time
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in schema.fields]
@@ -1069,7 +1057,6 @@ def decode_documents(
                         doc_id, spans,
                         guess_wsi=guess_wsi,
                         result_time=result_time,
-                        prov_end_time=pet,
                         source_identifier=source_identifier,
                         include_spans=include_spans,
                         table_provider=table_provider,

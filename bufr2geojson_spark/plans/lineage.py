@@ -9,16 +9,23 @@ stage record. ``write_stage``
 
 1. deletes the stage's old lineage, so no completion marker outlives a
    rewrite of its data;
-2. writes the stage parquet with one ``Observation`` attached: the row
-   count and the stage checksum;
+2. writes the stage parquet, zstd-compressed, with one ``Observation``
+   attached: the row count and the stage checksum;
 3. reads the parquet footer of each written part file on the driver: the
    part index, the footer's row count and min/max of the cell column, and a
    64-bit digest of the footer's canonical form;
 4. commits ``_lineage/<stage>/_stage.json`` last
    (``sources.io.DriverFS.commit_json``)
    with the rows, the stage checksum, the snapshot id, the written schema,
-   the data-write wall, the per-file rows of step 3 and the inputs the
-   stage was computed from.
+   the data-write wall, the per-file rows of step 3, the inputs the
+   stage was computed from and the metrics of any upstream ``Observation``
+   the data write collected (decode's ``quarantined`` count, on the first
+   checkpoint after decode).
+
+Checkpoints are written with zstd, a fixed choice, not a setting: it
+stores a feature checkpoint in about two thirds of snappy's bytes (J of
+2,000 synth documents: 39 against 62 B per feature) and writes and reads
+it no slower.
 
 Every driver-side listing, read and write, the completion check included,
 goes through ``sources.io.driver_fs``: the Hadoop filesystem Spark resolves
@@ -65,6 +72,8 @@ from bufr2geojson_spark.sources.io import DriverFS, driver_fs
 
 #: The stage record, written last; its presence marks the stage complete.
 STAGE_RECORD = "_stage.json"
+#: The parquet codec of every checkpoint.
+CODEC = "zstd"
 
 _PART_INDEX = re.compile(r"part-(\d+)")
 
@@ -130,12 +139,16 @@ def write_stage(
     snapshot_id: int,
     cell_col: str | None = None,
     inputs: dict | None = None,
+    collects: Observation | None = None,
 ) -> tuple[DataFrame, dict]:
     """Materialize a stage with its lineage (see the module docstring);
     returns the written output read back with the written schema, so the
     downstream plan cuts here — the checkpoint boundary — and the stage
     record it committed. ``inputs`` is stored in the record for resume to
-    compare (``plans.pipeline``)."""
+    compare (``plans.pipeline``). ``collects`` is an ``Observation`` on
+    ``df``'s input that this write collects; its metrics join the record.
+    It must be on ``df``'s plan: ``Observation.get`` waits for a query
+    that runs it, so one behind a checkpoint would wait forever."""
     out = stage_dir(work_dir, run_id, stage)
     lin = f"{work_dir}/{run_id}/_lineage/{stage}"
     fs = driver_fs(spark, out)
@@ -145,7 +158,7 @@ def write_stage(
     df.observe(
         seen, F.count(F.lit(1)).alias("rows"),
         content_checksum(df).alias("checksum"),
-    ).write.mode("overwrite").parquet(out)
+    ).write.mode("overwrite").option("compression", CODEC).parquet(out)
     wall_ms = int((time.monotonic() - t0) * 1000)
     observed = seen.get
 
@@ -168,6 +181,7 @@ def write_stage(
         "wall_ms": wall_ms,
         "files": files,
         "inputs": inputs,
+        **(collects.get if collects is not None else {}),
     }
     fs.commit_json(f"{lin}/{STAGE_RECORD}", record)
     return spark.read.schema(df.schema).parquet(out), record

@@ -18,21 +18,28 @@ streaming tiles all run with the same ones.
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) reuses a complete stage
-whose record holds this run's inputs — the documents' snapshot id and the
-checksum of the checkpoint it reads — or none (written outside
-``run_pipeline``); it recomputes any other stage, and so every
-stage reading a recomputed checkpoint with a new checksum: the
-checkpoint-resume contract (N10, records in ``plans/lineage.py``). The
-``stations`` and ``polygons`` tables are not inputs: a resume after either
-changed reuses J, A and W.
+whose record holds this run's inputs — the documents' snapshot id, the
+checksum of the checkpoint it reads and the feature row format
+(``ROW_FORMAT``) — or none (written outside ``run_pipeline``); it
+recomputes any other stage, and so every stage reading a recomputed
+checkpoint with a new checksum: the checkpoint-resume contract (N10,
+records in ``plans/lineage.py``). The ``stations`` and ``polygons`` tables
+are not inputs: a resume after either changed reuses J, A and W.
+
+The first checkpoint written after decode (J, unless T is a checkpoint)
+also records the quarantine rows decode dropped (``quarantined``),
+observed on the decode output and collected by that checkpoint's own data
+write.
 """
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 from typing import ClassVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from bufr2geojson_spark.functions.cells import with_cells
 from bufr2geojson_spark.operators.decode import decode_documents
@@ -43,11 +50,16 @@ from bufr2geojson_spark.operators.tiles import (
     tile_rollup,
 )
 from bufr2geojson_spark.plans import lineage as L
+from bufr2geojson_spark.schemas import FEATURE_SCHEMA
 
 #: The stage graph in execution order (see the module docstring).
 STAGES = ("D", "T", "J", "A", "W")
 #: The stages that are always checkpoints when they run.
 _ALWAYS_CHECKPOINTED = ("J", "A", "W")
+#: A fingerprint of the feature row, part of every stage's inputs: a
+#: checkpoint written in another row format is recomputed, not reused.
+ROW_FORMAT = hashlib.blake2b(FEATURE_SCHEMA.json().encode(),
+                             digest_size=8).hexdigest()
 
 
 @dataclass
@@ -159,15 +171,20 @@ def run_pipeline(
     # a checkpoint's inputs: the documents' snapshot and the checksum of the
     # checkpoint `features` was read from
     upstream = None
+    # the quarantine count observed on decode's output, until a checkpoint
+    # cuts the plan: the first checkpoint written after decode (J, unless T
+    # is one) collects it and records it, with no job of its own
+    pending = None
     records = {}  # stage -> the record this run wrote or reused
 
     def do(stage: str, compute, **wkw) -> DataFrame:
-        nonlocal upstream
+        nonlocal upstream, pending
         if stage not in conf.checkpoint_stages:
             # lazy D or T: fuses into J's pass (or is returned lazy)
             res.executed.append(f"{stage}~fused")
             return compute()
-        inputs = {"snapshot_id": snapshot_id, "upstream": upstream}
+        inputs = {"snapshot_id": snapshot_id, "upstream": upstream,
+                  "row_format": ROW_FORMAT}
         record = (L.stage_record(spark, work_dir, run_id, stage)
                   if resume else None)
         # reused on equal inputs, or on none (a stage built by write_stage
@@ -180,8 +197,9 @@ def run_pipeline(
         else:
             out, record = L.write_stage(compute(), spark, work_dir, run_id,
                                         stage, snapshot_id, inputs=inputs,
-                                        **wkw)
+                                        collects=pending, **wkw)
             res.executed.append(stage)
+        pending = None
         records[stage] = record
         if stage != "A":  # A's tiles are no later stage's input
             upstream = record["checksum"]
@@ -189,7 +207,11 @@ def run_pipeline(
 
     features = None
     if "D" in conf.stages:  # decode; quarantine rows (error set) drop here
-        features = do("D", lambda: decode_stage(docs)).filter("error is null")
+        decoded = do("D", lambda: decode_stage(docs))
+        pending = Observation("quarantine")
+        features = decoded.observe(
+            pending, F.count("error").alias("quarantined"),
+        ).filter("error is null")
     if "T" in conf.stages:  # cell encoding
         features = do("T", lambda: cell_stage(features),
                       cell_col="cell_s2")

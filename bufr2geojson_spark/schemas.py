@@ -7,8 +7,13 @@ The input shape is fixed by BASELINE.json's ``input_hint``::
 
 The decoded-feature shape mirrors the reference's WCCDM-OBS GeoJSON Feature
 (assembled at ``bufr2geojson/__init__.py:1123-1172``) flattened into typed
-columns; the deeply-nested ``additionalProperties`` block rides as a JSON
-string column (``metadata_json``) because its keys are data-dependent.
+columns. Two blocks of the Feature are not stored whole, because a row
+can rebuild them: ``additionalProperties``, whose keys are data-dependent,
+is stored as its per-feature JSON fragment (``metadata_frag``: qualifiers,
+``BUFR_element``, ``zCoordinate``) beside the report's ``headers_json``,
+and the W3C PROV block as the template fields the row lacks
+(``source_identifier``, ``message_number``). The GeoJSON sink renders both
+(``operators.decode.feature_metadata`` and ``feature_provenance``).
 """
 
 from __future__ import annotations
@@ -119,8 +124,11 @@ def feature_schema(include_spans: bool = False) -> StructType:
         StructField("bufr_element", StringType()),
         StructField("zcoord", ZCOORD_SCHEMA),
         StructField("headers_json", StringType()),
-        StructField("metadata_json", StringType()),
-        StructField("prov_json", StringType()),
+        # additionalProperties without its BUFRheaders tail
+        StructField("metadata_frag", StringType()),
+        # the report's source, null when none was set (PROV uses the host)
+        StructField("source_identifier", StringType()),
+        StructField("message_number", IntegerType()),
         StructField("error", StringType()),
         StructField("n_media_spans", IntegerType()),
     ]

@@ -8,6 +8,7 @@ import re
 
 import pytest
 
+from bufr2geojson_spark.functions.geojson import to_geojson
 from bufr2geojson_spark.operators.decode import decode_documents
 from bufr2geojson_spark.sources.synth import (
     GOLDEN_REPORT_ID,
@@ -66,9 +67,19 @@ def test_golden_feature_fields(golden_row):
     assert r.error is None
 
 
-def test_golden_metadata_block(golden_row):
+@pytest.fixture(scope="module")
+def golden_parameter(decoded):
+    """The golden feature's ``parameter`` block as the GeoJSON sink renders
+    it: the row stores neither document whole."""
+    rows = to_geojson(decoded.filter("doc_id = 'golden-sherkin-island'"),
+                      keep_cols=()).collect()
+    assert len(rows) == 1
+    return json.loads(rows[0].geojson)["properties"]["parameter"]
+
+
+def test_golden_metadata_block(golden_parameter):
     """additionalProperties deep-compare (fixture :154-215)."""
-    md = json.loads(golden_row.metadata_json)
+    md = golden_parameter["additionalProperties"]
     assert md["identification"] == {
         "station_or_site_name": {"value": "SHERKIN ISLAND"}
     }
@@ -108,9 +119,9 @@ def test_golden_metadata_block(golden_row):
                                     "bufrHeaderCentre"]
 
 
-def test_golden_prov_block(golden_row):
+def test_golden_prov_block(golden_parameter):
     """PROV enrichment (fixture :117-147) with injected wall-clock."""
-    prov = json.loads(golden_row.prov_json)
+    prov = golden_parameter["hasProvenance"]
     assert prov["prefix"] == {
         "prov": "http://www.w3.org/ns/prov#",
         "schema": "https://schema.org/",
@@ -407,27 +418,6 @@ def test_csv_table_provider_loads_and_misses(spark, tmp_path):
     rows = decode_documents(docs, table_provider=prov).filter(
         "error is null").collect()
     assert rows[0].result_code.description == "MY CUSTOM LABEL, WITH COMMA"
-
-
-def test_prov_json_template_matches_dict_dumps():
-    """The string-template PROV serializer must be byte-identical to
-    json.dumps of the dict form for arbitrary (escaped) inputs."""
-    import json as _json
-
-    from bufr2geojson_spark.operators.decode import _prov_block, _prov_json
-
-    cases = [
-        ("synop-file.bin", "1ec58338aab209c8ab22f05309315b71-0", 0, 0, 1),
-        ('we"ird\\src', "abc-12", 7, 2, 3),
-        ("", "id-0", 0, 1, 1),
-        ("üñïçødé", "id-1", 3, 0, 2),
-    ]
-    for src, fid, idx, sub, msg in cases:
-        expected = _json.dumps(_prov_block(src, fid, idx, sub, msg,
-                                           "2024-12-19 00:00:00"))
-        got = _prov_json(src, fid, idx, sub, msg,
-                         _json.dumps("2024-12-19 00:00:00"))
-        assert got == expected, (src, fid)
 
 
 def test_multi_subset_raising_subset_quarantined_others_survive(spark):

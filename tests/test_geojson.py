@@ -87,6 +87,69 @@ def test_write_geojson_partitioned(spark, tmp_path):
     assert first["type"] == "Feature"
 
 
+def _with_sources(docs, n):
+    """The first ``n`` of ``docs`` again, each header given a
+    ``sourceIdentifier`` (some needing JSON escapes) and/or a
+    ``messageNumber``, the two PROV fields synth headers leave unset."""
+    out = []
+    for i, doc in enumerate(docs.limit(n).collect()):
+        source = (f"src-{i}.bufr", f'we"ird\\src-{i}', f"ünï-{i}", None)[i % 4]
+        spans = []
+        for span in doc.spans:
+            span = span.asDict()
+            if span["kind"] == "header":
+                header = json.loads(span["text"])
+                if source is not None:
+                    header["sourceIdentifier"] = source
+                if i % 4:
+                    header["messageNumber"] = i + 2
+                span["text"] = json.dumps(header)
+            spans.append(span)
+        out.append({"doc_id": f"src-{doc.doc_id}", "spans": spans})
+    return out
+
+
+def test_sink_renders_the_stored_documents_byte_identically(spark):
+    """The row stores the metadata fragment and the PROV template fields;
+    the sink must render exactly the strings the row used to store. PROV:
+    ``json.dumps(_prov_block(...))`` with the source, subset and message
+    read from the document's own header span. Metadata: the fragment closed
+    by the report's headers."""
+    from bufr2geojson_spark.operators.decode import _prov_block
+    from bufr2geojson_spark.schemas import DOCUMENT_SCHEMA
+
+    synth = synth_documents(spark, 400, partitions=2, multi_subset_every=7)
+    docs = golden_documents(spark).unionByName(synth).unionByName(
+        spark.createDataFrame(_with_sources(synth, 30), DOCUMENT_SCHEMA))
+    headers = {}
+    for doc in docs.collect():
+        for span in doc.spans:
+            if span.kind == "header":
+                h = json.loads(span.text)
+                headers[(doc.doc_id, h.get("subsetNumber", 1))] = h
+    feats = decode_documents(docs).filter("error is null")
+    rows = to_geojson(feats, keep_cols=(
+        "feature_id", "doc_id", "index", "host", "result_time",
+        "headers_json", "metadata_frag")).collect()
+    assert len(rows) > 400
+    sourced = 0
+    for r in rows:
+        param = json.loads(r.geojson)["properties"]["parameter"]
+        subset = json.loads(r.headers_json).get("subsetNumber", 1)
+        h = headers[(r.doc_id, subset)]
+        source = h.get("sourceIdentifier") or r.host
+        sourced += "sourceIdentifier" in h
+        want = json.dumps(_prov_block(
+            source, r.feature_id, r["index"], subset - 1,
+            h.get("messageNumber", 1), r.result_time))
+        assert json.dumps(param["hasProvenance"]) == want, r.feature_id
+        metadata = r.metadata_frag + ',"BUFRheaders":' + r.headers_json + "}"
+        compact = {"separators": (",", ":")}
+        assert (json.dumps(param["additionalProperties"], **compact)
+                == json.dumps(json.loads(metadata), **compact)), r.feature_id
+    assert sourced
+
+
 # ---------------------------------------------------------------------------
 # JSON-Schema validation (reference test_bufr2geojson.py:32-45,241-252)
 # ---------------------------------------------------------------------------

@@ -254,6 +254,31 @@ def test_stage_written_without_inputs_is_reused(spark, inputs, work):
     assert _checkpointed(res) == ["A", "W"]
 
 
+def test_checkpoint_of_another_row_format_is_recomputed(spark, inputs,
+                                                        base):
+    """Checkpoints recorded with another feature row format (as a run of
+    an older decode left them) are recomputed on resume: J, and A and W
+    with it, even though the snapshot and J's checksum still match."""
+    work = base[0]
+    shutil.copytree(os.path.join(work, "base"),
+                    os.path.join(work, "reformat"))
+    for stage in ("J", "A", "W"):
+        path = os.path.join(work, "reformat", "_lineage", stage,
+                            L.STAGE_RECORD)
+        with open(path) as f:
+            record = json.load(f)
+        record["inputs"]["row_format"] = "0" * 16
+        with open(path, "w") as f:
+            json.dump(record, f)
+    res = _run(spark, inputs, work, "reformat", resume=True)
+    assert res.skipped == []
+    assert _checkpointed(res) == ["J", "A", "W"]
+    for stage in ("J", "A", "W"):
+        got = L.stage_record(spark, work, "reformat", stage)
+        assert got["inputs"] == L.stage_record(spark, work, "base",
+                                               stage)["inputs"]
+
+
 @pytest.mark.parametrize("first, second", [
     (300, 150),
 ], ids=["snapshot"])

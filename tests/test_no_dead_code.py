@@ -36,9 +36,6 @@ KEPT: dict[str, str] = {
         _REFERENCE + "numpy cell centre for the S2 encode round trip",
     f"{PKG}.operators.tiles.raster_to_vector":
         _REFERENCE + "inverse of the contract's rasterize",
-    f"{PKG}.operators.decode._prov_block":
-        _REFERENCE + "the PROV dict whose json.dumps the string-template "
-        "serializer must equal byte for byte",
     f"{PKG}.operators.ann.cosine":
         _REFERENCE + "plain cosine column the IVF training-objective test "
         "scores with",

@@ -6,6 +6,7 @@ import shutil
 import tempfile
 from dataclasses import fields, replace
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +16,7 @@ from bufr2geojson_spark.operators.tiles import (
     tile_rollup,
 )
 from bufr2geojson_spark.plans.pipeline import (
+    ROW_FORMAT,
     STAGES,
     PipelineConfig,
     run_pipeline,
@@ -89,6 +91,8 @@ def test_full_pipeline(spark, full_run, workdir):
     d = L.read_stage(spark, workdir, "full", "D",
                      L.stage_record(spark, workdir, "full", "D"))
     assert d.filter("error is not null").count() == 0
+    # the first checkpoint written after decode counts them: here T
+    assert L.stage_record(spark, workdir, "full", "T")["quarantined"] == 0
 
 
 def test_lineage_records(full_run):
@@ -109,13 +113,15 @@ def test_lineage_records(full_run):
 
 
 def test_stage_inputs_are_snapshot_and_upstream(spark, full_run, workdir):
-    """Resume compares the snapshot id and the checksum of the checkpoint
-    a stage read (none for D); the engine's parameters are not settings."""
+    """Resume compares the snapshot id, the checksum of the checkpoint a
+    stage read (none for D) and the feature row format; the engine's
+    parameters are not settings."""
     upstream = {"D": None, "T": "D", "J": "T", "A": "J", "W": "J"}
     for stage, source in upstream.items():
         inputs = L.stage_record(spark, workdir, "full", stage)["inputs"]
-        assert set(inputs) == {"snapshot_id", "upstream"}
+        assert set(inputs) == {"snapshot_id", "upstream", "row_format"}
         assert inputs["snapshot_id"] == 123
+        assert inputs["row_format"] == ROW_FORMAT
         assert inputs["upstream"] == (source and L.stage_record(
             spark, workdir, "full", source)["checksum"])
 
@@ -235,6 +241,50 @@ def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
     for stage in returned:  # the stage record is the only lineage artifact
         assert os.listdir(f"{workdir}/default/_lineage/{stage}") == [
             L.STAGE_RECORD]
+
+
+def test_j_is_stored_zstd_without_derivable_json(default_run, workdir):
+    """J stores the per-feature metadata fragment, not the rendered
+    documents: no ``prov_json`` or ``metadata_json`` column, every column
+    chunk zstd, and the fragment dictionary-encoded (the full document ends
+    in its report's headers, which overflowed parquet's dictionary)."""
+    d = f"{workdir}/default/J"
+    for name in _parquet_files(d):
+        meta = pq.read_metadata(os.path.join(d, name))
+        chunks = [meta.row_group(g).column(i)
+                  for g in range(meta.num_row_groups)
+                  for i in range(meta.num_columns)]
+        assert {c.compression for c in chunks} == {"ZSTD"}
+        paths = {c.path_in_schema for c in chunks}
+        assert not paths & {"prov_json", "metadata_json"}
+        frag = [c for c in chunks if c.path_in_schema == "metadata_frag"]
+        assert frag
+        for c in frag:
+            assert c.has_dictionary_page
+            assert "PLAIN" not in c.encodings, c.encodings
+
+
+def test_j_record_counts_the_quarantine(spark, dims, workdir):
+    """J's stage record holds the number of rows decode quarantined: one
+    per document whose header span was corrupted (the synth documents have
+    one subset each)."""
+    docs = synth_documents(spark, 80, n_stations=N_ST, partitions=2)
+    corrupt = F.crc32("doc_id") % 5 == 0
+    docs = docs.withColumn("spans", F.when(corrupt, F.transform(
+        "spans", lambda s: s.withField("text", F.when(
+            s["kind"] == "header", F.lit("{corrupt header")
+        ).otherwise(s["text"])),
+    )).otherwise(F.col("spans"))).cache()
+    n_corrupt = docs.filter(corrupt).count()
+    assert n_corrupt > 0
+    res = run_pipeline(spark, docs, *dims, workdir, "quarantine",
+                       resume=False)
+    assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
+    record = L.stage_record(spark, workdir, "quarantine", "J")
+    assert record["quarantined"] == n_corrupt
+    assert all("quarantined" not in L.stage_record(
+        spark, workdir, "quarantine", s) for s in ("A", "W"))
+    docs.unpersist()
 
 
 def test_lineage_without_checkpoints_is_empty(spark, dims, workdir):

@@ -5,6 +5,7 @@ A regression that silently turns a broadcast join into a sort-merge join or
 de-pushes a filter should fail here, before any benchmark notices."""
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -71,7 +72,10 @@ def test_decode_cells_joins_chain_is_narrow(spark):
     synth = synth_documents(spark, 50, partitions=2)
     # a local table, so the only MapInPandas left is the decode fold
     docs = spark.createDataFrame(synth.collect(), synth.schema)
-    feats = with_cells(decode_documents(docs).filter("error is null"))
+    # observed as run_pipeline counts the quarantine: no node splits
+    decoded = decode_documents(docs).observe(
+        Observation("quarantine"), F.count("error").alias("quarantined"))
+    feats = with_cells(decoded.filter("error is null"))
     feats = assign_region(feats, synth_region_polygons(spark))
     feats = knn_join(feats, synth_stations(spark, 20), k=1, grid_deg=5.0)
     p = physical_plan(feats)
