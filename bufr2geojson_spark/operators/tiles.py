@@ -8,13 +8,22 @@ cell prefix"). Everything here is built-in Spark (Column expressions +
 groupBy), deliberately: Catalyst already does partial/final aggregation
 (HashAggregateExec) and AQE skew-split; the *explicit* salting exists for the
 pathological synop/temp station-cluster cells where a single cell key would
-otherwise pin one reducer at 100 TB, and is applied ONLY to detected hot
-cells so the common path pays no extra shuffle width.
+otherwise pin one reducer at 100 TB, and is applied ONLY to hot cells so the
+common path pays no extra shuffle width.
+
+The pipeline's stage A is ``tile_pyramid``: every tile level from one
+aggregation, salted only for a hot set it is given (``plans/pipeline.py``
+finds that set once, when it writes J), so a J without hot cells is tiled in
+one shuffle. ``tile_aggregate`` + ``tile_rollup`` compute the same table in
+stages (a hot-cell count and broadcast, the salted per-cell shuffles, then a
+rollup shuffle); the contract queries compose them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.functions.cells import MAX_LEVEL, s2_parent_col
@@ -64,6 +73,14 @@ def _with_avg(stats: DataFrame) -> DataFrame:
     )
 
 
+def _salt(hot: Column, salt_buckets: int) -> Column:
+    """The salt of a row: a hash of its ``feature_id`` over ``salt_buckets``
+    where ``hot`` holds, 0 elsewhere."""
+    return F.when(
+        hot, F.pmod(F.xxhash64(F.col("feature_id")), F.lit(salt_buckets))
+    ).otherwise(F.lit(0))
+
+
 def tile_aggregate(
     features: DataFrame,
     cell_col: str = "cell_s2",
@@ -92,14 +109,49 @@ def tile_aggregate(
         how="left",
     )
     salted = flagged.withColumn(
-        "_salt",
-        F.when(
-            F.col("_is_hot").isNotNull(),
-            F.pmod(F.xxhash64(F.col("feature_id")), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0)),
-    )
+        "_salt", _salt(F.col("_is_hot").isNotNull(), salt_buckets))
     partial = salted.groupBy(cell_col, "_salt").agg(*_stats_of(v))
     return _with_avg(partial.groupBy(cell_col).agg(*_combined_stats()))
+
+
+def tile_pyramid(
+    features: DataFrame,
+    base_level: int,
+    rollup_levels: list[int],
+    hot: Sequence[int] = (),
+    cell_col: str = "cell_s2",
+    value_col: str = "result_value",
+    salt_buckets: int = 16,
+) -> DataFrame:
+    """Tiles at ``base_level`` and every S2 rollup level from one
+    aggregation over the features: the ``tile_rollup`` table of
+    ``tile_aggregate``, one row per (level, cell).
+
+    Each feature maps to its (level, cell) at every level (the base cell
+    and its ``s2_parent_col`` ancestors), and partial aggregation collapses
+    those rows map-side, so the shuffle carries at most one row per (level,
+    cell) per input partition. Features whose base cell is in ``hot``, the
+    hot set found beforehand (``hot_cells``), are salted at every level:
+    ``groupBy(level, cell, _salt)`` → ``groupBy(level, cell)``. With no hot
+    cell there is no salt column and one ``groupBy(level, cell)``: one
+    shuffle for the whole pyramid."""
+    if any(lvl >= base_level for lvl in rollup_levels):
+        raise ValueError("rollup levels must be coarser than base_level")
+    cell, v = F.col(cell_col), F.col(value_col)
+    levels = F.inline(F.array(
+        F.struct(F.lit(base_level).alias("level"), cell.alias("cell")),
+        *[F.struct(F.lit(lvl).alias("level"), s2_parent_col(cell, lvl).alias("cell"))
+          for lvl in sorted(set(rollup_levels))],
+    ))
+    salt = [_salt(cell.isin(list(hot)), salt_buckets).alias("_salt")] if hot else []
+    # each row enters as a tile of its one value, so both paths end in
+    # ``_combined_stats`` and have the schema of ``tile_rollup``'s output
+    rows = features.select(
+        levels, v.isNotNull().cast("long").alias("n_obs"), v.alias("sum_val"),
+        v.alias("min_val"), v.alias("max_val"), *salt)
+    if hot:
+        rows = rows.groupBy("level", "cell", "_salt").agg(*_combined_stats())
+    return _with_avg(rows.groupBy("level", "cell").agg(*_combined_stats()))
 
 
 def tile_rollup(
@@ -168,11 +220,12 @@ def tile_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
     (never avg-of-avgs) — so the standing table is updated from the DELTA's
     aggregates alone, without rescanning history.
 
-    Both inputs are ``tile_aggregate`` outputs or both ``tile_rollup``
-    outputs; the merge key is every column that is not a stat (the cell for
-    the first, ``(level, cell)`` for the second). One union + one groupBy on
-    the key; at scale the standing table is stored range-partitioned by
-    cell prefix (N8), so the union's shuffle moves mostly the (small) delta.
+    Both inputs are ``tile_aggregate`` outputs or both ``tile_rollup`` (or
+    ``tile_pyramid``) outputs; the merge key is every column that is not a
+    stat (the cell for the first, ``(level, cell)`` for the second). One
+    union + one groupBy on the key, so the shuffle moves the whole standing
+    table as well as the delta: ``plans.maintenance.fold_tiles`` stores the
+    table unpartitioned and rewrites all of it on every fold.
     ``tile_merge(agg(a), agg(b)) == agg(a ∪ b)`` exactly for n/sum/min/max
     (doubles: up to reassociation of the sum — same caveat as any partial
     aggregation), which pytest asserts for both shapes."""

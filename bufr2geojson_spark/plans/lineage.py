@@ -18,9 +18,10 @@ stage record. ``write_stage``
    (``sources.io.DriverFS.commit_json``)
    with the rows, the stage checksum, the snapshot id, the written schema,
    the data-write wall, the per-file rows of step 3, the inputs the
-   stage was computed from and the metrics of any upstream ``Observation``
+   stage was computed from, the metrics of any upstream ``Observation``
    the data write collected (decode's ``quarantined`` count, on the first
-   checkpoint after decode).
+   checkpoint after decode) and any fields derived from the written output
+   (J's ``hot_cells``).
 
 Checkpoints are written with zstd, a fixed choice, not a setting: it
 stores a feature checkpoint in about two thirds of snappy's bytes (J of
@@ -60,6 +61,7 @@ import hashlib
 import json
 import re
 import time
+from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -140,6 +142,7 @@ def write_stage(
     cell_col: str | None = None,
     inputs: dict | None = None,
     collects: Observation | None = None,
+    derive: Callable[[DataFrame], dict] | None = None,
 ) -> tuple[DataFrame, dict]:
     """Materialize a stage with its lineage (see the module docstring);
     returns the written output read back with the written schema, so the
@@ -148,7 +151,9 @@ def write_stage(
     compare (``plans.pipeline``). ``collects`` is an ``Observation`` on
     ``df``'s input that this write collects; its metrics join the record.
     It must be on ``df``'s plan: ``Observation.get`` waits for a query
-    that runs it, so one behind a checkpoint would wait forever."""
+    that runs it, so one behind a checkpoint would wait forever.
+    ``derive`` maps the written output to more fields of the record,
+    computed before the record commits."""
     out = stage_dir(work_dir, run_id, stage)
     lin = f"{work_dir}/{run_id}/_lineage/{stage}"
     fs = driver_fs(spark, out)
@@ -173,6 +178,7 @@ def write_stage(
             f"stage {stage}: the written files hold {file_rows} rows, the "
             f"write saw {observed['rows']}"
         )
+    written = spark.read.schema(df.schema).parquet(out)
     record = {
         "rows": observed["rows"],
         "checksum": str(observed["checksum"] or 0),
@@ -182,9 +188,10 @@ def write_stage(
         "files": files,
         "inputs": inputs,
         **(collects.get if collects is not None else {}),
+        **(derive(written) if derive is not None else {}),
     }
     fs.commit_json(f"{lin}/{STAGE_RECORD}", record)
-    return spark.read.schema(df.schema).parquet(out), record
+    return written, record
 
 
 def read_stage(spark: SparkSession, work_dir: str, run_id: str, stage: str,

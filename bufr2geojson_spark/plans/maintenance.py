@@ -36,7 +36,8 @@ directories stay on disk; nothing reads them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from bufr2geojson_spark.operators.tiles import tile_merge
 from bufr2geojson_spark.plans.pipeline import (
@@ -72,16 +73,20 @@ def fold_tiles(
     features: DataFrame,
     version: int,
     files: dict[str, int],
-) -> None:
+) -> int:
     """A on ``features``, merged into the committed standing table, written
     as ``tiles/v={version}`` and then committed with ``files``, the source
-    files folded so far."""
+    files folded so far. Returns the standing table's rows, observed on
+    its write."""
     prev = standing_tiles(spark, work)
     delta = tile_stage(features)
     merged = delta if prev is None else tile_merge(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
+    seen = Observation("fold")
+    merged.observe(seen, F.count(F.lit(1)).alias("rows")) \
+        .write.mode("overwrite").parquet(f"{work}/tiles/v={version}")
     driver_fs(spark, work).commit_json(f"{work}/manifest.json",
                                        {"files": files, "version": version})
+    return seen.get["rows"]
 
 
 def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
@@ -94,7 +99,7 @@ def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
         return {"no_op": True,
                 "version": state["version"] if state else None}
     v_new = state["version"] + 1 if state else 0
-    fold_tiles(spark, work, delta_features(delta_docs), v_new, new_files)
-    return {"no_op": False, "version": v_new,
-            "n_tiles": standing_tiles(spark, work).count(),
+    n_tiles = fold_tiles(spark, work, delta_features(delta_docs), v_new,
+                         new_files)
+    return {"no_op": False, "version": v_new, "n_tiles": n_tiles,
             "n_new_files": len(new_files) - (len(prev_files or {}))}

@@ -5,7 +5,8 @@ Stage graph, in execution order:
     D  decode          mapInPandas fold (R5-R24); error rows dropped after it
     T  tile-encode     H3/S2 cell UDFs + cell_prefix (narrow)
     J  spatial joins   broadcast PIP (N3) + kNN ring expansion (N4) (narrow)
-    A  tile agg        salted two-phase agg (N5/N7) + multi-level rollup
+    A  tile agg        every tile level from one groupBy, salted on J's hot
+                       cells (N5/N7): one shuffle when J has none
     W  final write     repartitionByRange(cell_prefix, cell), AQE-sized (N8)
 
 A run executes a prefix of the graph. J, A and W are always checkpoints
@@ -29,7 +30,11 @@ are not inputs: a resume after either changed reuses J, A and W.
 The first checkpoint written after decode (J, unless T is a checkpoint)
 also records the quarantine rows decode dropped (``quarantined``),
 observed on the decode output and collected by that checkpoint's own data
-write.
+write. J's record also holds ``hot_cells``, J's base cells above
+``hot_threshold`` (``hot_set``, one job on the written J), which A salts:
+a run that resumes from J runs no hot-cell job. A J whose record lacks the
+field (written by ``write_stage`` alone, or before records held it) makes
+A find the set itself, as the incremental drivers' A always does.
 """
 
 from __future__ import annotations
@@ -45,9 +50,9 @@ from bufr2geojson_spark.functions.cells import with_cells
 from bufr2geojson_spark.operators.decode import decode_documents
 from bufr2geojson_spark.operators.spatial import assign_region, knn_join
 from bufr2geojson_spark.operators.tiles import (
+    hot_cells,
     range_partition_by_cell,
-    tile_aggregate,
-    tile_rollup,
+    tile_pyramid,
 )
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.schemas import FEATURE_SCHEMA
@@ -112,19 +117,27 @@ def cell_stage(features: DataFrame) -> DataFrame:
     )
 
 
-def tile_stage(features: DataFrame) -> DataFrame:
-    """A: salted per-cell tiles at ``s2_level`` plus every rollup level, one
-    row per (level, cell). Reads only the T columns, so the incremental
-    drivers (``plans/maintenance.py``) run it on T output directly."""
-    base = tile_aggregate(
-        features,
-        cell_col="cell_s2",
-        value_col="result_value",
+def hot_set(features: DataFrame) -> list[int]:
+    """The base cells of ``features`` holding more than ``hot_threshold``
+    rows, sorted (a null cell is never salted): one job."""
+    hot = hot_cells(features, "cell_s2", PipelineConfig.hot_threshold)
+    return sorted(r[0] for r in hot.select("cell_s2").collect()
+                  if r[0] is not None)
+
+
+def tile_stage(features: DataFrame, hot: list[int] | None = None) -> DataFrame:
+    """A: per-cell tiles at ``s2_level`` plus every rollup level, one row per
+    (level, cell), from one aggregation salted on ``hot``, the hot set of
+    ``features`` (``hot_set``; found here when not given). Reads only the T
+    columns, so the incremental drivers (``plans/maintenance.py``) run it
+    on T output directly."""
+    if hot is None:
+        hot = hot_set(features)
+    return tile_pyramid(
+        features, PipelineConfig.s2_level, list(PipelineConfig.rollup_levels),
+        hot, cell_col="cell_s2", value_col="result_value",
         salt_buckets=PipelineConfig.salt_buckets,
-        hot_threshold=PipelineConfig.hot_threshold,
     )
-    return tile_rollup(base, PipelineConfig.s2_level,
-                       list(PipelineConfig.rollup_levels), cell_col="cell_s2")
 
 
 @dataclass
@@ -224,9 +237,11 @@ def run_pipeline(
                 grid_deg=PipelineConfig.knn_grid_deg,
             ),
             cell_col="cell_s2",
+            derive=lambda j: {"hot_cells": hot_set(j)},
         )
-    if "A" in conf.stages:  # salted tile aggregation + rollup
-        res.tiles = do("A", lambda: tile_stage(features), cell_col="cell")
+    if "A" in conf.stages:  # every tile level, salted on J's hot cells
+        res.tiles = do("A", lambda: tile_stage(
+            features, records["J"].get("hot_cells")), cell_col="cell")
     if "W" in conf.stages:  # range-partitioned final feature table
         features = do(
             "W",

@@ -1,7 +1,9 @@
 """End-to-end pipeline, lineage, and checkpoint-resume tests (N9/N10,
 FIXTURES.md §7)."""
 
+import json
 import os
+import re
 import shutil
 import tempfile
 from dataclasses import fields, replace
@@ -19,7 +21,9 @@ from bufr2geojson_spark.plans.pipeline import (
     ROW_FORMAT,
     STAGES,
     PipelineConfig,
+    hot_set,
     run_pipeline,
+    tile_stage,
 )
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.schemas import LINEAGE_SCHEMA
@@ -173,51 +177,109 @@ def test_resume_skips_completed_stages(spark, dims, workdir):
 
 
 #: Spark jobs the run in ``default_run`` may launch, counting the W range
-#: write and the tile rollup; lineage comes from the checkpoint writes and
-#: adds none. A change that adds jobs to every pipeline run has to raise it
-#: on purpose.
-JOB_BUDGET = 11
+#: write and J's hot set; lineage comes from the checkpoint writes and adds
+#: none. A change that adds jobs to every pipeline run has to raise it on
+#: purpose.
+JOB_BUDGET = 9
+
+
+def _jobs_of(spark, group, run):
+    """``run()`` with its Spark jobs tagged with job group ``group``: its
+    result and the number of jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _exchanges(df):
+    """The shuffle and the broadcast exchanges in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\bExchange\b", plan)), plan.count("BroadcastExchange")
 
 
 @pytest.fixture(scope="module")
 def default_run(spark, dims, workdir):
-    """One coarse-checkpoint run with the default W sizing, its jobs tagged
-    with a job group and the frame ``write_stage`` returned for each stage
-    kept. The range exchange starts at 32 shuffle partitions, so a
-    data-sized W shows up as fewer than 32 partitions."""
+    """One coarse-checkpoint run with the default W sizing, its jobs counted
+    by job group, and for each stage the frame handed to ``write_stage``
+    and the frame it returned kept. The range exchange starts at 32
+    shuffle partitions, so a data-sized W shows up as fewer than 32
+    partitions."""
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
     conf = PipelineConfig()
-    returned = {}
+    computed, returned = {}, {}
     write_stage = L.write_stage
 
     def recording(df, spark_, work_dir, run_id, stage, *args, **kwargs):
         out = write_stage(df, spark_, work_dir, run_id, stage, *args, **kwargs)
-        returned[stage] = out[0]
+        computed[stage], returned[stage] = df, out[0]
         return out
 
-    sc = spark.sparkContext
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     L.write_stage = recording
-    sc.setJobGroup("default_run", "one default-config pipeline run")
     try:
-        res = run_pipeline(
+        res, jobs = _jobs_of(spark, "default_run", lambda: run_pipeline(
             spark, docs, stations, polygons, workdir, "default", snapshot_id=5,
             resume=False, conf=conf,
-        )
+        ))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         L.write_stage = write_stage
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    return res, sc.statusTracker().getJobIdsForGroup("default_run"), returned
+    return res, jobs, returned, computed
 
 
 def test_job_budget_per_run(default_run):
-    res, job_ids, _ = default_run
+    res, jobs, _, _ = default_run
     assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
-    assert 0 < len(job_ids) <= JOB_BUDGET, f"{len(job_ids)} jobs"
+    assert 0 < jobs <= JOB_BUDGET, f"{jobs} jobs"
+
+
+def test_a_is_one_shuffle_without_hot_cells(spark, default_run, workdir):
+    """The synth corpus has no hot cell: J's record holds the empty hot
+    set, ``hot_cells`` over J, and A tiles every level in one shuffle with
+    no broadcast."""
+    _, _, returned, computed = default_run
+    record = L.stage_record(spark, workdir, "default", "J")
+    assert record["hot_cells"] == [] == hot_cells(
+        returned["J"], "cell_s2", PipelineConfig.hot_threshold).collect()
+    assert _exchanges(computed["A"]) == (1, 0)
+
+
+def test_resume_from_j_runs_no_hot_cell_job(spark, dims, default_run,
+                                            workdir):
+    """A resume from a complete J, with A and W lost, salts on the hot set
+    in J's record: it runs the jobs of the same resume from a J whose
+    record lacks the set, less the jobs that find the set."""
+    _, _, returned, _ = default_run
+    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
+
+    def resume(run_id, keep_hot_cells):
+        for sub in ("J", "_lineage/J"):
+            shutil.copytree(f"{workdir}/default/{sub}",
+                            f"{workdir}/{run_id}/{sub}")
+        path = f"{workdir}/{run_id}/_lineage/J/{L.STAGE_RECORD}"
+        with open(path) as f:
+            record = json.load(f)
+        if not keep_hot_cells:
+            del record["hot_cells"]
+        with open(path, "w") as f:
+            json.dump(record, f)
+        return _jobs_of(spark, run_id, lambda: run_pipeline(
+            spark, docs, *dims, workdir, run_id, snapshot_id=5))
+
+    res, kept = resume("from_j", True)
+    assert (res.skipped, res.executed[-2:]) == (["J"], ["A", "W"])
+    res, bare = resume("from_bare_j", False)
+    assert (res.skipped, res.executed[-2:]) == (["J"], ["A", "W"])
+    _, finding = _jobs_of(spark, "hot_set", lambda: hot_set(returned["J"]))
+    assert finding > 0
+    assert kept == bare - finding, (kept, bare, finding)
 
 
 def _parquet_files(path):
@@ -225,14 +287,14 @@ def _parquet_files(path):
 
 
 def test_w_partitions_sized_from_data(default_run, workdir):
-    res, _, _ = default_run
+    res, _, _, _ = default_run
     files = len(_parquet_files(f"{workdir}/default/W"))
     assert 0 < files < 32
     assert res.lineage.filter("stage = 'W'").count() == files
 
 
 def test_checkpoint_rereads_carry_written_schema(spark, default_run, workdir):
-    res, _, returned = default_run
+    res, _, returned, _ = default_run
     assert sorted(returned) == ["A", "J", "W"]
     for stage, frame in returned.items():
         inferred = spark.read.parquet(f"{workdir}/default/{stage}").schema
@@ -371,19 +433,30 @@ def _snapped(docs, lat, lon, every=4):
 def test_hot_cells_are_salted_to_the_plain_tiles(spark, dims, workdir,
                                                  assert_same_tiles):
     """With a quarter of the documents on one point, J holds a cell above
-    ``hot_threshold``, so A takes the salted branch; its tiles equal a
-    plain (unsalted) aggregation of J, rolled up the same way."""
+    ``hot_threshold``: J's record holds it, A salts it in two shuffles, and
+    its tiles equal a plain (unsalted) aggregation of J, rolled up the same
+    way. A J written by ``write_stage`` alone holds no hot set; a resume
+    from it finds the set in A, to the same tiles."""
     stations, polygons = dims
     docs = _snapped(synth_documents(spark, N_DOCS, n_stations=N_ST,
                                     partitions=4), 41.25, -8.75)
     res = run_pipeline(spark, docs, stations, polygons, workdir, "hot",
                        resume=False)
-    j = L.read_stage(spark, workdir, "hot", "J",
-                     L.stage_record(spark, workdir, "hot", "J"))
-    assert hot_cells(j, "cell_s2", PipelineConfig.hot_threshold).count() > 0
+    record = L.stage_record(spark, workdir, "hot", "J")
+    j = L.read_stage(spark, workdir, "hot", "J", record)
+    hot = hot_cells(j, "cell_s2", PipelineConfig.hot_threshold).collect()
+    assert record["hot_cells"] == sorted(r.cell_s2 for r in hot) != []
+    assert _exchanges(tile_stage(j, record["hot_cells"])) == (2, 0)
     plain = tile_rollup(tile_aggregate(j), PipelineConfig.s2_level,
                         list(PipelineConfig.rollup_levels))
     assert_same_tiles(res.tiles, plain)
+
+    L.write_stage(j, spark, workdir, "hot_bare", "J", snapshot_id=0,
+                  cell_col="cell_s2")
+    assert "hot_cells" not in L.stage_record(spark, workdir, "hot_bare", "J")
+    bare = run_pipeline(spark, docs, stations, polygons, workdir, "hot_bare")
+    assert bare.skipped == ["J"]
+    assert_same_tiles(bare.tiles, res.tiles)
 
 
 @pytest.mark.parametrize("stages, checkpoints", [
@@ -491,6 +564,13 @@ class TestIncrementalRead:
             assert abs(merged[c]["sum_val"] - full[c]["sum_val"]) < 1e-6
 
 
+#: Spark jobs one ``run_maintenance`` fold of a delta into a standing table
+#: may launch, the delta's hot set included; the tile count is observed on
+#: the fold's write and adds none. A change that adds jobs to every fold
+#: has to raise it on purpose.
+MAINTENANCE_JOB_BUDGET = 7
+
+
 class TestMaintenancePlan:
     def test_incremental_runs_converge_to_batch(self, spark, tmp_path, dims,
                                                 assert_same_tiles):
@@ -519,6 +599,27 @@ class TestMaintenancePlan:
         ).tiles
         assert r2["n_tiles"] == want.count()
         assert_same_tiles(standing_tiles(spark, work), want)
+
+    def test_fold_counts_tiles_on_its_write(self, spark, tmp_path):
+        """A maintenance run that folds a delta into a standing table stays
+        within ``MAINTENANCE_JOB_BUDGET`` jobs: it takes ``n_tiles`` from
+        the fold's own write, and that equals a count of the committed
+        table."""
+        from bufr2geojson_spark.plans.maintenance import (
+            run_maintenance, standing_tiles)
+
+        docs_path = str(tmp_path / "docs")
+        work = str(tmp_path / "work")
+        docs = synth_documents(spark, 60, partitions=3)
+        docs.filter(F.crc32("doc_id") % 2 == 0).write.parquet(docs_path)
+        run_maintenance(spark, docs_path, work)
+        docs.filter(F.crc32("doc_id") % 2 == 1) \
+            .write.mode("append").parquet(docs_path)
+        out, jobs = _jobs_of(spark, "maintenance",
+                             lambda: run_maintenance(spark, docs_path, work))
+        assert out["version"] == 1
+        assert 0 < jobs <= MAINTENANCE_JOB_BUDGET, f"{jobs} jobs"
+        assert out["n_tiles"] == standing_tiles(spark, work).count() > 0
 
     def test_crash_before_commit_does_not_double_merge(self, spark, tmp_path):
         import json as _json

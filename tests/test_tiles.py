@@ -12,6 +12,7 @@ from bufr2geojson_spark.operators.tiles import (
     raster_to_vector,
     rasterize,
     tile_aggregate,
+    tile_pyramid,
     tile_rollup,
 )
 
@@ -60,6 +61,30 @@ def test_hot_cells_detected(spark, feat):
     exp = pdf.groupby("cell_s2").size()
     assert set(hc["cell_s2"]) == set(exp[exp > 500].index)
     assert len(hc) >= 1  # the synthetic cluster is hot
+
+
+@pytest.mark.parametrize("salted", [False, True], ids=["plain", "salted"])
+def test_pyramid_equals_aggregate_then_rollup(spark, feat, salted):
+    """``tile_pyramid`` gives ``tile_rollup(tile_aggregate(...))``'s rows
+    and schema in one aggregation, salted or not; a null value counts in
+    no tile but keeps its cell."""
+    df, _ = feat
+    df = df.withColumn("result_value", F.when(
+        F.col("feature_id").endswith("7"), F.lit(None)
+    ).otherwise(F.col("result_value")))
+    hot = sorted(r.cell_s2 for r in hot_cells(df, threshold=100).collect())
+    assert hot
+    got = tile_pyramid(df, 14, [10, 6], hot if salted else (), salt_buckets=8)
+    want = tile_rollup(tile_aggregate(df), 14, [10, 6])
+    assert got.schema == want.schema
+    g = {(r["level"], r["cell"]): r for r in got.collect()}
+    w = {(r["level"], r["cell"]): r for r in want.collect()}
+    assert g.keys() == w.keys()
+    for key, r in w.items():
+        assert (g[key]["n_obs"], g[key]["min_val"], g[key]["max_val"]) == \
+            (r["n_obs"], r["min_val"], r["max_val"]), key
+        assert g[key]["sum_val"] == pytest.approx(r["sum_val"], rel=1e-9)
+        assert g[key]["avg_val"] == pytest.approx(r["avg_val"], rel=1e-9)
 
 
 def test_rollup_consistency(spark, feat):
