@@ -19,9 +19,8 @@ stage record. ``write_stage``
    with the rows, the stage checksum, the snapshot id, the written schema,
    the data-write wall, the per-file rows of step 3, the inputs the
    stage was computed from, the metrics of any upstream ``Observation``
-   the data write collected (decode's ``quarantined`` count, on the first
-   checkpoint after decode) and any fields derived from the written output
-   (J's ``hot_cells``).
+   the data write collected (decode's ``quarantined`` count, on J) and any
+   fields derived from the written output (J's ``hot_cells``).
 
 Checkpoints are written with zstd, a fixed choice, not a setting: it
 stores a feature checkpoint in about two thirds of snappy's bytes (J of

@@ -1,17 +1,17 @@
 """Incremental tile maintenance: fold a delta's stage-A tiles into one
 manifest-committed standing table.
 
-Both incremental drivers run the batch pipeline's own stages on the delta
+Both incremental drivers run the batch pipeline's own steps on the delta
 only: ``run_maintenance`` here (``jobs/maintain.py``, a snapshot-diff of the
 document table) and ``streaming.ingest.run_tile_maintenance_once``
 (``jobs/stream.py --mode tiles``, one micro-batch at a time). The delta goes
-through ``delta_features`` (D then T of ``plans/pipeline.py``) and
+through ``plans.pipeline.feature_pass`` (J's decode and cells) and
 ``fold_tiles`` (A, then ``tile_merge`` into the committed version), with
 the pipeline's fixed parameters (``PipelineConfig``'s class constants), so
 the standing table has ``run_pipeline``'s A schema and content: one row per
-(level, cell) at the base level and every rollup level. J is left out: PIP
-is a left join that keeps the first match and kNN is narrow, so J keeps
-every row, and A reads no J column.
+(level, cell) at the base level and every rollup level. J's PIP and kNN are
+left out: PIP is a left join that keeps the first match and kNN is narrow,
+so they keep every row, and A reads neither's columns.
 
 Crash safety is write-ordering, not locks:
 
@@ -40,11 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.operators.tiles import tile_merge
-from bufr2geojson_spark.plans.pipeline import (
-    cell_stage,
-    decode_stage,
-    tile_stage,
-)
+from bufr2geojson_spark.plans.pipeline import feature_pass, tile_stage
 from bufr2geojson_spark.sources.io import driver_fs, incremental_read
 
 
@@ -59,12 +55,6 @@ def standing_tiles(spark: SparkSession, work: str) -> DataFrame | None:
     if state is None:
         return None
     return spark.read.parquet(f"{work}/tiles/v={state['version']}")
-
-
-def delta_features(docs: DataFrame) -> DataFrame:
-    """D then T of the batch pipeline on a delta of documents (batch or
-    streaming), quarantine rows dropped."""
-    return cell_stage(decode_stage(docs).filter("error is null"))
 
 
 def fold_tiles(
@@ -99,7 +89,7 @@ def run_maintenance(spark: SparkSession, docs_path: str, work: str) -> dict:
         return {"no_op": True,
                 "version": state["version"] if state else None}
     v_new = state["version"] + 1 if state else 0
-    n_tiles = fold_tiles(spark, work, delta_features(delta_docs), v_new,
+    n_tiles = fold_tiles(spark, work, feature_pass(delta_docs), v_new,
                          new_files)
     return {"no_op": False, "version": v_new, "n_tiles": n_tiles,
             "n_new_files": len(new_files) - (len(prev_files or {}))}

@@ -164,7 +164,7 @@ def incremental_read(
     new. A manifest maps each data file to its length: the state a consumer
     persists to resume (a real catalog keeps the snapshot id alone).
     ``plans.maintenance.run_maintenance`` feeds the delta to
-    ``delta_features`` → ``fold_tiles`` and so processes each appended batch
+    ``feature_pass`` → ``fold_tiles`` and so processes each appended batch
     exactly once without ever rescanning history — the batch-side mirror of
     the streaming maintenance path.
 

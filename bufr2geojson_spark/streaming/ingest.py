@@ -4,9 +4,9 @@ The reference is purely batch (a generator over one file,
 ``bufr2geojson/__init__.py:1179-1310``); streaming is the engine-side
 extension SURVEY.md §2.3 defers to: new document files land in a directory
 (the stand-in for an Iceberg append snapshot), each micro-batch runs the SAME
-stage functions as the batch pipeline (``plans.maintenance.delta_features``:
-decode → cell encode), and three ``foreachBatch`` + ``Trigger.AvailableNow``
-sinks are offered:
+feature pass as the batch pipeline's J (``plans.pipeline.feature_pass``:
+decode → quarantine rows dropped → cell encode), and two ``foreachBatch`` +
+``Trigger.AvailableNow`` sinks are offered:
 
 * ``run_ingest_once`` — drain everything currently in the source, write
   decoded features parquet in W's layout (one cell range per file), then stop.
@@ -16,25 +16,18 @@ sinks are offered:
 * ``run_tile_maintenance_once`` — fold each micro-batch into the standing
   tile table with ``plans.maintenance.fold_tiles``, the same fold and
   manifest commit ``jobs/maintain.py`` uses (``standing_tiles`` reads it).
-* ``run_dedup_ingest_once`` — ``run_ingest_once`` with retransmitted
-  reports dropped by ``dedup_reports_stream``.
 
-All transformations are the stateless batch stages (mapInPandas / pandas
-UDFs work unchanged on streaming DataFrames); only the watermarked dedup
-is stateful, and that state lives in Spark's HDFS-backed state store.
+All transformations are the stateless batch steps (mapInPandas / pandas
+UDFs work unchanged on streaming DataFrames).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bufr2geojson_spark.operators.tiles import range_partition_by_cell
-from bufr2geojson_spark.plans.maintenance import (
-    delta_features,
-    fold_tiles,
-    load_state,
-)
+from bufr2geojson_spark.plans.maintenance import fold_tiles, load_state
+from bufr2geojson_spark.plans.pipeline import feature_pass
 from bufr2geojson_spark.schemas import DOCUMENT_SCHEMA
 
 
@@ -48,27 +41,6 @@ def read_document_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def event_time(features: DataFrame) -> DataFrame:
-    """Parse phenomenon_time (instant or 'start/end' period → end) into a
-    proper event-time column for watermarking."""
-    pt = F.col("phenomenon_time")
-    instant = F.when(
-        pt.contains("/"), F.element_at(F.split(pt, "/"), 2)
-    ).otherwise(pt)
-    # try_to_timestamp: the decoder deliberately preserves the reference's
-    # "Invalid date (...)" message string as phenomenon_time for docs with
-    # missing date qualifiers (reference :543-549); under Spark 4's default
-    # ANSI mode a plain to_timestamp would abort the whole stream on it
-    # instead of yielding null.
-    # The trailing Z is parsed as a ZONE ('X'), not a literal: a literal 'Z'
-    # would interpret the instant in the session timezone, so any caller not
-    # pinning spark.sql.session.timeZone=UTC would get shifted epochs and
-    # window boundaries.
-    return features.withColumn(
-        "event_ts", F.try_to_timestamp(instant, F.lit("yyyy-MM-dd'T'HH:mm:ssX"))
-    )
 
 
 def _drain(feats: DataFrame, sink, checkpoint_path: str) -> int:
@@ -114,63 +86,7 @@ def run_ingest_once(
             batch_df, None, "cell_s2", "cell_prefix"
         ).write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
 
-    feats = delta_features(read_document_stream(spark, input_path))
-    return _drain(feats, sink, checkpoint_path)
-
-
-def dedup_reports_stream(
-    features: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact-dedup of retransmitted reports: keep the first
-    arrival of each (report_id, feature index) within the event-time
-    watermark. Uses ``dropDuplicatesWithinWatermark`` — state holds one
-    key per feature seen in the watermark horizon and is dropped once the
-    watermark passes it, so state is bounded by (arrival rate × horizon),
-    never the stream's lifetime. The key is the decoder's md5 report identity
-    (one per subset), so a bulletin retransmitted by an upstream broker
-    deduplicates even when its document id differs.
-
-    Features whose phenomenon_time cannot be parsed (the reference's
-    'Invalid date (...)' quirk) have no event time to bound state with, so
-    they BYPASS the watermark dedup and pass through unchanged (at-least-
-    once for that sliver rather than silent data loss; the sink can still
-    dedup them within each micro-batch — run_dedup_ingest_once does)."""
-    with_ts = event_time(features)
-    deduped = (
-        with_ts.filter(F.col("event_ts").isNotNull())
-        .withWatermark("event_ts", watermark)
-        .dropDuplicatesWithinWatermark(["report_id", "index"])
-    )
-    return deduped.unionByName(
-        with_ts.filter(F.col("event_ts").isNull())
-    )
-
-
-def run_dedup_ingest_once(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    watermark: str = "2 hours",
-) -> int:
-    """AvailableNow drain: decode + streaming report-dedup + idempotent
-    per-batch parquet append (same exactly-once shape as run_ingest_once)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch exact dedup mops up the pass-through sliver (invalid-
-        # date reports bypass the watermarked state); idempotent on the
-        # already-deduped rows
-        (
-            batch_df.dropDuplicates(["report_id", "index"])
-            .write.mode("overwrite")
-            .parquet(f"{output_path}/batch_id={batch_id}")
-        )
-
-    feats = dedup_reports_stream(
-        delta_features(read_document_stream(spark, input_path)),
-        watermark=watermark,
-    )
+    feats = feature_pass(read_document_stream(spark, input_path))
     return _drain(feats, sink, checkpoint_path)
 
 
@@ -199,5 +115,5 @@ def run_tile_maintenance_once(
             # manifest records no files
             fold_tiles(spark, work, batch_df, batch_id, {})
 
-    feats = delta_features(read_document_stream(spark, input_path))
+    feats = feature_pass(read_document_stream(spark, input_path))
     return _drain(feats, sink, checkpoint_path)

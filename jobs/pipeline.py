@@ -8,8 +8,9 @@ Usage:
 Build the engine zip from the repository root with:
 zip -r bufr2geojson_spark.zip bufr2geojson_spark
 
-Checkpoints J, A and W (``PipelineConfig``'s default): decode, cells, PIP
-and kNN run as one pass into J.
+Runs and checkpoints J, A and W (``PipelineConfig``'s default): decode,
+cells, PIP and kNN run as one pass into J, so ``--resume`` restarts from J,
+A or W.
 """
 
 from __future__ import annotations

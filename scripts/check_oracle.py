@@ -6,9 +6,18 @@ tolerance — because the driver hashes exact canonical values; a tolerant
 local check let the round-1 geo_tile BIGINT-vs-DOUBLE mismatch through
 ("400" vs "400.0"). Local green must predict driver green.
 
+The session is ``local[N]`` with N = ``SPARK_GRAFT_CPUS`` (default: this
+machine's cores) and 0.75 GB of driver heap per core (at least 4 GB). Each
+task slot holds its own Python workers (about 130 MB each, up to three per
+slot), so a master wider than the machine can run it out of memory: on a
+4-core, 15 GB machine the sf0.01 run at ``local[32]`` held about 128
+Python workers and 13 GB, and has lost its JVM there; at ``local[4]`` it
+peaks under 6 GB.
+
 Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 """
 
+import os
 import sys
 import time
 
@@ -21,6 +30,7 @@ import __spark_entry__ as entry_mod  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -41,9 +51,9 @@ def _values_equal(a, b) -> bool:
 
 def main():
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{max(4, 3 * CPUS // 4)}g")
         .config("spark.sql.adaptive.enabled", "true")
         .appName("oracle-check")
         .getOrCreate()

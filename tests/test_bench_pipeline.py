@@ -32,7 +32,7 @@ def test_bench_pipeline_reports_the_production_runs_lineage(
     rows, n_features, n_tiles = seen[-1]
     assert out["features"] == rows["W"] == n_features > 0
     assert out["tiles"] == rows["A"] == n_tiles > 0
-    assert out["executed"] == ["D~fused", "T~fused", "J", "A", "W"]
+    assert out["executed"] == ["J", "A", "W"]
     assert len(out["walls_sec"]) == 1
     assert out["features_tiles_per_sec"] > 0
     assert os.listdir(tmp_path) == []  # every run's work dir is wiped

@@ -11,12 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from bufr2geojson_spark.plans.maintenance import (
-    delta_features,
     load_state,
     run_maintenance,
     standing_tiles,
 )
-from bufr2geojson_spark.plans.pipeline import tile_stage
+from bufr2geojson_spark.plans.pipeline import feature_pass, tile_stage
 from bufr2geojson_spark.sources.io import list_data_files, snapshot_id_for
 from bufr2geojson_spark.sources.synth import synth_documents
 from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
@@ -100,7 +99,7 @@ def test_run_maintenance_commits_where_spark_writes(spark, base, tmp_path,
     assert load_state(spark, f"{base}/work") == _manifest(tmp_path)
     assert not os.path.exists(tmp_path / "work" / ".manifest.json.tmp")
     assert_same_tiles(standing_tiles(spark, f"{base}/work"),
-                      tile_stage(delta_features(docs)))
+                      tile_stage(feature_pass(docs)))
 
 
 def test_stream_tile_maintenance_commits_where_spark_writes(
@@ -115,4 +114,4 @@ def test_stream_tile_maintenance_commits_where_spark_writes(
     assert versions[0] < versions[1]
     assert load_state(spark, f"{base}/work") == _manifest(tmp_path)
     assert_same_tiles(standing_tiles(spark, f"{base}/work"),
-                      tile_stage(delta_features(docs)))
+                      tile_stage(feature_pass(docs)))

@@ -148,10 +148,6 @@ def test_changed_value_moves_checksum_and_footer_digest(spark, work,
             != L.stage_record(spark, str(tmp_path), "run", "W")["checksum"])
 
 
-def _checkpointed(res):
-    return [s for s in res.executed if "~" not in s]
-
-
 def test_crash_before_stage_record_recomputes_that_stage(
         spark, inputs, work, monkeypatch, assert_same_tiles):
     commit_json = DriverFS.commit_json
@@ -170,7 +166,7 @@ def test_crash_before_stage_record_recomputes_that_stage(
 
     res = _run(spark, inputs, work, "crashed", resume=True)
     assert res.skipped == ["J"]
-    assert _checkpointed(res) == ["A", "W"]
+    assert res.executed == ["A", "W"]
     assert_same_tiles(res.tiles, _read(spark, work, "base", "A"))
     for stage in ("J", "W"):
         assert (L.stage_record(spark, work, "crashed", stage)["checksum"]
@@ -188,7 +184,7 @@ def test_recomputed_stage_invalidates_downstream_checkpoints(
     changed = (docs.filter(F.crc32("doc_id") % 3 != 0), stations, polygons)
     res = _run(spark, changed, work, "stale", resume=True)
     assert res.skipped == []
-    assert _checkpointed(res) == ["J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     fresh = _run(spark, changed, work, "fresh")
     assert_same_tiles(res.tiles, fresh.tiles)
     for stage in ("J", "A", "W"):
@@ -232,7 +228,7 @@ def test_checkpoint_without_stage_record_is_recomputed(spark, inputs, base):
     for run_id in ("old", "keyless"):
         res = _run(spark, inputs, work, run_id, resume=True)
         assert res.skipped == []
-        assert _checkpointed(res) == ["J", "A", "W"]
+        assert res.executed == ["J", "A", "W"]
         lin = res.lineage
         for stage in ("J", "A", "W"):
             assert os.listdir(os.path.join(work, run_id, "_lineage",
@@ -251,7 +247,7 @@ def test_stage_written_without_inputs_is_reused(spark, inputs, work):
     assert L.stage_record(spark, work, "bare", "J")["inputs"] is None
     res = _run(spark, inputs, work, "bare", resume=True)
     assert res.skipped == ["J"]
-    assert _checkpointed(res) == ["A", "W"]
+    assert res.executed == ["A", "W"]
 
 
 def test_checkpoint_of_another_row_format_is_recomputed(spark, inputs,
@@ -272,7 +268,7 @@ def test_checkpoint_of_another_row_format_is_recomputed(spark, inputs,
             json.dump(record, f)
     res = _run(spark, inputs, work, "reformat", resume=True)
     assert res.skipped == []
-    assert _checkpointed(res) == ["J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     for stage in ("J", "A", "W"):
         got = L.stage_record(spark, work, "reformat", stage)
         assert got["inputs"] == L.stage_record(spark, work, "base",
@@ -298,7 +294,7 @@ def test_resume_recomputes_stages_built_from_other_inputs(
     run(first, "r1", resume=False)
     res = run(second, "r1", resume=True)
     assert res.skipped == []
-    assert _checkpointed(res) == ["J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     fresh = run(second, "fresh", resume=False)
     assert_same_tiles(res.tiles, fresh.tiles)
     for stage in ("J", "A", "W"):

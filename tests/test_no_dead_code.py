@@ -45,12 +45,6 @@ KEPT: dict[str, str] = {
     f"{PKG}.operators.media.set_resize_decoder": _SEAM,
     f"{PKG}.functions.geojson.write_geojson": _PARITY,
     f"{PKG}.functions.wmo_tables.CsvTableProvider": _PARITY,
-    f"{PKG}.streaming.ingest.dedup_reports_stream":
-        "streaming report dedup the planned streaming-vs-batch dedup "
-        "contract query will call",
-    f"{PKG}.streaming.ingest.run_dedup_ingest_once":
-        "streaming report dedup the planned streaming-vs-batch dedup "
-        "contract query will call",
 }
 
 

@@ -1,6 +1,7 @@
 """End-to-end pipeline, lineage, and checkpoint-resume tests (N9/N10,
 FIXTURES.md §7)."""
 
+import itertools
 import json
 import os
 import re
@@ -21,6 +22,7 @@ from bufr2geojson_spark.plans.pipeline import (
     ROW_FORMAT,
     STAGES,
     PipelineConfig,
+    _check_stages,
     hot_set,
     run_pipeline,
     tile_stage,
@@ -50,11 +52,6 @@ def workdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _conf():
-    """Every stage checkpointed, so D and T are resume points too."""
-    return PipelineConfig(checkpoint_stages=STAGES)
-
-
 def test_config_holds_only_the_stage_choice():
     """The engine's parameters are class constants: the stage choice is
     all a caller sets, and ``replace`` keeps the constants readable."""
@@ -68,20 +65,39 @@ def test_config_holds_only_the_stage_choice():
     assert j_only.s2_level == 14
 
 
+def test_three_stage_configurations_are_legal():
+    """Of every prefix of STAGES against every subset of STAGES as
+    checkpoints, only the runs up to J, A and W pass, each checkpointing
+    exactly the J/A/W stages it runs."""
+    legal = []
+    for n in range(len(STAGES) + 1):
+        for k in range(len(STAGES) + 1):
+            for ckpt in itertools.combinations(STAGES, k):
+                conf = PipelineConfig(stages=STAGES[:n],
+                                      checkpoint_stages=ckpt)
+                try:
+                    _check_stages(conf)
+                except ValueError:
+                    continue
+                legal.append((conf.stages, conf.checkpoint_stages))
+    assert legal == [(STAGES[:3], ("J",)), (STAGES[:4], ("J", "A")),
+                     (STAGES, ("J", "A", "W"))]
+
+
 @pytest.fixture(scope="module")
 def full_run(spark, dims, workdir):
-    """Every stage checkpointed, run ``full``; later tests resume it."""
+    """The default graph, run ``full``."""
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
     return run_pipeline(
         spark, docs, stations, polygons, workdir, "full", snapshot_id=123,
-        resume=False, conf=_conf(),
+        resume=False,
     )
 
 
 def test_full_pipeline(spark, full_run, workdir):
     res = full_run
-    assert res.executed == ["D", "T", "J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     nf = res.features.count()
     assert nf > N_DOCS
     # every feature got cells, a region or null, and a nearest station
@@ -91,18 +107,14 @@ def test_full_pipeline(spark, full_run, workdir):
     assert res.tiles.count() > 0
     assert {r.level for r in res.tiles.select("level").distinct().collect()} \
         == {14, 10, 6}
-    # no quarantine rows (error set) in the D checkpoint for clean synth
-    d = L.read_stage(spark, workdir, "full", "D",
-                     L.stage_record(spark, workdir, "full", "D"))
-    assert d.filter("error is not null").count() == 0
-    # the first checkpoint written after decode counts them: here T
-    assert L.stage_record(spark, workdir, "full", "T")["quarantined"] == 0
+    # J counts the quarantine rows decode dropped: none for clean synth
+    assert L.stage_record(spark, workdir, "full", "J")["quarantined"] == 0
 
 
 def test_lineage_records(full_run):
     rows = full_run.lineage.collect()
     stages = {r.stage for r in rows}
-    assert stages == {"D", "T", "J", "A", "W"}
+    assert stages == {"J", "A", "W"}
     for r in rows:
         assert r.run_id == "full"
         assert r.snapshot_id == 123
@@ -118,9 +130,9 @@ def test_lineage_records(full_run):
 
 def test_stage_inputs_are_snapshot_and_upstream(spark, full_run, workdir):
     """Resume compares the snapshot id, the checksum of the checkpoint a
-    stage read (none for D) and the feature row format; the engine's
+    stage read (none for J) and the feature row format; the engine's
     parameters are not settings."""
-    upstream = {"D": None, "T": "D", "J": "T", "A": "J", "W": "J"}
+    upstream = {"J": None, "A": "J", "W": "J"}
     for stage, source in upstream.items():
         inputs = L.stage_record(spark, workdir, "full", stage)["inputs"]
         assert set(inputs) == {"snapshot_id", "upstream", "row_format"}
@@ -133,37 +145,36 @@ def test_stage_inputs_are_snapshot_and_upstream(spark, full_run, workdir):
 def test_resume_skips_completed_stages(spark, dims, workdir):
     stations, polygons = dims
     docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
-    conf = _conf()
 
-    # 1) run only D and T, then "die" (kill after tiling stage)
-    partial_conf = replace(conf, stages=("D", "T"))
+    # 1) run only up to J, then "die" (kill after the feature stage)
     res1 = run_pipeline(
         spark, docs, stations, polygons, workdir, "resume1",
-        snapshot_id=7, resume=True, conf=partial_conf,
+        snapshot_id=7, resume=True, conf=PipelineConfig(
+            stages=("D", "T", "J"), checkpoint_stages=("J",)),
     )
-    assert res1.executed == ["D", "T"]
-    t_lineage = {
+    assert res1.executed == ["J"]
+    j_lineage = {
         (r.partition_id, r.checksum)
-        for r in res1.lineage.filter("stage = 'T'").collect()
+        for r in res1.lineage.filter("stage = 'J'").collect()
     }
 
-    # 2) resume the full run: D and T must be skipped, not recomputed
+    # 2) resume the full run: J must be skipped, not recomputed
     res2 = run_pipeline(
         spark, docs, stations, polygons, workdir, "resume1",
-        snapshot_id=7, resume=True, conf=conf,
+        snapshot_id=7, resume=True,
     )
-    assert res2.skipped == ["D", "T"]
-    assert res2.executed == ["J", "A", "W"]
-    t_lineage_after = {
+    assert res2.skipped == ["J"]
+    assert res2.executed == ["A", "W"]
+    j_lineage_after = {
         (r.partition_id, r.checksum)
-        for r in res2.lineage.filter("stage = 'T'").collect()
+        for r in res2.lineage.filter("stage = 'J'").collect()
     }
-    assert t_lineage_after == t_lineage  # byte-identical checkpoint
+    assert j_lineage_after == j_lineage  # byte-identical checkpoint
 
     # 3) resumed final output == uninterrupted run's output (checksums)
     res_full = run_pipeline(
         spark, docs, stations, polygons, workdir, "uninterrupted",
-        snapshot_id=7, resume=False, conf=conf,
+        snapshot_id=7, resume=False,
     )
 
     def content_hash(df):
@@ -204,7 +215,7 @@ def _exchanges(df):
 
 @pytest.fixture(scope="module")
 def default_run(spark, dims, workdir):
-    """One coarse-checkpoint run with the default W sizing, its jobs counted
+    """One default run with the default W sizing, its jobs counted
     by job group, and for each stage the frame handed to ``write_stage``
     and the frame it returned kept. The range exchange starts at 32
     shuffle partitions, so a data-sized W shows up as fewer than 32
@@ -236,7 +247,7 @@ def default_run(spark, dims, workdir):
 
 def test_job_budget_per_run(default_run):
     res, jobs, _, _ = default_run
-    assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     assert 0 < jobs <= JOB_BUDGET, f"{jobs} jobs"
 
 
@@ -341,7 +352,7 @@ def test_j_record_counts_the_quarantine(spark, dims, workdir):
     assert n_corrupt > 0
     res = run_pipeline(spark, docs, *dims, workdir, "quarantine",
                        resume=False)
-    assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
+    assert res.executed == ["J", "A", "W"]
     record = L.stage_record(spark, workdir, "quarantine", "J")
     assert record["quarantined"] == n_corrupt
     assert all("quarantined" not in L.stage_record(
@@ -349,30 +360,22 @@ def test_j_record_counts_the_quarantine(spark, dims, workdir):
     docs.unpersist()
 
 
-def test_lineage_without_checkpoints_is_empty(spark, dims, workdir):
-    res = run_pipeline(spark, synth_documents(spark, 20), *dims, workdir,
-                       "never_ran", conf=PipelineConfig(
-                           stages=("D", "T"), checkpoint_stages=()))
-    assert res.lineage.count() == 0
-    assert res.lineage.schema == LINEAGE_SCHEMA
-
-
 def test_lineage_is_this_runs_own(spark, dims, workdir):
-    """A default run resumed on a run id first used with every stage
-    checkpointed reports the lineage of its own checkpoints, J, A and W,
-    not the D and T records the first run left behind."""
+    """A run up to J resumed on a run id first used for the default graph
+    reports the lineage of its own checkpoint, J, not the A and W records
+    the first run left behind."""
     stations, polygons = dims
     docs = synth_documents(spark, 300, n_stations=N_ST, partitions=4)
-    for conf in (_conf(), PipelineConfig()):
+    for conf in (PipelineConfig(), PipelineConfig(
+            stages=("D", "T", "J"), checkpoint_stages=("J",))):
         res = run_pipeline(
             spark, docs, stations, polygons, workdir, "reused_id",
             snapshot_id=300, resume=True, conf=conf,
         )
-    assert os.path.isdir(f"{workdir}/reused_id/_lineage/D")
-    # J is recomputed (it read T's checkpoint before) to the same checksum
-    assert res.skipped == ["A", "W"]
+    assert os.path.isdir(f"{workdir}/reused_id/_lineage/A")
+    assert res.skipped == ["J"]
     stages = {r.stage for r in res.lineage.select("stage").distinct().collect()}
-    assert stages == {"J", "A", "W"}
+    assert stages == {"J"}
 
 
 def test_snapshot_id_tracks_manifest(spark, workdir, dims):
@@ -386,34 +389,6 @@ def test_snapshot_id_tracks_manifest(spark, workdir, dims):
     # appending files changes the snapshot id
     synth_documents(spark, 10).write.mode("append").parquet(p)
     assert snapshot_id_for(spark, p) != s1
-
-
-def test_coarse_checkpoints_equivalent(spark, dims, workdir):
-    """checkpoint_stages=('J','A','W') fuses D/T into J's single pass; the
-    final feature and tile tables must be identical to full checkpointing."""
-    stations, polygons = dims
-    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
-    conf = _conf()
-    conf.checkpoint_stages = ("J", "A", "W")
-    res = run_pipeline(
-        spark, docs, stations, polygons, workdir, "coarse", snapshot_id=123,
-        resume=False, conf=conf,
-    )
-    assert res.executed == ["D~fused", "T~fused", "J", "A", "W"]
-    full = run_pipeline(
-        spark, docs, stations, polygons, workdir, "full", snapshot_id=123,
-        resume=True, conf=_conf(),  # resume: reuses test_full_pipeline output
-    )
-    key = ["feature_id", "cell_s2", "cell_prefix", "region_id",
-           "nearest_station_id"]
-    assert res.features.select(*key).subtract(
-        full.features.select(*key)).count() == 0
-    assert res.features.count() == full.features.count()
-    t = ["level", "cell", "n_obs"]
-    assert res.tiles.select(*t).subtract(full.tiles.select(*t)).count() == 0
-    # lineage only for checkpointed stages
-    stages = {r.stage for r in res.lineage.select("stage").distinct().collect()}
-    assert stages == {"J", "A", "W"}
 
 
 def _snapped(docs, lat, lon, every=4):
@@ -463,11 +438,13 @@ def test_hot_cells_are_salted_to_the_plain_tiles(spark, dims, workdir,
     (STAGES, ("A", "W")),             # J would fuse into A and W
     (STAGES, ("D", "T", "J", "A")),   # W would write nothing
     (("D", "T", "A", "W"), ("J", "A", "W")),  # A on T output, J skipped
-], ids=["J-fused", "W-fused", "J-skipped"])
+    (STAGES, ("D", "J", "A", "W")),   # D is no checkpoint
+    (("D", "T"), ()),                 # a run must reach J
+], ids=["J-fused", "W-fused", "J-skipped", "D-checkpointed", "no-J"])
 def test_stages_outside_the_graph_raise(spark, dims, workdir, stages,
                                         checkpoints):
-    """Stages run as a prefix of STAGES, and J, A and W are checkpoints
-    whenever they run; anything else fails before a Spark job starts."""
+    """A run reaches J, A or W and checkpoints exactly the J/A/W stages it
+    runs; anything else fails before a Spark job starts."""
     sc = spark.sparkContext
     group = f"illegal_{len(stages)}_{''.join(checkpoints)}"
     sc.setLocalProperty("spark.jobGroup.id", group)
@@ -484,12 +461,12 @@ def test_stages_outside_the_graph_raise(spark, dims, workdir, stages,
 
 
 def test_j_prefix_checkpoints_only_j(spark, dims, workdir):
-    """The graph's shortest checkpointed prefix: D and T fuse into J."""
+    """The graph's shortest run: J alone, its one checkpoint."""
     res = run_pipeline(
         spark, synth_documents(spark, 20, n_stations=N_ST), *dims, workdir,
         "j_only", resume=False, conf=PipelineConfig(
             stages=("D", "T", "J"), checkpoint_stages=("J",)))
-    assert res.executed == ["D~fused", "T~fused", "J"]
+    assert res.executed == ["J"]
     assert res.tiles is None
     assert sorted(os.listdir(f"{workdir}/j_only/_lineage")) == ["J"]
 

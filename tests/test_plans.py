@@ -12,6 +12,7 @@ import __spark_entry__ as E
 from bufr2geojson_spark.functions.cells import with_cells
 from bufr2geojson_spark.operators.decode import decode_documents
 from bufr2geojson_spark.operators.spatial import assign_region, knn_join
+from bufr2geojson_spark.plans.pipeline import feature_pass
 from bufr2geojson_spark.sources.synth import (
     synth_documents,
     synth_region_polygons,
@@ -60,22 +61,19 @@ def test_partial_aggregation_before_shuffle(spark):
 
 
 def test_decode_cells_joins_chain_is_narrow(spark):
-    """The fused D→T→J chain must contain NO shuffle exchange — decode,
-    cell encode, PIP, and kNN are all narrow (the premise of
-    checkpoint_stages=('J','A','W') running as one pass) — and must run
-    two Python nodes, so each task holds two Python workers: the decode
-    fold, then one Arrow evaluation of the cell, PIP and kNN UDFs. An
-    explode between them (one PIP row per match) would split the Arrow
+    """J's pass must contain NO shuffle exchange — decode, cell encode,
+    PIP, and kNN are all narrow (the premise of J being one pass) — and
+    must run two Python nodes, so each task holds two Python workers: the
+    decode fold, then one Arrow evaluation of the cell, PIP and kNN UDFs.
+    An explode between them (one PIP row per match) would split the Arrow
     evaluation in two."""
     import re
 
     synth = synth_documents(spark, 50, partitions=2)
     # a local table, so the only MapInPandas left is the decode fold
     docs = spark.createDataFrame(synth.collect(), synth.schema)
-    # observed as run_pipeline counts the quarantine: no node splits
-    decoded = decode_documents(docs).observe(
-        Observation("quarantine"), F.count("error").alias("quarantined"))
-    feats = with_cells(decoded.filter("error is null"))
+    # the quarantine observed as run_pipeline counts it: no node splits
+    feats = feature_pass(docs, Observation("quarantine"))
     feats = assign_region(feats, synth_region_polygons(spark))
     feats = knn_join(feats, synth_stations(spark, 20), k=1, grid_deg=5.0)
     p = physical_plan(feats)

@@ -1,5 +1,5 @@
 """Structured Streaming ingest: micro-batch decode parity with batch, standing
-tile maintenance, report dedup, and exactly-once resume semantics via the
+tile maintenance, and exactly-once resume semantics via the
 checkpoint dir."""
 
 import os
@@ -89,68 +89,12 @@ def test_stream_new_file_processed_incrementally(spark, stream_dirs):
     assert after - before == expected_extra
 
 
-def test_event_time_is_session_timezone_independent(spark):
-    """The trailing Z must parse as a UTC zone designator, not a literal:
-    the same instant must produce the same epoch under any session tz."""
-    from bufr2geojson_spark.streaming.ingest import event_time
-
-    df = spark.createDataFrame(
-        [("2022-03-20T21:00:00Z",), ("2022-03-19T21:00:00Z/2022-03-20T21:00:00Z",),
-         ("Invalid date (year missing)",)],
-        "phenomenon_time string",
-    )
-    tz0 = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        utc = [r.event_ts for r in event_time(df).select(
-            F.unix_timestamp("event_ts").alias("event_ts")).collect()]
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        ny = [r.event_ts for r in event_time(df).select(
-            F.unix_timestamp("event_ts").alias("event_ts")).collect()]
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz0)
-    assert utc == ny
-    assert utc[0] == 1647810000  # 2022-03-20T21:00:00Z
-    assert utc[1] == 1647810000  # period → end instant
-    assert utc[2] is None        # reference 'Invalid date' quirk → null
-
-
-def test_stream_dedup_drops_retransmitted_reports(spark, tmp_path):
-    """The same documents appended twice (an upstream retransmission) must
-    come out once: dropDuplicatesWithinWatermark on the md5 report identity,
-    state bounded by the watermark horizon."""
-    import shutil
-
-    from bufr2geojson_spark.sources.synth import synth_documents
-    from bufr2geojson_spark.streaming.ingest import run_dedup_ingest_once
-
-    base = str(tmp_path)
-    docs = synth_documents(spark, 40, n_stations=20, partitions=2)
-    docs.write.parquet(f"{base}/in")
-    # retransmission: identical corpus appended as more part files
-    docs.write.mode("append").parquet(f"{base}/in")
-    run_dedup_ingest_once(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
-    out = spark.read.parquet(f"{base}/out")
-
-    # invalid-date reports pass through (not dropped) and are deduped
-    # per-batch by the sink, so the expectation covers ALL features
-    n_unique = (
-        decode_documents(docs).filter("error is null")
-        .selectExpr("report_id", "index").distinct().count()
-    )
-    assert out.select("report_id", "index").distinct().count() == out.count()
-    assert out.count() == n_unique
-    shutil.rmtree(base, ignore_errors=True)
-
-
 def test_stream_tile_maintenance_matches_batch(spark, tmp_path,
                                               assert_same_tiles):
     """Two waves of documents folded incrementally into the standing tile
     table must equal the pipeline's stage A over everything."""
-    from bufr2geojson_spark.plans.maintenance import (
-        delta_features,
-        standing_tiles,
-    )
-    from bufr2geojson_spark.plans.pipeline import tile_stage
+    from bufr2geojson_spark.plans.maintenance import standing_tiles
+    from bufr2geojson_spark.plans.pipeline import feature_pass, tile_stage
     from bufr2geojson_spark.streaming.ingest import run_tile_maintenance_once
 
     base = str(tmp_path)
@@ -167,7 +111,7 @@ def test_stream_tile_maintenance_matches_batch(spark, tmp_path,
     assert n2 >= 1
 
     assert_same_tiles(standing_tiles(spark, f"{base}/work"),
-                      tile_stage(delta_features(docs)))
+                      tile_stage(feature_pass(docs)))
 
 
 def test_stream_tile_maintenance_rerun_noop(spark, tmp_path):
